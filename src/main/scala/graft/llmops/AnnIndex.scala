@@ -45,8 +45,8 @@ import org.apache.spark.sql.functions._
   *         ~30× compression vs float32 that makes a 100 TB corpus a ~3 TB
   *         index, partition-laid-out so a probe of `nprobe` cells prunes
   *         to `nprobe/cells` of the index files. A small online query
-  *         batch can collect its probed cell list and filter
-  *         `__cid IN (...)` for static partition pruning; the registered
+  *         batch is ranked on the driver ([[probeIvfPqPruned]]) and
+  *         filters `__cid IN (...)` for static partition pruning; the registered
   *         batch query keeps the join form (dynamic pruning / AQE
   *         territory) because its query side is corpus-sized.
   *
@@ -100,7 +100,18 @@ object AnnIndex {
       codebooks: DataFrame,
       codes: DataFrame,
       generation: Int = UnsavedGeneration
-  )
+  ) {
+
+    /** The fit tables in the form the probes use them, collected on this
+      * handle's first probe and kept for its lifetime: a handle's
+      * centroids and codebooks never change (a [[load]] pins them, a
+      * [[refit]] writes a new generation for a new handle to load). Lazy,
+      * not filled in [[load]], because [[append]] loads a handle it never
+      * probes. `copy` starts a fresh, empty cache.
+      */
+    private[AnnIndex] lazy val localCentroids: Similarity.LocalCentroids = Similarity.localCentroids(centroids)
+    private[AnnIndex] lazy val codebookMap: DataFrame = Similarity.localCodebookMap(codebooks, pqKs)
+  }
 
   /** [[IvfPqIndex.generation]] of a handle that did not come from
     * [[load]] — an in-memory fit is pinned to no on-disk generation.
@@ -1732,7 +1743,7 @@ object AnnIndex {
     Similarity.pqAdcRank(
       probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
       idxCodes,
-      Similarity.pqCodebookMap(index.codebooks, index.pqKs),
+      index.codebookMap,
       index.pqM,
       index.pqKs,
       k,
@@ -1743,20 +1754,28 @@ object AnnIndex {
   }
 
   /** [[probeIvfPq]] for SMALL query batches — the online-serving shape:
-    * collect the batch's probed cell ids on the driver and filter the
-    * codes scan with a LITERAL cell-id IN list. The collect itself is
-    * bounded by the DISTINCT probed-cell count (≤ index.cells, never the
-    * batch size); `maxProbedCells` caps the resulting IN-list size — the
-    * guard fires AFTER the cell-rank pass and collect have run (both
-    * bounded by cell count), so it protects plan quality (a huge literal
-    * IN list defeats the pruning win), not driver memory. Because [[save]] partitions the codes by `__cid`,
-    * the filter becomes STATIC partition pruning at planning time: the
-    * scan touches only the probed cells' files — for a 10-vector batch at
-    * nprobe = 2 over 1,024 cells, at most 20/1,024 of a ~3 TB index —
-    * where [[probeIvfPq]]'s join form leaves file pruning to runtime
-    * (DPP/AQE) and is the right call only when the batch is corpus-sized.
-    * Results are identical to [[probeIvfPq]] on the same batch (same
-    * building blocks; the filter only removes cells no query probes).
+    * rank the batch's probed cells on the DRIVER and filter the codes scan
+    * with a LITERAL cell-id IN list. The quantized batch is collected
+    * (batch × dim doubles — small by this method's contract), each query
+    * is ranked against the handle's centroids with the same
+    * [[graft.functions.NativeMath.cellTopK]] kernel [[probeIvfPq]]
+    * evaluates in Spark, and the (query, probed cell) rows ride into the
+    * ADC rank as a local relation; building the probe launches at most the
+    * one job that collects the batch (none for a local batch). The
+    * handle's fit tables — the centroid entries and the PQ codeword map —
+    * are collected on its first probe and cached on the handle
+    * ([[IvfPqIndex]]), so later probes plan no `centroids/` or
+    * `codebooks/` scan. `maxProbedCells` caps the IN-list size: the guard
+    * fires after the batch is collected and ranked, so it protects plan
+    * quality (a huge literal IN list defeats the pruning win), not driver
+    * memory — a corpus-sized batch belongs in [[probeIvfPq]]. Because
+    * [[save]] partitions the codes by `__cid`, the filter becomes STATIC
+    * partition pruning at planning time: the scan touches only the probed
+    * cells' files — for a 10-vector batch at nprobe = 2 over 1,024 cells,
+    * at most 20/1,024 of a ~3 TB index — where [[probeIvfPq]]'s join form
+    * leaves file pruning to runtime (DPP/AQE). Results are identical to
+    * [[probeIvfPq]] on the same batch (same kernel, same ADC rank; the
+    * filter only removes cells no query probes).
     * `idFilter` is the filtered-search predicate — see [[probeIvfPq]];
     * here it composes with the cell IN list on the same scan, so a
     * filtered online probe still reads only the probed cells' files.
@@ -1779,20 +1798,14 @@ object AnnIndex {
       "rerank > k needs rerankFrom (id, vector) to fetch originals from — " +
         "a small online batch is almost never a valid rerank vector source"
     )
-    val probed = Similarity
-      .cellRanks(
-        Similarity.quantizedBase(queries, idCol, vecCol),
-        index.centroids,
-        nprobe
-      )
-      .localCheckpoint(true) // read by the cell-list collect AND the rank
-    val probedCells = probed.select(col("__cid").cast("int")).distinct().collect().map(_.getInt(0))
+    val (probed, probedCells) =
+      Similarity.cellRanksLocal(Similarity.quantizedBase(queries, idCol, vecCol), index.localCentroids, nprobe)
     require(
       probedCells.length <= maxProbedCells,
       s"batch probes ${probedCells.length} cells > maxProbedCells=$maxProbedCells — " +
         "use probeIvfPq (join form) for corpus-sized batches"
     )
-    val cellPruned = index.codes.filter(col("__cid").isin(probedCells.toIndexedSeq: _*))
+    val cellPruned = index.codes.filter(col("__cid").isin(probedCells.map(_.toInt): _*))
     val prunedCodes = idFilter.map(cellPruned.filter).getOrElse(cellPruned)
     val orig = rerankFrom
       .getOrElse(queries)
@@ -1800,7 +1813,7 @@ object AnnIndex {
     Similarity.pqAdcRank(
       probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
       prunedCodes,
-      Similarity.pqCodebookMap(index.codebooks, index.pqKs),
+      index.codebookMap,
       index.pqM,
       index.pqKs,
       k,

@@ -1,9 +1,14 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.NativeMath
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -1433,6 +1438,59 @@ object Similarity {
     explodeTopCells(base, centroids, col("__qv"), upTo, Seq(col("__id"), col("__qv")))
       .select(col("__id"), col("__qv"), col("__cid"), col("__crank"))
 
+  /** The centroids as the driver-side cell-ranking table: [[centroidEntriesRow]]'s
+    * `__cents` array as catalyst data (nulls kept), the type code of its
+    * vectors for [[graft.functions.NativeMath.cellTopK]], and the caller's
+    * cid type that ranked `__ncid`s are cast back to.
+    */
+  private[llmops] final case class LocalCentroids(entries: ArrayData, ccode: Int, cidType: DataType)
+
+  /** Collect `centroids` into a [[LocalCentroids]] — one small job
+    * (`cells` rows).
+    */
+  private[llmops] def localCentroids(centroids: DataFrame): LocalCentroids = {
+    val row = centroidEntriesRow(centroids).select("__cents")
+    val centsType = row.schema("__cents").dataType
+    val cvType = centsType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("__cv").dataType
+    LocalCentroids(
+      CatalystTypeConverters.createToCatalystConverter(centsType)(row.head().get(0)).asInstanceOf[ArrayData],
+      NativeMath.typeCode(cvType),
+      centroids.schema("__cid").dataType
+    )
+  }
+
+  /** [[cellRanks]] of a SMALL batch, ranked on the driver: `base`
+    * (`__id`, `__qv`) is collected, each vector is ranked against `cents`
+    * with the same [[graft.functions.NativeMath.cellTopK]] kernel the
+    * Spark pass evaluates, and the (`__id`, `__qv`, `__cid`) rows come
+    * back as a local relation — no job beyond the collect, and none when
+    * `base` is itself local. Rows are identical to [[cellRanks]]'s: a null
+    * vector ranks no cell (the kernel's null-in/null-out, exploded to
+    * nothing), and a null element or a wrong-length vector scores every
+    * cell null and so ranks the first `upTo` cells by cid. Also returns
+    * the distinct probed cell ids.
+    */
+  private[llmops] def cellRanksLocal(base: DataFrame, cents: LocalCentroids, upTo: Int): (DataFrame, Seq[Long]) = {
+    require(upTo > 0, "upTo must be positive")
+    val qvType = base.schema("__qv").dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qvType)
+    val vcode = NativeMath.typeCode(qvType)
+    val ranked = base.collect().toSeq.flatMap { r =>
+      if (r.isNullAt(1)) Nil
+      else {
+        val vec = toCatalyst(r.get(1)).asInstanceOf[ArrayData]
+        val top = NativeMath.cellTopK(vec, cents.entries, vcode, cents.ccode, upTo)
+        (0 until top.numElements()).map(i => Row(r.get(0), r.get(1), top.getStruct(i, 2).getLong(1)))
+      }
+    }
+    val schema =
+      StructType(Seq(base.schema("__id"), base.schema("__qv"), StructField("__ncid", LongType, nullable = false)))
+    val probed = base.sparkSession
+      .createDataFrame(ranked.asJava, schema)
+      .select(col("__id"), col("__qv"), (-col("__ncid")).cast(cents.cidType).as("__cid"))
+    (probed, ranked.map(-_.getLong(2)).distinct)
+  }
+
   /** The PQ codebooks as a single-row broadcast (m·ks)-entry map keyed by
     * `m·ks + cid` (a MAP, not a positional array — Lloyd's can drop
     * emptied cells, so (m, cid) keys may be sparse), plus a NON-FOLDABLE
@@ -1452,6 +1510,15 @@ object Similarity {
           min(lit(0)).as("__one")
         )
     )
+
+  /** [[pqCodebookMap]] collected once into a broadcast local relation —
+    * the form an index handle keeps, so its probes plan no codebook scan
+    * or aggregate.
+    */
+  private[llmops] def localCodebookMap(cb: DataFrame, pqKs: Int): DataFrame = {
+    val m = pqCodebookMap(cb, pqKs)
+    broadcast(m.sparkSession.createDataFrame(m.collect().toSeq.asJava, m.schema))
+  }
 
   /** ADC-rank probed queries against a codes-only index, with the
     * optional exact fetch-and-rerank refinement. `probedQueries` is

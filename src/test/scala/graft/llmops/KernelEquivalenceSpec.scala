@@ -1,9 +1,10 @@
 package graft.llmops
 
 import graft.SparkTestSession
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -25,6 +26,10 @@ import scala.util.Random
   *      round-19 bounded-top-k init AND the fused single-exchange update.
   *   4. [[Similarity.pqCodebooks]] ≡ the explode/min_by Lloyd reference,
   *      same purpose.
+  *   5. [[Similarity.cellRanksLocal]] (the pruned probe's driver-side cell
+  *      ranking) ≡ [[Similarity.cellRanks]] on adversarial batches — null
+  *      vectors and elements, wrong lengths, NaN, ties, three vector
+  *      types, int and long cell ids, `upTo` above the cell count.
   *
   * All equality assertions go through Spark's null-safe `<=>` (SQL
   * semantics: NaN equals NaN, ±0.0 equal — exactly the ordering-contract
@@ -313,6 +318,81 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
       val diff = joined.filter(!(col("g.__cv") <=> col("r.__cv"))).count()
       assert(diff == 0L, s"pqCodebooks != reference at iters=$iters on $diff codewords")
       assert(got.count() == ref.count())
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // 5. driver-side cell ranking ≡ Similarity.cellRanks
+  // ------------------------------------------------------------------
+
+  /** An adversarial query batch of element type `elem`: null vectors,
+    * null elements, wrong-length vectors, zero vectors, NaN (floating
+    * types only) and ordinary quantized-range values; some queries equal
+    * a centroid's direction so the ranking sees exact ties.
+    */
+  private def adversarialBatch(elem: DataType, dim: Int, rows: Int): DataFrame = {
+    def cast(x: Double): Any = elem match {
+      case FloatType => x.toFloat
+      case DoubleType => x
+      case _ => x.toInt
+    }
+    val floating = elem == FloatType || elem == DoubleType
+    val data = (1 to rows).map { i =>
+      val v: Seq[Any] = i % 9 match {
+        case 0 => null
+        case 1 => Seq.tabulate(dim)(j => if (j == dim / 2) null else cast(j + 1.0))
+        case 2 => Seq.fill(dim + 1)(cast(3.0))
+        case 3 => Seq.fill(dim)(cast(0.0))
+        case 4 if floating => Seq.tabulate(dim)(j => if (j == 0) cast(Double.NaN) else cast(j.toDouble))
+        case 5 => Seq.fill(dim)(cast(2.0)) // the direction of two duplicated centroids
+        case _ => Seq.fill(dim)(cast(math.rint(rnd.nextDouble() * 254 - 127)))
+      }
+      Row(i.toLong, v)
+    }
+    spark.createDataFrame(
+      java.util.Arrays.asList(data: _*),
+      StructType(Seq(StructField("__id", LongType), StructField("__qv", ArrayType(elem, containsNull = true))))
+    )
+  }
+
+  /** Centroids with `cid` typed `cidType`: two share one direction (a
+    * cosine tie the cid order breaks), one is the zero vector (NaN
+    * cosine against every query).
+    */
+  private def adversarialCentroids(cidType: DataType, dim: Int): DataFrame = {
+    val cvs = Seq(
+      Seq.fill(dim)(1.0),
+      Seq.fill(dim)(rnd.nextDouble() * 2 - 1),
+      Seq.fill(dim)(1.0),
+      Seq.fill(dim)(0.0),
+      Seq.tabulate(dim)(j => if (j % 2 == 0) 1.0 else -1.0)
+    )
+    val rows = cvs.zipWithIndex.map { case (cv, c) => Row(if (cidType == IntegerType) c else c.toLong, cv) }
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("__cid", cidType), StructField("__cv", ArrayType(DoubleType))))
+    )
+  }
+
+  test("driver-side cell ranking gives cellRanks' rows on adversarial batches (vector types, cid types, nprobe > cells)") {
+    val dim = 6
+    for {
+      elem <- Seq(FloatType, DoubleType, IntegerType)
+      cidType <- Seq(IntegerType, LongType)
+    } {
+      val batch = adversarialBatch(elem, dim, rows = 90).localCheckpoint(true)
+      val centroids = adversarialCentroids(cidType, dim).localCheckpoint(true)
+      val local = Similarity.localCentroids(centroids)
+      for (upTo <- Seq(1, 2, 5, 7)) {
+        def rows(df: DataFrame): Seq[String] = df.select("__id", "__qv", "__cid").collect().map(_.toString).sorted.toSeq
+        val ref = Similarity.cellRanks(batch, centroids, upTo)
+        val (got, cells) = Similarity.cellRanksLocal(batch, local, upTo)
+        val at = s"elem=$elem cid=$cidType upTo=$upTo"
+        assert(got.schema("__cid").dataType == cidType, s"probe cid must keep the centroid cid type ($at)")
+        assert(rows(got) == rows(ref), s"driver-side ranking != cellRanks ($at)")
+        val refCells = ref.select(col("__cid").cast("long")).distinct().collect().map(_.getLong(0)).sorted.toSeq
+        assert(cells.sorted == refCells, s"probed cell list != cellRanks' distinct cells ($at)")
+      }
     }
   }
 }

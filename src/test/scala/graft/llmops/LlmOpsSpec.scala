@@ -879,6 +879,86 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     )
   }
 
+  test("AnnIndex pruned probe serves from the handle: fit tables cached per handle, one job to build, generation-scoped") {
+    val rnd = new scala.util.Random(53)
+    val vecs = (0 until 60).map { i =>
+      (i.toLong, Seq.tabulate(8)(_ => (i % 3 * 5).toFloat + rnd.nextFloat() * 0.1f))
+    }
+    val df = vecs.toDF("vec_id", "v").localCheckpoint(true)
+    val dir = java.nio.file.Files.createTempDirectory("graft_anncache").toString
+    AnnIndex.save(
+      AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8),
+      dir
+    )
+    val batch = df.filter($"vec_id" < 5).localCheckpoint(true)
+    def pruned(idx: AnnIndex.IvfPqIndex): org.apache.spark.sql.DataFrame = AnnIndex
+      .probeIvfPqPruned(idx, batch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true)
+    def run(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      d.select("qid", "nid", "rank").as[(Long, Long, Long)].collect().sortBy(identity).toSeq
+
+    // (a) a second probe on the same handle plans no fit-table scan: the
+    // centroid entries and codeword map come from the handle's cache
+    val pinned = AnnIndex.load(spark, dir)
+    val pinnedAnswers = run(pruned(pinned))
+    val second = pruned(pinned)
+    assert(run(second) == pinnedAnswers, "a cached-table probe must answer like the first probe")
+    val scanned = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(second.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      }
+      .flatten
+    assert(scanned.exists(_.contains("codes_v")), s"the probe must scan the codes; scanned: ${scanned.mkString(", ")}")
+    assert(
+      !scanned.exists(p => p.contains("/centroids") || p.contains("/codebooks")),
+      s"a second probe must not scan centroids/ or codebooks/; scanned: ${scanned.mkString(", ")}"
+    )
+
+    // (b) building a pruned probe of a localCheckpoint batch on a warm
+    // handle launches at most one job (the batch collect) before the
+    // result is collected. Jobs are counted by job group; a sentinel job
+    // in a second group drains the listener bus, which delivers in order.
+    val group = s"graft-probe-build-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`)    => buildJobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _                =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val built =
+      try {
+        sc.setJobGroup(group, "pruned probe build")
+        val d = pruned(pinned)
+        sc.setJobGroup(sentinel, "listener drain")
+        sc.parallelize(Seq(1), 1).count()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+        d
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    assert(buildJobs.get() <= 1, s"building a pruned probe launched ${buildJobs.get()} jobs, expected at most 1")
+    assert(run(built) == pinnedAnswers)
+
+    // (c) the cache is scoped to the handle: after a refit, a fresh load
+    // probes like a newly fitted handle, and the pinned pre-refit handle
+    // keeps answering from its own generation
+    val survivors = df.filter($"vec_id" % 2 === 0)
+    AnnIndex.refit(spark, dir, survivors, "vec_id", "v", cells = 4, iters = 2, seed = 7L, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+    val reloaded = run(pruned(AnnIndex.load(spark, dir)))
+    val fresh = AnnIndex.fitIvfPq(survivors, "vec_id", "v", cells = 4, iters = 2, seed = 7L, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+    assert(reloaded == run(pruned(fresh)), "a post-refit load must probe like a freshly fitted handle")
+    assert(reloaded.nonEmpty && reloaded.forall(_._2 % 2 == 0), "the refit generation answers from survivors only")
+    assert(pinnedAnswers.exists(_._2 % 2 == 1), "fixture: the pre-refit index must answer with some odd ids")
+    assert(run(pruned(pinned)) == pinnedAnswers, "a pinned handle must keep its own generation's answers")
+  }
+
   test("AnnIndex.append: frozen-fit encode grows the index in place, staleness ledger balances") {
     val rnd = new scala.util.Random(23)
     val vecs = (0 until 60).map { i =>
