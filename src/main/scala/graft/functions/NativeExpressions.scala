@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.{GraftSqlShim => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -17,13 +19,14 @@ import org.apache.spark.sql.types._
   * corpus size, so at 100 TB this is the difference between feasible and
   * not.
   *
-  * All expressions implement `doGenCode` (not `CodegenFallback`): the
-  * generated code emits a static call into the [[NativeMath]] kernels —
-  * the projection stays inside whole-stage codegen with no per-row
+  * The kernel expressions implement `doGenCode` (not `CodegenFallback`):
+  * the generated code emits a static call into the [[NativeMath]] kernels
+  * — the projection stays inside whole-stage codegen with no per-row
   * interpreted-eval detour, and because `eval` calls the *same* kernel,
-  * interpreted and compiled paths are bit-identical by construction. All
-  * expressions also override `foldable`, so literal-argument calls
-  * constant-fold at optimization time.
+  * interpreted and compiled paths are bit-identical by construction. They
+  * also override `foldable`, so literal-argument calls constant-fold at
+  * optimization time. The one exception is [[BroadcastValue]], a
+  * non-foldable constant leaf whose `eval` returns a cached value.
   */
 object native {
 
@@ -56,6 +59,12 @@ object native {
 
   def codewordArgmin(sv: Column, entries: Column): Column =
     ExpressionUtils.column(CodewordArgmin(ExpressionUtils.expression(sv), ExpressionUtils.expression(entries)))
+
+  /** The value held by `bc` (Catalyst data of type `dataType`) as a
+    * column — see [[BroadcastValue]].
+    */
+  def broadcastValue(bc: Broadcast[_ <: AnyRef], dataType: DataType): Column =
+    ExpressionUtils.column(BroadcastValue(bc, dataType))
 
   /** Per-group bottom-`k` of `e` by its natural (struct) ordering, as ONE
     * partially-aggregated pass — Spark's own bounded-top-k collector
@@ -375,4 +384,31 @@ final case class ArrayCosine(left: Expression, right: Expression) extends ArrayN
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArrayCosine =
     copy(left = newLeft, right = newRight)
+}
+
+/** A driver-built constant that reaches the executors through a Spark
+  * broadcast: every row evaluates to `bc.value`, Catalyst data of
+  * `dataType`. Where a `Literal` would copy the value into the plan (its
+  * description and every task's serialized plan), this leaf carries only
+  * the broadcast's handle — the value ships once per executor, costs no
+  * Spark job, and is removed by the ContextCleaner once the driver drops
+  * the broadcast (or by `bc.destroy()`). Deliberately non-foldable, so the
+  * optimizer never inlines the value into the plan.
+  */
+final case class BroadcastValue(bc: Broadcast[_ <: AnyRef], dataType: DataType)
+    extends LeafExpression
+    with CodegenFallback {
+
+  override def nullable: Boolean = false
+
+  override def foldable: Boolean = false
+
+  override def prettyName: String = "broadcast_value"
+
+  override def toString: String = s"$prettyName(${bc.id})"
+
+  // read once per deserialized expression (one per task), not per row
+  @transient private lazy val value: Any = bc.value
+
+  override def eval(input: InternalRow): Any = value
 }

@@ -1,8 +1,15 @@
 package graft.llmops
 
+import graft.contracts.{ContractViolation, SchemaCompare, SchemaPolicy, TypeShape}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Persisted IVF-PQ index lifecycle — the production shape of
   * [[Similarity.ivfPqTopK]]: fit ONCE over the corpus, write the index
@@ -50,11 +57,11 @@ import org.apache.spark.sql.functions._
   *         batch query keeps the join form (dynamic pruning / AQE
   *         territory) because its query side is corpus-sized.
   *
-  * Version discipline: readers [[load]] the current generation and hold
-  * lazy scans of THAT directory only; [[compact]] writes a NEW generation
-  * and never mutates or unlinks the one open readers hold (crash-safe by
-  * construction: an incomplete generation has no `_SUCCESS` and is never
-  * selected). [[vacuum]] reclaims superseded generations, retaining a
+  * Version discipline: readers [[load]] the current generation, collect
+  * its fit and hold lazy codes scans of THAT directory only; [[compact]]
+  * writes a NEW generation and never mutates or unlinks the one open
+  * readers hold (crash-safe by construction: an incomplete generation has
+  * no `_SUCCESS` and is never selected). [[vacuum]] reclaims superseded generations, retaining a
   * configurable serving window of recent ones for long-held readers.
   * [[delete]] is the one in-place mutation (it rewrites only
   * the touched `(__batch, __cid)` partitions of the current generation);
@@ -73,9 +80,16 @@ object AnnIndex {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** A fitted (or loaded) IVF-PQ index. The DataFrames are lazy — after
-    * [[load]] they are plain parquet scans pinned to the generation that
-    * was current at load time; after [[fitIvfPq]] they are snapshotted
-    * fit outputs.
+    * [[load]] they are contract-pinned parquet scans of the generation
+    * that was current at load time; after [[fitIvfPq]] they are
+    * snapshotted fit outputs. `fit` is the same fit collected to the
+    * driver ([[Similarity.FitTables]]): every encode and probe of the
+    * handle reads it from there, so none of them plans a centroid or
+    * codebook scan or aggregate. It is filled when the handle is made,
+    * not on first use: [[append]] encodes against a freshly loaded
+    * handle, and a loaded handle's first probe then needs no fit job.
+    * It is derived from `centroids` and `codebooks`; a `copy` keeps it,
+    * so a copy must not replace those two.
     *
     * `generation` (round 18) is the `codes_v<N>` number this handle is
     * pinned to when it came from [[load]], and [[UnsavedGeneration]] (−1)
@@ -99,19 +113,9 @@ object AnnIndex {
       centroids: DataFrame,
       codebooks: DataFrame,
       codes: DataFrame,
+      fit: Similarity.FitTables,
       generation: Int = UnsavedGeneration
-  ) {
-
-    /** The fit tables in the form the probes use them, collected on this
-      * handle's first probe and kept for its lifetime: a handle's
-      * centroids and codebooks never change (a [[load]] pins them, a
-      * [[refit]] writes a new generation for a new handle to load). Lazy,
-      * not filled in [[load]], because [[append]] loads a handle it never
-      * probes. `copy` starts a fresh, empty cache.
-      */
-    private[AnnIndex] lazy val localCentroids: Similarity.LocalCentroids = Similarity.localCentroids(centroids)
-    private[AnnIndex] lazy val codebookMap: DataFrame = Similarity.localCodebookMap(codebooks, pqKs)
-  }
+  )
 
   /** [[IvfPqIndex.generation]] of a handle that did not come from
     * [[load]] — an in-memory fit is pinned to no on-disk generation.
@@ -158,6 +162,157 @@ object AnnIndex {
 
   private def hadoopFs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // ------------------------------------------------------------------
+  // Table contracts. Every index table is read through a fixed schema,
+  // checked against one data file's footer on the driver before the
+  // scan is built: a foreign or corrupt table fails at the read with a
+  // ContractViolation naming it (never deep inside a probe), and no read
+  // pays Spark's schema-inference job. Nullability is not part of a
+  // contract (Spark reads every file column as nullable anyway).
+  // ------------------------------------------------------------------
+
+  /** The fit tables' schemas under one format version. */
+  private final case class FitContracts(meta: StructType, centroids: StructType, codebooks: StructType)
+
+  private def fields(fs: (String, DataType)*): StructType = StructType(fs.map { case (n, t) => StructField(n, t) })
+
+  private val Vector = ArrayType(DoubleType, containsNull = true)
+
+  /** v4 and v5 write the same three tables with the same columns — v5
+    * changed where the fit layers live ([[fitRoot]]), not what they hold.
+    */
+  private val FitContractsByVersion: Map[Int, FitContracts] = {
+    val v5 = FitContracts(
+      meta = fields(
+        "version" -> IntegerType,
+        "dim" -> IntegerType,
+        "cells" -> IntegerType,
+        "pq_m" -> IntegerType,
+        "pq_ks" -> IntegerType,
+        "seed" -> LongType
+      ),
+      centroids = fields("__cid" -> IntegerType, "__cv" -> Vector),
+      codebooks = fields("__m" -> IntegerType, "__cid" -> IntegerType, "__cv" -> Vector)
+    )
+    Map(4 -> v5, 5 -> v5)
+  }
+
+  private val OccupancyContract = fields("__cid" -> IntegerType, "fit_n" -> LongType)
+
+  /** The codes layers' partition columns; their data columns are the
+    * caller-typed `__nid` and `__codes` ([[codesDataContract]]).
+    */
+  private val BatchColumn = StructField("__batch", IntegerType)
+  private val CellColumn = StructField("__cid", IntegerType)
+
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Spark's own skip rule for files and directories a parquet scan
+    * ignores (`_SUCCESS`, `_temporary`, `.crc`; `__cid=3` is a partition).
+    */
+  private def isHidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+
+  /** The first data file under `dir` (depth-first, by name), if any. */
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[Path] =
+    fs.listStatus(dir)
+      .filterNot(st => isHidden(st.getPath.getName))
+      .sortBy(_.getPath.getName)
+      .iterator
+      .flatMap(st => if (st.isDirectory) firstDataFile(fs, st.getPath) else Some(st.getPath))
+      .nextOption()
+
+  /** The Spark schema a parquet file's footer records: the Spark row
+    * metadata when a Spark job wrote it, else the converted parquet
+    * schema. Driver-side, no Spark job.
+    */
+  private def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+    } finally reader.close()
+  }
+
+  private def nullable(dt: DataType): DataType = dt match {
+    case st: StructType   => StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _)  => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other            => other
+  }
+
+  /** Throw a [[ContractViolation]] naming `table` unless `found`, the
+    * footer schema of its data file `file`, matches `contract` exactly (by
+    * name, case-insensitively, ignoring nullability).
+    */
+  private def checkContract(table: String, file: Path, found: StructType, contract: StructType): Unit = {
+    val report = SchemaCompare.diff(
+      TypeShape.fromStructType(nullable(found).asInstanceOf[StructType]),
+      TypeShape.fromStructType(contract),
+      SchemaPolicy.Exact
+    )
+    if (!report.conforms)
+      throw new ContractViolation(
+        report,
+        s"AnnIndex table $table does not match its contract — not written by this index format, " +
+          s"or corrupt (file $file).\n" + report.render(found.simpleString, contract.simpleString)
+      )
+  }
+
+  /** [[checkContract]] of the first data file under `dir`. */
+  private def requireContract(spark: SparkSession, table: String, dir: Path, contract: StructType): Unit = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file = firstDataFile(fs, dir).getOrElse(
+      throw new java.io.FileNotFoundException(s"AnnIndex table $table at $dir holds no data file")
+    )
+    checkContract(table, file, footerSchema(spark, file), contract)
+  }
+
+  /** A fit-layer table (`meta`, `centroids`, `codebooks`, `occupancy`)
+    * read through its contract.
+    */
+  private def readTable(spark: SparkSession, root: String, table: String, contract: StructType): DataFrame = {
+    val dir = new Path(root, table)
+    requireContract(spark, table, dir, contract)
+    spark.read.schema(contract).parquet(dir.toString)
+  }
+
+  /** The one `meta` row under `root`. Retried across the transient miss a
+    * concurrent [[tombstoneV4RootMeta]] swap can cause: footer and scan
+    * both sit inside the retry.
+    */
+  private def readMeta(spark: SparkSession, root: String): Row =
+    retryTransientRead(s"$root/meta")(readTable(spark, root, "meta", FitContractsByVersion(FormatVersion).meta).head())
+
+  /** The codes layers' data columns: `__nid` in the type the footer of
+    * the first file under `layers` records (the caller's id type), and
+    * `__codes` as array<int>, checked against that footer.
+    */
+  private def codesDataContract(spark: SparkSession, layers: Seq[Path]): StructType = {
+    val fs = layers.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val first = layers.iterator.flatMap(firstDataFile(fs, _)).nextOption().getOrElse(
+      throw new java.io.FileNotFoundException(s"AnnIndex codes at ${layers.head.getParent} hold no data file")
+    )
+    val found = footerSchema(spark, first)
+    val nid = found.find(_.name.equalsIgnoreCase("__nid")).map(_.dataType).getOrElse(NullType)
+    val contract = fields("__nid" -> nid, "__codes" -> ArrayType(IntegerType, containsNull = true))
+    checkContract("codes", first, found, contract)
+    contract
+  }
+
+  /** Codes `layers` under `base` read through the codes contract, with the
+    * partition columns `partitions` (`__cid`, and `__batch` when `base` is
+    * a generation).
+    */
+  private def readCodes(spark: SparkSession, base: Path, layers: Seq[Path], partitions: Seq[StructField]): DataFrame =
+    spark.read
+      .schema(StructType(codesDataContract(spark, layers).fields ++ partitions))
+      .option("basePath", base.toString)
+      .parquet(layers.map(_.toString): _*)
 
   /** Retry `body` on the TRANSIENT read miss a concurrent
     * [[tombstoneV4RootMeta]] meta swap can cause (round 18): the one-file
@@ -561,12 +716,13 @@ object AnnIndex {
   /** Scan of the generation's committed index rows, partition columns
     * (`__batch`, `__cid`) preserved via `basePath` — the one read shape
     * every consumer ([[load]], [[staleness]], [[compact]], [[delete]])
-    * shares, so none of them can see a half-written append layer.
+    * shares, so none of them can see a half-written append layer. Read
+    * through the codes contract ([[codesDataContract]]).
     */
   private def committedCodes(spark: SparkSession, gen: Path): DataFrame = {
     val layers = committedLayerPaths(spark, gen)
     require(layers.nonEmpty, s"$gen holds no committed __batch layer — corrupt generation")
-    spark.read.option("basePath", gen.toString).parquet(layers.map(_.toString): _*)
+    readCodes(spark, gen, layers, Seq(BatchColumn, CellColumn))
   }
 
   /** Per-absorbed-batch replay fingerprints, carried by generations that
@@ -670,9 +826,7 @@ object AnnIndex {
     val fresh: Seq[(Long, Long, String)] =
       if (appendLayers.isEmpty) Seq.empty
       else
-        spark.read
-          .option("basePath", cur.toString)
-          .parquet(appendLayers.map(_.toString): _*)
+        readCodes(spark, cur, appendLayers, Seq(BatchColumn, CellColumn))
           .groupBy(col("__batch").cast("long").as("batch_id"))
           .agg(
             count(lit(1)).as("rows"),
@@ -708,10 +862,11 @@ object AnnIndex {
     * per-subspace PQ codebooks ([[Similarity.pqCodebooks]]), then ONE
     * assignment pass producing the codes-only corpus index (nearest cell
     * + m code ids per vector). Fit tables are snapshotted (each feeds
-    * both the assignment pass and [[save]]). At 100 TB fit on a sample
-    * via the underlying `fitSamplePercent` knobs' discipline and pass the
-    * full corpus here only for the assignment/encode pass — both are
-    * single broadcast-join passes, no corpus shuffle.
+    * [[save]] and the handle's driver-side [[Similarity.FitTables]], which
+    * the assignment pass reads). At 100 TB fit on a sample via the
+    * underlying `fitSamplePercent` knobs' discipline and pass the full
+    * corpus here only for the assignment/encode pass — a map-only pass,
+    * no corpus shuffle.
     */
   def fitIvfPq(
       df: DataFrame,
@@ -728,10 +883,11 @@ object AnnIndex {
     val d = Similarity.resolveDim(df.select(col(idCol).as("__id"), col(vecCol).as("__v")), dim)
     val centroids = Similarity
       .kmeansCentroids(df, idCol, vecCol, cells, iters, seed)
-      .localCheckpoint(true) // feeds assignment AND save
+      .localCheckpoint(true) // feeds the fit tables AND save
     val cb = Similarity
       .pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed)
-      .localCheckpoint(true) // feeds encode AND save
+      .localCheckpoint(true) // feeds the fit tables AND save
+    val fit = Similarity.FitTables(centroids, cb, pqKs)
     IvfPqIndex(
       dim = d,
       cells = cells,
@@ -741,12 +897,13 @@ object AnnIndex {
       centroids = centroids,
       codebooks = cb,
       // ONE fused map-side pass (round 18): nearest cell and the m code
-      // ids are pure per-row functions of the broadcast fit tables — the
-      // pre-r18 shape computed them as two corpus passes equi-joined on
-      // vector id (two corpus-sized shuffle sides for zero information)
+      // ids are pure per-row functions of the fit — the pre-r18 shape
+      // computed them as two corpus passes equi-joined on vector id (two
+      // corpus-sized shuffle sides for zero information)
       codes = Similarity
-        .assignAndEncode(df, idCol, vecCol, centroids, cb, d, pqM)
-        .select("__cid", "__nid", "__codes")
+        .assignAndEncode(df, idCol, vecCol, fit, d, pqM)
+        .select("__cid", "__nid", "__codes"),
+      fit = fit
     )
   }
 
@@ -821,7 +978,7 @@ object AnnIndex {
           .mode("overwrite")
           .partitionBy("__batch", "__cid")
           .parquet(s"$dir/codes_v1")
-        writeOccupancy(spark, s"$dir/codes_v1", dir)
+        writeOccupancy(spark, new Path(s"$dir/codes_v1"), dir)
         // a fresh fit has absorbed no append batches
         writeAbsorbedMarker(spark, new Path(s"$dir/codes_v1"), FitBatchId.toLong)
       } else {
@@ -874,7 +1031,7 @@ object AnnIndex {
       .partitionBy("__batch", "__cid")
       .parquet(gen)
     writeFitTables(idx, gen)
-    writeOccupancy(spark, s"$gen/__batch=$FitBatchId", gen)
+    writeOccupancy(spark, new Path(gen), gen)
     writeAbsorbedBatches(spark, gen, absorbed)
     tombstoneV4RootMeta(spark, dir)
     // the commit point — everything above is invisible until this lands
@@ -902,7 +1059,7 @@ object AnnIndex {
   private def tombstoneV4RootMeta(spark: SparkSession, dir: String): Unit = {
     val fs = hadoopFs(spark, dir)
     if (!fs.exists(new Path(dir, "meta"))) return
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = readMeta(spark, dir)
     if (m.getAs[Int]("version") < FormatVersion) {
       import spark.implicits._
       Seq(
@@ -940,13 +1097,12 @@ object AnnIndex {
   }
 
   /** Snapshot `occupancy/` under `root`: per-cell code counts counted from
-    * the WRITTEN fit-layer files at `codesPath` (the physical truth, one
-    * cheap codes-only scan) — the fit-time reference [[staleness]] diffs
-    * against after [[append]]s and [[delete]]s.
+    * the WRITTEN fit-layer files of the fresh generation `gen` (the
+    * physical truth, one cheap codes-only scan) — the fit-time reference
+    * [[staleness]] diffs against after [[append]]s and [[delete]]s.
     */
-  private def writeOccupancy(spark: SparkSession, codesPath: String, root: String): Unit =
-    spark.read
-      .parquet(codesPath)
+  private def writeOccupancy(spark: SparkSession, gen: Path, root: String): Unit =
+    committedCodes(spark, gen)
       .groupBy(col("__cid").cast("int").as("__cid"))
       .agg(count(lit(1)).as("fit_n"))
       .coalesce(1)
@@ -957,8 +1113,10 @@ object AnnIndex {
   /** Encode a NEW batch against the FROZEN fit — nearest frozen centroid
     * (cell id) + per-subspace nearest frozen codeword (m code ids) —
     * producing index-shaped rows (`__cid`, `__nid`, `__codes`). The same
-    * two broadcast-join passes as [[fitIvfPq]]'s assignment/encode, with
-    * the fit step skipped: at 100 TB an arriving batch costs
+    * single map-side pass as [[fitIvfPq]]'s assignment/encode, reading
+    * the handle's driver-side fit ([[Similarity.FitTables]]) as a
+    * broadcast value, with the fit step skipped: building it launches no
+    * job, and at 100 TB an arriving batch costs
     * O(batch · (cells + m·ks)) comparisons and touches neither the
     * corpus nor the existing index files. A corpus row's code is a pure
     * function of (vector, centroids, codebooks), so encoding the corpus
@@ -973,9 +1131,9 @@ object AnnIndex {
   ): DataFrame =
     // the same fused map-side pass as [[fitIvfPq]]'s codes (round 18) —
     // an arriving batch is assigned and encoded in one projection against
-    // the broadcast frozen fit, no batch-sized shuffle or join
+    // the frozen fit, no batch-sized shuffle or join
     Similarity
-      .assignAndEncode(batch, idCol, vecCol, index.centroids, index.codebooks, index.dim, index.pqM)
+      .assignAndEncode(batch, idCol, vecCol, index.fit, index.dim, index.pqM)
       .select("__cid", "__nid", "__codes")
 
   /** Incremental index maintenance: encode `batch` against the persisted
@@ -1080,7 +1238,7 @@ object AnnIndex {
       // silent-drop hazard into a hard failure.
       val unseen = batch
         .select(col(idCol).as("__nid"))
-        .join(load(spark, dir).codes.select("__nid"), Seq("__nid"), "left_anti")
+        .join(committedCodes(spark, cur).select("__nid"), Seq("__nid"), "left_anti")
         .limit(1000)
         .count()
       if (unseen > 0) {
@@ -1104,8 +1262,12 @@ object AnnIndex {
     val fs = hadoopFs(spark, dir)
     if (fs.exists(new Path(layer, "_SUCCESS"))) {
       // committed layer already holds this batch id — replay or misuse?
-      val arrivingDf = encodeAgainst(load(spark, dir), batch, idCol, vecCol).localCheckpoint(true)
-      val existingDf = spark.read.parquet(layer.toString)
+      // the encode is materialized here, so the fit's broadcast can go
+      val handle = load(spark, dir)
+      val arrivingDf =
+        try encodeAgainst(handle, batch, idCol, vecCol).localCheckpoint(true)
+        finally handle.fit.destroy()
+      val existingDf = readCodes(spark, layer, Seq(layer), Seq(CellColumn))
       val existing = contentFingerprint(existingDf)
       val arriving = contentFingerprint(arrivingDf)
       if (existing == arriving) return // exact replay of a committed batch
@@ -1198,11 +1360,16 @@ object AnnIndex {
         throw new IllegalStateException(msg + " [strictReplay: refusing the ambiguous insert]")
       log.warn(msg)
     }
-    encodeAgainst(load(spark, dir), batch, idCol, vecCol)
-      .write
-      .mode("overwrite") // absorbs an uncommitted partial layer of the same id
-      .partitionBy("__cid")
-      .parquet(layer.toString)
+    // the handle's fit is broadcast for this one write: drop it after,
+    // instead of leaving it to the ContextCleaner
+    val handle = load(spark, dir)
+    try
+      encodeAgainst(handle, batch, idCol, vecCol)
+        .write
+        .mode("overwrite") // absorbs an uncommitted partial layer of the same id
+        .partitionBy("__cid")
+        .parquet(layer.toString)
+    finally handle.fit.destroy()
   }
 
   /** Order-free content fingerprint of index-shaped rows: (row count,
@@ -1286,10 +1453,15 @@ object AnnIndex {
     // quantizer (tiny tables, single-file copies); compaction of an
     // unrefit index keeps falling back to the index root's fit
     val curFitRoot = fitRoot(spark, dir, cur)
+    val fitContracts = FitContractsByVersion(FormatVersion)
     if (curFitRoot != dir)
-      Seq("meta", "centroids", "codebooks", "occupancy").foreach { sub =>
-        spark.read
-          .parquet(s"$curFitRoot/$sub")
+      Seq(
+        "meta" -> fitContracts.meta,
+        "centroids" -> fitContracts.centroids,
+        "codebooks" -> fitContracts.codebooks,
+        "occupancy" -> OccupancyContract
+      ).foreach { case (sub, contract) =>
+        readTable(spark, curFitRoot, sub, contract)
           .coalesce(1)
           .write
           .mode("overwrite")
@@ -1517,9 +1689,8 @@ object AnnIndex {
     */
   def staleness(spark: SparkSession, dir: String): DataFrame = {
     val gen = currentCodesPath(spark, dir)
-    val fit = spark.read
-      .parquet(s"${fitRoot(spark, dir, gen)}/occupancy")
-      .select(col("__cid").cast("int").as("cell"), col("fit_n"))
+    val fit = readTable(spark, fitRoot(spark, dir, gen), "occupancy", OccupancyContract)
+      .select(col("__cid").as("cell"), col("fit_n"))
     val now = committedCodes(spark, gen)
       .groupBy(col("__cid").cast("int").as("cell"))
       .agg(count(lit(1)).as("now_n"))
@@ -1603,11 +1774,9 @@ object AnnIndex {
     // plan literal, like every other knob: the configured cell count of
     // the fit that anchors the ledger (one tiny meta read; retried across
     // a concurrent tombstone's transient swap window, like load)
-    val cells =
-      retryTransientRead(s"$root/meta")(spark.read.parquet(s"$root/meta").head()).getAs[Int]("cells")
-    val fit = spark.read
-      .parquet(s"$root/occupancy")
-      .select(col("__cid").cast("int").as("cell"), col("fit_n"))
+    val cells = readMeta(spark, root).getAs[Int]("cells")
+    val fit = readTable(spark, root, "occupancy", OccupancyContract)
+      .select(col("__cid").as("cell"), col("fit_n"))
     val now = committedCodes(spark, gen)
       .groupBy(col("__cid").cast("int").as("cell"))
       .agg(count(lit(1)).as("now_n"), count_distinct(col("__batch")).as("layers"))
@@ -1645,11 +1814,18 @@ object AnnIndex {
       )
   }
 
-  /** Load a persisted index. The returned DataFrames are lazy parquet
-    * scans pinned to the generation that is current NOW — nothing is read
-    * until a probe runs, a probe touching `nprobe` cells reads only those
-    * code partitions, and a [[compact]] committed after this load does
-    * not move the handle (re-load to pick up the new generation).
+  /** Load a persisted index, pinned to the generation that is current
+    * NOW: a [[compact]] committed after this load does not move the handle
+    * (re-load to pick up the new generation). Every table is read through
+    * its format contract — one footer per table, checked on the driver —
+    * so a foreign or corrupt table fails here with a [[ContractViolation]]
+    * naming it, not inside a later probe. `load` collects the three fit
+    * tables (`meta`, `centroids`, `codebooks`: 1, `cells` and ≤ m·ks rows
+    * — three small jobs, the only ones it launches) and builds the
+    * handle's [[Similarity.FitTables]] from them, so neither an [[append]]
+    * encode nor the first probe needs a fit job. The codes stay a lazy
+    * scan: a probe touching `nprobe` cells reads only those code
+    * partitions.
     */
   def load(spark: SparkSession, dir: String): IvfPqIndex = {
     // the fit layers (meta/centroids/codebooks) resolve from the CURRENT
@@ -1661,38 +1837,47 @@ object AnnIndex {
     // bounded retry: a root-fit meta read can land exactly in a
     // concurrent tombstone's one-file overwrite window (see
     // tombstoneV4RootMeta) — transient, never silent wrongness
-    val meta = retryTransientRead(s"$root/meta")(spark.read.parquet(s"$root/meta").head())
+    val meta = readMeta(spark, root)
     val version = meta.getAs[Int]("version")
     // v4 reads natively under the v5 resolution rules (a v4 index simply
     // has no per-generation fit layers, the exact fallback fitRoot takes),
     // so existing indexes need no re-save; anything else is refused
     require(
-      version == FormatVersion || version == 4,
+      FitContractsByVersion.contains(version),
       s"unsupported AnnIndex format version $version (this reader handles 4 and $FormatVersion)"
     )
+    val contracts = FitContractsByVersion(version)
+    val centroids = readTable(spark, root, "centroids", contracts.centroids)
+    val codebooks = readTable(spark, root, "codebooks", contracts.codebooks)
+    // partition-discovered __cid reads as INT (the contract's type);
+    // select the documented column order explicitly, dropping the __batch
+    // ingest-layer column (probe semantics are layer-blind); only
+    // COMMITTED layers resolve — a half-written append is invisible
+    val codes = committedCodes(spark, gen).select("__cid", "__nid", "__codes")
+    val pqKs = meta.getAs[Int]("pq_ks")
     IvfPqIndex(
       dim = meta.getAs[Int]("dim"),
       cells = meta.getAs[Int]("cells"),
       pqM = meta.getAs[Int]("pq_m"),
-      pqKs = meta.getAs[Int]("pq_ks"),
+      pqKs = pqKs,
       seed = meta.getAs[Long]("seed"),
-      centroids = spark.read.parquet(s"$root/centroids"),
-      codebooks = spark.read.parquet(s"$root/codebooks"),
-      // partition-discovered __cid comes back as INT (written from int
-      // cids); select the documented column order explicitly, dropping
-      // the __batch ingest-layer column (probe semantics are layer-blind);
-      // only COMMITTED layers resolve — a half-written append is invisible
-      codes = committedCodes(spark, gen)
-        .select("__cid", "__nid", "__codes"),
+      centroids = centroids,
+      codebooks = codebooks,
+      codes = codes,
+      fit = Similarity.FitTables(centroids, codebooks, pqKs),
       generation = gen.getName match { case CodesVersionRe(n) => n.toInt }
     )
   }
 
   /** Probe the index with a query batch: rank each query's `nprobe`
-    * nearest cells (broadcast centroids), equi-join the codes-only index
-    * on cell id, ADC-rank via the broadcast codeword map, and optionally
-    * exact-rerank the top-`rerank` shortlist against `rerankFrom`
-    * (id → original vector — the corpus, a feature store, ...).
+    * nearest cells against the handle's driver-resident centroid entries
+    * (no centroid scan or join), equi-join the codes-only index on cell
+    * id, ADC-rank via the broadcast codeword map, and optionally
+    * exact-rerank the top-`rerank` shortlist. `rerankFrom` (id → original
+    * vector — the corpus, a feature store, ...) supplies the CANDIDATE
+    * vectors only; each query's own vector is its `vecCol` in `queries`.
+    * A query whose id is missing from `rerankFrom`, or whose copy there
+    * differs, is still reranked against its batch vector.
     * `excludeSelf` drops qid = nid matches when the query batch IS the
     * indexed corpus (the [[Similarity.ivfPqTopK]] semantics — with it,
     * fit → save → load → probe over the same corpus is bit-identical to
@@ -1733,40 +1918,42 @@ object AnnIndex {
     val probed = Similarity
       .cellRanks(
         Similarity.quantizedBase(queries, idCol, vecCol),
-        index.centroids,
+        index.fit,
         nprobe
       )
-    val orig = rerankFrom
-      .getOrElse(queries)
-      .select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
+    def vecs(df: DataFrame): DataFrame = df.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
     val idxCodes = idFilter.map(index.codes.filter).getOrElse(index.codes)
     Similarity.pqAdcRank(
       probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
       idxCodes,
-      index.codebookMap,
+      index.fit,
       index.pqM,
       index.pqKs,
       k,
       rerank,
-      orig,
+      vecs(rerankFrom.getOrElse(queries)),
+      vecs(queries),
       excludeSelf
     )
   }
 
   /** [[probeIvfPq]] for SMALL query batches — the online-serving shape:
     * rank the batch's probed cells on the DRIVER and filter the codes scan
-    * with a LITERAL cell-id IN list. The quantized batch is collected
-    * (batch × dim doubles — small by this method's contract), each query
-    * is ranked against the handle's centroids with the same
+    * with a LITERAL cell-id IN list. The batch is collected (batch × dim
+    * values — small by this method's contract), each query is quantized
+    * and ranked against the handle's centroids with the same
     * [[graft.functions.NativeMath.cellTopK]] kernel [[probeIvfPq]]
     * evaluates in Spark, and the (query, probed cell) rows ride into the
     * ADC rank as a local relation; building the probe launches at most the
-    * one job that collects the batch (none for a local batch). The
-    * handle's fit tables — the centroid entries and the PQ codeword map —
-    * are collected on its first probe and cached on the handle
-    * ([[IvfPqIndex]]), so later probes plan no `centroids/` or
-    * `codebooks/` scan. `maxProbedCells` caps the IN-list size: the guard
-    * fires after the batch is collected and ranked, so it protects plan
+    * one job that collects the batch (none for a local batch). The fit —
+    * the centroid entries and the PQ codeword map — comes from the
+    * handle's driver-side [[Similarity.FitTables]], so no probe plans a
+    * `centroids/` or `codebooks/` scan. With `rerank > k`, `rerankFrom`
+    * supplies the CANDIDATE vectors only: the query vectors come from the
+    * collected batch, so the rerank joins `rerankFrom` once, and a query
+    * whose id is missing from `rerankFrom` is still reranked.
+    * `maxProbedCells` caps the IN-list size: the guard fires after the
+    * batch is collected and ranked, so it protects plan
     * quality (a huge literal IN list defeats the pruning win), not driver
     * memory — a corpus-sized batch belongs in [[probeIvfPq]]. Because
     * [[save]] partitions the codes by `__cid`, the filter becomes STATIC
@@ -1798,8 +1985,11 @@ object AnnIndex {
       "rerank > k needs rerankFrom (id, vector) to fetch originals from — " +
         "a small online batch is almost never a valid rerank vector source"
     )
+    // one collect serves the cell ranking and the rerank's query vectors
+    val batch = queries.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
+    val local = batch.sparkSession.createDataFrame(batch.collect().toSeq.asJava, batch.schema)
     val (probed, probedCells) =
-      Similarity.cellRanksLocal(Similarity.quantizedBase(queries, idCol, vecCol), index.localCentroids, nprobe)
+      Similarity.cellRanksLocal(Similarity.quantizedBase(local, "__oid", "__ov"), index.fit, nprobe)
     require(
       probedCells.length <= maxProbedCells,
       s"batch probes ${probedCells.length} cells > maxProbedCells=$maxProbedCells — " +
@@ -1807,18 +1997,16 @@ object AnnIndex {
     )
     val cellPruned = index.codes.filter(col("__cid").isin(probedCells.map(_.toInt): _*))
     val prunedCodes = idFilter.map(cellPruned.filter).getOrElse(cellPruned)
-    val orig = rerankFrom
-      .getOrElse(queries)
-      .select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
     Similarity.pqAdcRank(
       probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
       prunedCodes,
-      index.codebookMap,
+      index.fit,
       index.pqM,
       index.pqKs,
       k,
       rerank,
-      orig,
+      rerankFrom.getOrElse(queries).select(col(idCol).as("__oid"), col(vecCol).as("__ov")),
+      local,
       excludeSelf
     )
   }

@@ -1,12 +1,16 @@
 package graft.llmops
 
 import graft.functions.NativeMath
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
@@ -684,7 +688,7 @@ object Similarity {
       qbase
         .withColumn("__one", oneKey(col("__id")))
         .join(centroidEntriesRow(centroids), Seq("__one"))
-        .select((-bestCellCol(col("__qv")).getField("__ncid")).cast("int").as("__cid"), col("__qv"))
+        .select((-bestCellCol(col("__qv"), col("__cents")).getField("__ncid")).cast("int").as("__cid"), col("__qv"))
         .groupBy("__cid")
         .agg(count(lit(1)).as("__n"), sumCols: _*)
         .select(col("__cid"), array((0 until d).map(i => col(s"__s$i") / col("__n")): _*).as("__cv"))
@@ -1124,7 +1128,7 @@ object Similarity {
     df.select(col(idCol).as("__id"), qvd.as("__qv"))
       .withColumn("__one", oneKey(col("__id")))
       .join(codebookEntriesByM(codebooks), Seq("__one"))
-      .withColumn("__mc", pqBestPerSubspace(col("__qv"), m, sub))
+      .withColumn("__mc", pqBestPerSubspace(col("__qv"), m, sub, col("__cbm")))
       .select(
         col("__id"),
         transform(col("__mc"), s => s.getField("__cid")).as("__codes"),
@@ -1134,11 +1138,10 @@ object Similarity {
 
   /** The PQ codebooks as ONE broadcastable row: (`__cbm` map from
     * subspace id to its codeword entries array<struct<__cid, __cv>>
-    * sorted by cid, `__one` = 0). The per-m MAP (not a positional array)
-    * for the same reason as [[pqCodebookMap]]: Lloyd's can drop emptied
-    * cells, so (m, cid) keys may be sparse.
+    * sorted by cid, `__one` = 0). A per-m MAP, not a positional array:
+    * Lloyd's can drop emptied cells, so (m, cid) keys may be sparse.
     */
-  private def codebookEntriesByM(cb: DataFrame): DataFrame =
+  private[llmops] def codebookEntriesByM(cb: DataFrame): DataFrame =
     broadcast(
       cb.groupBy(col("__m"))
         .agg(array_sort(collect_list(struct(col("__cid").as("__cid"), col("__cv").as("__cv")))).as("__es"))
@@ -1154,7 +1157,8 @@ object Similarity {
     * codeword by (exact squared L2, cid) of that subspace's slice of
     * `vec` — exactly the former min_by(struct(cid, cv), struct(d, cid))
     * per (id, m) group, evaluated without the explode/join/regroup.
-    * Requires `__cbm` in scope (join [[codebookEntriesByM]] first).
+    * `cbm` is the per-subspace entries map: [[codebookEntriesByM]]'s
+    * `__cbm` column, or [[FitTables]]'s.
     *
     * Two-level transform so each subspace SLICE materializes once per
     * (row, subspace): with the slice inline in the inner lambda it is
@@ -1164,7 +1168,7 @@ object Similarity {
     * kernel — one compiled ks×sub loop per (row, subspace) instead of an
     * interpreted lambda dispatch per codeword.
     */
-  private def pqBestPerSubspace(vec: Column, m: Int, sub: Int): Column =
+  private[llmops] def pqBestPerSubspace(vec: Column, m: Int, sub: Int, cbm: Column): Column =
     transform(
       transform(
         sequence(lit(0), lit(m - 1)),
@@ -1172,35 +1176,35 @@ object Similarity {
       ),
       p =>
         graft.functions.native
-          .codewordArgmin(p.getField("__sv"), element_at(col("__cbm"), p.getField("__m")))
+          .codewordArgmin(p.getField("__sv"), element_at(cbm, p.getField("__m")))
     )
 
   /** (`__cid`, `__nid`, `__codes`) for every row of `df` in ONE map-side
-    * projection against the broadcast fit tables — the fused
-    * assignment+encode pass shared by [[graft.llmops.AnnIndex.fitIvfPq]]
-    * and [[graft.llmops.AnnIndex.encodeAgainst]]. Replaces the pre-r18
-    * assignment⋈encode equi-join on vector id (two corpus-sized shuffle
-    * sides) with zero exchanges: nearest cell and the m code ids are both
-    * pure functions of (vector, centroids, codebooks).
+    * projection against the fit — the fused assignment+encode pass shared
+    * by [[graft.llmops.AnnIndex.fitIvfPq]] and
+    * [[graft.llmops.AnnIndex.encodeAgainst]]. Nearest cell and the m code
+    * ids are pure functions of (vector, centroids, codebooks), and the fit
+    * is referenced as a broadcast value ([[FitTables]]), not joined: the
+    * pass plans no exchange and launches no job of its own. The pre-r18
+    * form equi-joined an assignment pass and an encode pass on vector id
+    * (two corpus-sized shuffle sides); the r18–r20 form attached the fit
+    * through two `__one` constant-key joins against Spark aggregates of
+    * the fit tables, which cost their own jobs on every encode.
     */
   private[llmops] def assignAndEncode(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      centroids: DataFrame,
-      codebooks: DataFrame,
+      fit: FitTables,
       dim: Int,
       m: Int
   ): DataFrame = {
     val sub = dim / m
     quantizedBase(df, idCol, vecCol)
-      .withColumn("__one", oneKey(col("__id")))
-      .join(centroidEntriesRow(centroids), Seq("__one"))
-      .join(codebookEntriesByM(codebooks), Seq("__one"))
       .select(
-        (-bestCellCol(col("__qv")).getField("__ncid")).cast(centroids.schema("__cid").dataType).as("__cid"),
+        (-bestCellCol(col("__qv"), fit.centsCol).getField("__ncid")).cast(fit.cidType).as("__cid"),
         col("__id").as("__nid"),
-        transform(pqBestPerSubspace(col("__qv"), m, sub), s => s.getField("__cid")).as("__codes")
+        transform(pqBestPerSubspace(col("__qv"), m, sub, fit.cbmCol), s => s.getField("__cid")).as("__codes")
       )
   }
 
@@ -1215,12 +1219,12 @@ object Similarity {
     *
     * The probe join moves the CODES, not reconstructions: the candidate
     * side of the cell-id equi-join carries only (id, cell, m small ints),
-    * and the codeword reconstruction happens AFTER the join via a
-    * broadcast (m·ks)-entry codebook map attached as a 1-row cross join
-    * (the centroid-table idiom) — per-pair cost is the same m map
-    * lookups an ADC lookup table would do, and the shuffle payload is
-    * the production index payload, ~6× smaller than shipping float
-    * reconstructions at the registered (m=8, dim=64) shape. Scores are
+    * and the codeword reconstruction happens AFTER the join via the
+    * broadcast (m·ks)-entry codeword map of [[FitTables]] — per-pair
+    * cost is the same m map lookups an ADC lookup table would do, and
+    * the shuffle payload is the production index payload, ~6× smaller
+    * than shipping float reconstructions at the registered (m=8, dim=64)
+    * shape. Scores are
     * bit-identical to reconstruction-before-join (same codewords,
     * concatenated in the same subspace order, same cosine arithmetic).
     *
@@ -1247,37 +1251,39 @@ object Similarity {
   ): DataFrame = {
     val d = resolveDim(df.select(col(idCol).as("__id"), col(vecCol).as("__v")), dim)
     val base = quantizedBase(df, idCol, vecCol)
-    val centroids = kmeansCentroids(df, idCol, vecCol, cells, iters, seed)
+    // the fit is collected once into driver-side tables; every pass below
+    // reads those, never the centroid or codebook aggregates again
+    val fit = FitTables(
+      kmeansCentroids(df, idCol, vecCol, cells, iters, seed),
+      pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed),
+      pqKs
+    )
     // ONE nprobe-deep centroid scoring pass serves both roles of the
     // self-probe: crank = 1 assigns index cells, crank ≤ nprobe probes
-    val probed = cellRanks(base, centroids, nprobe).localCheckpoint(true)
-    // read twice (encode + the post-join reconstruction map): snapshot
-    // per this file's cache-lifecycle idiom
-    val cb = pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed).localCheckpoint(true)
+    val probed = cellRanks(base, fit, nprobe).localCheckpoint(true)
     // the INDEX side of the probe join: (cell, id, m code ids) — nothing
     // vector-sized rides the shuffle. Codes are computed MAP-SIDE on the
     // home-cell rows (round 18): the pre-r18 shape pqEncode'd the corpus
     // separately and equi-joined it back on vector id — a two-sided
-    // corpus shuffle for a per-row pure function of the broadcast
-    // codebooks.
+    // corpus shuffle for a per-row pure function of the codebooks.
     val index = probed
       .filter(col("__crank") === 1)
-      .withColumn("__one", oneKey(col("__id")))
-      .join(codebookEntriesByM(cb), Seq("__one"))
       .select(
         col("__id").as("__nid"),
         col("__cid"),
-        transform(pqBestPerSubspace(col("__qv"), pqM, d / pqM), s => s.getField("__cid")).as("__codes")
+        transform(pqBestPerSubspace(col("__qv"), pqM, d / pqM, fit.cbmCol), s => s.getField("__cid")).as("__codes")
       )
+    val vecs = df.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
     pqAdcRank(
       probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
       index,
-      pqCodebookMap(cb, pqKs),
+      fit,
       pqM,
       pqKs,
       k,
       rerank,
-      df.select(col(idCol).as("__oid"), col(vecCol).as("__ov")),
+      vecs,
+      vecs,
       excludeSelf = true
     )
   }
@@ -1304,7 +1310,7 @@ object Similarity {
   // assignment/probe pass, purely to pick each row's own top cells. The
   // decision needs nothing from other rows, so it is computable per row:
   // attach ALL centroids as one broadcast single-row array (the
-  // pqCodebookMap idiom), score them in a `transform` lambda (the same
+  // [[codebookEntriesByM]] idiom), score them in a `transform` lambda (the same
   // native `cosine` kernel — interpreted dispatch per centroid, compiled
   // loop per evaluation), order with the struct that replicates the
   // window's (csim DESC, cid ASC) exactly, and posexplode the top slice.
@@ -1315,18 +1321,19 @@ object Similarity {
   // first under desc) — the same ordering the window used.
   // -------------------------------------------------------------------
 
-  /** Non-foldable always-0 join key derived from an attribute — a literal
-    * key would be pushed down as a filter and degrade the attach join to
-    * a nested loop (see [[pqCodebookMap]]).
+  /** Non-foldable always-0 join key derived from an attribute. A literal
+    * key on either join side gets pushed down as a filter and the attach
+    * join degrades to a nested loop; the aggregate-output `__one` of
+    * [[centroidEntriesRow]] and [[codebookEntriesByM]] is the other side.
     */
-  private def oneKey(c: Column): Column = pmod(xxhash64(c), lit(1)).cast("int")
+  private[llmops] def oneKey(c: Column): Column = pmod(xxhash64(c), lit(1)).cast("int")
 
   /** All centroids as ONE broadcastable row:
     * (`__cents` array<struct<__ncid, __cv>> sorted, `__one` = 0). `__ncid`
     * is the NEGATED cell id so the per-row top-k sort is a plain struct
     * sort_array desc (csim desc, cid asc) with no per-element negation.
     */
-  private def centroidEntriesRow(centroids: DataFrame): DataFrame =
+  private[llmops] def centroidEntriesRow(centroids: DataFrame): DataFrame =
     broadcast(
       centroids
         .groupBy()
@@ -1338,9 +1345,10 @@ object Similarity {
         )
     )
 
-  /** Per-row top-`upTo` cells of `__cents` by (cosine desc, cid asc) —
-    * array<struct<__csim, __ncid>>, already ordered. Requires `__cents`
-    * in scope (join [[centroidEntriesRow]] first). Native kernel (one
+  /** Per-row top-`upTo` cells of the centroid entries `cents` by (cosine
+    * desc, cid asc) — array<struct<__csim, __ncid>>, already ordered.
+    * `cents` is [[centroidEntriesRow]]'s `__cents` column (joined in
+    * first) or [[FitTables]]'s. Native kernel (one
     * compiled loop per row); the interpreted HOF form
     * `slice(sort_array(transform(cents, struct(cosine, ncid)), desc), 1,
     * upTo)` is bit-identical but pays a lambda dispatch per CENTROID —
@@ -1348,8 +1356,8 @@ object Similarity {
     * would dominate the pass (KernelEquivalenceSpec pins kernel ≡ HOF
     * equality on adversarial inputs, interpreted AND codegen).
     */
-  private def topCellsCol(vec: Column, upTo: Int): Column =
-    graft.functions.native.cellTopK(vec, col("__cents"), upTo)
+  private def topCellsCol(vec: Column, cents: Column, upTo: Int): Column =
+    graft.functions.native.cellTopK(vec, cents, upTo)
 
   /** HOF reference formulation of [[topCellsCol]] — spec-only, the
     * bit-identity oracle for the native kernel.
@@ -1368,11 +1376,12 @@ object Similarity {
     )
 
   /** The single best cell by (cosine desc, cid asc) as one
-    * struct<__csim, __ncid> — [[topCellsCol]] at upTo = 1. Requires
-    * `__cents` in scope.
+    * struct<__csim, __ncid> — [[topCellsCol]] at upTo = 1. `cents` is the
+    * centroid entries: [[centroidEntriesRow]]'s `__cents` column, or
+    * [[FitTables]]'s.
     */
-  private def bestCellCol(vec: Column): Column =
-    element_at(graft.functions.native.cellTopK(vec, col("__cents"), 1), 1)
+  private[llmops] def bestCellCol(vec: Column, cents: Column): Column =
+    element_at(topCellsCol(vec, cents, 1), 1)
 
   /** Explicit partition count for the probe-side repartition below:
     * the configured shuffle width, floored at the cluster's core count.
@@ -1409,14 +1418,32 @@ object Similarity {
       vec: Column,
       upTo: Int,
       keep: Seq[Column]
-  ): DataFrame = {
-    // the kernel's ncid rides as long; restore the caller's cid type
-    // (int for k-means fits, long for the identity quantizer) exactly
-    val cidType = centroids.schema("__cid").dataType
+  ): DataFrame =
+    explodeTopCellsOf(
+      base.withColumn("__one", oneKey(col("__id"))).join(centroidEntriesRow(centroids), Seq("__one")),
+      col("__cents"),
+      centroids.schema("__cid").dataType,
+      vec,
+      upTo,
+      keep
+    )
+
+  /** [[explodeTopCells]] against centroid entries `cents` already in
+    * scope of `base` — a joined `__cents` column or a [[FitTables]]
+    * value. `cidType` is the centroids' cid type: the kernel's ncid rides
+    * as long and is restored to it exactly (int for k-means fits, long
+    * for the identity quantizer).
+    */
+  private def explodeTopCellsOf(
+      base: DataFrame,
+      cents: Column,
+      cidType: DataType,
+      vec: Column,
+      upTo: Int,
+      keep: Seq[Column]
+  ): DataFrame =
     base
-      .withColumn("__one", oneKey(col("__id")))
-      .join(centroidEntriesRow(centroids), Seq("__one"))
-      .select(keep :+ posexplode(topCellsCol(vec, upTo)).as(Seq("__pos", "__tc")): _*)
+      .select(keep :+ posexplode(topCellsCol(vec, cents, upTo)).as(Seq("__pos", "__tc")): _*)
       .select(
         keep ++ Seq(
           (-col("__tc.__ncid")).cast(cidType).as("__cid"),
@@ -1425,44 +1452,151 @@ object Similarity {
         ): _*
       )
       .repartition(probeParallelism(base), col("__cid"))
-  }
 
-  /** Rank centroids per vector by quantized cosine (deterministic cid
-    * tie-break) and keep ranks ≤ `upTo`: `upTo = 1` is index-side cell
-    * assignment, `upTo = nprobe` is query-side probing. Map-side since
-    * round 18 (see the block comment above); the output is
-    * (`__id`, `__qv`, `__cid`, `__crank`), bit-identical to the former
-    * crossJoin+window form.
+  /** Rank the fit's centroids per vector by quantized cosine
+    * (deterministic cid tie-break) and keep ranks ≤ `upTo`: `upTo = 1` is
+    * index-side cell assignment, `upTo = nprobe` is query-side probing.
+    * Map-side since round 18 (see the block comment above), against the
+    * fit's driver-resident centroid entries — no centroid scan, aggregate
+    * or join; the output is (`__id`, `__qv`, `__cid`, `__crank`),
+    * bit-identical to the former crossJoin+window form.
     */
-  private[llmops] def cellRanks(base: DataFrame, centroids: DataFrame, upTo: Int): DataFrame =
-    explodeTopCells(base, centroids, col("__qv"), upTo, Seq(col("__id"), col("__qv")))
+  private[llmops] def cellRanks(base: DataFrame, fit: FitTables, upTo: Int): DataFrame =
+    explodeTopCellsOf(base, fit.centsCol, fit.cidType, col("__qv"), upTo, Seq(col("__id"), col("__qv")))
       .select(col("__id"), col("__qv"), col("__cid"), col("__crank"))
 
-  /** The centroids as the driver-side cell-ranking table: [[centroidEntriesRow]]'s
-    * `__cents` array as catalyst data (nulls kept), the type code of its
-    * vectors for [[graft.functions.NativeMath.cellTopK]], and the caller's
-    * cid type that ranked `__ncid`s are cast back to.
+  /** An IVF-PQ fit held on the driver in the three forms the encode and
+    * probe passes read, built once per index handle:
+    *   - `__cents` — [[centroidEntriesRow]]'s centroid entries
+    *     array<struct<__ncid, __cv>> (negated cid, sorted), the
+    *     cell-assignment table of [[assignAndEncode]] and
+    *     [[cellRanksLocal]];
+    *   - `__cbm` — [[codebookEntriesByM]]'s map from subspace to its
+    *     cid-sorted codeword entries, the encode table;
+    *   - `__cb` — the ADC reconstruction map from `m·ks + cid` to the
+    *     codeword, read by [[pqAdcRank]].
+    * Each is row-identical to the Spark aggregate it replaces (same
+    * types, same element order; maps carry the same entries), but is
+    * built from the collected fit tables on the driver, so using it costs
+    * no job. Spark passes reach it through one non-foldable
+    * [[graft.functions.BroadcastValue]] leaf: the fit is broadcast once
+    * per `FitTables` on first use, never copied into a plan. The value is
+    * one `UnsafeRow` (`__cents`, `__cbm`, `__cb`), the representation the
+    * former broadcast joins handed the kernels.
     */
-  private[llmops] final case class LocalCentroids(entries: ArrayData, ccode: Int, cidType: DataType)
+  final class FitTables private (private[llmops] val row: UnsafeRow, val schema: StructType, val cidType: DataType)
+      extends Serializable {
 
-  /** Collect `centroids` into a [[LocalCentroids]] — one small job
-    * (`cells` rows).
-    */
-  private[llmops] def localCentroids(centroids: DataFrame): LocalCentroids = {
-    val row = centroidEntriesRow(centroids).select("__cents")
-    val centsType = row.schema("__cents").dataType
-    val cvType = centsType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("__cv").dataType
-    LocalCentroids(
-      CatalystTypeConverters.createToCatalystConverter(centsType)(row.head().get(0)).asInstanceOf[ArrayData],
-      NativeMath.typeCode(cvType),
-      centroids.schema("__cid").dataType
+    private[llmops] def cents: ArrayData = row.getArray(0)
+
+    /** Type code of the centroid vectors for [[NativeMath.cellTopK]]. */
+    private[llmops] val ccode: Int = NativeMath.typeCode(
+      schema("__cents").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("__cv").dataType
     )
+
+    @transient private var bc: Broadcast[UnsafeRow] = _
+
+    private def value: Column = synchronized {
+      if (bc == null) bc = SparkContext.getOrCreate().broadcast(row)
+      graft.functions.native.broadcastValue(bc, schema)
+    }
+
+    private[llmops] def centsCol: Column = value.getField("__cents")
+    private[llmops] def cbmCol: Column = value.getField("__cbm")
+    private[llmops] def cbCol: Column = value.getField("__cb")
+
+    /** Drop the broadcast from the executors and the driver now, instead
+      * of when the ContextCleaner finds it unreachable. Plans built before
+      * this call fail if run after it; a later use broadcasts afresh.
+      */
+    private[llmops] def destroy(): Unit = synchronized {
+      if (bc != null) {
+        bc.destroy()
+        bc = null
+      }
+    }
+  }
+
+  private[llmops] object FitTables {
+
+    /** Collect `centroids` (`__cid`, `__cv`) and `codebooks` (`__m`,
+      * `__cid`, `__cv`) — one small job each: `cells` and ≤ m·ks rows —
+      * and build the three entry tables on the driver. Rows are collected
+      * as Catalyst rows, so every vector stays one compact array from the
+      * scan to the final `UnsafeRow`, never boxed element by element.
+      * Throws on a null or duplicate map key, as the Spark aggregates
+      * would.
+      */
+    def apply(centroids: DataFrame, codebooks: DataFrame, pqKs: Int): FitTables = {
+      val cid = centroids.schema("__cid")
+      val cv = centroids.schema("__cv")
+      val m = codebooks.schema("__m")
+      val kcid = codebooks.schema("__cid")
+      val kcv = codebooks.schema("__cv")
+      val centType = StructType(Seq(StructField("__ncid", LongType, cid.nullable), StructField("__cv", cv.dataType, cv.nullable)))
+      val entryType = StructType(Seq(StructField("__cid", kcid.dataType, kcid.nullable), StructField("__cv", kcv.dataType, kcv.nullable)))
+      val schema = StructType(
+        Seq(
+          StructField("__cents", ArrayType(centType, containsNull = false), nullable = false),
+          StructField("__cbm", MapType(m.dataType, ArrayType(entryType, containsNull = false), valueContainsNull = false), nullable = false),
+          StructField("__cb", MapType(IntegerType, kcv.dataType, valueContainsNull = kcv.nullable), nullable = false)
+        )
+      )
+      // array_sort's element order
+      def sorted(rows: Seq[InternalRow], t: StructType): GenericArrayData = {
+        val ord = TypeUtils.getInterpretedOrdering(t)
+        new GenericArrayData(rows.sortWith(ord.lt).toArray[Any])
+      }
+      def mapData(entries: Seq[(Any, Any)], keyType: DataType, table: String): ArrayBasedMapData = {
+        entries.groupBy(_._1).collectFirst { case (k, es) if es.size > 1 => k }.foreach { k =>
+          throw new IllegalArgumentException(s"$table: duplicate map key $k")
+        }
+        val ord = TypeUtils.getInterpretedOrdering(keyType)
+        val byKey = entries.sortWith((a, b) => ord.lt(a._1, b._1))
+        new ArrayBasedMapData(new GenericArrayData(byKey.map(_._1).toArray), new GenericArrayData(byKey.map(_._2).toArray))
+      }
+      def collectRows(df: DataFrame): Seq[InternalRow] = {
+        val qe = df.queryExecution
+        SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect()).toSeq
+      }
+      val negate: InternalRow => Any = cid.dataType match {
+        case IntegerType => r => (-r.getInt(0)).toLong
+        case LongType    => r => -r.getLong(0)
+        case other       => throw new IllegalArgumentException(s"centroid __cid must be int or long, got $other")
+      }
+      val cents = collectRows(centroids.select("__cid", "__cv")).map { r =>
+        new GenericInternalRow(Array[Any](if (r.isNullAt(0)) null else negate(r), r.get(1, cv.dataType))): InternalRow
+      }
+      val words = collectRows(codebooks.select("__m", "__cid", "__cv"))
+      def key(r: InternalRow, i: Int, t: DataType, what: String): Any =
+        if (r.isNullAt(i)) throw new IllegalArgumentException(s"codebooks: null $what") else r.get(i, t)
+      val cbm = words
+        .groupBy(key(_, 0, m.dataType, "__m"))
+        .toSeq
+        .map { case (mm, rs) =>
+          mm -> (sorted(rs.map(r => new GenericInternalRow(Array[Any](r.get(1, kcid.dataType), r.get(2, kcv.dataType)))), entryType): Any)
+        }
+      val cb = words.map { r =>
+        val k = (key(r, 0, m.dataType, "__m").asInstanceOf[Number].longValue * pqKs) +
+          key(r, 1, kcid.dataType, "__cid").asInstanceOf[Number].longValue
+        (Math.toIntExact(k): Any) -> r.get(2, kcv.dataType)
+      }
+      val row = new GenericInternalRow(
+        Array[Any](
+          sorted(cents, centType),
+          mapData(cbm, m.dataType, "codebooks by subspace"),
+          mapData(cb, IntegerType, "codeword map")
+        )
+      )
+      new FitTables(UnsafeProjection.create(schema).apply(row).copy(), schema, cid.dataType)
+    }
   }
 
   /** [[cellRanks]] of a SMALL batch, ranked on the driver: `base`
-    * (`__id`, `__qv`) is collected, each vector is ranked against `cents`
-    * with the same [[graft.functions.NativeMath.cellTopK]] kernel the
-    * Spark pass evaluates, and the (`__id`, `__qv`, `__cid`) rows come
+    * (`__id`, `__qv`) is collected, each vector is ranked against the
+    * fit's centroid entries with the same
+    * [[graft.functions.NativeMath.cellTopK]] kernel the Spark pass
+    * evaluates, and the (`__id`, `__qv`, `__cid`) rows come
     * back as a local relation — no job beyond the collect, and none when
     * `base` is itself local. Rows are identical to [[cellRanks]]'s: a null
     * vector ranks no cell (the kernel's null-in/null-out, exploded to
@@ -1470,7 +1604,7 @@ object Similarity {
     * cell null and so ranks the first `upTo` cells by cid. Also returns
     * the distinct probed cell ids.
     */
-  private[llmops] def cellRanksLocal(base: DataFrame, cents: LocalCentroids, upTo: Int): (DataFrame, Seq[Long]) = {
+  private[llmops] def cellRanksLocal(base: DataFrame, fit: FitTables, upTo: Int): (DataFrame, Seq[Long]) = {
     require(upTo > 0, "upTo must be positive")
     val qvType = base.schema("__qv").dataType
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qvType)
@@ -1479,7 +1613,7 @@ object Similarity {
       if (r.isNullAt(1)) Nil
       else {
         val vec = toCatalyst(r.get(1)).asInstanceOf[ArrayData]
-        val top = NativeMath.cellTopK(vec, cents.entries, vcode, cents.ccode, upTo)
+        val top = NativeMath.cellTopK(vec, fit.cents, vcode, fit.ccode, upTo)
         (0 until top.numElements()).map(i => Row(r.get(0), r.get(1), top.getStruct(i, 2).getLong(1)))
       }
     }
@@ -1487,57 +1621,30 @@ object Similarity {
       StructType(Seq(base.schema("__id"), base.schema("__qv"), StructField("__ncid", LongType, nullable = false)))
     val probed = base.sparkSession
       .createDataFrame(ranked.asJava, schema)
-      .select(col("__id"), col("__qv"), (-col("__ncid")).cast(cents.cidType).as("__cid"))
+      .select(col("__id"), col("__qv"), (-col("__ncid")).cast(fit.cidType).as("__cid"))
     (probed, ranked.map(-_.getLong(2)).distinct)
-  }
-
-  /** The PQ codebooks as a single-row broadcast (m·ks)-entry map keyed by
-    * `m·ks + cid` (a MAP, not a positional array — Lloyd's can drop
-    * emptied cells, so (m, cid) keys may be sparse), plus a NON-FOLDABLE
-    * constant join key `__one` (an aggregate output, not a literal: a
-    * literal key on either join side gets pushed down as a filter and the
-    * attach join degrades to a nested loop).
-    */
-  private[llmops] def pqCodebookMap(cb: DataFrame, pqKs: Int): DataFrame =
-    broadcast(
-      cb.groupBy()
-        .agg(
-          map_from_entries(
-            collect_list(
-              struct((col("__m") * pqKs + col("__cid")).cast("int").as("k"), col("__cv").as("v"))
-            )
-          ).as("__cb"),
-          min(lit(0)).as("__one")
-        )
-    )
-
-  /** [[pqCodebookMap]] collected once into a broadcast local relation —
-    * the form an index handle keeps, so its probes plan no codebook scan
-    * or aggregate.
-    */
-  private[llmops] def localCodebookMap(cb: DataFrame, pqKs: Int): DataFrame = {
-    val m = pqCodebookMap(cb, pqKs)
-    broadcast(m.sparkSession.createDataFrame(m.collect().toSeq.asJava, m.schema))
   }
 
   /** ADC-rank probed queries against a codes-only index, with the
     * optional exact fetch-and-rerank refinement. `probedQueries` is
     * (`__qid`, `__qv`, `__cid`) — one row per (query, probed cell);
-    * `index` is (`__cid`, `__nid`, `__codes`); `cbMap` is
-    * [[pqCodebookMap]]'s single row; `orig` supplies the rerank fetch as
-    * (`__oid`, `__ov`). Candidates are reconstructed AFTER the cell-id
+    * `index` is (`__cid`, `__nid`, `__codes`); `fit` supplies the codeword
+    * map (`__cb`). Candidates are reconstructed AFTER the cell-id
     * equi-join from the broadcast codeword map — the join ships m code
-    * ids per candidate, never a vector.
+    * ids per candidate, never a vector. The rerank (`rerank > k`) reads
+    * candidate vectors from `candidateVecs` and query vectors from
+    * `queryVecs`, both (`__oid`, `__ov`).
     */
   private[llmops] def pqAdcRank(
       probedQueries: DataFrame,
       index: DataFrame,
-      cbMap: DataFrame,
+      fit: FitTables,
       pqM: Int,
       pqKs: Int,
       k: Int,
       rerank: Int,
-      orig: DataFrame,
+      candidateVecs: DataFrame,
+      queryVecs: DataFrame,
       excludeSelf: Boolean
   ): DataFrame = {
     val shortlist = math.max(k, rerank)
@@ -1560,17 +1667,12 @@ object Similarity {
       // AQE-coalesced to one partition at small exchange sizes and
       // serialize the pair expansion (see [[explodeTopCells]])
       .repartition(probeParallelism(index), col("__cid"))
-      // non-foldable constant key on BOTH sides (pmod(attr, 1) ≡ 0): see
-      // [[pqCodebookMap]] — plans as a 1-row BroadcastHashJoin,
-      // constant-cost at any scale
-      .withColumn("__one", pmod(col("__cid"), lit(1)).cast("int"))
-      .join(cbMap, Seq("__one"))
       .withColumn(
         "__rv", // reconstruct from codes; same subspace order ⇒ bit-identical scores
         flatten(
           transform(
             sequence(lit(0), lit(pqM - 1)),
-            mm => element_at(col("__cb"), (mm * pqKs + element_at(col("__codes"), mm + 1)).cast("int"))
+            mm => element_at(fit.cbCol, (mm * pqKs + element_at(col("__codes"), mm + 1)).cast("int"))
           )
         )
       )
@@ -1598,8 +1700,8 @@ object Similarity {
         // exchange instead of adding its own (guide §2.4 — two operations
         // keyed the same way share one exchange). Inner joins commute;
         // results are identical.
-        .join(orig.withColumnRenamed("__oid", "__nid").withColumnRenamed("__ov", "__nfull"), Seq("__nid"))
-        .join(orig.withColumnRenamed("__oid", "__qid").withColumnRenamed("__ov", "__qfull"), Seq("__qid"))
+        .join(candidateVecs.withColumnRenamed("__oid", "__nid").withColumnRenamed("__ov", "__nfull"), Seq("__nid"))
+        .join(queryVecs.withColumnRenamed("__oid", "__qid").withColumnRenamed("__ov", "__qfull"), Seq("__qid"))
         .withColumn("__exact", cosine(col("__qfull"), col("__nfull")))
         .withColumn("rank", row_number().over(wr))
         .filter(col("rank") <= k)

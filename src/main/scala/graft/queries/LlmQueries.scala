@@ -2354,8 +2354,9 @@ object LlmQueries {
     // codebooks + the codes-only corpus index partitioned by cell id —
     // m small ints per vector, the ~30× compression that turns a 100 TB
     // float32 corpus into a ~3 TB index whose probe prunes to
-    // nprobe/cells of the files), LOAD it back as lazy parquet scans,
-    // and PROBE the query batch against the loaded tables. The probe
+    // nprobe/cells of the files), LOAD it back (contract-checked tables,
+    // the fit collected to the driver, the codes a lazy scan), and PROBE
+    // the query batch against the loaded index. The probe
     // shares ivfPqTopK's exact building blocks, and parquet round-trips
     // doubles bit-exact, so the oracle is the SAME full-algorithm replay
     // as llm_ann_ivf_pq — the gate proves a saved index answers

@@ -541,7 +541,7 @@ object StreamingQueries {
         val dir = tmpDir("t12_idx")
         val idx = AnnIndex.fitIvfPq(fx, "vec_id", "v", cells = 8, iters = 2, seed = 42L, pqM = 8, pqKs = 32, pqIters = 2, dim = LlmQueries.EmbDim)
         AnnIndex.save(idx, dir)
-        val loaded = AnnIndex.load(spark, dir) // frozen: lazy parquet scans, shared across micro-batches
+        val loaded = AnnIndex.load(spark, dir) // frozen: driver-side fit + lazy codes scan, shared across micro-batches
         // three files -> three micro-batches under maxFilesPerTrigger=1
         fx.filter(col("vec_id") % 97 === 0)
           .repartition(3)

@@ -3,6 +3,7 @@ package graft.llmops
 import java.net.URI
 
 import graft.SparkTestSession
+import graft.contracts.ContractViolation
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -68,11 +69,11 @@ object LastWinsFileSystem {
   @volatile var usurpMaintainerWith: Option[String] = None
 }
 
-/** Round-18 operational hardening of the persisted ANN index: the lease
-  * read-back verify for non-atomic stores, the bounded transient-read
-  * retry behind the tombstone meta swap, reader-visible generation
-  * pinning, and the absorbed-batch record carried across a generational
-  * save-over.
+/** Operational hardening of the persisted ANN index: the lease read-back
+  * verify for non-atomic stores, the bounded transient-read retry behind
+  * the tombstone meta swap, reader-visible generation pinning, the
+  * absorbed-batch record carried across a generational save-over, and the
+  * table contracts every index read goes through.
   */
 class AnnIndexHardeningSpec extends AnyFunSuite with SparkTestSession {
 
@@ -235,5 +236,70 @@ class AnnIndexHardeningSpec extends AnyFunSuite with SparkTestSession {
     AnnIndex.append(spark, dir, b0, "vec_id", "v", batchId = 0L, strictReplay = true)
     AnnIndex.append(spark, dir, freshData, "vec_id", "v", batchId = 0L, strictReplay = true)
     assert(AnnIndex.load(spark, dir).codes.count() == 61)
+  }
+
+  private def savedIndex(df: org.apache.spark.sql.DataFrame, prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    AnnIndex.save(
+      AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8),
+      dir
+    )
+    dir
+  }
+
+  /** Rewrite the parquet table at `path` as `f` of its current rows. */
+  private def rewrite(path: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    val next = f(spark.read.parquet(path)).localCheckpoint(true) // snapshot before the in-place overwrite
+    next.coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  test("a foreign or corrupt index table fails at load with a ContractViolation naming it") {
+    import org.apache.spark.sql.functions.col
+    val df = fixture(45, seedOffset = 2)
+    def violation(dir: String): ContractViolation = intercept[ContractViolation](AnnIndex.load(spark, dir))
+
+    val floatCentroids = savedIndex(df, "graft_contract_cv")
+    rewrite(s"$floatCentroids/centroids")(_.withColumn("__cv", col("__cv").cast("array<float>")))
+    val cv = violation(floatCentroids)
+    assert(cv.getMessage.contains("table centroids") && cv.getMessage.contains("__cv"), cv.getMessage)
+
+    val noKs = savedIndex(df, "graft_contract_meta")
+    rewrite(s"$noKs/meta")(_.drop("pq_ks"))
+    val meta = violation(noKs)
+    assert(meta.getMessage.contains("table meta") && meta.getMessage.contains("pq_ks"), meta.getMessage)
+
+    val longCodes = savedIndex(df, "graft_contract_codes")
+    val fitLayer = s"$longCodes/codes_v1/__batch=${AnnIndex.FitBatchId}"
+    val cells = new java.io.File(fitLayer).listFiles().filter(_.getName.startsWith("__cid=")).map(_.getName)
+    cells.foreach(c => rewrite(s"$fitLayer/$c")(_.withColumn("__codes", col("__codes").cast("array<bigint>"))))
+    val codes = violation(longCodes)
+    assert(codes.getMessage.contains("table codes") && codes.getMessage.contains("__codes"), codes.getMessage)
+
+    // the readers that do not load a handle go through the same contracts
+    assert(intercept[ContractViolation](AnnIndex.maintenancePolicy(spark, noKs)).getMessage.contains("table meta"))
+    assert(intercept[ContractViolation](AnnIndex.staleness(spark, longCodes)).getMessage.contains("table codes"))
+  }
+
+  test("contract-pinned load accepts a v4 root and string or int __nid ids, and probes like the fitted handle") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val v4 = savedIndex(fixture(45, seedOffset = 3), "graft_contract_v4")
+    rewrite(s"$v4/meta")(_.withColumn("version", lit(4)))
+    assert(AnnIndex.load(spark, v4).codes.count() == 45)
+    for (idType <- Seq("string", "int")) {
+      val df = fixture(45, seedOffset = 4).withColumn("vec_id", col("vec_id").cast(idType)).localCheckpoint(true)
+      val fitted = AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_contract_$idType").toString
+      AnnIndex.save(fitted, dir)
+      val loaded = AnnIndex.load(spark, dir)
+      assert(loaded.codes.schema("__nid").dataType.simpleString == idType)
+      val batch = df.limit(4).localCheckpoint(true)
+      def probe(idx: AnnIndex.IvfPqIndex): Seq[String] = AnnIndex
+        .probeIvfPqPruned(idx, batch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df))
+        .collect()
+        .map(_.toString)
+        .sorted
+        .toSeq
+      assert(probe(loaded) == probe(fitted), s"$idType ids: a loaded handle must probe like the fitted one")
+    }
   }
 }

@@ -27,9 +27,15 @@ import scala.util.Random
   *   4. [[Similarity.pqCodebooks]] ≡ the explode/min_by Lloyd reference,
   *      same purpose.
   *   5. [[Similarity.cellRanksLocal]] (the pruned probe's driver-side cell
-  *      ranking) ≡ [[Similarity.cellRanks]] on adversarial batches — null
+  *      ranking) and [[Similarity.cellRanks]] (the Spark pass over the
+  *      same fit) ≡ the former join-form ranking against the centroid
+  *      aggregate, on adversarial batches — null
   *      vectors and elements, wrong lengths, NaN, ties, three vector
   *      types, int and long cell ids, `upTo` above the cell count.
+  *   6. [[Similarity.FitTables]] ≡ the Spark aggregates it replaces
+  *      (centroid entries, codeword entries by subspace, the ADC codeword
+  *      map) on a fit whose Lloyd rounds emptied cells, and the encode
+  *      through it ≡ the former join-form encode.
   *
   * All equality assertions go through Spark's null-safe `<=>` (SQL
   * semantics: NaN equals NaN, ±0.0 equal — exactly the ordering-contract
@@ -382,17 +388,95 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
     } {
       val batch = adversarialBatch(elem, dim, rows = 90).localCheckpoint(true)
       val centroids = adversarialCentroids(cidType, dim).localCheckpoint(true)
-      val local = Similarity.localCentroids(centroids)
+      val fit = Similarity.FitTables(centroids, Seq((0, 0, Seq(1.0))).toDF("__m", "__cid", "__cv"), pqKs = 1)
       for (upTo <- Seq(1, 2, 5, 7)) {
         def rows(df: DataFrame): Seq[String] = df.select("__id", "__qv", "__cid").collect().map(_.toString).sorted.toSeq
-        val ref = Similarity.cellRanks(batch, centroids, upTo)
-        val (got, cells) = Similarity.cellRanksLocal(batch, local, upTo)
+        // the join form every ranking pass used before the fit moved to the driver
+        val ref = batch
+          .withColumn("__one", Similarity.oneKey(col("__id")))
+          .join(Similarity.centroidEntriesRow(centroids), Seq("__one"))
+          .select(col("__id"), col("__qv"), explode(graft.functions.native.cellTopK(col("__qv"), col("__cents"), upTo)).as("__tc"))
+          .select(col("__id"), col("__qv"), (-col("__tc.__ncid")).cast(cidType).as("__cid"))
+        val viaSpark = Similarity.cellRanks(batch, fit, upTo)
+        val (got, cells) = Similarity.cellRanksLocal(batch, fit, upTo)
         val at = s"elem=$elem cid=$cidType upTo=$upTo"
         assert(got.schema("__cid").dataType == cidType, s"probe cid must keep the centroid cid type ($at)")
+        assert(viaSpark.schema("__cid").dataType == cidType, s"cellRanks cid must keep the centroid cid type ($at)")
+        assert(rows(viaSpark) == rows(ref), s"cellRanks over the fit != join-form ranking ($at)")
         assert(rows(got) == rows(ref), s"driver-side ranking != cellRanks ($at)")
         val refCells = ref.select(col("__cid").cast("long")).distinct().collect().map(_.getLong(0)).sorted.toSeq
         assert(cells.sorted == refCells, s"probed cell list != cellRanks' distinct cells ($at)")
       }
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // 6. FitTables ≡ the Spark aggregates; encode through it ≡ join form
+  // ------------------------------------------------------------------
+
+  /** Three distinct directions repeated: with cells and ks above three,
+    * Lloyd's rounds empty cells and codewords, so cids come out sparse.
+    */
+  private lazy val sparseFitCorpus: DataFrame =
+    (0 until 90)
+      .map(i => (i.toLong, Seq.tabulate(8)(j => ((i % 3) * 7 + (j % (i % 3 + 2))).toFloat + (i % 5) * 1e-3f)))
+      .toDF("id", "v")
+      .localCheckpoint(true)
+
+  private def sparseFit(): (DataFrame, DataFrame) = {
+    // seed 45: centroid ids 0, 1, 3, 6 survive; codeword ids skip 1 and 4-5
+    val c = Similarity.kmeansCentroids(sparseFitCorpus, "id", "v", cells = 7, iters = 2, seed = 45L).localCheckpoint(true)
+    val cb = Similarity.pqCodebooks(sparseFitCorpus, "id", "v", dim = 8, m = 2, ks = 6, iters = 2, seed = 45L).localCheckpoint(true)
+    (c, cb)
+  }
+
+  test("FitTables entries equal the Spark aggregates' rows, including sparse cids after Lloyd's empties cells") {
+    val (c, cb) = sparseFit()
+    val cids = c.select("__cid").as[Int].collect().sorted.toSeq
+    assert(cids.size < 7 && cids.last >= cids.size, s"fixture must leave sparse centroid ids, got $cids")
+    val words = cb.select("__m", "__cid").as[(Int, Int)].collect().toSeq
+    assert(words.groupBy(_._1).values.exists(ws => ws.map(_._2).max >= ws.size), s"fixture must leave sparse codeword ids, got $words")
+    val fit = Similarity.FitTables(c, cb, pqKs = 6)
+    val got = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(fit.schema)(fit.row)
+      .asInstanceOf[Row]
+    val cents = Similarity.centroidEntriesRow(c).select("__cents")
+    val byM = Similarity.codebookEntriesByM(cb).select("__cbm")
+    val codewords = cb
+      .groupBy()
+      .agg(
+        map_from_entries(
+          collect_list(struct((col("__m") * 6 + col("__cid")).cast("int").as("k"), col("__cv").as("v")))
+        ).as("__cb")
+      )
+    for ((ref, name) <- Seq(cents -> "__cents", byM -> "__cbm", codewords -> "__cb")) {
+      assert(fit.schema(name).dataType == ref.schema(name).dataType, s"$name type")
+      assert(got.getAs[Any](name) == ref.head().getAs[Any](name), s"$name entries")
+    }
+    assert(got.getAs[Seq[Row]]("__cents").map(_.getLong(0)) == cids.reverse.map(-_.toLong), "centroid entries sorted by -cid")
+  }
+
+  test("encoding through FitTables equals the former join-form encode (interpreted and codegen)") {
+    val (c, cb) = sparseFit()
+    val fit = Similarity.FitTables(c, cb, pqKs = 6)
+    val batch = sparseFitCorpus
+      .unionByName(randomVecs(60, dim = 8).select(col("id") + 1000 as "id", col("v")))
+      .localCheckpoint(true)
+    val joinForm = Similarity
+      .quantizedBase(batch, "id", "v")
+      .withColumn("__one", Similarity.oneKey(col("__id")))
+      .join(Similarity.centroidEntriesRow(c), Seq("__one"))
+      .join(Similarity.codebookEntriesByM(cb), Seq("__one"))
+      .select(
+        (-Similarity.bestCellCol(col("__qv"), col("__cents")).getField("__ncid")).cast("int").as("__cid"),
+        col("__id").as("__nid"),
+        transform(Similarity.pqBestPerSubspace(col("__qv"), 2, 4, col("__cbm")), s => s.getField("__cid")).as("__codes")
+      )
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    underBothCodegenPaths {
+      val viaFit = Similarity.assignAndEncode(batch, "id", "v", fit, dim = 8, m = 2)
+      assert(viaFit.schema == joinForm.schema)
+      assert(rows(viaFit) == rows(joinForm), "FitTables encode != join-form encode")
     }
   }
 }

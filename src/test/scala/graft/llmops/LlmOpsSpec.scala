@@ -5,6 +5,8 @@ import graft.contracts.ContractViolation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Unit coverage for the llmops operator family on hand-checkable corpora;
   * the driver-level DuckDB oracles (LlmQueries) cover the full testdata.
   */
@@ -879,6 +881,37 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     )
   }
 
+  /** Spark jobs `body` launches, counted by job group: a sentinel job in a
+    * second group drains the listener bus, which delivers in order.
+    */
+  private def jobsOf[A](what: String)(body: => A): (A, Int) = {
+    val group = s"graft-jobs-$what-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`)    => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _                =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, what)
+      val out = body
+      sc.setJobGroup(sentinel, "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("AnnIndex pruned probe serves from the handle: fit tables cached per handle, one job to build, generation-scoped") {
     val rnd = new scala.util.Random(53)
     val vecs = (0 until 60).map { i =>
@@ -897,7 +930,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
       d.select("qid", "nid", "rank").as[(Long, Long, Long)].collect().sortBy(identity).toSeq
 
     // (a) a second probe on the same handle plans no fit-table scan: the
-    // centroid entries and codeword map come from the handle's cache
+    // centroid entries and codeword map come from the handle's FitTables
     val pinned = AnnIndex.load(spark, dir)
     val pinnedAnswers = run(pruned(pinned))
     val second = pruned(pinned)
@@ -915,35 +948,9 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
 
     // (b) building a pruned probe of a localCheckpoint batch on a warm
     // handle launches at most one job (the batch collect) before the
-    // result is collected. Jobs are counted by job group; a sentinel job
-    // in a second group drains the listener bus, which delivers in order.
-    val group = s"graft-probe-build-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`)    => buildJobs.incrementAndGet()
-          case Some(`sentinel`) => drained.countDown()
-          case _                =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val built =
-      try {
-        sc.setJobGroup(group, "pruned probe build")
-        val d = pruned(pinned)
-        sc.setJobGroup(sentinel, "listener drain")
-        sc.parallelize(Seq(1), 1).count()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-        d
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    assert(buildJobs.get() <= 1, s"building a pruned probe launched ${buildJobs.get()} jobs, expected at most 1")
+    // result is collected
+    val (built, buildJobs) = jobsOf("probe-build")(pruned(pinned))
+    assert(buildJobs <= 1, s"building a pruned probe launched $buildJobs jobs, expected at most 1")
     assert(run(built) == pinnedAnswers)
 
     // (c) the cache is scoped to the handle: after a refit, a fresh load
@@ -957,6 +964,32 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     assert(reloaded.nonEmpty && reloaded.forall(_._2 % 2 == 0), "the refit generation answers from survivors only")
     assert(pinnedAnswers.exists(_._2 % 2 == 1), "fixture: the pre-refit index must answer with some odd ids")
     assert(run(pruned(pinned)) == pinnedAnswers, "a pinned handle must keep its own generation's answers")
+  }
+
+  test("AnnIndex load collects the fit in at most 3 jobs; append of a local batch launches at most 4, its load included") {
+    val rnd = new scala.util.Random(71)
+    val vecs = (0 until 60).map { i =>
+      (i.toLong, Seq.tabulate(8)(_ => (i % 3 * 5).toFloat + rnd.nextFloat() * 0.1f))
+    }
+    val df = vecs.toDF("vec_id", "v").localCheckpoint(true)
+    val dir = java.nio.file.Files.createTempDirectory("graft_annjobs").toString
+    AnnIndex.save(
+      AnnIndex.fitIvfPq(df.filter($"vec_id" < 48), "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8),
+      dir
+    )
+    val (loaded, loadJobs) = jobsOf("load")(AnnIndex.load(spark, dir))
+    assert(loadJobs <= 3, s"load launched $loadJobs jobs, expected at most 3 (meta, centroids, codebooks)")
+    // the first probe of a loaded handle builds without a fit job
+    val batch = df.filter($"vec_id" < 4).localCheckpoint(true)
+    val (_, probeJobs) = jobsOf("probe-build") {
+      AnnIndex.probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 2)
+    }
+    assert(probeJobs <= 1, s"building the first probe of a loaded handle launched $probeJobs jobs")
+    // a local batch: its encode is a projection of a local relation
+    val local = spark.createDataFrame(df.filter($"vec_id" >= 48).collect().toSeq.asJava, df.schema)
+    val (_, appendJobs) = jobsOf("append")(AnnIndex.append(spark, dir, local, "vec_id", "v", batchId = 0L))
+    assert(appendJobs <= 4, s"append launched $appendJobs jobs, expected at most 4 (load's 3 and the write)")
+    assert(AnnIndex.load(spark, dir).codes.count() == 60)
   }
 
   test("AnnIndex.append: frozen-fit encode grows the index in place, staleness ledger balances") {
