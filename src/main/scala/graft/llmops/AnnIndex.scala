@@ -861,9 +861,10 @@ object AnnIndex {
   /** Fit the index: coarse k-means ([[Similarity.kmeansCentroids]]) +
     * per-subspace PQ codebooks ([[Similarity.pqCodebooks]]), then ONE
     * assignment pass producing the codes-only corpus index (nearest cell
-    * + m code ids per vector). Fit tables are snapshotted (each feeds
-    * [[save]] and the handle's driver-side [[Similarity.FitTables]], which
-    * the assignment pass reads). At 100 TB fit on a sample via the
+    * + m code ids per vector). Both fits come back as local relations
+    * held on the driver, so [[save]] writes them and the handle's
+    * [[Similarity.FitTables]], which the assignment pass reads, is built
+    * from them without a further job. At 100 TB fit on a sample via the
     * underlying `fitSamplePercent` knobs' discipline and pass the full
     * corpus here only for the assignment/encode pass — a map-only pass,
     * no corpus shuffle.
@@ -881,12 +882,8 @@ object AnnIndex {
       dim: Int = Similarity.AutoDim
   ): IvfPqIndex = {
     val d = Similarity.resolveDim(df.select(col(idCol).as("__id"), col(vecCol).as("__v")), dim)
-    val centroids = Similarity
-      .kmeansCentroids(df, idCol, vecCol, cells, iters, seed)
-      .localCheckpoint(true) // feeds the fit tables AND save
-    val cb = Similarity
-      .pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed)
-      .localCheckpoint(true) // feeds the fit tables AND save
+    val centroids = Similarity.kmeansCentroids(df, idCol, vecCol, cells, iters, seed)
+    val cb = Similarity.pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed)
     val fit = Similarity.FitTables(centroids, cb, pqKs)
     IvfPqIndex(
       dim = d,

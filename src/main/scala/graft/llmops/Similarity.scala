@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
@@ -457,15 +458,16 @@ object Similarity {
 
   /** IVF-style approximate top-k: a deterministic coarse quantizer (the
     * `cells` vectors with the smallest ids act as centroids — no k-means
-    * fit, no driver collect) assigns every vector to its nearest cell;
-    * queries probe their `nprobe` nearest cells; candidates are exact-ranked
-    * by cosine within probed cells.
+    * fit) assigns every vector to its nearest cell; queries probe their
+    * `nprobe` nearest cells; candidates are exact-ranked by cosine within
+    * probed cells.
     *
-    * Scale shape: the vectors⋈centroids assignment is a broadcast join
-    * (centroids are tiny), the candidate join is a bucketed equi-join on
-    * cell id — the O(n²) scan becomes O(n²/cells × nprobe). Swap the
-    * centroid selection for a real k-means fit when vectors are clustered;
-    * the join structure is unchanged.
+    * Scale shape: the `cells` centroids are collected to the driver (one
+    * small job) and every vector ranks them per row against that
+    * [[FitTables]] broadcast value; the candidate join is a bucketed
+    * equi-join on cell id — the O(n²) scan becomes O(n²/cells × nprobe).
+    * Swap the centroid selection for a real k-means fit when vectors are
+    * clustered; the join structure is unchanged.
     */
   def ivfTopK(
       df: DataFrame,
@@ -476,32 +478,34 @@ object Similarity {
       nprobe: Int = 2
   ): DataFrame = {
     val base = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val centroids =
-      base.orderBy("__id").limit(cells)
-        .select(col("__id").as("__cid"), col("__v").as("__cv"))
-    // nearest `nprobe` cells per vector (rank 1 = home cell for indexing),
-    // map-side since round 18 (no cells× corpus shuffle — see the
-    // assignment block comment below); snapshotted because both the index
-    // side and the query side read it.
-    val probed = explodeTopCells(base, centroids, col("__v"), nprobe, Seq(col("__id"), col("__v")))
+    // nearest `nprobe` cells per vector (rank 1 = home cell for indexing);
+    // snapshotted because both the index side and the query side read it
+    val probed = explodeTopCells(base, smallestIdCentroids(base, cells), col("__v"), nprobe, Seq(col("__id"), col("__v")))
       .select(col("__id"), col("__v"), col("__cid"), col("__crank"))
       .localCheckpoint(true)
     ivfProbeRank(probed, k)
   }
+
+  /** The identity quantizer's fit: the `cells` smallest-id rows of `base`
+    * (`__id`, `__v`) as centroid entries, collected in one job.
+    */
+  private def smallestIdCentroids(base: DataFrame, cells: Int): FitTables =
+    FitTables.centroids(base.orderBy("__id").limit(cells).select(col("__id").as("__cid"), col("__v").as("__cv")))
 
   /** Cross-table IVF top-k — the standard vector-index query mode: the
     * corpus is indexed ONCE (each vector filed in its home cell under the
     * deterministic smallest-id coarse quantizer, as [[ivfTopK]]), and the
     * query table — not part of the index — probes its `nprobe` nearest
     * cells. Candidates are the cell-id equi-join, exact-ranked by cosine.
-    * Same scale shape as [[ivfTopK]]: broadcast centroid assignment, then
-    * O(|q|·|corpus|/cells × nprobe) bucketed candidates instead of the
-    * brute O(|q|·|corpus|). Recall behavior matches [[ivfTopK]] at the
-    * same (cells, nprobe) — see `llm_ann_recall`; for clustered corpora,
-    * fit real centroids with [[kmeansCentroids]] (public) and feed the
-    * same probe join. Ids may overlap across tables: a query matching its
-    * own corpus copy is reported (callers filter `qid =!= nid` if the
-    * query set is indexed too).
+    * Same scale shape as [[ivfTopK]]: per-row centroid assignment against
+    * the collected centroids, then O(|q|·|corpus|/cells × nprobe)
+    * bucketed candidates instead of the brute O(|q|·|corpus|). Recall
+    * behavior matches [[ivfTopK]] at the same (cells, nprobe) — see
+    * `llm_ann_recall`; for clustered corpora, fit real centroids with
+    * [[kmeansCentroids]] (public) and feed the same probe join. Ids may
+    * overlap across tables: a query matching its own corpus copy is
+    * reported (callers filter `qid =!= nid` if the query set is indexed
+    * too).
     */
   def ivfTopKAgainst(
       queries: DataFrame,
@@ -514,9 +518,7 @@ object Similarity {
   ): DataFrame = {
     val cbase = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
     val qbase = queries.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val centroids =
-      cbase.orderBy("__id").limit(cells)
-        .select(col("__id").as("__cid"), col("__v").as("__cv"))
+    val centroids = smallestIdCentroids(cbase, cells)
     def assign(b: DataFrame, n: Int): DataFrame =
       explodeTopCells(b, centroids, col("__v"), n, Seq(col("__id"), col("__v")))
         .select(col("__id"), col("__v"), col("__cid"))
@@ -551,7 +553,9 @@ object Similarity {
 
   /** Deterministic spherical k-means centroids (fixed Lloyd iterations)
     * over int8-quantized vectors — the "real fit" upgrade to [[ivfTopK]]'s
-    * identity quantizer for clustered data.
+    * identity quantizer for clustered data. Returns (`__cid`, `__cv`) as a
+    * local relation: the fit runs here, and its ≤ `cells` rows are held on
+    * the driver.
     *
     * Everything is engine-replayable, which is what makes the fit
     * verifiable rather than trusted:
@@ -565,28 +569,20 @@ object Similarity {
     *     stop would make the plan shape data-dependent);
     *   - assignment is argmax cosine with a cid tie-break.
     *
-    * Scale shape per iteration: one broadcast of `cells` centroids against
-    * the quantized base (map-side argmax via `max_by`, no window), one
-    * (cells × dim)-row aggregation for the update. The quantized base is
-    * snapshotted once with an eager local checkpoint and reused by every
-    * iteration; centroid sets are snapshotted because iteration N+1's plan
-    * would otherwise recompute iteration N from scratch (lineage doubles
-    * per iteration without it). Empty cells simply drop out (both engines
-    * replay that identically).
+    * The rounds are [[lloyd]]'s with no key: each scores the quantized
+    * base against the previous round's centroids, held in a [[FitTables]]
+    * broadcast value, and one exchange updates the means. Empty cells
+    * simply drop out (both engines replay that identically).
     *
     * `fitSamplePercent` < 100 fits on a deterministic md5-bucket sample of
-    * the corpus (same RNG-free idiom as
-    * [[graft.llmops.Corpus.stratifiedSampleByHash]]) — the standard move
-    * at 100 TB, where two extra full-corpus passes just to place `cells`
-    * centroids is wasted I/O: centroid positions converge on a sample
-    * orders of magnitude smaller than the corpus, and the full corpus
-    * still gets assigned/probed exactly as before (only the FIT sees the
-    * sample; callers' assignment joins are unchanged). The sample must
-    * still contain at least `cells` rows — ENFORCED with a named error
-    * (one cheap count on the checkpointed sample), never a silent
-    * fewer-centroids degradation. Default 100 = fit on everything
-    * (bit-identical to the pre-knob behavior, and what the registered
-    * oracle replays).
+    * the corpus ([[fitSample]]) — the standard move at 100 TB, where two
+    * extra full-corpus passes just to place `cells` centroids is wasted
+    * I/O: centroid positions converge on a sample orders of magnitude
+    * smaller than the corpus, and the full corpus still gets
+    * assigned/probed exactly as before (only the FIT sees the sample).
+    * The sample must still contain at least `cells` rows — ENFORCED with
+    * a named error, never a silent fewer-centroids degradation. Default
+    * 100 = fit on everything (what the registered oracle replays).
     */
   def kmeansCentroids(
       df: DataFrame,
@@ -598,100 +594,11 @@ object Similarity {
       fitSamplePercent: Int = 100
   ): DataFrame = {
     require(cells > 0 && iters >= 0, "cells must be positive, iters non-negative")
-    require(
-      fitSamplePercent > 0 && fitSamplePercent <= 100,
-      "fitSamplePercent must be in (0, 100]"
-    )
-    val qvd = transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double"))
-    val sampled =
-      if (fitSamplePercent == 100) df
-      else {
-        val bucket = conv(
-          substring(md5(concat_ws(":", lit("fit"), lit(seed.toString), col(idCol).cast("string"))), 1, 8),
-          16,
-          10
-        ).cast("long") % 100
-        df.filter(bucket < fitSamplePercent)
-      }
-    val qbase = sampled.select(col(idCol).as("__id"), qvd.as("__qv")).localCheckpoint(true)
-    // Enforce the documented invariant instead of silently degrading: a
-    // too-aggressive fitSamplePercent (or an empty input) would otherwise
-    // produce fewer than `cells` centroids via the init below and quietly
-    // change ivfTopKKmeans' nprobe semantics. One cheap guard job on the
-    // already-checkpointed sample — it ships `cells` INTs (the projected
-    // vector sizes), and the first row doubles as the dimensionality
-    // probe the fused update aggregation below needs (round 19): same
-    // single job the former `limit(cells).count()` guard paid.
-    val guard = qbase.limit(cells).select(size(col("__qv")).as("__d")).collect()
-    val sampleRows = guard.length
-    require(
-      sampleRows == cells,
-      s"kmeansCentroids: fit sample has only $sampleRows rows but cells=$cells — " +
-        s"raise fitSamplePercent (=$fitSamplePercent) or lower cells"
-    )
-    val d = guard.head.getInt(0)
-    val h = conv(
-      substring(md5(concat_ws(":", lit(seed.toString), col("__id").cast("string"))), 1, 8),
-      16,
-      10
-    ).cast("long")
-    // Seeded init = the `cells` smallest rows by (md5 hash, id), cid in
-    // that order. One bounded aggregation pass (round 19): Spark's own
-    // bottom-k collector with map-side partial aggregation — ≤ cells
-    // rows of state per task, ONE exchange of tasks×cells rows — where
-    // the former orderBy+limit+window form paid a TakeOrdered pass PLUS
-    // a single-partition window (two plan stages for the same rows).
-    // Ordering is identical: struct (h, id, qv) compares h then the
-    // unique id, so the selected set and its order match
-    // orderBy(__h, __id).limit(cells) exactly.
-    val init = qbase
-      .withColumn("__h", h)
-      .groupBy()
-      .agg(
-        sort_array(
-          graft.functions.native.collectBottomK(struct(col("__h"), col("__id"), col("__qv")), cells)
-        ).as("__top")
-      )
-      .select(posexplode(col("__top")).as(Seq("__p", "__e")))
-      .select(col("__p").cast("int").as("__cid"), col("__e.__qv").as("__cv"))
-    // NO eager checkpoint between rounds (round 11): each round's
-    // centroid table is `cells` rows and rides into the next round as a
-    // broadcast exchange, so the whole fit collapses into the consumer's
-    // single job DAG — the former round-by-round localCheckpoints cost a
-    // scheduled job each (~0.5 s fixed overhead per round at bench scale)
-    // and bought nothing at practical `iters`. qbase (read every round)
-    // stays checkpointed above; callers broadcast the returned centroids,
-    // which materializes the fit exactly once.
-    //
-    // Assignment is MAP-SIDE since round 18: the pre-r18 round scored
-    // cells via crossJoin(broadcast) and re-grouped by vector id (map-
-    // side max_by, but still one full-corpus exchange per round, vector
-    // payload included). The argmax is a pure per-row function of the
-    // broadcast centroids, so it now rides a transform lambda
-    // ([[bestCellCol]] — identical (sim desc, cid asc) ordering as the
-    // former max_by struct) and the only exchange per round is the
-    // partial-aggregated update — the corpus is read, never shuffled.
-    //
-    // Update aggregation is ONE exchange per round (round 19): per-dim
-    // running sums as `d` codegen'd sum() aggregates over element_at —
-    // the former posexplode + groupBy(cid, dim) + regroup-to-array shape
-    // paid TWO exchanges per round and pushed dim× the rows through the
-    // partial hash agg just to reassemble the array it exploded. Shuffled
-    // state per task: cells rows × (d sums + count) — the same bytes as
-    // before in dim× fewer rows.
-    // int8 values summed as integral doubles: exact below 2^53 — no
-    // reduction-order dependence (per-dim sums are identical to the
-    // exploded form's), and the single division is the only rounding
-    // step, performed once per (cell, dim) in both shapes.
-    val sumCols = (0 until d).map(i => sum(element_at(col("__qv"), i + 1)).as(s"__s$i"))
-    (1 to iters).foldLeft(init) { (centroids, _) =>
-      qbase
-        .withColumn("__one", oneKey(col("__id")))
-        .join(centroidEntriesRow(centroids), Seq("__one"))
-        .select((-bestCellCol(col("__qv"), col("__cents")).getField("__ncid")).cast("int").as("__cid"), col("__qv"))
-        .groupBy("__cid")
-        .agg(count(lit(1)).as("__n"), sumCols: _*)
-        .select(col("__cid"), array((0 until d).map(i => col(s"__s$i") / col("__n")): _*).as("__cv"))
+    val points = quantizedBase(fitSample(df, idCol, seed, fitSamplePercent), idCol, vecCol)
+    lloyd(points, Nil, cells, iters, seed) { n =>
+      s"kmeansCentroids: fit sample has only $n rows but cells=$cells — raise fitSamplePercent (=$fitSamplePercent) or lower cells"
+    } { prev =>
+      (-bestCellCol(col("__qv"), FitTables.centroids(prev).centsCol).getField("__ncid")).cast("int")
     }
   }
 
@@ -728,8 +635,7 @@ object Similarity {
       col(vecCol).as("__v"),
       transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double")).as("__qv")
     )
-    val centroids =
-      kmeansCentroids(df, idCol, vecCol, cells, iters, seed, fitSamplePercent)
+    val centroids = FitTables.centroids(kmeansCentroids(df, idCol, vecCol, cells, iters, seed, fitSamplePercent))
     val probed = explodeTopCells(base, centroids, col("__qv"), nprobe, Seq(col("__id"), col("__v")))
       .select(col("__id"), col("__v"), col("__cid"), col("__crank"))
       .localCheckpoint(true)
@@ -750,9 +656,10 @@ object Similarity {
     * the (csim, id)-minimal element; on chains it keeps every local
     * minimum (deterministic in both engines, SQL-replayable).
     *
-    * Scale shape: centroid assignment is a broadcast join (cells rows);
-    * the pair search shuffles on cell id only — but the per-task pair
-    * work is O(Σ cell_size²), so `cells` MUST scale with the corpus: at a
+    * Scale shape: centroid assignment is per row, against the fit's
+    * `cells` centroids held in a [[FitTables]] broadcast value; the pair
+    * search shuffles on cell id only — but the per-task pair work is
+    * O(Σ cell_size²), so `cells` MUST scale with the corpus: at a
     * fixed cell count, within-cell population grows linearly in n and the
     * pair join degrades to ~n²/cells (the paper runs ~10⁵ clusters at
     * LAION scale for exactly this reason). The default is therefore
@@ -817,8 +724,7 @@ object Similarity {
       col(vecCol).as("__v"),
       transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double")).as("__qv")
     )
-    val centroids =
-      kmeansCentroids(df, idCol, vecCol, resolvedCells, iters, seed, fitSamplePercent)
+    val centroids = FitTables.centroids(kmeansCentroids(df, idCol, vecCol, resolvedCells, iters, seed, fitSamplePercent))
     val asg = explodeTopCells(base, centroids, col("__qv"), 1, Seq(col("__id"), col("__v")))
       .select(col("__id"), col("__v"), col("__cid"), col("__csim"))
       .localCheckpoint(true) // both sides of the pair join + the survivor anti-join read it
@@ -946,41 +852,23 @@ object Similarity {
   // Nearest Neighbor Search")
   // -------------------------------------------------------------------
 
-  /** Exact squared L2 between two integer-valued double arrays: every
-    * difference, square, and partial sum is an exact integer below 2^53,
-    * so comparisons are reduction-order-independent and bit-identical
-    * across engines — the reason PQ assignment runs in the QUANTIZED
-    * space (same rationale as the k-means family's quantized fit).
-    * Native codegen'd expression (round 15): this is the PQ fit/encode
-    * inner loop, evaluated n·m·ks times per assignment pass — the HOF
-    * form ([[l2sqHof]], kept as the spec's bit-identity reference) paid
-    * an interpreted lambda + a materialized zip array per comparison.
-    */
-  private def l2sq(a: Column, b: Column): Column =
-    graft.functions.native.arrayL2Sq(a, b)
-
-  /** HOF reference formulation of [[l2sq]] (spec-only). */
-  private[llmops] def l2sqHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0),
-      (acc, v) => acc + v
-    )
-
   /** Per-subspace PQ codebooks: split each int8-quantized vector into `m`
     * contiguous subvectors of `dim / m` dims and run deterministic
-    * Lloyd's independently per subspace — md5-order seeded init
-    * (TakeOrdered-style per-subspace top-`ks`, no global window), argmin
-    * squared-L2 assignment with cid tie-break, exact integer-sum means.
-    * Returns (`__m`, `__cid`, `__cv`).
+    * Lloyd's independently per subspace ([[lloyd]] keyed by `__m`) —
+    * md5-order seeded init per subspace, argmin squared-L2 assignment
+    * with cid tie-break (the native `codewordArgmin` kernel against the
+    * previous round's codebooks, read through a [[FitTables]] broadcast
+    * value), exact integer-sum means. Returns (`__m`, `__cid`, `__cv`) as
+    * a local relation of ≤ m·ks rows.
     *
     * Scale shape: the fit is `iters + 1` passes over (id, subvector)
     * rows — `m`·n rows of `dim/m` doubles, the same bytes as the corpus,
-    * with broadcast codebooks (m·ks rows) on the assignment side and a
-    * (m, cid, dim)-keyed exact-mean shuffle on the update side. At 100 TB
+    * with one (m, cid)-keyed exact-mean exchange per round. At 100 TB
     * fit on a sample (`fitSamplePercent`, standard PQ practice — the
     * paper fits codebooks on ~10⁵–10⁶ vectors) and ENCODE the full
-    * corpus; encoding is one broadcast join, no shuffle.
+    * corpus; encoding is a map-only pass, no shuffle. The sample must
+    * hold at least `ks` rows — ENFORCED with a named error, never a
+    * silent fewer-codewords degradation.
     */
   def pqCodebooks(
       df: DataFrame,
@@ -996,105 +884,95 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
     require(ks > 0 && iters >= 0, "ks must be positive, iters non-negative")
     val sub = dim / m
-    val sampled =
-      if (fitSamplePercent == 100) df
-      else {
-        val bucket = conv(
-          substring(md5(concat_ws(":", lit("fit"), lit(seed.toString), col(idCol).cast("string"))), 1, 8),
-          16,
-          10
-        ).cast("long") % 100
-        df.filter(bucket < fitSamplePercent)
-      }
-    val qvd = transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double"))
-    val subs = sampled
-      .select(col(idCol).as("__id"), qvd.as("__qv"))
+    val points = quantizedBase(fitSample(df, idCol, seed, fitSamplePercent), idCol, vecCol)
       .select(
         col("__id"),
-        explode(
-          transform(
-            sequence(lit(0), lit(m - 1)),
-            mm => struct(mm.as("m"), slice(col("__qv"), mm * sub + 1, lit(sub)).as("sv"))
-          )
-        ).as("__e")
+        posexplode(transform(sequence(lit(0), lit(m - 1)), mm => slice(col("__qv"), mm * sub + 1, lit(sub))))
+          .as(Seq("__m", "__qv"))
       )
-      .select(col("__id"), col("__e.m").as("__m"), col("__e.sv").as("__sv"))
-      .localCheckpoint(true) // read by init + every Lloyd round
+    lloyd(points, Seq("__m"), ks, iters, seed) { n =>
+      s"pqCodebooks: fit sample has only $n rows but ks=$ks — raise fitSamplePercent (=$fitSamplePercent) or lower ks"
+    } { prev =>
+      graft.functions.native.codewordArgmin(col("__qv"), element_at(FitTables.codebooks(prev).cbmCol, col("__m"))).getField("__cid")
+    }
+  }
+
+  /** The fit sample of `df`: every row when `fitSamplePercent` is 100,
+    * else the rows whose md5 bucket of (seed, id) falls below it — a
+    * deterministic, RNG-free sample (the idiom of
+    * [[graft.llmops.Corpus.stratifiedSampleByHash]]) that the oracle
+    * replays.
+    */
+  private def fitSample(df: DataFrame, idCol: String, seed: Long, fitSamplePercent: Int): DataFrame = {
+    require(fitSamplePercent > 0 && fitSamplePercent <= 100, "fitSamplePercent must be in (0, 100]")
+    if (fitSamplePercent == 100) df
+    else {
+      val bucket = conv(
+        substring(md5(concat_ws(":", lit("fit"), lit(seed.toString), col(idCol).cast("string"))), 1, 8),
+        16,
+        10
+      ).cast("long") % 100
+      df.filter(bucket < fitSamplePercent)
+    }
+  }
+
+  /** Deterministic Lloyd's k-means, run independently per value of the
+    * `keys` columns: the one fit loop behind [[kmeansCentroids]] (no key)
+    * and [[pqCodebooks]] (keyed by subspace — PQ is m k-means runs).
+    * `points` holds `keys`, `__id` and the quantized vector `__qv`; the
+    * result, (`keys`, `__cid`, `__cv`), is a local relation.
+    *
+    *   - Init: per key, the `k` points first by (md5(seed, key, id), id),
+    *     cid in that order. One bounded aggregation pass with Spark's
+    *     bottom-k collector (≤ k rows of state per task and key); struct
+    *     (h, id, qv) compares h, then the unique id, so each key's set and
+    *     order match orderBy(h, id).limit(k).
+    *   - Every key must hold `k` init rows, else `tooFew(fewest)` is
+    *     raised: a too-small fit sample never quietly yields fewer cells.
+    *     The vector width `d` is read from the init rows.
+    *   - Each round assigns every point to a cell with `assign`, given
+    *     the previous round's local relation (it reads it through a
+    *     [[FitTables]] broadcast value: no join, no exchange), then
+    *     updates the means in ONE exchange: per (key, cid) a count and `d`
+    *     per-dim sums over element_at. Integer-valued doubles sum exactly
+    *     below 2^53, so the sums do not depend on reduction order, and the
+    *     one division per (cell, dim) is the only rounding step. A cell
+    *     no point chose drops out. The round's rows are collected for the
+    *     next one.
+    *
+    * `points` is snapshotted once: the init and every round read it. Each
+    * of the snapshot, the init and every round is one collect.
+    */
+  private def lloyd(points: DataFrame, keys: Seq[String], k: Int, iters: Int, seed: Long)(
+      tooFew: Int => String
+  )(assign: DataFrame => Column): DataFrame = {
+    val pts = points.localCheckpoint(true)
+    val kcols = keys.map(col)
     val h = conv(
-      substring(
-        md5(concat_ws(":", lit(seed.toString), col("__m").cast("string"), col("__id").cast("string"))),
-        1,
-        8
-      ),
+      substring(md5(concat_ws(":", (lit(seed.toString) +: kcols.map(_.cast("string"))) :+ col("__id").cast("string"): _*)), 1, 8),
       16,
       10
     ).cast("long")
-    // Per-subspace seeded init = the ks smallest (md5 hash, id) rows of
-    // EACH subspace, cid in that order. ONE bounded aggregation pass over
-    // `subs` (round 19): groupBy(__m) with Spark's bottom-k collector —
-    // map-side partial aggregation keeps ≤ ks rows of state per (task,
-    // subspace), the only exchange ships tasks×m×ks rows. The former
-    // shape ran m SEPARATE TakeOrdered passes (each a full scan of the
-    // n·m-row subs table: m reads of the corpus bytes where one
-    // suffices) unioned into a window that re-shuffled by __m anyway —
-    // at bench scale ~2·m extra plan stages per fit, at 100 TB m−1
-    // redundant corpus scans. Ordering is identical: struct
-    // (h, id, sv) compares h then the unique-per-subspace id, so each
-    // subspace's selected set and order match orderBy(__h, __id).limit(ks)
-    // exactly, and cid = position matches the former per-__m row_number.
-    val init = subs
+    val initDf = pts
       .withColumn("__h", h)
-      .groupBy(col("__m"))
-      .agg(
-        sort_array(
-          graft.functions.native.collectBottomK(struct(col("__h"), col("__id"), col("__sv")), ks)
-        ).as("__top")
-      )
-      .select(col("__m"), posexplode(col("__top")).as(Seq("__p", "__e")))
-      .select(col("__m"), col("__p").cast("int").as("__cid"), col("__e.__sv").as("__cv"))
-    // NO eager checkpoint between rounds: each round's codebook is tiny
-    // (m·ks rows) and rides into the next round as a broadcast exchange,
-    // so the whole fit collapses into the consumer's single job DAG —
-    // round-by-round localCheckpoints here cost one scheduled job each
-    // (~0.5 s of fixed overhead per round at bench scale) and buy nothing
-    // at `iters` this small. The one materialization that matters (subs,
-    // read iters+1 times) is checkpointed above; the CALLER checkpoints
-    // the returned codebooks if it reads them more than once.
-    // Assignment is MAP-SIDE since round 18 (the k-means round's move,
-    // see [[kmeansCentroids]]): the pre-r18 round broadcast-joined the
-    // codebooks onto the n·m subvector rows and re-grouped by (id, m) —
-    // a full corpus-sized exchange per round just to take each row's own
-    // argmin. The per-m codeword lists ride in one broadcast map and the
-    // argmin is a transform lambda with the identical (d, cid) ordering
-    // as the former min_by struct; the only exchange per round is the
-    // partial-aggregated update.
-    // Update aggregation is ONE exchange per round (round 19, the k-means
-    // round's move — see [[kmeansCentroids]]): `sub` codegen'd per-dim
-    // sum() aggregates over element_at replace the posexplode +
-    // groupBy(m, cid, dim) + regroup-to-array pair of exchanges.
-    // Integer-valued doubles summed exactly (per-dim sums identical to
-    // the exploded form's); the single division is the only rounding
-    // step, performed once on both engines.
-    val sumCols = (0 until sub).map(i => sum(element_at(col("__sv"), i + 1)).as(s"__s$i"))
-    (1 to iters).foldLeft(init) { (cb, _) =>
-      subs
-        .withColumn("__one", oneKey(col("__id")))
-        .join(codebookEntriesByM(cb), Seq("__one"))
-        .select(
-          col("__m"),
-          graft.functions.native
-            .codewordArgmin(col("__sv"), element_at(col("__cbm"), col("__m")))
-            .getField("__cid")
-            .as("__cid"),
-          col("__sv")
-        )
-        .groupBy("__m", "__cid")
-        .agg(count(lit(1)).as("__n"), sumCols: _*)
-        .select(
-          col("__m"),
-          col("__cid"),
-          array((0 until sub).map(i => col(s"__s$i") / col("__n")): _*).as("__cv")
-        )
+      .groupBy(kcols: _*)
+      .agg(sort_array(graft.functions.native.collectBottomK(struct(col("__h"), col("__id"), col("__qv")), k)).as("__top"))
+      .select(kcols :+ posexplode(col("__top")).as(Seq("__p", "__e")): _*)
+      .select(kcols ++ Seq(col("__p").cast("int").as("__cid"), col("__e.__qv").as("__cv")): _*)
+    val init = collectRows(initDf)
+    val perKey = init.groupBy(r => keys.indices.map(i => r.get(i, initDf.schema(i).dataType))).values.map(_.size)
+    val fewest = if (perKey.isEmpty) 0 else perKey.min
+    require(fewest == k, tooFew(fewest))
+    val d = init.head.getArray(keys.size + 1).numElements()
+    val sums = (0 until d).map(i => sum(element_at(col("__qv"), i + 1)).as(s"__s$i"))
+    val means = array((0 until d).map(i => col(s"__s$i") / col("__n")): _*).as("__cv")
+    (1 to iters).foldLeft(GraftSqlShim.localRelation(pts.sparkSession, initDf.schema, init)) { (prev, _) =>
+      val next = pts
+        .select(kcols ++ Seq(assign(prev).as("__cid"), col("__qv")): _*)
+        .groupBy(kcols :+ col("__cid"): _*)
+        .agg(count(lit(1)).as("__n"), sums: _*)
+        .select(kcols ++ Seq(col("__cid"), means): _*)
+      GraftSqlShim.localRelation(pts.sparkSession, next.schema, collectRows(next))
     }
   }
 
@@ -1105,6 +983,11 @@ object Similarity {
     * column IS the 100 TB storage answer (m bytes per vector at ks <=
     * 256 vs 4·dim for float32); the reconstruction is what asymmetric-
     * distance scoring compares queries against.
+    *
+    * `codebooks` is collected into a [[FitTables]] (one small job, none
+    * for [[pqCodebooks]]' local result) and each row computes its m
+    * argmins against that broadcast value: encode is a map-only pass, no
+    * join and no shuffle at any corpus size.
     */
   def pqEncode(
       df: DataFrame,
@@ -1114,21 +997,9 @@ object Similarity {
       dim: Int,
       m: Int
   ): DataFrame = {
-    val sub = dim / m
-    val qvd = transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double"))
-    // Map-side since round 18: the pre-r18 shape exploded every vector to
-    // m subvector rows, broadcast-joined the codebooks, and re-grouped
-    // TWICE (argmin per (id, m), then collect per id) — two full-corpus
-    // shuffles per encode pass for a decision that is a pure function of
-    // the row. The per-m codeword lists now ride in one broadcast map
-    // ([[codebookEntriesByM]]) and each row computes its m argmins in a
-    // transform lambda (same native l2sq kernel, same (d, cid) ordering
-    // as the former min_by struct) — encode is now genuinely "one
-    // broadcast join, no shuffle" at any corpus size.
-    df.select(col(idCol).as("__id"), qvd.as("__qv"))
-      .withColumn("__one", oneKey(col("__id")))
-      .join(codebookEntriesByM(codebooks), Seq("__one"))
-      .withColumn("__mc", pqBestPerSubspace(col("__qv"), m, sub, col("__cbm")))
+    val fit = FitTables.codebooks(codebooks)
+    quantizedBase(df, idCol, vecCol)
+      .withColumn("__mc", pqBestPerSubspace(col("__qv"), m, dim / m, fit.cbmCol))
       .select(
         col("__id"),
         transform(col("__mc"), s => s.getField("__cid")).as("__codes"),
@@ -1136,29 +1007,12 @@ object Similarity {
       )
   }
 
-  /** The PQ codebooks as ONE broadcastable row: (`__cbm` map from
-    * subspace id to its codeword entries array<struct<__cid, __cv>>
-    * sorted by cid, `__one` = 0). A per-m MAP, not a positional array:
-    * Lloyd's can drop emptied cells, so (m, cid) keys may be sparse.
-    */
-  private[llmops] def codebookEntriesByM(cb: DataFrame): DataFrame =
-    broadcast(
-      cb.groupBy(col("__m"))
-        .agg(array_sort(collect_list(struct(col("__cid").as("__cid"), col("__cv").as("__cv")))).as("__es"))
-        .groupBy()
-        .agg(
-          map_from_entries(collect_list(struct(col("__m").as("k"), col("__es").as("v")))).as("__cbm"),
-          min(lit(0)).as("__one")
-        )
-    )
-
   /** Per-row array of the m winning codewords:
     * array<struct<__cid, __cv>> in subspace order, each the argmin
     * codeword by (exact squared L2, cid) of that subspace's slice of
     * `vec` — exactly the former min_by(struct(cid, cv), struct(d, cid))
     * per (id, m) group, evaluated without the explode/join/regroup.
-    * `cbm` is the per-subspace entries map: [[codebookEntriesByM]]'s
-    * `__cbm` column, or [[FitTables]]'s.
+    * `cbm` is a [[FitTables]]' per-subspace entries map (`__cbm`).
     *
     * Two-level transform so each subspace SLICE materializes once per
     * (row, subspace): with the slice inline in the inner lambda it is
@@ -1185,11 +1039,7 @@ object Similarity {
     * [[graft.llmops.AnnIndex.encodeAgainst]]. Nearest cell and the m code
     * ids are pure functions of (vector, centroids, codebooks), and the fit
     * is referenced as a broadcast value ([[FitTables]]), not joined: the
-    * pass plans no exchange and launches no job of its own. The pre-r18
-    * form equi-joined an assignment pass and an encode pass on vector id
-    * (two corpus-sized shuffle sides); the r18–r20 form attached the fit
-    * through two `__one` constant-key joins against Spark aggregates of
-    * the fit tables, which cost their own jobs on every encode.
+    * pass plans no exchange and launches no job of its own.
     */
   private[llmops] def assignAndEncode(
       df: DataFrame,
@@ -1303,85 +1153,20 @@ object Similarity {
     )
 
   // -------------------------------------------------------------------
-  // Map-side cell assignment (round 18). The pre-r18 shape scored cells
-  // via crossJoin(broadcast centroids) and ranked them with a
-  // row_number() window partitioned by vector id — which SHUFFLES the
-  // cells×-expanded corpus (vector payload included) once per
-  // assignment/probe pass, purely to pick each row's own top cells. The
-  // decision needs nothing from other rows, so it is computable per row:
-  // attach ALL centroids as one broadcast single-row array (the
-  // [[codebookEntriesByM]] idiom), score them in a `transform` lambda (the same
-  // native `cosine` kernel — interpreted dispatch per centroid, compiled
-  // loop per evaluation), order with the struct that replicates the
-  // window's (csim DESC, cid ASC) exactly, and posexplode the top slice.
-  // Zero exchanges where the window form shuffled cells× corpus bytes
-  // (guide §2.4: remove shuffles outright). Bit-identical ordering:
-  // sort_array(struct(csim, −cid), desc) compares csim desc then −cid
-  // desc ⇔ cid asc, with Spark's total double ordering (NaN greatest =
-  // first under desc) — the same ordering the window used.
+  // Map-side cell assignment. A vector's top cells need nothing from
+  // other rows, so they are computed per row: the centroid entries reach
+  // the native `cellTopK` kernel as one [[FitTables]] broadcast value,
+  // which orders by (csim DESC, cid ASC) with Spark's total double
+  // ordering (NaN greatest = first under desc). No exchange is paid to
+  // pick each row's own cells.
   // -------------------------------------------------------------------
 
-  /** Non-foldable always-0 join key derived from an attribute. A literal
-    * key on either join side gets pushed down as a filter and the attach
-    * join degrades to a nested loop; the aggregate-output `__one` of
-    * [[centroidEntriesRow]] and [[codebookEntriesByM]] is the other side.
-    */
-  private[llmops] def oneKey(c: Column): Column = pmod(xxhash64(c), lit(1)).cast("int")
-
-  /** All centroids as ONE broadcastable row:
-    * (`__cents` array<struct<__ncid, __cv>> sorted, `__one` = 0). `__ncid`
-    * is the NEGATED cell id so the per-row top-k sort is a plain struct
-    * sort_array desc (csim desc, cid asc) with no per-element negation.
-    */
-  private[llmops] def centroidEntriesRow(centroids: DataFrame): DataFrame =
-    broadcast(
-      centroids
-        .groupBy()
-        .agg(
-          array_sort(
-            collect_list(struct((-col("__cid")).cast("long").as("__ncid"), col("__cv").as("__cv")))
-          ).as("__cents"),
-          min(lit(0)).as("__one")
-        )
-    )
-
-  /** Per-row top-`upTo` cells of the centroid entries `cents` by (cosine
-    * desc, cid asc) — array<struct<__csim, __ncid>>, already ordered.
-    * `cents` is [[centroidEntriesRow]]'s `__cents` column (joined in
-    * first) or [[FitTables]]'s. Native kernel (one
-    * compiled loop per row); the interpreted HOF form
-    * `slice(sort_array(transform(cents, struct(cosine, ncid)), desc), 1,
-    * upTo)` is bit-identical but pays a lambda dispatch per CENTROID —
-    * measured ~0.4 µs each, which at the √n production cell-count rule
-    * would dominate the pass (KernelEquivalenceSpec pins kernel ≡ HOF
-    * equality on adversarial inputs, interpreted AND codegen).
-    */
-  private def topCellsCol(vec: Column, cents: Column, upTo: Int): Column =
-    graft.functions.native.cellTopK(vec, cents, upTo)
-
-  /** HOF reference formulation of [[topCellsCol]] — spec-only, the
-    * bit-identity oracle for the native kernel.
-    */
-  private[llmops] def topCellsHof(vec: Column, cents: Column, upTo: Int): Column =
-    slice(
-      sort_array(
-        transform(
-          cents,
-          e => struct(cosine(vec, e.getField("__cv")).as("__csim"), e.getField("__ncid").as("__ncid"))
-        ),
-        asc = false
-      ),
-      1,
-      upTo
-    )
-
   /** The single best cell by (cosine desc, cid asc) as one
-    * struct<__csim, __ncid> — [[topCellsCol]] at upTo = 1. `cents` is the
-    * centroid entries: [[centroidEntriesRow]]'s `__cents` column, or
-    * [[FitTables]]'s.
+    * struct<__csim, __ncid>. `cents` is a [[FitTables]]' `__cents`
+    * column.
     */
   private[llmops] def bestCellCol(vec: Column, cents: Column): Column =
-    element_at(topCellsCol(vec, cents, 1), 1)
+    element_at(graft.functions.native.cellTopK(vec, cents, 1), 1)
 
   /** Explicit partition count for the probe-side repartition below:
     * the configured shuffle width, floored at the cluster's core count.
@@ -1395,17 +1180,17 @@ object Similarity {
   }
 
   /** Append (`__cid`, `__crank`, `__csim`) per kept row by exploding the
-    * per-row top-`upTo` cells — the shared assignment/probe pass. `keep`
-    * lists the base columns to carry through; `vec` is the column scored
-    * against the centroids (quantized or original, caller's contract).
+    * per-row top-`upTo` cells of `fit`'s centroid entries — the shared
+    * assignment/probe pass. `keep` lists the base columns to carry
+    * through; `vec` is the column scored against the centroids (quantized
+    * or original, caller's contract). The kernel's ncid rides as long and
+    * is restored to the centroids' cid type exactly (int for k-means
+    * fits, long for the identity quantizer).
     *
     * Ends with ONE explicit-width repartition on `__cid` — the key every
-    * downstream candidate join uses. This is the pass's only exchange,
-    * and it REPLACES exchanges rather than adding one: the pre-r18 shape
-    * paid the window's cells×-payload exchange here PLUS the candidate
-    * join's own two exchanges; now both join sides inherit this
-    * hash(__cid) partitioning and the join plans with no exchange at
-    * all. The width is explicit ([[probeParallelism]]) because AQE's
+    * downstream candidate join uses, so both join sides inherit this
+    * hash(__cid) partitioning and the join plans with no exchange of its
+    * own. The width is explicit ([[probeParallelism]]) because AQE's
     * byte-based coalescing would fold the compact probe table into one
     * partition and serialize the candidate-pair expansion downstream —
     * the classic AQE blind spot: it sizes by exchange bytes, not by the
@@ -1414,39 +1199,16 @@ object Similarity {
     */
   private def explodeTopCells(
       base: DataFrame,
-      centroids: DataFrame,
-      vec: Column,
-      upTo: Int,
-      keep: Seq[Column]
-  ): DataFrame =
-    explodeTopCellsOf(
-      base.withColumn("__one", oneKey(col("__id"))).join(centroidEntriesRow(centroids), Seq("__one")),
-      col("__cents"),
-      centroids.schema("__cid").dataType,
-      vec,
-      upTo,
-      keep
-    )
-
-  /** [[explodeTopCells]] against centroid entries `cents` already in
-    * scope of `base` — a joined `__cents` column or a [[FitTables]]
-    * value. `cidType` is the centroids' cid type: the kernel's ncid rides
-    * as long and is restored to it exactly (int for k-means fits, long
-    * for the identity quantizer).
-    */
-  private def explodeTopCellsOf(
-      base: DataFrame,
-      cents: Column,
-      cidType: DataType,
+      fit: FitTables,
       vec: Column,
       upTo: Int,
       keep: Seq[Column]
   ): DataFrame =
     base
-      .select(keep :+ posexplode(topCellsCol(vec, cents, upTo)).as(Seq("__pos", "__tc")): _*)
+      .select(keep :+ posexplode(graft.functions.native.cellTopK(vec, fit.centsCol, upTo)).as(Seq("__pos", "__tc")): _*)
       .select(
         keep ++ Seq(
-          (-col("__tc.__ncid")).cast(cidType).as("__cid"),
+          (-col("__tc.__ncid")).cast(fit.cidType).as("__cid"),
           (col("__pos") + 1).as("__crank"),
           col("__tc.__csim").as("__csim")
         ): _*
@@ -1456,41 +1218,46 @@ object Similarity {
   /** Rank the fit's centroids per vector by quantized cosine
     * (deterministic cid tie-break) and keep ranks ≤ `upTo`: `upTo = 1` is
     * index-side cell assignment, `upTo = nprobe` is query-side probing.
-    * Map-side since round 18 (see the block comment above), against the
-    * fit's driver-resident centroid entries — no centroid scan, aggregate
-    * or join; the output is (`__id`, `__qv`, `__cid`, `__crank`),
-    * bit-identical to the former crossJoin+window form.
+    * Map-side against the fit's driver-resident centroid entries — no
+    * centroid scan, aggregate or join; the output is (`__id`, `__qv`,
+    * `__cid`, `__crank`).
     */
   private[llmops] def cellRanks(base: DataFrame, fit: FitTables, upTo: Int): DataFrame =
-    explodeTopCellsOf(base, fit.centsCol, fit.cidType, col("__qv"), upTo, Seq(col("__id"), col("__qv")))
+    explodeTopCells(base, fit, col("__qv"), upTo, Seq(col("__id"), col("__qv")))
       .select(col("__id"), col("__qv"), col("__cid"), col("__crank"))
 
-  /** An IVF-PQ fit held on the driver in the three forms the encode and
-    * probe passes read, built once per index handle:
-    *   - `__cents` — [[centroidEntriesRow]]'s centroid entries
-    *     array<struct<__ncid, __cv>> (negated cid, sorted), the
-    *     cell-assignment table of [[assignAndEncode]] and
-    *     [[cellRanksLocal]];
-    *   - `__cbm` — [[codebookEntriesByM]]'s map from subspace to its
-    *     cid-sorted codeword entries, the encode table;
+  /** Small fit tables held on the driver in the forms the per-row kernels
+    * read — the one way a fit reaches a kernel. The full IVF-PQ fit
+    * ([[FitTables.apply]], built once per index handle) holds three:
+    *   - `__cents` — the centroid entries array<struct<__ncid, __cv>>
+    *     (negated cid, so the kernel's (csim desc, cid asc) order is a
+    *     plain struct order; sorted), the cell-assignment table of
+    *     [[assignAndEncode]], [[cellRanks]] and [[cellRanksLocal]];
+    *   - `__cbm` — a map from subspace to its cid-sorted codeword entries
+    *     array<struct<__cid, __cv>>, the encode table (a map, not a
+    *     positional array: Lloyd's can drop emptied cells, so (m, cid)
+    *     keys may be sparse);
     *   - `__cb` — the ADC reconstruction map from `m·ks + cid` to the
     *     codeword, read by [[pqAdcRank]].
-    * Each is row-identical to the Spark aggregate it replaces (same
-    * types, same element order; maps carry the same entries), but is
-    * built from the collected fit tables on the driver, so using it costs
-    * no job. Spark passes reach it through one non-foldable
-    * [[graft.functions.BroadcastValue]] leaf: the fit is broadcast once
-    * per `FitTables` on first use, never copied into a plan. The value is
-    * one `UnsafeRow` (`__cents`, `__cbm`, `__cb`), the representation the
-    * former broadcast joins handed the kernels.
+    * [[FitTables.centroids]] and [[FitTables.codebooks]] hold only
+    * `__cents` or only `__cbm`: the tables of one Lloyd round
+    * ([[lloyd]]), of an IVF probe's centroids, or of [[pqEncode]]'s
+    * codebooks.
+    *
+    * The value is built from the collected tables on the driver, so using
+    * it costs no job. Spark passes reach it through one non-foldable
+    * [[graft.functions.BroadcastValue]] leaf: the value is broadcast once
+    * per `FitTables` on first use, never copied into a plan. It is one
+    * `UnsafeRow` of the fields above. `cidType` is the source table's
+    * `__cid` type, which the kernels' long ncid is cast back to.
     */
   final class FitTables private (private[llmops] val row: UnsafeRow, val schema: StructType, val cidType: DataType)
       extends Serializable {
 
-    private[llmops] def cents: ArrayData = row.getArray(0)
+    private[llmops] def cents: ArrayData = row.getArray(schema.fieldIndex("__cents"))
 
     /** Type code of the centroid vectors for [[NativeMath.cellTopK]]. */
-    private[llmops] val ccode: Int = NativeMath.typeCode(
+    private[llmops] lazy val ccode: Int = NativeMath.typeCode(
       schema("__cents").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("__cv").dataType
     )
 
@@ -1519,77 +1286,101 @@ object Similarity {
 
   private[llmops] object FitTables {
 
-    /** Collect `centroids` (`__cid`, `__cv`) and `codebooks` (`__m`,
-      * `__cid`, `__cv`) — one small job each: `cells` and ≤ m·ks rows —
-      * and build the three entry tables on the driver. Rows are collected
-      * as Catalyst rows, so every vector stays one compact array from the
-      * scan to the final `UnsafeRow`, never boxed element by element.
-      * Throws on a null or duplicate map key, as the Spark aggregates
-      * would.
+    /** The full IVF-PQ fit from `centroids` (`__cid`, `__cv`) and
+      * `codebooks` (`__m`, `__cid`, `__cv`): one small job each (`cells`
+      * and ≤ m·ks rows), none for a local relation such as
+      * [[kmeansCentroids]]' and [[pqCodebooks]]' results. Throws on a null
+      * or duplicate map key, as a Spark map aggregate would.
       */
     def apply(centroids: DataFrame, codebooks: DataFrame, pqKs: Int): FitTables = {
-      val cid = centroids.schema("__cid")
-      val cv = centroids.schema("__cv")
-      val m = codebooks.schema("__m")
-      val kcid = codebooks.schema("__cid")
-      val kcv = codebooks.schema("__cv")
-      val centType = StructType(Seq(StructField("__ncid", LongType, cid.nullable), StructField("__cv", cv.dataType, cv.nullable)))
-      val entryType = StructType(Seq(StructField("__cid", kcid.dataType, kcid.nullable), StructField("__cv", kcv.dataType, kcv.nullable)))
-      val schema = StructType(
-        Seq(
-          StructField("__cents", ArrayType(centType, containsNull = false), nullable = false),
-          StructField("__cbm", MapType(m.dataType, ArrayType(entryType, containsNull = false), valueContainsNull = false), nullable = false),
-          StructField("__cb", MapType(IntegerType, kcv.dataType, valueContainsNull = kcv.nullable), nullable = false)
-        )
-      )
-      // array_sort's element order
-      def sorted(rows: Seq[InternalRow], t: StructType): GenericArrayData = {
-        val ord = TypeUtils.getInterpretedOrdering(t)
-        new GenericArrayData(rows.sortWith(ord.lt).toArray[Any])
+      val cb = codebooks.select("__m", "__cid", "__cv")
+      val words = collectRows(cb)
+      of(centroids.schema("__cid").dataType, centEntries(centroids), entriesByM(cb.schema, words), codewordMap(cb.schema, words, pqKs))
+    }
+
+    /** The centroid entries (`__cents`) of `centroids` (`__cid`, `__cv`). */
+    def centroids(centroids: DataFrame): FitTables =
+      of(centroids.schema("__cid").dataType, centEntries(centroids))
+
+    /** The codeword entries by subspace (`__cbm`) of `codebooks` (`__m`,
+      * `__cid`, `__cv`).
+      */
+    def codebooks(codebooks: DataFrame): FitTables = {
+      val cb = codebooks.select("__m", "__cid", "__cv")
+      of(cb.schema("__cid").dataType, entriesByM(cb.schema, collectRows(cb)))
+    }
+
+    private type Field = (StructField, Any)
+
+    private def of(cidType: DataType, fields: Field*): FitTables = {
+      val schema = StructType(fields.map(_._1))
+      val row = new GenericInternalRow(fields.map(_._2).toArray)
+      new FitTables(UnsafeProjection.create(schema).apply(row).copy(), schema, cidType)
+    }
+
+    // array_sort's element order
+    private def sorted(rows: Seq[InternalRow], t: StructType): GenericArrayData = {
+      val ord = TypeUtils.getInterpretedOrdering(t)
+      new GenericArrayData(rows.sortWith(ord.lt).toArray[Any])
+    }
+
+    private def mapData(entries: Seq[(Any, Any)], keyType: DataType, table: String): ArrayBasedMapData = {
+      entries.groupBy(_._1).collectFirst { case (k, es) if es.size > 1 => k }.foreach { k =>
+        throw new IllegalArgumentException(s"$table: duplicate map key $k")
       }
-      def mapData(entries: Seq[(Any, Any)], keyType: DataType, table: String): ArrayBasedMapData = {
-        entries.groupBy(_._1).collectFirst { case (k, es) if es.size > 1 => k }.foreach { k =>
-          throw new IllegalArgumentException(s"$table: duplicate map key $k")
-        }
-        val ord = TypeUtils.getInterpretedOrdering(keyType)
-        val byKey = entries.sortWith((a, b) => ord.lt(a._1, b._1))
-        new ArrayBasedMapData(new GenericArrayData(byKey.map(_._1).toArray), new GenericArrayData(byKey.map(_._2).toArray))
-      }
-      def collectRows(df: DataFrame): Seq[InternalRow] = {
-        val qe = df.queryExecution
-        SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect()).toSeq
-      }
+      val ord = TypeUtils.getInterpretedOrdering(keyType)
+      val byKey = entries.sortWith((a, b) => ord.lt(a._1, b._1))
+      new ArrayBasedMapData(new GenericArrayData(byKey.map(_._1).toArray), new GenericArrayData(byKey.map(_._2).toArray))
+    }
+
+    private def key(r: InternalRow, i: Int, t: DataType, what: String): Any =
+      if (r.isNullAt(i)) throw new IllegalArgumentException(s"codebooks: null $what") else r.get(i, t)
+
+    private def centEntries(centroids: DataFrame): Field = {
+      val c = centroids.select("__cid", "__cv")
+      val cid = c.schema("__cid")
+      val cv = c.schema("__cv")
       val negate: InternalRow => Any = cid.dataType match {
-        case IntegerType => r => (-r.getInt(0)).toLong
-        case LongType    => r => -r.getLong(0)
-        case other       => throw new IllegalArgumentException(s"centroid __cid must be int or long, got $other")
+        case ByteType | ShortType | IntegerType | LongType =>
+          r => -r.get(0, cid.dataType).asInstanceOf[Number].longValue
+        case other => throw new IllegalArgumentException(s"centroid __cid must be an integral type, got $other")
       }
-      val cents = collectRows(centroids.select("__cid", "__cv")).map { r =>
+      val t = StructType(Seq(StructField("__ncid", LongType, cid.nullable), StructField("__cv", cv.dataType, cv.nullable)))
+      val rows = collectRows(c).map { r =>
         new GenericInternalRow(Array[Any](if (r.isNullAt(0)) null else negate(r), r.get(1, cv.dataType))): InternalRow
       }
-      val words = collectRows(codebooks.select("__m", "__cid", "__cv"))
-      def key(r: InternalRow, i: Int, t: DataType, what: String): Any =
-        if (r.isNullAt(i)) throw new IllegalArgumentException(s"codebooks: null $what") else r.get(i, t)
-      val cbm = words
-        .groupBy(key(_, 0, m.dataType, "__m"))
-        .toSeq
-        .map { case (mm, rs) =>
-          mm -> (sorted(rs.map(r => new GenericInternalRow(Array[Any](r.get(1, kcid.dataType), r.get(2, kcv.dataType)))), entryType): Any)
-        }
+      StructField("__cents", ArrayType(t, containsNull = false), nullable = false) -> sorted(rows, t)
+    }
+
+    private def entriesByM(s: StructType, words: Seq[InternalRow]): Field = {
+      val (m, kcid, kcv) = (s("__m").dataType, s("__cid"), s("__cv"))
+      val t = StructType(Seq(StructField("__cid", kcid.dataType, kcid.nullable), StructField("__cv", kcv.dataType, kcv.nullable)))
+      val byM = words.groupBy(key(_, 0, m, "__m")).toSeq.map { case (mm, rs) =>
+        mm -> (sorted(rs.map(r => new GenericInternalRow(Array[Any](r.get(1, kcid.dataType), r.get(2, kcv.dataType)))), t): Any)
+      }
+      val field = StructField("__cbm", MapType(m, ArrayType(t, containsNull = false), valueContainsNull = false), nullable = false)
+      field -> mapData(byM, m, "codebooks by subspace")
+    }
+
+    private def codewordMap(s: StructType, words: Seq[InternalRow], pqKs: Int): Field = {
+      val (m, kcid, kcv) = (s("__m").dataType, s("__cid").dataType, s("__cv"))
       val cb = words.map { r =>
-        val k = (key(r, 0, m.dataType, "__m").asInstanceOf[Number].longValue * pqKs) +
-          key(r, 1, kcid.dataType, "__cid").asInstanceOf[Number].longValue
+        val k = (key(r, 0, m, "__m").asInstanceOf[Number].longValue * pqKs) + key(r, 1, kcid, "__cid").asInstanceOf[Number].longValue
         (Math.toIntExact(k): Any) -> r.get(2, kcv.dataType)
       }
-      val row = new GenericInternalRow(
-        Array[Any](
-          sorted(cents, centType),
-          mapData(cbm, m.dataType, "codebooks by subspace"),
-          mapData(cb, IntegerType, "codeword map")
-        )
-      )
-      new FitTables(UnsafeProjection.create(schema).apply(row).copy(), schema, cid.dataType)
+      val field = StructField("__cb", MapType(IntegerType, kcv.dataType, valueContainsNull = kcv.nullable), nullable = false)
+      field -> mapData(cb, IntegerType, "codeword map")
     }
+  }
+
+  /** Collect `df` as Catalyst rows, so every vector stays one compact
+    * array from the scan to the driver, never boxed element by element:
+    * one job, none when `df` is a local relation. Reported to
+    * `QueryExecutionListener`s as a "collect", like `Dataset.collect`.
+    */
+  private def collectRows(df: DataFrame): Seq[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect()).toSeq
   }
 
   /** [[cellRanks]] of a SMALL batch, ranked on the driver: `base`

@@ -19,6 +19,22 @@ object GraftSqlShim {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** A local relation over Catalyst rows the driver already holds — what
+    * `createDataFrame` builds from `Row`s, without boxing them first.
+    */
+  def localRelation(
+      spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]
+  ): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+        rows
+      )
+    )
+
   /** Register a function into an existing (classic) session's registry —
     * the post-creation counterpart of SparkSessionExtensions.injectFunction.
     */

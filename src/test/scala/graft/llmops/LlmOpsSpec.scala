@@ -113,7 +113,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val rows = vecs
       .select(
         graft.functions.native.arrayL2Sq(col("va"), col("vb")).as("native"),
-        Similarity.l2sqHof(col("va"), col("vb")).as("hof")
+        KernelEquivalenceSpec.l2sqHof(col("va"), col("vb")).as("hof")
       )
       .as[(Double, Double)]
       .collect()
@@ -123,7 +123,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val frow = fvecs
       .select(
         graft.functions.native.arrayL2Sq(col("va"), col("vb")).as("native"),
-        Similarity.l2sqHof(col("va"), col("vb")).as("hof")
+        KernelEquivalenceSpec.l2sqHof(col("va"), col("vb")).as("hof")
       )
       .as[(Double, Double)]
       .head()
@@ -133,7 +133,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val mrow = mism
       .select(
         graft.functions.native.arrayL2Sq(col("va"), col("vb")).as("native"),
-        Similarity.l2sqHof(col("va"), col("vb")).as("hof")
+        KernelEquivalenceSpec.l2sqHof(col("va"), col("vb")).as("hof")
       )
       .collect()
       .head
@@ -990,6 +990,40 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val (_, appendJobs) = jobsOf("append")(AnnIndex.append(spark, dir, local, "vec_id", "v", batchId = 0L))
     assert(appendJobs <= 4, s"append launched $appendJobs jobs, expected at most 4 (load's 3 and the write)")
     assert(AnnIndex.load(spark, dir).codes.count() == 60)
+  }
+
+  test("AnnIndex.fitIvfPq launches a pinned number of jobs at iters = pqIters = 1 and 2") {
+    val rnd = new scala.util.Random(83)
+    val vecs = (0 until 60).map { i =>
+      (i.toLong, Seq.tabulate(8)(_ => (i % 3 * 5).toFloat + rnd.nextFloat() * 0.1f))
+    }
+    val df = vecs.toDF("vec_id", "v").localCheckpoint(true)
+    // per fit (k-means, then PQ): the points snapshot, the init's exchange
+    // and collect, and each round's exchange and collect
+    for ((rounds, limit) <- Seq(1 -> 10, 2 -> 14)) {
+      val (idx, jobs) = jobsOf(s"fit-$rounds") {
+        AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = rounds, pqM = 2, pqKs = 4, pqIters = rounds, dim = 8)
+      }
+      assert(jobs <= limit, s"fitIvfPq at iters = pqIters = $rounds launched $jobs jobs, expected at most $limit")
+      assert(idx.codes.count() == 60)
+    }
+  }
+
+  test("kmeansCentroids and pqCodebooks fail loudly on a fit sample smaller than cells or ks") {
+    val vecs = (0L until 6L).map(i => (i, Seq.tabulate(4)(d => (i * 3 + d).toFloat))).toDF("vec_id", "v")
+    val km = intercept[IllegalArgumentException](Similarity.kmeansCentroids(vecs, "vec_id", "v", cells = 7, iters = 1))
+    assert(km.getMessage.contains("kmeansCentroids: fit sample has only 6 rows but cells=7"), km.getMessage)
+    val pq = intercept[IllegalArgumentException](Similarity.pqCodebooks(vecs, "vec_id", "v", dim = 4, m = 2, ks = 7, iters = 1))
+    assert(pq.getMessage.contains("pqCodebooks: fit sample has only 6 rows but ks=7"), pq.getMessage)
+    val sampled = intercept[IllegalArgumentException] {
+      Similarity.pqCodebooks(vecs, "vec_id", "v", dim = 4, m = 2, ks = 6, iters = 0, fitSamplePercent = 50)
+    }
+    assert(sampled.getMessage.contains("raise fitSamplePercent (=50) or lower ks"), sampled.getMessage)
+    val empty = intercept[IllegalArgumentException](Similarity.kmeansCentroids(vecs.limit(0), "vec_id", "v", cells = 1, iters = 0))
+    assert(empty.getMessage.contains("fit sample has only 0 rows"), empty.getMessage)
+    // a sample of exactly cells / ks rows fits every cell and codeword
+    assert(Similarity.kmeansCentroids(vecs, "vec_id", "v", cells = 6, iters = 0).count() == 6)
+    assert(Similarity.pqCodebooks(vecs, "vec_id", "v", dim = 4, m = 2, ks = 6, iters = 0).count() == 12)
   }
 
   test("AnnIndex.append: frozen-fit encode grows the index in place, staleness ledger balances") {
