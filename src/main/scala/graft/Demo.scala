@@ -3,7 +3,6 @@ package graft
 import graft.contracts._
 import graft.pipeline._
 import graft.sources.{TypedSink, TypedSource}
-import org.apache.spark.sql.SparkSession
 
 /** Demo entry (mirrors the reference's CtdcPoc demo, CtdcPoc.scala:106-172):
   * green pipeline, construction-time drift fuse, runtime pin rejection —
@@ -18,14 +17,7 @@ object Demo {
   case class CustomerDrifted(c_custkey: Long, c_name: String)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("WARN")
 
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

@@ -15,17 +15,18 @@ import java.nio.file.{Files, Path}
   * one table.
   *
   * Cases (all on the O23 3-level 6-field Contract fixture):
-  *   - `shapeof_derive`       — implicit ShapeOf derivation alone (the
-  *                              dominant part of a check: building the
-  *                              TypeShape tree from the case-class type)
+  *   - `shapeof_derive`       — implicit ShapeOf summon alone (the
+  *                              dominant part of a check: the type tag,
+  *                              its cache key and the memo lookup of the
+  *                              contract's StructType)
   *   - `check_green`          — full SchemaConforms.check, conformant
-  *                              (derivation × 2 + policy diff)
+  *                              (derivation × 2 + early-exit conforms)
   *   - `check_drift`          — full check on a drifting Out (missing
   *                              field + changed leaf type), Left path,
   *                              report built but not rendered
   *   - `check_drift_render`   — drift path + the path-rich report render
   *                              (what ContractViolation carries)
-  *   - `pin_fast_ok_control`  — memoized FastConforms boolean pin (the
+  *   - `pin_fast_ok_control`  — early-exit SchemaCompare.conforms pin (the
   *                              per-write runtime cost, for scale: this is
   *                              what O23 benches against the reference's
   *                              runtime comparator numbers)

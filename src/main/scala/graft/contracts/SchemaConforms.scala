@@ -15,7 +15,9 @@ final class ContractViolation(val report: SchemaCompare.DriftReport, message: St
   * reference materializes this as a macro-derived given
   * (ContractsCore.scala:81, 106-112), we materialize it eagerly at pipeline
   * *construction* time: `SchemaConforms.check` runs driver-side, O(schema),
-  * before any Spark action — a drifting pipeline fails at wiring time.
+  * before any Spark action — a drifting pipeline fails at wiring time. It
+  * compares the two contracts' [[ShapeOf]] `StructType`s with the same
+  * [[SchemaCompare]] walk the runtime pins use.
   */
 final class SchemaConforms[Out, Contract, P <: SchemaPolicy] private[contracts] ()
 
@@ -27,18 +29,16 @@ object SchemaConforms {
       contract: ShapeOf[Contract],
       p: ValueOf[P]
   ): SchemaCompare.DriftReport =
-    SchemaCompare.diff(out.shape, contract.shape, p.value)
+    SchemaCompare.diff(out.struct, contract.struct, p.value)
 
   /** `Right(evidence)` when conformant, `Left(report)` when drifting. */
   def check[Out, Contract, P <: SchemaPolicy with Singleton](implicit
       out: ShapeOf[Out],
       contract: ShapeOf[Contract],
       p: ValueOf[P]
-  ): Either[SchemaCompare.DriftReport, SchemaConforms[Out, Contract, P]] = {
-    val report = diff[Out, Contract, P]
-    if (report.conforms) Right(new SchemaConforms[Out, Contract, P])
-    else Left(report)
-  }
+  ): Either[SchemaCompare.DriftReport, SchemaConforms[Out, Contract, P]] =
+    if (SchemaCompare.conforms(out.struct, contract.struct, p.value)) Right(new SchemaConforms[Out, Contract, P])
+    else Left(diff[Out, Contract, P])
 
   /** Summon evidence or throw [[ContractViolation]] with a path-rich drift
     * report — the construction-time fuse.
@@ -58,13 +58,13 @@ object SchemaConforms {
     }
 
   // ---- strict leaf-identity mode (round 17, opt-in) ------------------
-  // The default comparators use Spark-schema leaf identity (SURVEY §7.4:
+  // The default check uses Spark-schema leaf identity (SURVEY §7.4:
   // java.sql.Date ↔ java.time.LocalDate both lower to DateType, so the
   // data plane cannot tell them apart — and a DataFrame pin never will).
   // The reference's CONSTRUCTION check, however, compares Scala types
   // (ContractsCore.scala:158-173) and rejects the swap. These variants
   // close that divergence for type-vs-type checks only, by comparing
-  // [[ShapeOf.strictShape]]s (legacy java.* twins tagged distinct).
+  // [[ShapeOf.strictShape]]s (legacy java.* twins as ObjectType leaves).
 
   /** [[diff]] over strict (reference-parity) leaf identity. */
   def diffStrict[Out, Contract, P <: SchemaPolicy with Singleton](implicit
@@ -79,11 +79,10 @@ object SchemaConforms {
       out: scala.reflect.runtime.universe.WeakTypeTag[Out],
       contract: scala.reflect.runtime.universe.WeakTypeTag[Contract],
       p: ValueOf[P]
-  ): Either[SchemaCompare.DriftReport, SchemaConforms[Out, Contract, P]] = {
-    val report = diffStrict[Out, Contract, P]
-    if (report.conforms) Right(new SchemaConforms[Out, Contract, P])
-    else Left(report)
-  }
+  ): Either[SchemaCompare.DriftReport, SchemaConforms[Out, Contract, P]] =
+    if (SchemaCompare.conforms(ShapeOf.strictShape[Out], ShapeOf.strictShape[Contract], p.value))
+      Right(new SchemaConforms[Out, Contract, P])
+    else Left(diffStrict[Out, Contract, P])
 
   /** [[require]] over strict (reference-parity) leaf identity. */
   def requireStrict[Out, Contract, P <: SchemaPolicy with Singleton](implicit
@@ -97,22 +96,21 @@ object SchemaConforms {
         throw new ContractViolation(
           report,
           report.render(
-            outLabel = TypeShape.render(ShapeOf.strictShape[Out]),
-            contractLabel = TypeShape.render(ShapeOf.strictShape[Contract])
+            outLabel = SchemaCompare.render(ShapeOf.strictShape[Out]),
+            contractLabel = SchemaCompare.render(ShapeOf.strictShape[Contract])
           )
         )
     }
 }
 
 /** Policy-selected runtime comparator over Spark `StructType`s — the
-  * defensive pin layer (reference: SparkCore.scala:150-189). Boolean surface
-  * mirrors the reference's `RuntimeSchemaComparator` (O10-O16) but is backed
-  * by the same unified [[SchemaCompare]] engine.
+  * defensive pin layer (reference: SparkCore.scala:150-189): the early-exit
+  * [[SchemaCompare.conforms]].
   */
 trait PolicyRuntime[P <: SchemaPolicy] extends Serializable {
   def policy: SchemaPolicy
   def ok(found: StructType, expected: StructType): Boolean =
-    FastConforms.ok(found, expected, policy)
+    SchemaCompare.conforms(found, expected, policy)
 }
 
 object PolicyRuntime {
@@ -127,7 +125,7 @@ object PolicyRuntime {
 object RuntimeSchemaComparator {
 
   private def conforms(found: StructType, expected: StructType, policy: SchemaPolicy): Boolean =
-    FastConforms.ok(found, expected, policy)
+    SchemaCompare.conforms(found, expected, policy)
 
   def unordered(found: StructType, expected: StructType, caseInsensitive: Boolean): Boolean =
     conforms(found, expected, if (caseInsensitive) SchemaPolicy.Exact else SchemaPolicy.ExactUnorderedCS)
@@ -145,7 +143,7 @@ object RuntimeSchemaComparator {
     conforms(found, expected, SchemaPolicy.Forward)
 
   def duplicateNames(struct: StructType, caseInsensitive: Boolean): List[List[String]] =
-    SchemaCompare.duplicateNames(TypeShape.fromStructType(struct).fields, caseInsensitive)
+    SchemaCompare.duplicateNames(struct.fields, caseInsensitive)
 }
 
 /** Runtime pins: assert an actual `DataFrame` schema against a contract.
@@ -158,39 +156,28 @@ object SchemaCheck {
     * nested collection optionality preserved.
     */
   def assertMatchesContract[C](df: DataFrame)(implicit sch: ShapeOf[C]): Unit =
-    assertMatches(df.schema, sch.struct, sch.shape, SchemaPolicy.Exact, "contract")
+    assertMatches(df.schema, sch.struct, SchemaPolicy.Exact, "contract")
 
   /** Policy-aware pin. */
   def assertMatchesContract[C, P <: SchemaPolicy with Singleton](
       df: DataFrame
   )(implicit sch: ShapeOf[C], p: ValueOf[P]): Unit =
-    assertMatches(df.schema, sch.struct, sch.shape, p.value, s"policy ${p.value.name}")
+    assertMatches(df.schema, sch.struct, p.value, s"policy ${p.value.name}")
 
-  def assertMatches(found: StructType, expected: TypeShape.Struct, policy: SchemaPolicy, what: String): Unit =
-    assertMatches(found, TypeShape.toStructType(expected), expected, policy, what)
-
-  def assertMatches(
-      found: StructType,
-      expectedStruct: StructType,
-      expected: TypeShape.Struct,
-      policy: SchemaPolicy,
-      what: String
-  ): Unit = {
-    // Fast boolean check first (zero-allocation, contract struct memoized);
-    // the diff engine only runs on the failure path, where rich rendering
-    // is worth its cost.
-    if (FastConforms.ok(found, expectedStruct, policy)) return
-    val report = SchemaCompare.diff(TypeShape.fromStructType(found), expected, policy)
-    if (!report.conforms) {
+  /** Throw [[ContractViolation]] unless `found` conforms to `expected`; the
+    * drift report is built on that failure path only.
+    */
+  def assertMatches(found: StructType, expected: StructType, policy: SchemaPolicy, what: String): Unit =
+    if (!SchemaCompare.conforms(found, expected, policy)) {
+      val report = SchemaCompare.diff(found, expected, policy)
       throw new ContractViolation(
         report,
         s"""Runtime schema mismatch against $what.
            |${report.render("found schema", "expected schema")}Found:
            |${found.treeString}
            |Expected:
-           |${expectedStruct.treeString}
+           |${expected.treeString}
            |""".stripMargin
       )
     }
-  }
 }

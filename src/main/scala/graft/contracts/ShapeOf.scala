@@ -13,8 +13,18 @@ import scala.reflect.runtime.{universe => ru}
   */
 final class UnsupportedContractType(message: String) extends IllegalArgumentException(message)
 
-/** Typeclass: the normalized [[TypeShape]] and Spark `StructType` of a
-  * contract case class `T`.
+/** Typeclass: the Spark `StructType` of a contract case class `T` — the one
+  * schema model of the contract layer. Construction checks compare two of
+  * them and runtime pins compare a `DataFrame` schema against one, both
+  * with [[SchemaCompare]]; readers are handed it as their schema.
+  *
+  * Lowering: `Option[T]` becomes the field's `nullable`, an array's
+  * `containsNull` or a map's `valueContainsNull`; List/Seq/Vector/Array/Set
+  * all become `ArrayType`, so a `Set` producer conforms to a `Seq` contract
+  * (reference: CtdcPoc.scala:41-55); a Scala default value is recorded as
+  * `graft.hasDefault` field metadata for Backward's missing-field
+  * allowance (reference: SparkCore.scala:20, 285-290). `Option[Option[T]]`
+  * has no Spark schema and is rejected.
   *
   * The reference derives this with a Scala 3 `quotes.reflect` macro
   * (reference: ContractsCore.scala:116-203, SparkCore.scala:200-299). On
@@ -23,13 +33,21 @@ final class UnsupportedContractType(message: String) extends IllegalArgumentExce
   * documented compile-time ⇒ construction-time mechanism shift.
   */
 trait ShapeOf[T] extends Serializable {
-  def shape: TypeShape.Struct
   def struct: StructType
 }
 
 object ShapeOf {
 
   def apply[T](implicit ev: ShapeOf[T]): ShapeOf[T] = ev
+
+  /** Metadata key marking contract fields that have a Scala default value. */
+  val HasDefaultMetadataKey = "graft.hasDefault"
+
+  def hasDefault(f: StructField): Boolean =
+    f.metadata.contains(HasDefaultMetadataKey) && f.metadata.getBoolean(HasDefaultMetadataKey)
+
+  def defaultMetadata(hasDefault: Boolean): Metadata =
+    new MetadataBuilder().putBoolean(HasDefaultMetadataKey, hasDefault).build()
 
   private val cache = new ConcurrentHashMap[String, ShapeOf[_]]()
 
@@ -58,50 +76,30 @@ object ShapeOf {
           "reflection cannot derive its shape. Define contract case classes " +
           "at a stable (object/package) scope."
       )
-    val s = ru.synchronized { // runtime reflection: serialize walks defensively
-      shapeOfType(tpe) match {
-        case struct: TypeShape.Struct => struct
-        case other =>
-          throw new UnsupportedContractType(
-            s"Contract must be a case class, got: $tpe (${TypeShape.render(other)})"
-          )
-      }
-    }
-    val st = TypeShape.toStructType(s)
-    new ShapeOf[Any] {
-      val shape: TypeShape.Struct = s
-      val struct: StructType = st
-    }
+    val st = ru.synchronized(structOf(tpe, strict = false)) // runtime reflection: serialize walks defensively
+    new ShapeOf[Any] { val struct: StructType = st }
   }
 
-  /** STRICT (reference-parity) shape of `T`, opt-in (round 17): leaf types
+  /** STRICT (reference-parity) schema of `T`, opt-in (round 17): leaf types
     * that collapse to the same Spark `DataType` but are DIFFERENT Scala
     * types — `java.sql.Date` vs `java.time.LocalDate`, `java.sql.Timestamp`
     * vs `java.time.Instant`, `java.math.BigDecimal` vs `BigDecimal` — stay
-    * distinct: the legacy `java.*` twin is carried as `ObjectType(<class>)`
+    * distinct: the legacy `java.*` twin is an `ObjectType(<class>)` leaf
     * so [[SchemaConforms.checkStrict]] rejects the swaps exactly as the
     * reference macro does (reference: ContractsCore.scala:158-173, which
     * compares Scala types, not lowered Spark types). Type-vs-type
     * CONSTRUCTION checks only: on the data plane the twins are genuinely
     * indistinguishable (both lower to `DateType` in the files — SURVEY
     * §7.4), so the default [[derive]] and every `DataFrame` pin keep
-    * Spark-schema leaf identity, and no `StructType` is ever built from a
-    * strict shape.
+    * Spark-schema leaf identity, and a strict schema is never handed to a
+    * reader.
     */
-  def strictShape[T](implicit tt: ru.WeakTypeTag[T]): TypeShape.Struct = {
+  def strictShape[T](implicit tt: ru.WeakTypeTag[T]): StructType = {
     derive[T](tt) // default derivation first: same validation, same errors
-    strictCache.computeIfAbsent(
-      tt.tpe.toString,
-      _ =>
-        ru.synchronized {
-          // safe cast: the default walk above proved the top level is a
-          // case class, and strictness only changes leaf tagging
-          shapeOfType(tt.tpe, strict = true).asInstanceOf[TypeShape.Struct]
-        }
-    )
+    strictCache.computeIfAbsent(tt.tpe.toString, _ => ru.synchronized(structOf(tt.tpe, strict = true)))
   }
 
-  private val strictCache = new ConcurrentHashMap[String, TypeShape.Struct]()
+  private val strictCache = new ConcurrentHashMap[String, StructType]()
 
   private val supportedLeafTypes =
     "String, Int, Long, Short, Byte, Double, Float, Boolean, BigDecimal, " +
@@ -153,23 +151,50 @@ object ShapeOf {
     sym.isClass && sym.asClass.isCaseClass
   }
 
-  /** `Type => TypeShape` walk mirroring the reference macro's classification
-    * order: Option, then sequence family, then Map[atomic, _], then nested
-    * case class, then leaf (reference: ContractsCore.scala:176-203).
+  private def isOption(t: ru.Type): Boolean = t.dealias <:< ru.typeOf[Option[_]]
+
+  /** The top-level walk: `T` must be a case class. */
+  private def structOf(tpe: ru.Type, strict: Boolean): StructType = nullableOf(tpe, strict) match {
+    case (st: StructType, false) => st
+    case (dt, optional) =>
+      throw new UnsupportedContractType(
+        s"Contract must be a case class, got: $tpe (${SchemaCompare.render(dt, optional)})"
+      )
+  }
+
+  /** A type where `Option` is allowed — a field, an element, a map value,
+    * the top level: its data type, and whether it is an `Option`.
     */
-  private def shapeOfType(raw: ru.Type, strict: Boolean = false): TypeShape = {
+  private def nullableOf(raw: ru.Type, strict: Boolean): (DataType, Boolean) =
+    if (!isOption(raw)) (dataTypeOf(raw, strict), false)
+    else {
+      val inner = raw.dealias.typeArgs.head
+      if (isOption(inner))
+        throw new UnsupportedContractType(
+          s"Unsupported nested Option in contract derivation: $raw. A Spark value is " +
+            "null or not, so Option[Option[_]] has no Spark schema; use a single Option."
+        )
+      (dataTypeOf(inner, strict), true)
+    }
+
+  /** `Type => DataType` walk mirroring the reference macro's classification
+    * order: (Option, handled by [[nullableOf]]), then sequence family, then
+    * Map[atomic, _], then leaf, then nested case class (reference:
+    * ContractsCore.scala:176-203).
+    */
+  private def dataTypeOf(raw: ru.Type, strict: Boolean): DataType = {
     import ru._
     val t = raw.dealias
-    if (t <:< typeOf[Option[_]]) TypeShape.Optional(shapeOfType(t.typeArgs.head, strict))
     // Array[Byte] is BinaryType on the data plane (matches Spark's encoder
     // mapping), NOT ArrayType(ByteType) — checked before the sequence family.
     // This is the multimodal payload leaf (opaque image/audio/video bytes).
-    else if (t =:= typeOf[Array[Byte]]) TypeShape.Leaf(BinaryType)
+    if (t =:= typeOf[Array[Byte]]) BinaryType
     else if (isSeqLike(t)) {
       val elem = t.typeArgs.headOption.getOrElse(
         throw new UnsupportedContractType(s"Missing type arg for sequence in $t")
       )
-      TypeShape.Sequence(shapeOfType(elem, strict))
+      val (dt, containsNull) = nullableOf(elem, strict)
+      ArrayType(dt, containsNull)
     } else if (t <:< typeOf[Map[_, _]]) {
       t.typeArgs match {
         case k :: v :: Nil =>
@@ -177,16 +202,16 @@ object ShapeOf {
             throw new UnsupportedContractType(
               s"Unsupported Map key type for $t. Allowed keys: String, Int, Long, Short, Byte, Boolean."
             )
-          val keyLeaf = TypeShape.Leaf(leafDataType(k).get) // atomic keys have no strict twins
-          TypeShape.MapOf(keyLeaf, shapeOfType(v, strict))
+          val (dt, valueContainsNull) = nullableOf(v, strict)
+          MapType(leafDataType(k).get, dt, valueContainsNull) // atomic keys have no strict twins
         case _ =>
           throw new UnsupportedContractType(s"Map requires two type args: $t")
       }
     } else if (leafDataType(t).isDefined) {
       // Leaf before case-class: BigDecimal & friends are case-class-like but atomic.
-      TypeShape.Leaf(leafDataType(t, strict).get)
+      leafDataType(t, strict).get
     } else if (isCaseClass(t)) {
-      structShapeOf(t, strict)
+      caseClassStruct(t, strict)
     } else {
       throw new UnsupportedContractType(
         s"Unsupported structural leaf type in contract derivation: $t. " +
@@ -196,21 +221,16 @@ object ShapeOf {
     }
   }
 
-  private def structShapeOf(t: ru.Type, strict: Boolean = false): TypeShape.Struct = {
+  private def caseClassStruct(t: ru.Type, strict: Boolean): StructType = {
     import ru._
     val ctor = t
       .decl(termNames.CONSTRUCTOR)
       .alternatives
       .collectFirst { case m: MethodSymbol if m.isPrimaryConstructor => m }
       .getOrElse(throw new UnsupportedContractType(s"No primary constructor for $t"))
-    val fields = ctor.paramLists.flatten.map { p =>
-      val name = p.name.decodedName.toString
-      val ptpe = p.typeSignatureIn(t).dealias
-      val hasDefault = p.asTerm.isParamWithDefault
-      val (unwrapped, isOpt) =
-        if (ptpe <:< typeOf[Option[_]]) (ptpe.typeArgs.head, true) else (ptpe, false)
-      FieldShape(name, shapeOfType(unwrapped, strict), hasDefault, isOpt)
-    }
-    TypeShape.Struct(fields)
+    StructType(ctor.paramLists.flatten.map { p =>
+      val (dt, optional) = nullableOf(p.typeSignatureIn(t), strict)
+      StructField(p.name.decodedName.toString, dt, optional, defaultMetadata(p.asTerm.isParamWithDefault))
+    })
   }
 }

@@ -1,6 +1,6 @@
 package graft.llmops
 
-import graft.contracts.{ContractViolation, SchemaCompare, SchemaPolicy, TypeShape}
+import graft.contracts.{ContractViolation, SchemaCompare, SchemaPolicy}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -250,11 +250,7 @@ object AnnIndex {
     * name, case-insensitively, ignoring nullability).
     */
   private def checkContract(table: String, file: Path, found: StructType, contract: StructType): Unit = {
-    val report = SchemaCompare.diff(
-      TypeShape.fromStructType(nullable(found).asInstanceOf[StructType]),
-      TypeShape.fromStructType(contract),
-      SchemaPolicy.Exact
-    )
+    val report = SchemaCompare.diff(nullable(found).asInstanceOf[StructType], contract, SchemaPolicy.Exact)
     if (!report.conforms)
       throw new ContractViolation(
         report,

@@ -161,7 +161,7 @@ object ContractQueries {
   final case class LineRow(line_no: Int, line: String)
 
   private def diffRows(report: SchemaCompare.DriftReport): Seq[DiffRow] =
-    report.missing.map(m => DiffRow("missing", m.path, TypeShape.render(m.field.shape))) ++
+    report.missing.map(m => DiffRow("missing", m.path, SchemaCompare.render(m.field.dataType))) ++
       report.extra.map(e => DiffRow("extra", e.path, e.name)) ++
       report.mismatch.map(x => DiffRow("mismatch", x.path, s"expected ${x.expected}, found ${x.found}"))
 
@@ -581,7 +581,7 @@ object ContractQueries {
     // recomputes the diff AND renders the report lines itself —
     // missing/extra/mismatch membership from outer joins (as o18), list
     // order from (depth, index) which is exactly SchemaCompare's walk
-    // (compareByName collects current-level diffs before recursing), and
+    // (its by-name step records a level's findings before recursing), and
     // the line format (':'/','/';' separators, (optional)/(default)
     // suffixes, header lines) reassembled in SQL. Nothing in the oracle
     // echoes the Scala renderer's output.
@@ -633,7 +633,7 @@ object ContractQueries {
       Some(refMatrixOracle),
       (spark, _) => {
         def rows[O, C](id: String, p: SchemaPolicy)(implicit o: ShapeOf[O], c: ShapeOf[C]): Seq[MatrixRow] = {
-          val r = SchemaCompare.diff(o.shape, c.shape, p)
+          val r = SchemaCompare.diff(o.struct, c.struct, p)
           MatrixRow(id, "conforms", r.conforms.toString, "") +:
             diffRows(r).map(d => MatrixRow(id, d.kind, d.path, d.detail))
         }
@@ -658,10 +658,10 @@ object ContractQueries {
             rows[Ref08Producer, Ref07Contract]("ref08_ordered_ci_reorder", SchemaPolicy.ExactOrderedCI) ++
             rows[Ref07Producer, Ref07Contract]("ref09_by_position_reorder", SchemaPolicy.ExactByPosition) ++
             rows[Ref10Producer, Ref07Contract]("ref10_backward_missing_required", SchemaPolicy.Backward) ++
-            rejects("ref11_rejects_uuid", "java.util.UUID", "java.util.UUID")(ShapeOf[Ref11Row].shape) ++
-            rejects("ref12_rejects_trait", "Ref12Contract", "Ref12Contract")(ShapeOf[Ref12Contract].shape) ++
+            rejects("ref11_rejects_uuid", "java.util.UUID", "java.util.UUID")(ShapeOf[Ref11Row].struct) ++
+            rejects("ref12_rejects_trait", "Ref12Contract", "Ref12Contract")(ShapeOf[Ref12Contract].struct) ++
             rejects("ref13_rejects_tuple", "(Int, String)", "Unsupported structural leaf type")(
-              ShapeOf[Ref13Row].shape
+              ShapeOf[Ref13Row].struct
             ) ++
             rows[Ref14Producer, Ref14Contract]("ref14_nested_mismatch_paths", SchemaPolicy.Exact) ++
             rows[Ref15Producer, Ref15Contract]("ref15_seq_optionality_drift", SchemaPolicy.Exact) ++
@@ -698,7 +698,7 @@ object ContractQueries {
           MatrixRow(
             id,
             "default_conforms",
-            SchemaCompare.diff(os.shape, cs.shape, SchemaPolicy.Exact).conforms.toString,
+            SchemaCompare.diff(os.struct, cs.struct, SchemaPolicy.Exact).conforms.toString,
             ""
           ),
           MatrixRow(

@@ -5561,23 +5561,26 @@ object LlmQueries {
     * same greedy leftmost non-overlapping fold (w_i) via `list_reduce` —
     * `acc[-1]`/`x[1]` comparisons against the correlated p_i row, drop-last
     * + append on merge. Exactly the Sennrich single-scan semantics the
-    * Spark `aggregate` fold implements.
+    * Spark `aggregate` fold implements. The w_i and c_i are `MATERIALIZED`:
+    * each w_i is read by both c_(i+1) and w_(i+1), and DuckDB inlining the
+    * chain doubles the plan per step (out of memory at sf0.01 with a 4 GB
+    * limit; 1 s materialized).
     */
   private def bpeLearnCtes(numMerges: Int): String = {
     val base =
-      """w0 AS (
+      """w0 AS MATERIALIZED (
         |  SELECT word, CAST(count(*) AS BIGINT) AS freq,
         |    list_append(list_transform(range(1, length(word)+1), i -> word[i]), '</w>') AS syms
         |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
         |  WHERE length(word) > 0
         |  GROUP BY word)""".stripMargin
     val steps = (1 to numMerges).map { i =>
-      s"""c$i AS (
+      s"""c$i AS MATERIALIZED (
          |  SELECT t.pair[1] AS l, t.pair[2] AS r, SUM(freq) AS cnt
          |  FROM w${i - 1}, UNNEST(list_transform(range(1, len(syms)), j -> [syms[j], syms[j+1]])) AS t(pair)
          |  GROUP BY 1, 2),
          |p$i AS (SELECT l, r FROM c$i ORDER BY cnt DESC, l, r LIMIT 1),
-         |w$i AS (
+         |w$i AS MATERIALIZED (
          |  SELECT word, freq,
          |    list_reduce(list_transform(syms, s -> [s]),
          |      (acc, x) -> CASE WHEN acc[-1] = p.l AND x[1] = p.r

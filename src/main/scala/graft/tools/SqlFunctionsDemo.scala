@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Drives the real `spark.sql.extensions` path in a fresh JVM: the session
   * is built with GraftExtensions, so the native graft expressions resolve
@@ -10,11 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SqlFunctionsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession
+      .builder(4)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

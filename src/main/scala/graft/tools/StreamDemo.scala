@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.model.Tables.DocumentRow
 import graft.sources.TypedSource
 import graft.streaming.TypedStreams
@@ -13,13 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     implicit val s: SparkSession = spark
 

@@ -5,13 +5,16 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests over random shape pairs:
+/** Property tests over random `StructType` pairs — field `nullable`,
+  * `containsNull`, `valueContainsNull`, `graft.hasDefault` metadata (set,
+  * cleared or absent) and case-folded duplicate names all vary:
   *   1. policy lattice — CS-unordered conformance implies Backward ∧
   *      Forward; ordered implies unordered and by-position; Full accepts
   *      everything (SURVEY.md §5).
-  *   2. FastConforms ⇔ SchemaCompare.diff.conforms equivalence — the
-  *      zero-allocation pin path must agree with the diff engine on every
-  *      policy for arbitrary (including mutated) shape pairs.
+  *   2. the early-exit `SchemaCompare.conforms` agrees with
+  *      `SchemaCompare.diff(...).conforms` on every policy for arbitrary
+  *      (including mutated) pairs, and `SchemaCheck.assertMatches` throws
+  *      whenever `conforms` is false.
   */
 class ConformancePropertiesSpec extends AnyFunSuite {
 
@@ -33,47 +36,62 @@ class ConformancePropertiesSpec extends AnyFunSuite {
 
   private val nameGen: Gen[String] = Gen.oneOf("a", "b", "c", "d", "id", "ID", "x", "y")
 
-  private def shapeGen(depth: Int): Gen[TypeShape] =
-    if (depth <= 0) leafGen.map(TypeShape.Leaf)
+  private val nullGen: Gen[Boolean] = Gen.oneOf(true, false)
+
+  private def dataTypeGen(depth: Int): Gen[DataType] =
+    if (depth <= 0) leafGen
     else
       Gen.frequency(
-        5 -> leafGen.map(TypeShape.Leaf),
-        2 -> Gen.lzy(shapeGen(depth - 1).map(TypeShape.Sequence)),
-        1 -> Gen.lzy(shapeGen(depth - 1).map(s => TypeShape.Sequence(TypeShape.Optional(s)))),
-        1 -> Gen.lzy(shapeGen(depth - 1).map(v => TypeShape.MapOf(TypeShape.Leaf(StringType), v))),
+        5 -> leafGen,
+        2 -> Gen.lzy(dataTypeGen(depth - 1).map(ArrayType(_, containsNull = false))),
+        1 -> Gen.lzy(dataTypeGen(depth - 1).map(ArrayType(_, containsNull = true))),
+        1 -> Gen.lzy(for { v <- dataTypeGen(depth - 1); n <- nullGen } yield MapType(StringType, v, n)),
         2 -> Gen.lzy(structGen(depth - 1))
       )
 
-  private def fieldGen(depth: Int): Gen[FieldShape] =
+  /** `graft.hasDefault` as a contract lowers it (true / false), or absent
+    * as on a `DataFrame` schema.
+    */
+  private val metadataGen: Gen[Metadata] =
+    Gen.oneOf(ShapeOf.defaultMetadata(true), ShapeOf.defaultMetadata(false), Metadata.empty)
+
+  private def fieldGen(depth: Int): Gen[StructField] =
     for {
       name <- nameGen
-      shape <- shapeGen(depth)
-      hasDefault <- Gen.oneOf(true, false)
-      isOptional <- Gen.oneOf(true, false)
-    } yield FieldShape(name, shape, hasDefault, isOptional)
+      dt <- dataTypeGen(depth)
+      nullable <- nullGen
+      metadata <- metadataGen
+    } yield StructField(name, dt, nullable, metadata)
 
-  private def structGen(depth: Int): Gen[TypeShape.Struct] =
-    Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, fieldGen(depth))).map(TypeShape.Struct)
+  private def structGen(depth: Int): Gen[StructType] =
+    Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, fieldGen(depth))).map(StructType(_))
 
-  /** Mutations of a base struct: reorder / drop / rename-case / retype —
-    * biased toward the interesting near-miss pairs independent sampling
-    * rarely produces.
-    */
-  private def mutate(s: TypeShape.Struct): Gen[TypeShape.Struct] = {
-    val fs = s.fields
-    val reorder = Gen.const(TypeShape.Struct(fs.reverse))
-    val drop = if (fs.isEmpty) Gen.const(s) else Gen.choose(0, fs.length - 1).map(i => TypeShape.Struct(fs.patch(i, Nil, 1)))
-    val upcase =
-      if (fs.isEmpty) Gen.const(s)
-      else Gen.choose(0, fs.length - 1).map(i => TypeShape.Struct(fs.updated(i, fs(i).copy(name = fs(i).name.toUpperCase))))
-    val retype =
-      if (fs.isEmpty) Gen.const(s)
-      else Gen.choose(0, fs.length - 1).map(i => TypeShape.Struct(fs.updated(i, fs(i).copy(shape = TypeShape.Leaf(BinaryType)))))
-    val add = fieldGen(1).map(f => TypeShape.Struct(fs :+ f))
-    Gen.oneOf(Gen.const(s), reorder, drop, upcase, retype, add)
+  /** Flip the nullability of a field and of its outermost element or value. */
+  private def flipNulls(f: StructField): StructField = f.dataType match {
+    case ArrayType(e, cn)   => f.copy(dataType = ArrayType(e, !cn), nullable = !f.nullable)
+    case MapType(k, v, vcn) => f.copy(dataType = MapType(k, v, !vcn), nullable = !f.nullable)
+    case _                  => f.copy(nullable = !f.nullable)
   }
 
-  private val pairGen: Gen[(TypeShape.Struct, TypeShape.Struct)] =
+  /** Mutations of a base struct: reorder / drop / rename-case / retype /
+    * flip nullability / add a case-folded twin / add — biased toward the
+    * interesting near-miss pairs independent sampling rarely produces.
+    */
+  private def mutate(s: StructType): Gen[StructType] = {
+    val fs = s.fields.toList
+    def at(g: Int => List[StructField]): Gen[StructType] =
+      if (fs.isEmpty) Gen.const(s) else Gen.choose(0, fs.length - 1).map(i => StructType(g(i)))
+    val reorder = Gen.const(StructType(fs.reverse))
+    val drop = at(i => fs.patch(i, Nil, 1))
+    val upcase = at(i => fs.updated(i, fs(i).copy(name = fs(i).name.toUpperCase)))
+    val retype = at(i => fs.updated(i, fs(i).copy(dataType = BinaryType)))
+    val flip = at(i => fs.updated(i, flipNulls(fs(i))))
+    val twin = at(i => fs :+ fs(i).copy(name = fs(i).name.toUpperCase))
+    val add = fieldGen(1).map(f => StructType(fs :+ f))
+    Gen.oneOf(Gen.const(s), reorder, drop, upcase, retype, flip, twin, add)
+  }
+
+  private val pairGen: Gen[(StructType, StructType)] =
     for {
       base <- structGen(2)
       out <- Gen.oneOf(mutate(base), structGen(2))
@@ -83,15 +101,26 @@ class ConformancePropertiesSpec extends AnyFunSuite {
   private val allPolicies: List[SchemaPolicy] =
     SchemaPolicy.all :+ SchemaPolicy.ExactUnorderedCS
 
-  test("FastConforms agrees with the diff engine on every policy (random shape pairs)") {
+  test("early-exit conforms agrees with the diff on every policy (random schema pairs)") {
     forAllSampled(pairGen, 500) { pair =>
       val (out, contract) = pair
-      val outStruct = TypeShape.toStructType(out)
-      val contractStruct = TypeShape.toStructType(contract)
       allPolicies.foreach { p =>
-        val fast = FastConforms.ok(outStruct, contractStruct, p)
-        val slow = SchemaCompare.diff(TypeShape.fromStructType(outStruct), TypeShape.fromStructType(contractStruct), p).conforms
-        assert(fast == slow, s"policy ${p.name}: fast=$fast slow=$slow\nout=$out\ncontract=$contract")
+        val fast = SchemaCompare.conforms(out, contract, p)
+        val slow = SchemaCompare.diff(out, contract, p).conforms
+        assert(fast == slow, s"policy ${p.name}: conforms=$fast diff=$slow\nout=$out\ncontract=$contract")
+      }
+    }
+  }
+
+  test("SchemaCheck.assertMatches throws ContractViolation exactly when conforms is false") {
+    forAllSampled(pairGen, 500) { pair =>
+      val (out, contract) = pair
+      allPolicies.foreach { p =>
+        if (SchemaCompare.conforms(out, contract, p)) SchemaCheck.assertMatches(out, contract, p, "pair")
+        else {
+          val e = intercept[ContractViolation](SchemaCheck.assertMatches(out, contract, p, "pair"))
+          assert(!e.report.conforms, s"policy ${p.name}: thrown with a conforming report\nout=$out\ncontract=$contract")
+        }
       }
     }
   }
@@ -100,14 +129,13 @@ class ConformancePropertiesSpec extends AnyFunSuite {
     * tolerate duplicates while the unordered family rejects them, so the
     * lattice implications only hold on dup-free shapes.
     */
-  private def hasDupsDeep(shape: TypeShape): Boolean = shape match {
-    case TypeShape.Struct(fields) =>
-      SchemaCompare.duplicateNames(fields, caseInsensitive = true).nonEmpty ||
-        fields.exists(f => hasDupsDeep(f.shape))
-    case TypeShape.Optional(inner)  => hasDupsDeep(inner)
-    case TypeShape.Sequence(elem)   => hasDupsDeep(elem)
-    case TypeShape.MapOf(_, value)  => hasDupsDeep(value)
-    case TypeShape.Leaf(_)          => false
+  private def hasDupsDeep(dt: DataType): Boolean = dt match {
+    case st: StructType =>
+      SchemaCompare.duplicateNames(st.fields, caseInsensitive = true).nonEmpty ||
+        st.fields.exists(f => hasDupsDeep(f.dataType))
+    case ArrayType(e, _)    => hasDupsDeep(e)
+    case MapType(_, v, _)   => hasDupsDeep(v)
+    case _                  => false
   }
 
   test("policy lattice: CS-unordered implies Backward and Forward; ordered implies unordered and by-position") {
@@ -133,7 +161,7 @@ class ConformancePropertiesSpec extends AnyFunSuite {
     forAllSampled(pairGen, 300) { pair =>
       val (out, contract) = pair
       assert(SchemaCompare.conforms(out, contract, SchemaPolicy.Full))
-      assert(FastConforms.ok(TypeShape.toStructType(out), TypeShape.toStructType(contract), SchemaPolicy.Full))
+      assert(SchemaCompare.diff(out, contract, SchemaPolicy.Full).conforms)
     }
   }
 
@@ -142,7 +170,7 @@ class ConformancePropertiesSpec extends AnyFunSuite {
       val (out, _) = pair
       if (!hasDupsDeep(out)) {
         allPolicies.foreach { p =>
-          assert(SchemaCompare.conforms(out, out, p), s"not reflexive under ${p.name}: $out")
+          assert(SchemaCompare.diff(out, out, p).conforms, s"not reflexive under ${p.name}: $out")
         }
       }
     }

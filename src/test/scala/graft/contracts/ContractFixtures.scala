@@ -50,6 +50,11 @@ object ContractFixtures {
   sealed trait Color
   case class WithTrait(c: Color)
   case class WithBadMapKey(m: Map[Double, String])
+  // Option[Option[_]] has no Spark schema: one null per value
+  case class OptOptField(id: Long, score: Option[Option[Int]])
+  case class OptOptElem(id: Long, scores: Seq[Option[Option[Int]]])
+  case class OptOptValue(id: Long, scores: Map[String, Option[Option[Int]]])
+  case class OptOptDeep(id: Long, rows: List[OptOptField])
 
   // leaf-table fixtures
   case class DecimalPair(x: BigDecimal, y: java.math.BigDecimal)

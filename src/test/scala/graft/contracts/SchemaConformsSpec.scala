@@ -12,7 +12,7 @@ import SchemaPolicy._
 class SchemaConformsSpec extends AnyFunSuite {
 
   private def report[A: ShapeOf, B: ShapeOf](p: SchemaPolicy) =
-    SchemaCompare.diff(ShapeOf[A].shape, ShapeOf[B].shape, p)
+    SchemaCompare.diff(ShapeOf[A].struct, ShapeOf[B].struct, p)
 
   private def ok[A: ShapeOf, B: ShapeOf](p: SchemaPolicy): Boolean = report[A, B](p).conforms
 
@@ -20,7 +20,7 @@ class SchemaConformsSpec extends AnyFunSuite {
 
   test("derives StructType with nullability and nested optionality preserved") {
     val st = ShapeOf[Payload].struct
-    assert(st("id") === StructField("id", LongType, nullable = false, FieldShape.defaultMetadata(false)))
+    assert(st("id") === StructField("id", LongType, nullable = false, ShapeOf.defaultMetadata(false)))
     assert(st("tags").dataType === ArrayType(IntegerType, containsNull = true))
     assert(st("tags").nullable === false)
     assert(st("metrics").dataType === MapType(StringType, IntegerType, valueContainsNull = true))
@@ -36,8 +36,8 @@ class SchemaConformsSpec extends AnyFunSuite {
 
   test("hasDefault metadata is recorded") {
     val st = ShapeOf[DefaultPayload].struct
-    assert(FieldShape.hasDefaultMetadata(st("region")))
-    assert(!FieldShape.hasDefaultMetadata(st("id")))
+    assert(ShapeOf.hasDefault(st("region")))
+    assert(!ShapeOf.hasDefault(st("id")))
   }
 
   test("nested benchmark contract derives 3-level structure (F2)") {
@@ -68,21 +68,33 @@ class SchemaConformsSpec extends AnyFunSuite {
   // --- unsupported leaves are rejected (F6) ---
 
   test("UUID leaf rejected") {
-    val e = intercept[UnsupportedContractType](ShapeOf[WithUuid].shape)
+    val e = intercept[UnsupportedContractType](ShapeOf[WithUuid].struct)
     assert(e.getMessage.contains("Unsupported structural leaf type"))
   }
 
   test("tuple leaf rejected") {
-    intercept[UnsupportedContractType](ShapeOf[WithTuple].shape)
+    intercept[UnsupportedContractType](ShapeOf[WithTuple].struct)
   }
 
   test("sealed trait leaf rejected") {
-    intercept[UnsupportedContractType](ShapeOf[WithTrait].shape)
+    intercept[UnsupportedContractType](ShapeOf[WithTrait].struct)
   }
 
   test("non-atomic map key rejected") {
-    val e = intercept[UnsupportedContractType](ShapeOf[WithBadMapKey].shape)
+    val e = intercept[UnsupportedContractType](ShapeOf[WithBadMapKey].struct)
     assert(e.getMessage.contains("Map key"))
+  }
+
+  test("Option[Option[T]] is rejected as a field, a Seq element, a Map value and inside a nested record") {
+    val messages = Seq(
+      intercept[UnsupportedContractType](ShapeOf[OptOptField].struct),
+      intercept[UnsupportedContractType](ShapeOf[OptOptElem].struct),
+      intercept[UnsupportedContractType](ShapeOf[OptOptValue].struct),
+      intercept[UnsupportedContractType](ShapeOf[OptOptDeep].struct),
+      intercept[UnsupportedContractType](ShapeOf.strictShape[OptOptElem])
+    ).map(_.getMessage)
+    messages.foreach(m => assert(m.contains("Option[Option[_]] has no Spark schema"), m))
+    assert(messages.head.contains("Option[Option[Int]]"))
   }
 
   // --- Exact policy (reference SchemaConformsSpec.scala:33-58) ---

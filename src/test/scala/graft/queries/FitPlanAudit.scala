@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.GraftSession
 import graft.llmops.AnnIndex
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -26,15 +26,7 @@ import scala.jdk.CollectionConverters._
 object FitPlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sc = spark.sparkContext
     val fx = LlmQueries.clusteredFixture(spark, sfDir).localCheckpoint(true)
