@@ -22,6 +22,11 @@ package graft
   * and the compact line carries the 5 slowest queries'
   * [min, median, max, runs] as "top_spread".
   *
+  * Every timed run goes through [[QueryMetrics.measure]]; the full
+  * artifact's "metrics" object holds, per settled query, the
+  * [[QueryMetrics.Record]] of its median run ([[medianRun]]): jobs, stages,
+  * tasks, task seconds, shuffle and spill bytes, micro-batch durations.
+  *
   * Two tiers:
   *   - `headline` — the scale-representative entry per operator family;
   *     their medians sum to the headline "value".
@@ -139,6 +144,13 @@ object Bench {
     // the upper median
     s(s.length / 2)
   }
+
+  /** The run whose [[QueryMetrics.Record]] the full artifact keeps for a
+    * query: the run at the [[median]] wall time (same index rule), so a
+    * query's `metrics` describe the run its reported median came from.
+    */
+  private[graft] def medianRun(runs: List[QueryMetrics.Record]): QueryMetrics.Record =
+    runs.sortBy(_.wallS).apply(runs.length / 2)
 
   /** Heavy-tier selection: measured median ≥ [[HEAVY_SECONDS]] or max/min
     * spread > [[NOISE_SPREAD]] after the base passes. Round 13: the rule
@@ -402,18 +414,16 @@ object Bench {
     val selHead = pick(headline)
     val selSec = pick(secondary)
 
-    def runOnce(name: String): Either[String, Double] =
+    def runOnce(name: String): Either[String, QueryMetrics.Record] =
       queries.get(name) match {
         case None =>
           // an unknown headline name must surface as an error, never make
           // the benchmark silently smaller (and faster-looking)
           Left("not in SparkEntry.queries")
         case Some(fn) =>
-          val t0 = System.nanoTime()
-          val r: Either[String, Double] =
+          val r: Either[String, QueryMetrics.Record] =
             try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              Right((System.nanoTime() - t0) / 1e9)
+              Right(QueryMetrics.measure(spark, name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2)
             } catch {
               case e: Throwable =>
                 Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
@@ -434,6 +444,7 @@ object Bench {
 
     // interleaved passes: pass p runs every query once, in registry order
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
+    val records = scala.collection.mutable.Map.empty[String, List[QueryMetrics.Record]]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // a failure on a TOP-UP run must not evict the query's valid base
     // samples from the tier totals (ADVICE r12: settled() would drop a
@@ -451,9 +462,10 @@ object Bench {
         // a failed query is not retried on later passes
         System.err.println(s"[bench] $tag: $name")
         runOnce(name) match {
-          case Right(s) =>
-            samples(name) = s :: samples.getOrElse(name, Nil)
-            System.err.println(f"[bench] $name: $s%.2f s")
+          case Right(m) =>
+            samples(name) = m.wallS :: samples.getOrElse(name, Nil)
+            records(name) = m :: records.getOrElse(name, Nil)
+            System.err.println(f"[bench] $name: ${m.wallS}%.2f s, ${m.jobs} jobs, ${m.stages} stages")
           case Left(m) =>
             if (isTopUp) { topupErrors(name) = m } else { errors(name) = m }
             System.err.println(s"[bench] $name FAILED${if (isTopUp) " (top-up; base samples kept)" else ""}: $m")
@@ -522,9 +534,12 @@ object Bench {
       .filter(n => !verificationOnly(n))
       .filter { n => val xs = samples(n); median(xs) > 1.5 * xs.min }
       .sorted
+    val metrics = (settled(selHead, samples, errors) ++ settled(selSec, samples, errors))
+      .map(n => s"${jstr(n)}:${medianRun(records(n)).json}")
+      .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","total_min":${"%.3f"
-          .format(totalMin)},"queries":$qs,"stats":$headStats,"secondary":$secQs,"secondary_stats":$secStats,"secondary_total":${"%.3f"
+          .format(totalMin)},"queries":$qs,"stats":$headStats,"secondary":$secQs,"secondary_stats":$secStats,"metrics":$metrics,"secondary_total":${"%.3f"
           .format(secTotal)},"secondary_total_min":${"%.3f".format(secTotalMin)},"heavy_topped_up":${heavy.sorted
           .map(jstr)
           .mkString("[", ",", "]")},"topup_budget":$TOPUP_BUDGET,"topup_runs_used":$topupRunsUsed,"noise_outliers":${outliers

@@ -10,14 +10,15 @@ import org.apache.spark.sql.functions._
   *
   * Semantics (kept deliberately canonical so a cross-engine oracle can
   * replay them):
-  *   - a word is its character sequence plus a terminal end-of-word
-  *     symbol (`</w>` by default), so word-final subwords are distinct
-  *     from word-internal ones;
+  *   - a word is its sequence of Unicode code points plus a terminal
+  *     end-of-word symbol (`</w>` by default), so word-final subwords are
+  *     distinct from word-internal ones — Spark's `split(word, "")` and
+  *     DuckDB's `word[i]` split the same way;
   *   - each learning step counts adjacent symbol pairs across the
   *     DISTINCT-word table weighted by word frequency, then merges the
   *     most frequent pair everywhere; ties break deterministically
-  *     (count desc, left asc, right asc — binary collation on both
-  *     engines);
+  *     (count desc, left asc, right asc — code-point order, which is the
+  *     binary string order of Spark and DuckDB);
   *   - merge application within a word is the greedy leftmost
   *     non-overlapping left-to-right fold (Sennrich's single scan):
   *     `[a,a,a,a,a]` under merge (a,a) becomes `[aa,aa,a]`, never
@@ -28,13 +29,9 @@ import org.apache.spark.sql.functions._
   * the distinct-word table, which is vocab-sized (10⁵–10⁷ rows, tens of
   * MB) regardless of corpus bytes — the same reason single-node tokenizer
   * trainers (HuggingFace `tokenizers`) get away with in-memory training
-  * at 100 TB corpus scale. Each merge step is two tiny Spark jobs over
-  * that cached table (a pair-count agg + an O(1)-row argmax collect); the
-  * driver holds one (left, right) pair per step, never data. Lineage is
-  * truncated with `localCheckpoint` every few steps so `numMerges` deep
-  * plans don't accumulate (on a cluster, substitute a reliable checkpoint
-  * dir). Encoding broadcasts the word→pieces table and never shuffles the
-  * corpus on the (hot, skewed) word key.
+  * at 100 TB corpus scale. [[learn]] collects that table and runs the
+  * merge loop on the driver. Encoding broadcasts the word→pieces table and
+  * never shuffles the corpus on the (hot, skewed) word key.
   */
 object Bpe {
 
@@ -44,63 +41,35 @@ object Bpe {
     */
   final case class Model(merges: DataFrame, wordPieces: DataFrame)
 
-  /** Character symbols of a non-empty word plus the end-of-word marker. */
+  /** Code-point symbols of a non-empty word plus the end-of-word marker. */
   private def wordSymbols(word: Column, eow: String): Column =
     concat(split(word, ""), array(lit(eow)))
 
-  /** Greedy leftmost non-overlapping application of ONE merge rule: a
-    * single left-to-right `aggregate` fold — if the accumulator's last
-    * symbol is `l` and the next is `r`, replace the last with `l+r`,
-    * else append. Runs per row inside codegen; no shuffle.
-    *
-    * The input array is referenced EXACTLY ONCE: learning nests one
-    * `applyMerge` per step and Catalyst's projection collapse inlines
-    * them, so any extra reference to `syms` here multiplies the collapsed
-    * expression tree geometrically (3 references → ~3^k nodes after k
-    * un-checkpointed steps — observed as minutes of codegen per step).
-    * The fold therefore starts from an empty accumulator instead of
-    * slicing off a head, and the empty-accumulator case is handled inside
-    * the lambda with a guarded `when` (no `element_at` on an empty
-    * array — ANSI mode would throw).
+  /** `a < b` in code-point order. Scala's `<` compares UTF-16 code units,
+    * which puts U+E000–U+FFFF after every supplementary character; moving
+    * surrogates above the rest of the BMP at the first differing unit
+    * restores code-point order.
     */
-  private[llmops] def applyMerge(syms: Column, l: String, r: String): Column = {
-    val merged = l + r
-    aggregate(
-      syms,
-      typedlit(Seq.empty[String]),
-      (acc, x) => {
-        val last = when(size(acc) > 0, element_at(acc, -1))
-        when(
-          last === lit(l) && x === lit(r),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged)))
-        ).otherwise(concat(acc, array(x)))
-      }
-    )
+  private def codePointLess(a: String, b: String): Boolean = {
+    def rank(c: Char): Int = if (c >= '\uE000') c - 0x800 else if (c >= '\uD800') c + 0x2000 else c
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) a.length < b.length else rank(a.charAt(i)) < rank(b.charAt(i))
   }
 
-  /** Adjacent symbol pairs of a word (length ≥ 2 guarded by the caller):
-    * position i → struct(l = syms[i], r = syms[i+1]), one element per
-    * occurrence so repeated pairs inside a word count once each.
-    */
-  private def adjacentPairs(syms: Column): Column =
-    transform(
-      sequence(lit(1), size(syms) - 1),
-      i => struct(element_at(syms, i).as("l"), element_at(syms, i + 1).as("r"))
-    )
-
-  /** Learn `numMerges` BPE merge rules over the corpus' whitespace words.
-    *
-    * '''Production schedules: use [[learnLocal]].''' This engine-loop form
-    * launches one tiny Spark job per merge step (~0.16 s/merge of pure
-    * scheduler overhead measured at sf0.01 — ≈1.4 h of scheduling for a
-    * 32k-merge vocab; bench_results/round12_bpe_merges.md), because the
-    * pair-count table it iterates on is vocab-sized, not corpus-sized.
-    * [[learnLocal]] runs the SAME rule derivation (bit-identical merge
-    * tables, spec-pinned) with ONE distributed corpus pass and a
-    * driver-local incremental merge loop: 2.19 s vs 16.63 s at 200 merges,
-    * seconds-to-minutes at 32k. Keep `learn` for tiny schedules or as the
-    * all-engine cross-check; reach for `learnLocal` whenever merge count
-    * is production-sized.
+  /** Learn `numMerges` merge rules over the corpus' whitespace words, with
+    * the merge LOOP on the driver — the production trainer shape
+    * (HuggingFace `tokenizers`, SentencePiece BPE): the corpus is touched
+    * exactly once by the distributed word-frequency aggregation, the
+    * vocab-sized (word, freq) table is collected (tens of MB at 10⁵–10⁷
+    * distinct words — a MODEL-side collect, bounded regardless of corpus
+    * bytes, the same class as broadcasting it), and the merge loop runs
+    * in-process with INCREMENTAL pair-count maintenance: each step touches
+    * only the words containing the merged pair, so a 32k-merge production
+    * schedule is seconds of driver CPU instead of `2·numMerges` scheduled
+    * Spark jobs (bench_results/round12_bpe_merges.md measured an engine
+    * loop at 200 merges: 16.63 s against 2.19 s for this one).
     *
     * `minWordCount` prunes the hapax tail of the word table before
     * learning (at scale you always prune; the registered oracle query
@@ -108,79 +77,6 @@ object Bpe {
     * Learning stops early if no adjacent pair is left (tiny corpora).
     */
   def learn(
-      df: DataFrame,
-      textCol: String = "text",
-      numMerges: Int = 100,
-      minWordCount: Long = 1L,
-      eow: String = "</w>"
-  ): Model = {
-    val base = df
-      .select(explode(TextStats.tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word")
-      .agg(count(lit(1)).as("freq"))
-      .filter(col("freq") >= minWordCount)
-      .withColumn("syms", wordSymbols(col("word"), eow))
-
-    var words = base.localCheckpoint(true)
-    val found = scala.collection.mutable.ListBuffer.empty[(Int, String, String)]
-    var exhausted = false
-    var step = 0
-    while (step < numMerges && !exhausted) {
-      val top = words
-        .filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(adjacentPairs(col("syms"))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1)
-        .collect() // exactly one row (or none when the corpus is exhausted)
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r) = (top(0).getString(0), top(0).getString(1))
-        found += ((step + 1, l, r))
-        words = words.withColumn("syms", applyMerge(col("syms"), l, r))
-        // truncate lineage: each step nests an aggregate() in the plan
-        if ((step + 1) % 8 == 0) words = words.localCheckpoint(true)
-      }
-      step += 1
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val merges = found.toSeq
-      .toDF("rank", "l", "r")
-      .select(
-        col("rank").cast("long").as("rank"),
-        col("l"),
-        col("r"),
-        concat(col("l"), col("r")).as("merged")
-      )
-    Model(merges, words.localCheckpoint(true))
-  }
-
-  /** Learn `numMerges` merge rules with the merge LOOP on the driver —
-    * the production trainer shape (HuggingFace `tokenizers`, SentencePiece
-    * BPE): the corpus is touched exactly once by the distributed
-    * word-frequency aggregation, the vocab-sized (word, freq) table is
-    * collected (tens of MB at 10⁵–10⁷ distinct words — a MODEL-side
-    * collect, bounded regardless of corpus bytes, the same class as
-    * broadcasting it), and the merge loop runs in-process with
-    * INCREMENTAL pair-count maintenance: each step touches only the words
-    * containing the merged pair, so a 32k-merge production schedule is
-    * seconds of driver CPU instead of `2·numMerges` scheduled Spark jobs
-    * (~0.2–0.5 s fixed overhead each — hours at production vocab; see
-    * bench_results/round12_bpe_merges.md for the measured gap at 200
-    * merges). Semantics are IDENTICAL to [[learn]] (same pair counting,
-    * same count-desc/left-asc/right-asc tie-break, same greedy leftmost
-    * fold) — spec-asserted equal on the reference corpus, and the
-    * returned [[Model]] has the same schemas, so [[encode]] /
-    * [[encodeIds]] / [[vocab]] work unchanged.
-    *
-    * Use [[learn]] when the merge loop itself must stay in the engine
-    * (e.g. the oracle replay); use this when training a realistic
-    * vocabulary.
-    */
-  def learnLocal(
       df: DataFrame,
       textCol: String = "text",
       numMerges: Int = 100,
@@ -200,7 +96,9 @@ object Bpe {
       .collect()
 
     val wordFreq = freqs.map(_._2)
-    val syms = freqs.map { case (w, _) => w.map(_.toString).toVector :+ eow }
+    val syms = freqs.map { case (w, _) =>
+      w.codePoints().toArray.map(cp => new String(Character.toChars(cp))).toVector :+ eow
+    }
 
     // pair → (count, set of word indexes containing it)
     val pairCount = scala.collection.mutable.Map.empty[(String, String), Long]
@@ -232,13 +130,13 @@ object Bpe {
     while (step < numMerges && !exhausted) {
       if (pairCount.isEmpty) exhausted = true
       else {
-        // argmax with the engine tie-break: count desc, left asc, right asc
+        // argmax with the tie-break: count desc, left asc, right asc
         var best: ((String, String), Long) = null
         pairCount.foreach { e =>
           if (
             best == null || e._2 > best._2 ||
-            (e._2 == best._2 && (e._1._1 < best._1._1 ||
-              (e._1._1 == best._1._1 && e._1._2 < best._1._2)))
+            (e._2 == best._2 && (codePointLess(e._1._1, best._1._1) ||
+              (e._1._1 == best._1._1 && codePointLess(e._1._2, best._1._2))))
           ) best = e
         }
         val (l, r) = best._1
@@ -292,7 +190,7 @@ object Bpe {
     * pipeline keeps. Same join shape as [[encode]] (broadcast word→pieces,
     * per-doc regroup only) plus a broadcast piece→id lookup; pieces
     * outside the vocab (possible only for out-of-model words under the
-    * char+eow fallback) map to `oovId` with a per-doc `n_oov` count.
+    * code-point+eow fallback) map to `oovId` with a per-doc `n_oov` count.
     */
   def encodeIds(
       df: DataFrame,
@@ -334,9 +232,9 @@ object Bpe {
     * regroup, and reassembly sorts within each doc's group only. Words
     * absent from the model (possible when it was learned with
     * `minWordCount` > 1 or on another corpus) fall back deterministically
-    * to their character+eow symbols — the standard robustness fallback;
-    * apply [[applyMerge]] over [[Model.merges]] first if rule-faithful
-    * OOV segmentation is needed.
+    * to their code-point+eow symbols — the standard robustness fallback;
+    * replay [[Model.merges]] over such words first if rule-faithful OOV
+    * segmentation is needed.
     */
   def encode(
       df: DataFrame,

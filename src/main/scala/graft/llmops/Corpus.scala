@@ -183,8 +183,8 @@ object Corpus {
           .as("__docs")
       )
     // Fold state: (assigns: array<struct<id, bin>>, bin: current bin index,
-    // rem: remaining capacity). The docs array is referenced exactly once
-    // (the Bpe.applyMerge discipline — projection collapse stays linear).
+    // rem: remaining capacity). The docs array is referenced exactly once,
+    // so projection collapse stays linear.
     val packed = aggregate(
       col("__docs"),
       struct(

@@ -4916,25 +4916,23 @@ object LlmQueries {
     // in DuckDB as one generated CTE chain per merge step, so the oracle
     // re-derives every rule from raw text rather than trusting the
     // engine's rule list. Covers what bpeishTokenCount only approximated.
+    // Bpe.learn is the production trainer shape (HuggingFace tokenizers):
+    // ONE distributed corpus pass (word-frequency agg), then the merge
+    // loop on the driver over the collected vocab-sized word table.
     QueryDef(
       "llm_bpe_vocab",
       Some(bpeVocabOracle(BpeMerges)),
       (spark, sf) =>
         Bpe.learn(table(spark, sf, "documents"), numMerges = BpeMerges).merges
     ),
-    // The PRODUCTION trainer shape (HuggingFace tokenizers): ONE
-    // distributed corpus pass (word-frequency agg), then the merge loop
-    // driver-local over the collected vocab-sized word table with
-    // incremental pair counts — a 32k-merge schedule is seconds of
-    // driver CPU instead of 2·numMerges scheduled jobs (measured at 200
-    // merges: bench_results/round12_bpe_merges.md). Same oracle as
-    // llm_bpe_vocab: DuckDB re-derives every rule from raw text, so the
-    // gate proves the local loop IS the engine semantics.
+    // The same learner under the name the driver-loop trainer was first
+    // registered and benched as (bench_results/round12_bpe_merges.md);
+    // same oracle as llm_bpe_vocab.
     QueryDef(
       "llm_bpe_vocab_local",
       Some(bpeVocabOracle(BpeMerges)),
       (spark, sf) =>
-        Bpe.learnLocal(table(spark, sf, "documents"), numMerges = BpeMerges).merges
+        Bpe.learn(table(spark, sf, "documents"), numMerges = BpeMerges).merges
     ),
     // Encode under the learned merges: per-doc ordered subword pieces.
     // The oracle relearns the same rules (same CTE chain) and reassembles
@@ -5556,12 +5554,12 @@ object LlmQueries {
   private val BpeMerges = 10
 
   /** DuckDB replay of [[graft.llmops.Bpe.learn]]: w0 is the word-frequency
-    * table with char+`</w>` symbols; each step i counts adjacent pairs
+    * table with code-point+`</w>` symbols; each step i counts adjacent pairs
     * (c_i), picks the deterministic argmax (p_i), and applies it with the
     * same greedy leftmost non-overlapping fold (w_i) via `list_reduce` —
     * `acc[-1]`/`x[1]` comparisons against the correlated p_i row, drop-last
-    * + append on merge. Exactly the Sennrich single-scan semantics the
-    * Spark `aggregate` fold implements. The w_i and c_i are `MATERIALIZED`:
+    * + append on merge. Exactly the Sennrich single-scan semantics of the
+    * driver loop's fold. The w_i and c_i are `MATERIALIZED`:
     * each w_i is read by both c_(i+1) and w_(i+1), and DuckDB inlining the
     * chain doubles the plan per step (out of memory at sf0.01 with a 4 GB
     * limit; 1 s materialized).

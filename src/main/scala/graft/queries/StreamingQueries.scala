@@ -255,8 +255,8 @@ object StreamingQueries {
           .withColumn("text", concat_ws("|", col("user_id"), col("event_type")))
         // column pruning crosses the stateful dedup: the shuffle carries
         // only the dedup key + output columns, not the full event row
-        // (measured with tools/ShuffleAudit — an explicit pre-projection
-        // changes nothing)
+        // (measured by the query's shuffle bytes, which the bench artifact's
+        // `metrics` record — an explicit pre-projection changes nothing)
         val deduped = TypedStreams
           .streamingDedupExact(stream, tsCol = "ts2", watermark = "1 hour")
           .select("user_id", "event_type")

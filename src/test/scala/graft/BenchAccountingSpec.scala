@@ -24,6 +24,15 @@ class BenchAccountingSpec extends AnyFunSuite {
     assert(Bench.settled(names, samples, errors) == Seq("q_ok"))
   }
 
+  test("the metrics record a query keeps is the one of its median run") {
+    def run(wallS: Double, jobs: Int) = QueryMetrics.Record(wallS, jobs, jobs, jobs, 0.0, 0L, 0L, 0L, Nil)
+    for (runs <- Seq(List(run(1.1, 1), run(0.9, 2), run(1.0, 3)), List(run(2.0, 1), run(1.0, 2), run(3.0, 3), run(4.0, 4), run(0.5, 5)))) {
+      val kept = Bench.medianRun(runs)
+      assert(kept.wallS == Bench.median(runs.map(_.wallS)), runs)
+    }
+    assert(Bench.medianRun(List(run(0.7, 9))).jobs == 9)
+  }
+
   test("order and duplicates of the tier list are preserved for the settled subset") {
     assert(Bench.settled(Seq("q_ok", "q_ok"), samples, errors) == Seq("q_ok", "q_ok"))
     assert(Bench.settled(Seq.empty, samples, errors).isEmpty)

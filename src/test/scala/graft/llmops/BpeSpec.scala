@@ -1,14 +1,16 @@
 package graft.llmops
 
 import graft.SparkTestSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.math.Ordering.Implicits.seqOrdering
+
 /** BPE learning/encoding against an independent plain-Scala reference
-  * implementation of Sennrich et al. 2016 (greedy leftmost fold, count
-  * desc / left asc / right asc tie-break) — the same semantics the DuckDB
-  * oracle replays, but derived here a third way so a shared bug in the
-  * two SQL engines' replication can't hide.
+  * implementation of Sennrich et al. 2016 (code-point symbols, greedy
+  * leftmost fold, count desc / left asc / right asc tie-break in
+  * code-point order) — the same semantics the DuckDB oracle replays, but
+  * derived here a third way so a shared bug in the two engines'
+  * replication can't hide.
   */
 class BpeSpec extends AnyFunSuite with SparkTestSession {
 
@@ -18,8 +20,10 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
 
   // ---- plain-Scala reference BPE ------------------------------------
 
+  private def codePoints(s: String): Seq[Int] = s.codePoints().toArray.toSeq
+
   private def refSymbols(word: String): Vector[String] =
-    word.map(_.toString).toVector :+ Eow
+    codePoints(word).map(cp => new String(Array(cp), 0, 1)).toVector :+ Eow
 
   /** Greedy leftmost non-overlapping single-scan merge. */
   private def refApply(syms: Vector[String], l: String, r: String): Vector[String] =
@@ -50,7 +54,7 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
       }
       if (counts.isEmpty) done = true
       else {
-        val ((l, r), _) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+        val ((l, r), _) = counts.toSeq.minBy { case ((a, b), c) => (-c, codePoints(a), codePoints(b)) }
         merges += ((step + 1, l, r))
         words = words.map { case (w, (f, syms)) => w -> (f, refApply(syms, l, r)) }
         step += 1
@@ -72,50 +76,71 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     "newest newest widest the cat"
   )
 
-  private lazy val docsDF = corpus.zipWithIndex
+  /** Runs of identical symbols under a merge of that symbol with itself
+    * (`aaaaa` → `[aa, aa, a, </w>]`, never `[aa, a, aa, </w>]`), an
+    * immediately repeated pair, and a one-symbol word.
+    */
+  private val runs = Seq("aaaaa abab x")
+
+  /** Text outside the BMP: an emoji word, and a count tie between pairs
+    * led by U+E000 and by U+1F600 — code-point order (Spark's and DuckDB's
+    * string order) merges the U+E000 pair first, UTF-16 order the other.
+    */
+  private val nonBmp = Seq("\uE000x \uD83D\uDE00x a\uD83D\uDE00b", "\uD83D\uDE00x \uE000x a\uD83D\uDE00b")
+
+  private def docs(texts: Seq[String]) = texts.zipWithIndex
     .map { case (t, i) => (i.toLong, t) }
     .toDF("doc_id", "text")
 
-  test("applyMerge is the greedy leftmost fold on identical-symbol runs") {
-    val rows = Seq(Seq("a", "a", "a", "a", "a"), Seq("a", "b", "a", "b"), Seq("x"))
-      .toDF("syms")
-      .select(Bpe.applyMerge(col("syms"), "a", "a").as("m"))
-      .as[Seq[String]]
-      .collect()
-    assert(rows(0) == Seq("aa", "aa", "a")) // never [aa, a, aa]
-    assert(rows(1) == Seq("a", "b", "a", "b"))
-    assert(rows(2) == Seq("x"))
-    val ab = Seq(Seq("a", "b", "a", "b"))
-      .toDF("syms")
-      .select(Bpe.applyMerge(col("syms"), "a", "b").as("m"))
-      .as[Seq[String]]
-      .collect()
-    assert(ab(0) == Seq("ab", "ab"))
-  }
+  private lazy val docsDF = docs(corpus)
 
-  test("learn reproduces the reference merge sequence (ties included)") {
-    val (expected, _) = refLearn(corpus, numMerges = 20)
-    val model = Bpe.learn(docsDF, numMerges = 20)
-    val got = model.merges
+  private def learnedMerges(model: Bpe.Model): Seq[(Int, String, String)] =
+    model.merges
       .orderBy("rank")
       .select("rank", "l", "r")
       .as[(Long, String, String)]
       .collect()
       .map { case (k, l, r) => (k.toInt, l, r) }
       .toSeq
-    assert(got == expected)
-  }
 
-  test("learned wordPieces match the reference segmentation of every word") {
-    val (_, refPieces) = refLearn(corpus, numMerges = 20)
-    val model = Bpe.learn(docsDF, numMerges = 20)
-    val got = model.wordPieces
+  private def learnedPieces(model: Bpe.Model): Map[String, Vector[String]] =
+    model.wordPieces
       .select("word", "syms")
       .as[(String, Seq[String])]
       .collect()
       .map { case (w, s) => w -> s.toVector }
       .toMap
-    assert(got == refPieces)
+
+  test("learn reproduces the reference merge sequence (ties included)") {
+    for (texts <- Seq(corpus, runs)) {
+      val (expected, _) = refLearn(texts, numMerges = 20)
+      assert(learnedMerges(Bpe.learn(docs(texts), numMerges = 20)) == expected, texts)
+    }
+  }
+
+  test("learned wordPieces match the reference segmentation of every word") {
+    for (texts <- Seq(corpus, runs)) {
+      val (_, refPieces) = refLearn(texts, numMerges = 20)
+      assert(learnedPieces(Bpe.learn(docs(texts), numMerges = 20)) == refPieces, texts)
+    }
+    assert(learnedPieces(Bpe.learn(docs(runs), numMerges = 1))("aaaaa") == Vector("aa", "aa", "a", Eow))
+  }
+
+  test("learn splits and orders text outside the BMP by code point, as the reference does") {
+    val (expected, refPieces) = refLearn(nonBmp, numMerges = 20)
+    val model = Bpe.learn(docs(nonBmp), numMerges = 20)
+    val merges = learnedMerges(model)
+    assert(merges == expected)
+    assert(learnedPieces(model) == refPieces)
+    // no symbol holds half of a surrogate pair
+    val loneSurrogate = (s: String) => codePoints(s).exists(cp => cp >= 0xd800 && cp <= 0xdfff)
+    assert(!merges.exists { case (_, l, r) => loneSurrogate(l) || loneSurrogate(r) }, merges)
+    def rankOf(l: String): Int = merges.collectFirst { case (k, `l`, r) if r == "x" + Eow => k }.get
+    assert(rankOf("\uE000") < rankOf("\uD83D\uDE00"), merges)
+    val encoded = Bpe.encode(docs(nonBmp), model).select("doc_id", "pieces_str").as[(Long, String)].collect().toMap
+    nonBmp.zipWithIndex.foreach { case (text, i) =>
+      assert(encoded(i.toLong) == text.split(" ").toSeq.flatMap(refPieces).mkString(" "), s"doc $i")
+    }
   }
 
   test("encode flattens per-doc pieces in word order and counts them") {
@@ -161,45 +186,6 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     // vocab ids are dense 0..n-1 with rank-0 = most frequent symbol
     val ids = idOf.values.toSeq.sorted
     assert(ids == (0L until ids.length).toSeq)
-  }
-
-  test("learnLocal (driver merge loop) is identical to learn and to the reference") {
-    val (expected, refPieces) = refLearn(corpus, numMerges = 20)
-    val model = Bpe.learnLocal(docsDF, numMerges = 20)
-    val got = model.merges
-      .orderBy("rank")
-      .select("rank", "l", "r")
-      .as[(Long, String, String)]
-      .collect()
-      .map { case (k, l, r) => (k.toInt, l, r) }
-      .toSeq
-    assert(got == expected)
-    val gotPieces = model.wordPieces
-      .select("word", "syms")
-      .as[(String, Seq[String])]
-      .collect()
-      .map { case (w, s) => w -> s.toVector }
-      .toMap
-    assert(gotPieces == refPieces)
-    // and the engine-side learner agrees wholesale (same Model surface)
-    val engine = Bpe.learn(docsDF, numMerges = 20)
-    val enginePieces = engine.wordPieces
-      .select("word", "freq", "syms")
-      .as[(String, Long, Seq[String])]
-      .collect()
-      .toSet
-    val localPieces = model.wordPieces
-      .select("word", "freq", "syms")
-      .as[(String, Long, Seq[String])]
-      .collect()
-      .toSet
-    assert(localPieces == enginePieces)
-  }
-
-  test("learnLocal stops early when no pairs remain") {
-    val tiny = Seq((1L, "ab ab")).toDF("doc_id", "text")
-    val model = Bpe.learnLocal(tiny, numMerges = 50)
-    assert(model.merges.count() == 2L)
   }
 
   test("learn stops early when no pairs remain") {

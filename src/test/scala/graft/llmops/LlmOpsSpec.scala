@@ -881,35 +881,10 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     )
   }
 
-  /** Spark jobs `body` launches, counted by job group: a sentinel job in a
-    * second group drains the listener bus, which delivers in order.
-    */
+  /** Spark jobs `body` launches, counted by [[graft.QueryMetrics]]. */
   private def jobsOf[A](what: String)(body: => A): (A, Int) = {
-    val group = s"graft-jobs-$what-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`)    => jobs.incrementAndGet()
-          case Some(`sentinel`) => drained.countDown()
-          case _                =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, what)
-      val out = body
-      sc.setJobGroup(sentinel, "listener drain")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, m) = graft.QueryMetrics.measure(spark, what)(body)
+    (out, m.jobs)
   }
 
   test("AnnIndex pruned probe serves from the handle: fit tables cached per handle, one job to build, generation-scoped") {

@@ -1,11 +1,12 @@
 package graft.queries
 
-import graft.GraftSession
+import graft.{GraftSession, QueryMetrics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Diagnostic main (round 18, VERDICT r17 item 4): re-runs the t17 gate's
-  * exact body N times in one warmed JVM with PER-PHASE wall timing, to
+  * exact body N times in one warmed JVM with PER-PHASE wall seconds,
+  * Spark jobs and task seconds ([[graft.QueryMetrics]]), to
   * attribute the 16.6/20.1/48.4 s min/median/max spread BENCH_r17
   * recorded — the only query with a > 2× tail. Not part of any gate or
   * bench; run by hand via `sbt "Test/runMain graft.queries.T17TailProbe"`.
@@ -23,11 +24,10 @@ object T17TailProbe {
     import QueryDef.tmpDir
 
     (0 until reps).foreach { rep =>
-      val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+      val phases = scala.collection.mutable.ArrayBuffer.empty[(String, QueryMetrics.Record)]
       def timed[A](label: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        phases += ((label, (System.nanoTime() - t0) / 1e9))
+        val (r, m) = QueryMetrics.measure(spark, label)(body)
+        phases += ((label, m))
         r
       }
       val tRun0 = System.nanoTime()
@@ -86,7 +86,7 @@ object T17TailProbe {
         spark.read.parquet(out).dropDuplicates("qid", "nid", "rank").write.format("noop").mode("overwrite").save()
       )
       val total = (System.nanoTime() - tRun0) / 1e9
-      println(f"[t17probe] rep=$rep total=$total%.2f " + phases.map { case (l, s) => f"$l=$s%.2f" }.mkString(" "))
+      println(f"[t17probe] rep=$rep total=$total%.2f " + phases.map { case (l, m) => f"$l=${m.wallS}%.2f/${m.jobs}j/${m.taskS}%.2fts" }.mkString(" "))
     }
     spark.stop()
   }

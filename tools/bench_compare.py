@@ -11,6 +11,12 @@ queries moving > 1.5x against the control median. Queries that cannot
 be ratioed (zero/old-only/new-only medians) are listed, never silently
 dropped — a query that regressed to an ERROR must not produce a
 cleaner-looking comparison than a slowdown.
+
+When both artifacts carry per-query "metrics" (graft.QueryMetrics
+records), it also prints the change in Spark jobs and stages: totals over
+the queries both measured, then every query whose job or stage count
+changed. Those counts repeat exactly between runs of the same plan, so any
+change is a plan change, not host noise.
 """
 import json
 import statistics
@@ -25,6 +31,25 @@ def medians(path):
             if isinstance(v, (int, float)):
                 out[name] = float(v)
     return d, out
+
+
+def plan_counts(new_art, old_art):
+    mn, mo = new_art.get("metrics"), old_art.get("metrics")
+    if not (mn and mo):
+        return
+    both = sorted(set(mn) & set(mo))
+    changed = [q for q in both
+               if (mn[q]["jobs"], mn[q]["stages"]) != (mo[q]["jobs"], mo[q]["stages"])]
+    for key in ("jobs", "stages"):
+        old_sum = sum(mo[q][key] for q in both)
+        new_sum = sum(mn[q][key] for q in both)
+        print(f"{key}: old {old_sum} -> new {new_sum} ({new_sum - old_sum:+d}) over {len(both)} queries")
+    print(f"queries whose jobs or stages changed: {len(changed)}")
+    for q in changed:
+        dj = mn[q]["jobs"] - mo[q]["jobs"]
+        ds = mn[q]["stages"] - mo[q]["stages"]
+        print(f"  {q}: jobs {mo[q]['jobs']} -> {mn[q]['jobs']} ({dj:+d}), "
+              f"stages {mo[q]['stages']} -> {mn[q]['stages']} ({ds:+d})")
 
 
 def main():
@@ -70,6 +95,7 @@ def main():
         f"totals: new value={dn.get('value')} total_min={dn.get('total_min')} | "
         f"old value={do.get('value')} total_min={do.get('total_min')}"
     )
+    plan_counts(dn, do)
     # visibility for everything that could not be ratioed
     only_new = sorted(set(new) - set(old))
     only_old = sorted(set(old) - set(new))
