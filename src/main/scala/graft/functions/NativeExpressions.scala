@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, Codege
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.{GraftSqlShim => ExpressionUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the llmops hot paths.
@@ -59,6 +60,12 @@ object native {
 
   def codewordArgmin(sv: Column, entries: Column): Column =
     ExpressionUtils.column(CodewordArgmin(ExpressionUtils.expression(sv), ExpressionUtils.expression(entries)))
+
+  /** Symmetric int8 quantization of a numeric vector — see
+    * [[QuantizeInt8]].
+    */
+  def quantizeInt8(vec: Column): Column =
+    ExpressionUtils.column(QuantizeInt8(ExpressionUtils.expression(vec)))
 
   /** The value held by `bc` (Catalyst data of type `dataType`) as a
     * column — see [[BroadcastValue]].
@@ -274,6 +281,37 @@ final case class ArrayL2Sq(left: Expression, right: Expression) extends ArrayNum
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArrayL2Sq =
     copy(left = newLeft, right = newRight)
+}
+
+/** Symmetric int8 quantization: array<float|double|int|long> in,
+  * array<int> out, one static [[NativeMath.quantizeInt8]] call per row
+  * (see there for the exact contract). Bit-identical to the HOF
+  * `transform(v, x -> CASE WHEN s = 0 THEN 0 ELSE CAST(floor(CAST(x AS
+  * DOUBLE) * 127.0 / s + 0.5) AS INT) END)` with `s =
+  * array_max(transform(v, x -> abs(CAST(x AS DOUBLE))))`, whose lambda
+  * re-evaluates `s` per element (O(d²) interpreted work per row).
+  * `failOnError` is the ANSI mode of that form's int cast, taken from the
+  * session when the expression is built, as Spark's `Cast` takes it.
+  */
+final case class QuantizeInt8(child: Expression, failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression {
+
+  override def foldable: Boolean = child.foldable
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+
+  override def prettyName: String = "quantize_int8"
+
+  @transient private lazy val code: Int = NativeMath.typeCode(child.dataType)
+
+  override protected def nullSafeEval(input: Any): Any =
+    NativeMath.quantizeInt8(input.asInstanceOf[ArrayData], code, failOnError)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${GenUtil.M}.quantizeInt8($c, $code, $failOnError);")
+
+  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8 =
+    copy(child = newChild)
 }
 
 /** Top-`upTo` centroids by (cosine desc, ncid desc ⇔ cid asc) — the IVF

@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types._
 
 /** Shared primitive kernels behind the native expressions: ONE
@@ -86,6 +87,50 @@ object NativeMath {
       i += 1
     }
     java.lang.Double.valueOf(acc)
+  }
+
+  /** Symmetric int8 quantization of one vector (see
+    * [[graft.llmops.Embeddings.quantizeInt8]]): with s the max of |x| over
+    * the non-null elements (Spark's double order, so one NaN makes s NaN;
+    * no non-null element leaves s null), element x becomes
+    * `(int) (long) floor(x·127/s + 0.5)`, 0 for every element (null ones
+    * included) when s = 0, and null when x or s is null. One O(d) pass for
+    * s and one for the elements, where the HOF form re-evaluates s inside
+    * its per-element lambda. The long → int narrowing follows Spark's
+    * cast: under ANSI (`failOnError`) an out-of-range value (x·127
+    * overflowing to ±Inf) raises the cast's own `CAST_OVERFLOW` error,
+    * otherwise it wraps.
+    */
+  def quantizeInt8(v: ArrayData, code: Int, failOnError: Boolean): ArrayData = {
+    val n = v.numElements()
+    var hasScale = false
+    var scale = 0.0
+    var i = 0
+    while (i < n) {
+      if (!v.isNullAt(i)) {
+        val a = math.abs(get(v, i, code))
+        if (!hasScale || cmpDouble(a, scale) > 0) scale = a
+        hasScale = true
+      }
+      i += 1
+    }
+    val out = new Array[Int](n)
+    if (hasScale && scale == 0.0) return UnsafeArrayData.fromPrimitiveArray(out)
+    var nulls: Array[Boolean] = null
+    i = 0
+    while (i < n) {
+      if (!hasScale || v.isNullAt(i)) {
+        if (nulls == null) nulls = new Array[Boolean](n)
+        nulls(i) = true
+      } else {
+        val q = math.floor(get(v, i, code) * 127.0 / scale + 0.5).toLong
+        if (failOnError && q != q.toInt) throw GraftSqlShim.castOverflow(q, LongType, IntegerType)
+        out(i) = q.toInt
+      }
+      i += 1
+    }
+    if (nulls == null) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](n)(j => if (nulls(j)) null else out(j)))
   }
 
   def simhash64(arr: ArrayData): Long = {

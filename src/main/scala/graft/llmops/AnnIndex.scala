@@ -1,12 +1,18 @@
 package graft.llmops
 
 import graft.contracts.{ContractViolation, SchemaCompare, SchemaPolicy}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -57,11 +63,11 @@ import scala.jdk.CollectionConverters._
   *         batch query keeps the join form (dynamic pruning / AQE
   *         territory) because its query side is corpus-sized.
   *
-  * Version discipline: readers [[load]] the current generation, collect
-  * its fit and hold lazy codes scans of THAT directory only; [[compact]]
-  * writes a NEW generation and never mutates or unlinks the one open
-  * readers hold (crash-safe by construction: an incomplete generation has
-  * no `_SUCCESS` and is never selected). [[vacuum]] reclaims superseded generations, retaining a
+  * Version discipline: readers [[load]] the current generation, read
+  * its fit on the driver and hold lazy codes scans of THAT directory
+  * only; [[compact]] writes a NEW generation and never mutates or
+  * unlinks the one open readers hold (crash-safe by construction: an
+  * incomplete generation has no `_SUCCESS` and is never selected). [[vacuum]] reclaims superseded generations, retaining a
   * configurable serving window of recent ones for long-held readers.
   * [[delete]] is the one in-place mutation (it rewrites only
   * the touched `(__batch, __cid)` partitions of the current generation);
@@ -79,15 +85,16 @@ object AnnIndex {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** A fitted (or loaded) IVF-PQ index. The DataFrames are lazy — after
-    * [[load]] they are contract-pinned parquet scans of the generation
-    * that was current at load time; after [[fitIvfPq]] they are
-    * snapshotted fit outputs. `fit` is the same fit collected to the
-    * driver ([[Similarity.FitTables]]): every encode and probe of the
-    * handle reads it from there, so none of them plans a centroid or
-    * codebook scan or aggregate. It is filled when the handle is made,
-    * not on first use: [[append]] encodes against a freshly loaded
-    * handle, and a loaded handle's first probe then needs no fit job.
+  /** A fitted (or loaded) IVF-PQ index. `centroids` and `codebooks` are
+    * local relations held on the driver — the fit's outputs after
+    * [[fitIvfPq]], snapshots read at load time after [[load]]; `codes` is
+    * lazy — after [[load]] a contract-pinned parquet scan of the
+    * generation that was current at load time. `fit` is the same fit in
+    * the forms the kernels read ([[Similarity.FitTables]]): every encode
+    * and probe of the handle reads it from there, so none of them plans a
+    * centroid or codebook scan or aggregate. It is filled when the handle
+    * is made, not on first use, so a loaded handle's first probe needs no
+    * fit job.
     * It is derived from `centroids` and `codebooks`; a `copy` keeps it,
     * so a copy must not replace those two.
     *
@@ -165,11 +172,13 @@ object AnnIndex {
 
   // ------------------------------------------------------------------
   // Table contracts. Every index table is read through a fixed schema,
-  // checked against one data file's footer on the driver before the
-  // scan is built: a foreign or corrupt table fails at the read with a
+  // checked against one data file's footer on the driver before any row
+  // is read: a foreign or corrupt table fails at the read with a
   // ContractViolation naming it (never deep inside a probe), and no read
   // pays Spark's schema-inference job. Nullability is not part of a
-  // contract (Spark reads every file column as nullable anyway).
+  // contract (Spark reads every file column as nullable anyway). The
+  // bounded-small fit tables are then read on the driver ([[readRows]]);
+  // the codes stay a lazy Spark scan ([[readCodes]]).
   // ------------------------------------------------------------------
 
   /** The fit tables' schemas under one format version. */
@@ -214,27 +223,28 @@ object AnnIndex {
   private def isHidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
 
-  /** The first data file under `dir` (depth-first, by name), if any. */
-  private def firstDataFile(fs: FileSystem, dir: Path): Option[Path] =
+  /** The data files under `dir`, depth-first by name, listed lazily. */
+  private def dataFiles(fs: FileSystem, dir: Path): Iterator[Path] =
     fs.listStatus(dir)
       .filterNot(st => isHidden(st.getPath.getName))
       .sortBy(_.getPath.getName)
       .iterator
-      .flatMap(st => if (st.isDirectory) firstDataFile(fs, st.getPath) else Some(st.getPath))
-      .nextOption()
+      .flatMap(st => if (st.isDirectory) dataFiles(fs, st.getPath) else Iterator.single(st.getPath))
+
+  /** The first data file under `dir` (depth-first, by name), if any. */
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[Path] = dataFiles(fs, dir).nextOption()
 
   /** The Spark schema a parquet file's footer records: the Spark row
     * metadata when a Spark job wrote it, else the converted parquet
     * schema. Driver-side, no Spark job.
     */
   private def footerSchema(spark: SparkSession, file: Path): StructType = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
     try {
       val meta = reader.getFooter.getFileMetaData
       Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
     } finally reader.close()
   }
 
@@ -259,30 +269,67 @@ object AnnIndex {
       )
   }
 
-  /** [[checkContract]] of the first data file under `dir`. */
-  private def requireContract(spark: SparkSession, table: String, dir: Path, contract: StructType): Unit = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val file = firstDataFile(fs, dir).getOrElse(
+  /** The Hadoop conf of a driver-side read of `schema` by Spark's parquet
+    * row reader: the requested schema and the SQL settings its schema
+    * converter reads, as Spark's parquet scan sets them.
+    */
+  private def parquetReadConf(spark: SparkSession, schema: StructType): Configuration = {
+    val sql = spark.sessionState.conf
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, sql.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key, sql.parquetReaderRespectUnknownTypeAnnotation)
+    conf
+  }
+
+  /** Every row of the fit-layer table `table` under `root` — `meta`,
+    * `centroids`, `codebooks` or `occupancy`: 1, `cells`, ≤ m·ks and
+    * `cells` rows by construction — read on the driver through its
+    * contract. The first data file's footer is checked
+    * ([[checkContract]]); then every data file is decoded by Spark's own
+    * parquet row reader (`ParquetReadSupport`, the record path of Spark's
+    * parquet scan) and its rows are copied. No Spark job, no broadcast.
+    */
+  private def readRows(spark: SparkSession, root: String, table: String, contract: StructType): Seq[InternalRow] = {
+    val dir = new Path(root, table)
+    val conf = parquetReadConf(spark, contract)
+    val files = dataFiles(dir.getFileSystem(conf), dir).toSeq
+    val first = files.headOption.getOrElse(
       throw new java.io.FileNotFoundException(s"AnnIndex table $table at $dir holds no data file")
     )
-    checkContract(table, file, footerSchema(spark, file), contract)
+    checkContract(table, first, footerSchema(spark, first), contract)
+    val toUnsafe = UnsafeProjection.create(contract)
+    val corrected = RebaseSpec(LegacyBehaviorPolicy.CORRECTED)
+    files.flatMap { file =>
+      val reader = ParquetReader
+        .builder(new ParquetReadSupport(None, false, corrected, corrected), file)
+        .withConf(conf)
+        .build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map(toUnsafe(_).copy()).toVector
+      finally reader.close()
+    }
   }
 
-  /** A fit-layer table (`meta`, `centroids`, `codebooks`, `occupancy`)
-    * read through its contract.
+  /** A fit-layer table read through its contract ([[readRows]]), as a
+    * local relation: a snapshot of the table when this runs.
     */
-  private def readTable(spark: SparkSession, root: String, table: String, contract: StructType): DataFrame = {
-    val dir = new Path(root, table)
-    requireContract(spark, table, dir, contract)
-    spark.read.schema(contract).parquet(dir.toString)
-  }
+  private def readTable(spark: SparkSession, root: String, table: String, contract: StructType): DataFrame =
+    GraftSqlShim.localRelation(spark, contract, readRows(spark, root, table, contract))
 
-  /** The one `meta` row under `root`. Retried across the transient miss a
-    * concurrent [[tombstoneV4RootMeta]] swap can cause: footer and scan
-    * both sit inside the retry.
+  /** The one `meta` row under `root` ([[readRows]]). Retried across the
+    * transient miss a concurrent [[tombstoneV4RootMeta]] swap can cause:
+    * listing, footer and read all sit inside the retry.
     */
-  private def readMeta(spark: SparkSession, root: String): Row =
-    retryTransientRead(s"$root/meta")(readTable(spark, root, "meta", FitContractsByVersion(FormatVersion).meta).head())
+  private def readMeta(spark: SparkSession, root: String): Row = {
+    val contract = FitContractsByVersion(FormatVersion).meta
+    val rows = retryTransientRead(s"$root/meta")(readRows(spark, root, "meta", contract))
+    val row = rows.headOption.getOrElse(throw new IllegalStateException(s"AnnIndex table meta at $root/meta holds no row"))
+    CatalystTypeConverters.createToScalaConverter(contract)(row).asInstanceOf[Row]
+  }
 
   /** The codes layers' data columns: `__nid` in the type the footer of
     * the first file under `layers` records (the caller's id type), and
@@ -940,7 +987,8 @@ object AnnIndex {
     *     refuses the ambiguous insert).
     *
     * Codes land under the fit layer `__batch=-1`, partitioned by cell id
-    * — the probe-side pruning layout documented on the object. Also
+    * — the probe-side pruning layout documented on the object — one file
+    * per cell ([[writeCodesLayer]]). Also
     * snapshots `occupancy/` (per-cell code counts counted from the
     * WRITTEN files — the physical truth, one cheap codes-only scan): the
     * fit-time reference [[staleness]] diffs against after [[append]]s.
@@ -960,17 +1008,7 @@ object AnnIndex {
         // clear crashed-first-save leftovers and write the v1 layout
         codesVersions(spark, dir).foreach { case (_, p) => fs.delete(p, true) }
         writeFitTables(index, dir)
-        index.codes
-          .withColumn("__batch", lit(FitBatchId))
-          // one file per cell (round 18, matching [[writeGeneration]]):
-          // without the repartition every upstream task writes its own
-          // fragment into every cell's partition — tasks × cells files
-          // per fresh save at scale, guide §6's small-files failure mode
-          .repartition(col("__cid"))
-          .write
-          .mode("overwrite")
-          .partitionBy("__batch", "__cid")
-          .parquet(s"$dir/codes_v1")
+        writeCodesLayer(index.codes.withColumn("__batch", lit(FitBatchId)), s"$dir/codes_v1", "__batch", "__cid")
         writeOccupancy(spark, new Path(s"$dir/codes_v1"), dir)
         // a fresh fit has absorbed no append batches
         writeAbsorbedMarker(spark, new Path(s"$dir/codes_v1"), FitBatchId.toLong)
@@ -995,8 +1033,8 @@ object AnnIndex {
   }
 
   /** Write a complete SELF-CONTAINED generation `codes_v<n>`: codes (one
-    * file per cell — `repartition(__cid)` puts each cell's rows in one
-    * task), then the generation's own fit layers, occupancy snapshot and
+    * file per cell, [[writeCodesLayer]]), then the generation's own fit
+    * layers, occupancy snapshot and
     * absorbed-batch sidecar, then the `_ABSORBED_<hwm>` marker LAST (the
     * commit point — a crash anywhere earlier leaves an uncommitted
     * generation no reader selects). Shared by [[refit]] and the
@@ -1016,13 +1054,8 @@ object AnnIndex {
       absorbed: Seq[(Long, Long, String)]
   ): Unit = {
     val gen = s"$dir/codes_v$n"
-    idx.codes
-      .withColumn("__batch", lit(FitBatchId))
-      .repartition(col("__cid"))
-      .write
-      .mode("overwrite") // absorbs an uncommitted leftover of the same number
-      .partitionBy("__batch", "__cid")
-      .parquet(gen)
+    // overwrite absorbs an uncommitted leftover of the same number
+    writeCodesLayer(idx.codes.withColumn("__batch", lit(FitBatchId)), gen, "__batch", "__cid")
     writeFitTables(idx, gen)
     writeOccupancy(spark, new Path(gen), gen)
     writeAbsorbedBatches(spark, gen, absorbed)
@@ -1071,6 +1104,26 @@ object AnnIndex {
         .parquet(s"$dir/meta")
     }
   }
+
+  /** Write index-shaped rows (`__cid`, `__nid`, `__codes`, plus `__batch`
+    * when it is a partition column) to `path`, partitioned by
+    * `partitions`, with ONE file per touched cell: the rows are first
+    * hash-repartitioned on `__cid`, so each cell's rows sit in one task.
+    * Without it every upstream task writes its own fragment into every
+    * cell's partition (tasks × cells small files, each paying parquet
+    * writer setup). The width is explicit
+    * ([[Similarity.probeParallelism]]): a width-less repartition is
+    * coalesced by AQE to one task at small sizes and writes every cell
+    * serially. Overwrites `path`. The one codes writer of [[save]],
+    * [[writeGeneration]], [[append]] and [[compact]].
+    */
+  private def writeCodesLayer(codes: DataFrame, path: String, partitions: String*): Unit =
+    codes
+      .repartition(Similarity.probeParallelism(codes), col("__cid"))
+      .write
+      .mode("overwrite")
+      .partitionBy(partitions: _*)
+      .parquet(path)
 
   /** The fit tables (`meta/`, `centroids/`, `codebooks/`) under `root` —
     * shared by [[save]] (index root) and [[refit]] (generation-scoped).
@@ -1121,18 +1174,23 @@ object AnnIndex {
       batch: DataFrame,
       idCol: String,
       vecCol: String
-  ): DataFrame =
+  ): DataFrame = encode(index.fit, index.dim, index.pqM, batch, idCol, vecCol)
+
+  /** [[encodeAgainst]] a fit given as its parts. */
+  private def encode(fit: Similarity.FitTables, dim: Int, pqM: Int, batch: DataFrame, idCol: String, vecCol: String): DataFrame =
     // the same fused map-side pass as [[fitIvfPq]]'s codes (round 18) —
     // an arriving batch is assigned and encoded in one projection against
     // the frozen fit, no batch-sized shuffle or join
     Similarity
-      .assignAndEncode(batch, idCol, vecCol, index.fit, index.dim, index.pqM)
+      .assignAndEncode(batch, idCol, vecCol, fit, dim, pqM)
       .select("__cid", "__nid", "__codes")
 
   /** Incremental index maintenance: encode `batch` against the persisted
     * index's frozen centroids/codebooks ([[encodeAgainst]]) and write the
-    * rows into the current generation's `__batch=<batchId>` layer — new
-    * files land inside that layer's touched-cell partitions only;
+    * rows into the current generation's `__batch=<batchId>` layer — ONE
+    * new file per touched cell ([[writeCodesLayer]]), inside that layer;
+    * the fit is read on the driver ([[loadFit]]: no job, no codes
+    * listing), so an append costs one shuffle and one write;
     * existing layers, the centroids, codebooks, and the fit-time
     * `occupancy/` snapshot are untouched. Probing the appended index is
     * identical to probing a fresh index built from corpus ∪ batch under
@@ -1256,10 +1314,10 @@ object AnnIndex {
     if (fs.exists(new Path(layer, "_SUCCESS"))) {
       // committed layer already holds this batch id — replay or misuse?
       // the encode is materialized here, so the fit's broadcast can go
-      val handle = load(spark, dir)
+      val f = loadFit(spark, dir, cur)
       val arrivingDf =
-        try encodeAgainst(handle, batch, idCol, vecCol).localCheckpoint(true)
-        finally handle.fit.destroy()
+        try encode(f.fit, f.dim, f.pqM, batch, idCol, vecCol).localCheckpoint(true)
+        finally f.fit.destroy()
       val existingDf = readCodes(spark, layer, Seq(layer), Seq(CellColumn))
       val existing = contentFingerprint(existingDf)
       val arriving = contentFingerprint(arrivingDf)
@@ -1353,16 +1411,12 @@ object AnnIndex {
         throw new IllegalStateException(msg + " [strictReplay: refusing the ambiguous insert]")
       log.warn(msg)
     }
-    // the handle's fit is broadcast for this one write: drop it after,
-    // instead of leaving it to the ContextCleaner
-    val handle = load(spark, dir)
-    try
-      encodeAgainst(handle, batch, idCol, vecCol)
-        .write
-        .mode("overwrite") // absorbs an uncommitted partial layer of the same id
-        .partitionBy("__cid")
-        .parquet(layer.toString)
-    finally handle.fit.destroy()
+    // the fit is broadcast for this one write: drop it after, instead of
+    // leaving it to the ContextCleaner; the overwrite absorbs an
+    // uncommitted partial layer of the same id
+    val f = loadFit(spark, dir, cur)
+    try writeCodesLayer(encode(f.fit, f.dim, f.pqM, batch, idCol, vecCol), layer.toString, "__cid")
+    finally f.fit.destroy()
   }
 
   /** Order-free content fingerprint of index-shaped rows: (row count,
@@ -1388,13 +1442,13 @@ object AnnIndex {
   }
 
   /** Compact the codes layout: every [[append]] lands one parquet file
-    * per micro-batch per touched cell, so a long-lived index under
+    * per touched cell ([[writeCodesLayer]]) in its own batch layer, so a
+    * long-lived index under
     * streaming ingest accumulates small files and probe cost grows with
     * FILE count while row count stands still. One codes-only pass reads
     * the current generation and writes a NEW `codes_v<N+1>` generation
     * with every batch layer collapsed into the fit layer and each cell in
-    * a single file (hash repartition on `__cid`: all of a cell's rows
-    * land in one task → one file per cell). Logically the identity —
+    * a single file ([[writeCodesLayer]]). Logically the identity —
     * probing a compacted index is bit-identical to probing the fragmented
     * one (spec- and oracle-gated) — and NOT a refit: centroids,
     * codebooks, meta, and the fit-time `occupancy/` snapshot are
@@ -1433,18 +1487,19 @@ object AnnIndex {
     // record of earlier folds) BEFORE rewriting — append's below-hwm
     // no-op certifies true replays against this instead of scanning
     val absorbed = absorbedBatchRows(spark, cur)
-    committedCodes(spark, cur)
-      .select("__cid", "__nid", "__codes") // drops the __batch layer column
-      .withColumn("__batch", lit(FitBatchId))
-      .repartition(col("__cid"))
-      .write
-      .mode("overwrite") // absorbs an uncommitted leftover of the same number
-      .partitionBy("__batch", "__cid")
-      .parquet(s"$dir/codes_v$next")
+    // drops the __batch layer column; the overwrite absorbs an
+    // uncommitted leftover of the same number
+    writeCodesLayer(
+      committedCodes(spark, cur).select("__cid", "__nid", "__codes").withColumn("__batch", lit(FitBatchId)),
+      s"$dir/codes_v$next",
+      "__batch",
+      "__cid"
+    )
     // a generation written by refit() owns its fit layers — carry them
     // into the compacted generation so readers keep resolving the refit
-    // quantizer (tiny tables, single-file copies); compaction of an
-    // unrefit index keeps falling back to the index root's fit
+    // quantizer (tiny tables read on the driver, single-file copies);
+    // compaction of an unrefit index keeps falling back to the index
+    // root's fit
     val curFitRoot = fitRoot(spark, dir, cur)
     val fitContracts = FitContractsByVersion(FormatVersion)
     if (curFitRoot != dir)
@@ -1812,20 +1867,50 @@ object AnnIndex {
     * (re-load to pick up the new generation). Every table is read through
     * its format contract — one footer per table, checked on the driver —
     * so a foreign or corrupt table fails here with a [[ContractViolation]]
-    * naming it, not inside a later probe. `load` collects the three fit
-    * tables (`meta`, `centroids`, `codebooks`: 1, `cells` and ≤ m·ks rows
-    * — three small jobs, the only ones it launches) and builds the
-    * handle's [[Similarity.FitTables]] from them, so neither an [[append]]
-    * encode nor the first probe needs a fit job. The codes stay a lazy
+    * naming it, not inside a later probe. The fit ([[loadFit]]) is read
+    * on the driver, so `load` launches no Spark job, and neither the
+    * first probe nor an encode needs a fit job. The codes stay a lazy
     * scan: a probe touching `nprobe` cells reads only those code
     * partitions.
     */
   def load(spark: SparkSession, dir: String): IvfPqIndex = {
-    // the fit layers (meta/centroids/codebooks) resolve from the CURRENT
-    // generation when a refit wrote its own, else from the index root —
-    // so a loaded handle always pairs a generation's codes with the fit
-    // that produced them
     val gen = currentCodesPath(spark, dir)
+    val f = loadFit(spark, dir, gen)
+    IvfPqIndex(
+      dim = f.dim,
+      cells = f.meta.getAs[Int]("cells"),
+      pqM = f.pqM,
+      pqKs = f.meta.getAs[Int]("pq_ks"),
+      seed = f.meta.getAs[Long]("seed"),
+      centroids = f.centroids,
+      codebooks = f.codebooks,
+      // partition-discovered __cid reads as INT (the contract's type);
+      // select the documented column order explicitly, dropping the __batch
+      // ingest-layer column (probe semantics are layer-blind); only
+      // COMMITTED layers resolve — a half-written append is invisible
+      codes = committedCodes(spark, gen).select("__cid", "__nid", "__codes"),
+      fit = f.fit,
+      generation = gen.getName match { case CodesVersionRe(n) => n.toInt }
+    )
+  }
+
+  /** The fit of generation `gen`: its `meta` row, `centroids` and
+    * `codebooks` (local relations) and their [[Similarity.FitTables]].
+    */
+  private final case class LoadedFit(meta: Row, centroids: DataFrame, codebooks: DataFrame, fit: Similarity.FitTables) {
+    def dim: Int = meta.getAs[Int]("dim")
+    def pqM: Int = meta.getAs[Int]("pq_m")
+  }
+
+  /** Read generation `gen`'s fit on the driver ([[readRows]]): `meta`,
+    * `centroids` and `codebooks` are bounded-small by construction, so
+    * this launches no Spark job and lists no codes layer — [[load]]
+    * minus the codes, and all an [[append]] encode needs. The fit
+    * layers resolve from `gen` when a refit wrote its own, else from the
+    * index root ([[fitRoot]]), so a generation's codes always pair with
+    * the fit that produced them.
+    */
+  private def loadFit(spark: SparkSession, dir: String, gen: Path): LoadedFit = {
     val root = fitRoot(spark, dir, gen)
     // bounded retry: a root-fit meta read can land exactly in a
     // concurrent tombstone's one-file overwrite window (see
@@ -1842,24 +1927,7 @@ object AnnIndex {
     val contracts = FitContractsByVersion(version)
     val centroids = readTable(spark, root, "centroids", contracts.centroids)
     val codebooks = readTable(spark, root, "codebooks", contracts.codebooks)
-    // partition-discovered __cid reads as INT (the contract's type);
-    // select the documented column order explicitly, dropping the __batch
-    // ingest-layer column (probe semantics are layer-blind); only
-    // COMMITTED layers resolve — a half-written append is invisible
-    val codes = committedCodes(spark, gen).select("__cid", "__nid", "__codes")
-    val pqKs = meta.getAs[Int]("pq_ks")
-    IvfPqIndex(
-      dim = meta.getAs[Int]("dim"),
-      cells = meta.getAs[Int]("cells"),
-      pqM = meta.getAs[Int]("pq_m"),
-      pqKs = pqKs,
-      seed = meta.getAs[Long]("seed"),
-      centroids = centroids,
-      codebooks = codebooks,
-      codes = codes,
-      fit = Similarity.FitTables(centroids, codebooks, pqKs),
-      generation = gen.getName match { case CodesVersionRe(n) => n.toInt }
-    )
+    LoadedFit(meta, centroids, codebooks, Similarity.FitTables(centroids, codebooks, meta.getAs[Int]("pq_ks")))
   }
 
   /** Probe the index with a query batch: rank each query's `nprobe`

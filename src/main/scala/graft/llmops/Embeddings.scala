@@ -18,19 +18,16 @@ object Embeddings {
   def maxAbsScale(vec: Column): Column =
     array_max(transform(vec, x => abs(x.cast("double"))))
 
-  /** Symmetric int8 quantization: q_i = floor(x_i·127/scale + 0.5),
-    * clipped implicitly by construction (|x_i| <= scale ⇒ |q_i| <= 127);
-    * all-zero vectors quantize to zeros (scale 0 guard).
+  /** Symmetric int8 quantization: q_i = floor(x_i·127/scale + 0.5) with
+    * scale = [[maxAbsScale]], clipped implicitly by construction
+    * (|x_i| <= scale ⇒ |q_i| <= 127); all-zero vectors quantize to zeros
+    * (scale 0 guard). One compiled O(d) pass per row
+    * ([[graft.functions.QuantizeInt8]], inside whole-stage codegen),
+    * bit-identical to the HOF form of the same formula — nulls, NaN, ±Inf
+    * and the ANSI overflow error included. Every fit, encode and probe
+    * quantizes through it.
     */
-  def quantizeInt8(vec: Column): Column = {
-    val scale = maxAbsScale(vec)
-    transform(
-      vec,
-      x =>
-        when(scale === 0.0, lit(0))
-          .otherwise(floor((x.cast("double") * lit(127.0)) / scale + lit(0.5)).cast("int"))
-    )
-  }
+  def quantizeInt8(vec: Column): Column = graft.functions.native.quantizeInt8(vec)
 
   /** Per-group centroids over int8-quantized vectors, one row per
     * (group, dimension): exact integer sums into one final division, so

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, MapType, ShortType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
@@ -633,7 +633,7 @@ object Similarity {
     val base = df.select(
       col(idCol).as("__id"),
       col(vecCol).as("__v"),
-      transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double")).as("__qv")
+      quantizedVec(col(vecCol)).as("__qv")
     )
     val centroids = FitTables.centroids(kmeansCentroids(df, idCol, vecCol, cells, iters, seed, fitSamplePercent))
     val probed = explodeTopCells(base, centroids, col("__qv"), nprobe, Seq(col("__id"), col("__v")))
@@ -722,7 +722,7 @@ object Similarity {
     val base = df.select(
       col(idCol).as("__id"),
       col(vecCol).as("__v"),
-      transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double")).as("__qv")
+      quantizedVec(col(vecCol)).as("__qv")
     )
     val centroids = FitTables.centroids(kmeansCentroids(df, idCol, vecCol, resolvedCells, iters, seed, fitSamplePercent))
     val asg = explodeTopCells(base, centroids, col("__qv"), 1, Seq(col("__id"), col("__v")))
@@ -1144,13 +1144,15 @@ object Similarity {
   // -------------------------------------------------------------------
 
   /** (id, int8-quantized-as-double vector) projection — the space every
-    * IVF/PQ fit, assignment, and probe runs in.
+    * IVF/PQ fit, assignment, and probe runs in. The vector is
+    * [[quantizedVec]]: one compiled quantize, then an array cast.
     */
   private[llmops] def quantizedBase(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(
-      col(idCol).as("__id"),
-      transform(Embeddings.quantizeInt8(col(vecCol)), x => x.cast("double")).as("__qv")
-    )
+    df.select(col(idCol).as("__id"), quantizedVec(col(vecCol)).as("__qv"))
+
+  /** [[Embeddings.quantizeInt8]] of `vec` as array<double>. */
+  private[llmops] def quantizedVec(vec: Column): Column =
+    Embeddings.quantizeInt8(vec).cast(ArrayType(DoubleType, containsNull = true))
 
   // -------------------------------------------------------------------
   // Map-side cell assignment. A vector's top cells need nothing from
@@ -1168,13 +1170,14 @@ object Similarity {
   private[llmops] def bestCellCol(vec: Column, cents: Column): Column =
     element_at(graft.functions.native.cellTopK(vec, cents, 1), 1)
 
-  /** Explicit partition count for the probe-side repartition below:
+  /** Explicit partition count for the probe-side repartition below (and
+    * for the codes writes of [[graft.llmops.AnnIndex]]):
     * the configured shuffle width, floored at the cluster's core count.
     * Derived from the session, never a constant — scales with the
     * deployment, and an explicit count is exactly what keeps AQE from
     * coalescing it away (see [[explodeTopCells]]).
     */
-  private def probeParallelism(df: DataFrame): Int = {
+  private[llmops] def probeParallelism(df: DataFrame): Int = {
     val ss = df.sparkSession
     math.max(ss.sparkContext.defaultParallelism, ss.sessionState.conf.numShufflePartitions)
   }
@@ -1289,7 +1292,8 @@ object Similarity {
     /** The full IVF-PQ fit from `centroids` (`__cid`, `__cv`) and
       * `codebooks` (`__m`, `__cid`, `__cv`): one small job each (`cells`
       * and ≤ m·ks rows), none for a local relation such as
-      * [[kmeansCentroids]]' and [[pqCodebooks]]' results. Throws on a null
+      * [[kmeansCentroids]]' and [[pqCodebooks]]' results or a loaded
+      * index's fit tables (`AnnIndex.load` reads them on the driver). Throws on a null
       * or duplicate map key, as a Spark map aggregate would.
       */
     def apply(centroids: DataFrame, codebooks: DataFrame, pqKs: Int): FitTables = {

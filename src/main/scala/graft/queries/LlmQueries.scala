@@ -3447,11 +3447,10 @@ object LlmQueries {
       ),
       (spark, sf) => {
         val m = Embeddings.signMatrix(16, AnnOracles.Dim, seed = 7L)
-        // quantize in its OWN projection: the 16 per-dim aggregates each
-        // reference the quantized array, and inlining quantizeInt8 16x
-        // re-evaluates its array_max scale per element per dim (measured
-        // 14.3 s for this per-row query; two-step select: sub-second).
-        // CollapseProject keeps the split (qv referenced 16x, non-cheap).
+        // quantize in its OWN projection: the 16 per-dim dots each
+        // reference the quantized array, and CollapseProject keeps the
+        // split (qv referenced 16x, non-cheap), so each row is quantized
+        // once, not 16 times
         table(spark, sf, "embeddings")
           .select(col("vec_id"), Embeddings.quantizeInt8(col("embedding")).as("__qv"))
           .select(

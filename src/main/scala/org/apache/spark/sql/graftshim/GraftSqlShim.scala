@@ -6,11 +6,22 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge to Spark's `private[sql]` Column ⇄ Expression converters, needed
   * to expose custom Catalyst expressions (graft.functions) as Columns.
-  * Lives under org.apache.spark.sql for access; keep it to these two calls.
+  * Lives under org.apache.spark.sql for access.
   */
 object GraftSqlShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The error Spark's ANSI cast raises when `value` of type `from` does
+    * not fit `to` (`CAST_OVERFLOW`) — for kernels that replace such a
+    * cast and must fail the same way.
+    */
+  def castOverflow(
+      value: Any,
+      from: org.apache.spark.sql.types.DataType,
+      to: org.apache.spark.sql.types.DataType
+  ): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.castingCauseOverflowError(value, from, to)
 
   /** Block until all queued listener events are delivered (`listenerBus`
     * is `private[spark]`) — metrics tools must drain before reading their

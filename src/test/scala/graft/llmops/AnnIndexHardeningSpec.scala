@@ -278,13 +278,63 @@ class AnnIndexHardeningSpec extends AnyFunSuite with SparkTestSession {
     // the readers that do not load a handle go through the same contracts
     assert(intercept[ContractViolation](AnnIndex.maintenancePolicy(spark, noKs)).getMessage.contains("table meta"))
     assert(intercept[ContractViolation](AnnIndex.staleness(spark, longCodes)).getMessage.contains("table codes"))
+    val intOccupancy = savedIndex(df, "graft_contract_occ")
+    rewrite(s"$intOccupancy/occupancy")(_.withColumn("fit_n", col("fit_n").cast("int")))
+    for (read <- Seq[String => Any](AnnIndex.staleness(spark, _), AnnIndex.maintenancePolicy(spark, _))) {
+      val occ = intercept[ContractViolation](read(intOccupancy))
+      assert(occ.getMessage.contains("table occupancy") && occ.getMessage.contains("fit_n"), occ.getMessage)
+    }
+  }
+
+  /** Sorted string rows of `df`. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("the driver read of a fit table reads every data file and skips _SUCCESS, .crc and _temporary entries") {
+    import org.apache.spark.sql.functions.col
+    val df = fixture(48, seedOffset = 5)
+    val dir = savedIndex(df, "graft_fit_files")
+    val before = AnnIndex.load(spark, dir)
+    val (cents, words) = (rows(before.centroids), rows(before.codebooks))
+    def probe(idx: AnnIndex.IvfPqIndex): Seq[String] =
+      rows(AnnIndex.probeIvfPqPruned(idx, df.limit(6), "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df)))
+    val answers = probe(before)
+    // each table rewritten as two data files: the first and second halves by id
+    for ((table, key) <- Seq("centroids" -> "__cid", "codebooks" -> "__cid", "occupancy" -> "__cid")) {
+      val path = s"$dir/$table"
+      val all = spark.read.parquet(path).localCheckpoint(true)
+      val cut = all.agg(org.apache.spark.sql.functions.max(col(key))).head().getInt(0)
+      all.filter(col(key) < cut).coalesce(1).write.mode("overwrite").parquet(path)
+      all.filter(col(key) >= cut).coalesce(1).write.mode("append").parquet(path)
+      val files = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files == 2, s"fixture: $table must hold two data files, holds $files")
+    }
+    // entries a parquet scan ignores: the job marker and checksums Spark
+    // wrote, plus a crashed writer's leftovers that are not parquet at all
+    val centroids = new java.io.File(s"$dir/centroids")
+    assert(centroids.listFiles().exists(_.getName == "_SUCCESS") && centroids.listFiles().exists(_.getName.endsWith(".crc")))
+    val leftover = new java.io.File(centroids, "_temporary/0/_temporary/attempt_0/part-00000.parquet")
+    leftover.getParentFile.mkdirs()
+    java.nio.file.Files.write(leftover.toPath, "not parquet".getBytes("UTF-8"))
+    java.nio.file.Files.write(new java.io.File(centroids, ".part-00009.parquet.crc").toPath, "not a checksum".getBytes("UTF-8"))
+
+    val (after, m) = graft.QueryMetrics.measure(spark, "load-two-files")(AnnIndex.load(spark, dir))
+    assert(m.jobs == 0, s"load launched ${m.jobs} jobs")
+    assert(rows(after.centroids) == cents, "every centroid row must load from the two files")
+    assert(rows(after.codebooks) == words, "every codeword row must load from the two files")
+    assert(probe(after) == answers, "a handle loaded from split fit tables must probe like before")
+    assert(AnnIndex.staleness(spark, dir).filter(col("added") =!= 0).count() == 0, "every occupancy row must load")
   }
 
   test("contract-pinned load accepts a v4 root and string or int __nid ids, and probes like the fitted handle") {
     import org.apache.spark.sql.functions.{col, lit}
     val v4 = savedIndex(fixture(45, seedOffset = 3), "graft_contract_v4")
+    val v5Handle = AnnIndex.load(spark, v4)
     rewrite(s"$v4/meta")(_.withColumn("version", lit(4)))
-    assert(AnnIndex.load(spark, v4).codes.count() == 45)
+    // the v4 root's fit is read on the driver like a v5 one: no job
+    val (v4Handle, v4Load) = graft.QueryMetrics.measure(spark, "load-v4")(AnnIndex.load(spark, v4))
+    assert(v4Load.jobs == 0, s"loading a v4 root launched ${v4Load.jobs} jobs")
+    assert(v4Handle.codes.count() == 45)
+    assert(rows(v4Handle.centroids) == rows(v5Handle.centroids) && rows(v4Handle.codebooks) == rows(v5Handle.codebooks))
     for (idType <- Seq("string", "int")) {
       val df = fixture(45, seedOffset = 4).withColumn("vec_id", col("vec_id").cast(idType)).localCheckpoint(true)
       val fitted = AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)

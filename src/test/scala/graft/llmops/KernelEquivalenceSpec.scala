@@ -36,6 +36,12 @@ import scala.util.Random
   *      (centroid entries, codeword entries by subspace, the ADC codeword
   *      map) on a fit whose Lloyd rounds emptied cells, and the encode
   *      through it ≡ the former join-form encode.
+  *   7. The `QuantizeInt8` kernel behind [[Embeddings.quantizeInt8]] ≡
+  *      [[KernelEquivalenceSpec.quantizeInt8Hof]] on every edge of the
+  *      formula (null vector and elements, empty, zeros, ±0.0, NaN, ±Inf,
+  *      subnormals, four element types, the ANSI cast overflow) and on
+  *      random vectors at d ∈ {64, 384, 768, 1536}, with codegen fallback
+  *      off.
   *
   * All equality assertions go through Spark's null-safe `<=>` (SQL
   * semantics: NaN equals NaN, ±0.0 equal — exactly the ordering-contract
@@ -50,17 +56,17 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
     * factories (both kernels dispatch to the same NativeMath call in
     * `eval` and `doGenCode`, and this proves it).
     */
-  private def underBothCodegenPaths(body: => Unit): Unit = {
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    try {
-      for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
-        spark.conf.set(key, mode)
-        body
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private def underBothCodegenPaths(body: => Unit): Unit =
+    for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) withConf("spark.sql.codegen.factoryMode" -> mode)(body)
+
+  /** `body` with the session confs `kvs` set, restored after. */
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -210,7 +216,7 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
     * construction, through a completely different plan.
     */
   private def kmeansReference(df: DataFrame, cells: Int, iters: Int, seed: Long): DataFrame = {
-    val qvd = transform(Embeddings.quantizeInt8(col("v")), x => x.cast("double"))
+    val qvd = transform(quantizeInt8Hof(col("v")), x => x.cast("double"))
     val qbase = df.select(col("id").as("__id"), qvd.as("__qv")).localCheckpoint(true)
     val h = conv(
       substring(md5(concat_ws(":", lit(seed.toString), col("__id").cast("string"))), 1, 8),
@@ -267,7 +273,7 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
 
   private def pqReference(df: DataFrame, dim: Int, m: Int, ks: Int, iters: Int, seed: Long): DataFrame = {
     val sub = dim / m
-    val qvd = transform(Embeddings.quantizeInt8(col("v")), x => x.cast("double"))
+    val qvd = transform(quantizeInt8Hof(col("v")), x => x.cast("double"))
     val subs = df
       .select(col("id").as("__id"), qvd.as("__qv"))
       .select(
@@ -482,6 +488,138 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
       assert(rows(viaFit) == rows(joinForm), "FitTables encode != join-form encode")
     }
   }
+
+  // ------------------------------------------------------------------
+  // 7. quantize_int8 kernel ≡ quantizeInt8Hof
+  // ------------------------------------------------------------------
+
+  /** Vectors of element type `elem` (an RDD scan, so no rule folds the
+    * projection on the driver).
+    */
+  private def vectors(elem: DataType, vs: Seq[Seq[Any]]): DataFrame =
+    spark
+      .createDataFrame(
+        java.util.Arrays.asList(vs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }: _*),
+        StructType(Seq(StructField("id", LongType), StructField("v", ArrayType(elem, containsNull = true))))
+      )
+      .localCheckpoint(true)
+
+  /** Rows where the kernel and the HOF differ (`<=>`: NaN = NaN, null = null). */
+  private def quantizeDiffs(df: DataFrame): Long =
+    df.select(Embeddings.quantizeInt8(col("v")).as("ker"), quantizeInt8Hof(col("v")).as("hof"))
+      .filter(!(col("ker") <=> col("hof")))
+      .count()
+
+  private val quantizeEdges: Map[DataType, Seq[Seq[Any]]] = {
+    val tiny = java.lang.Double.MIN_VALUE
+    Map(
+      DoubleType -> Seq(
+        null,
+        Seq(null, 0.0),
+        Seq(null, 1.0),
+        Seq(null, null),
+        Seq(),
+        Seq(0.0, 0.0, 0.0),
+        Seq(0.0, -0.0),
+        Seq(-0.0),
+        Seq(Double.NaN, 1.0),
+        Seq(1.0, Double.NaN, null),
+        Seq(Double.PositiveInfinity, 1.0, -2.0),
+        Seq(Double.NegativeInfinity, 3.0),
+        Seq(Double.PositiveInfinity, Double.NegativeInfinity),
+        Seq(tiny, -tiny, 0.0),
+        Seq(tiny * 3, 1e-310, -2.5e-308),
+        Seq(1e-300, 1.0),
+        Seq(0.5, -0.25, 0.125, 1.0 / 254, -1.0 / 254),
+        Seq(3.0, -3.0, 1.5, -1.5, 0.75)
+      ),
+      FloatType -> Seq(
+        null,
+        Seq(null, 0.0f),
+        Seq(null, 2.0f),
+        Seq(),
+        Seq(0.0f, -0.0f),
+        Seq(Float.NaN, 1.0f),
+        Seq(Float.PositiveInfinity, -1.0f),
+        Seq(Float.MinPositiveValue, -Float.MinPositiveValue, 1e-40f),
+        Seq(Float.MaxValue, -Float.MaxValue, 1.0f),
+        Seq(0.1f, -0.7f, 0.33f, 0.9999f)
+      ),
+      IntegerType -> Seq(null, Seq(null, 0), Seq(null, 5), Seq(), Seq(0, 0), Seq(Int.MaxValue, Int.MinValue, 1), Seq(3, -7, 11, 127)),
+      LongType -> Seq(
+        null,
+        Seq(null, 0L),
+        Seq(null, 9L),
+        Seq(),
+        Seq(0L, 0L),
+        Seq(Long.MaxValue, Long.MinValue, 1L),
+        Seq(Long.MaxValue - 1, 3L),
+        Seq(3L, -7L, 11L, 1000000007L)
+      )
+    )
+  }
+
+  test("quantize_int8 kernel is bit-identical to the HOF on every edge of the formula (interpreted and codegen, ANSI on and off)") {
+    for (ansi <- Seq("true", "false")) withConf("spark.sql.ansi.enabled" -> ansi, "spark.sql.codegen.fallback" -> "false") {
+      underBothCodegenPaths {
+        for ((elem, vs) <- quantizeEdges) {
+          val n = quantizeDiffs(vectors(elem, vs))
+          assert(n == 0L, s"quantize_int8 != HOF on $n of ${vs.size} $elem edge vectors (ansi=$ansi)")
+        }
+      }
+    }
+    // spot values: the zero-scale guard covers null elements; a null
+    // element under a nonzero scale stays null; NaN scale gives zeros
+    val got = vectors(DoubleType, Seq(Seq(null, 0.0), Seq(null, 1.0, -0.5), Seq(Double.NaN, 1.0)))
+      .orderBy("id")
+      .select(Embeddings.quantizeInt8(col("v")))
+      .collect()
+      .map(_.getSeq[Any](0))
+      .toSeq
+    assert(got == Seq(Seq(0, 0), Seq(null, 127, -63), Seq(0, 0)), got)
+  }
+
+  test("quantize_int8 kernel raises the HOF's CAST_OVERFLOW under ANSI and wraps like it without") {
+    val overflow = vectors(DoubleType, Seq(Seq(1e308, -1e308)))
+    def condition(body: => Any): Option[String] =
+      try { body; None }
+      catch {
+        case t: Throwable =>
+          Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+            case e: org.apache.spark.SparkThrowable if e.getCondition != null => e.getCondition
+          }
+      }
+    underBothCodegenPaths {
+      withConf("spark.sql.ansi.enabled" -> "true", "spark.sql.codegen.fallback" -> "false") {
+        val ker = condition(overflow.select(Embeddings.quantizeInt8(col("v"))).collect())
+        val hof = condition(overflow.select(quantizeInt8Hof(col("v"))).collect())
+        assert(hof.contains("CAST_OVERFLOW"), s"the HOF must overflow under ANSI, got $hof")
+        assert(ker == hof, s"kernel error $ker != HOF error $hof")
+      }
+      withConf("spark.sql.ansi.enabled" -> "false", "spark.sql.codegen.fallback" -> "false") {
+        assert(quantizeDiffs(overflow) == 0L)
+        val got = overflow.select(Embeddings.quantizeInt8(col("v"))).head().getSeq[Int](0)
+        assert(got == Seq(Long.MaxValue.toInt, Long.MinValue.toInt), got)
+      }
+    }
+  }
+
+  test("quantize_int8 kernel equals the HOF on random vectors at d = 64, 384, 768 and 1536 (interpreted and codegen, no fallback)") {
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      for (d <- Seq(64, 384, 768, 1536)) {
+        val vs = (0 until 12).map { i =>
+          if (i == 0) Seq.fill(d)(0.0)
+          else Seq.tabulate(d)(j => if (i == 1 && j == d / 2) Double.NaN else rnd.nextGaussian() * math.pow(10, i % 5 - 2))
+        }
+        val df = vectors(DoubleType, vs)
+        val floats = vectors(FloatType, vs.map(_.map(_.toFloat)))
+        underBothCodegenPaths {
+          assert(quantizeDiffs(df) == 0L, s"quantize_int8 != HOF at d=$d (double)")
+          assert(quantizeDiffs(floats) == 0L, s"quantize_int8 != HOF at d=$d (float)")
+        }
+      }
+    }
+  }
 }
 
 /** References the native kernels and [[Similarity.FitTables]] are pinned
@@ -490,6 +628,19 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
   * aggregate row of the fit tables, joined on a constant key).
   */
 object KernelEquivalenceSpec {
+
+  /** HOF reference of the `quantize_int8` kernel: the formula with its
+    * max-abs scale re-evaluated inside the per-element lambda.
+    */
+  def quantizeInt8Hof(vec: Column): Column = {
+    val scale = Embeddings.maxAbsScale(vec)
+    transform(
+      vec,
+      x =>
+        when(scale === 0.0, lit(0))
+          .otherwise(floor((x.cast("double") * lit(127.0)) / scale + lit(0.5)).cast("int"))
+    )
+  }
 
   /** HOF reference of the `cellTopK` kernel: top-`upTo` centroid entries
     * by (cosine desc, cid asc), as array<struct<__csim, __ncid>>.

@@ -941,7 +941,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     assert(run(pruned(pinned)) == pinnedAnswers, "a pinned handle must keep its own generation's answers")
   }
 
-  test("AnnIndex load collects the fit in at most 3 jobs; append of a local batch launches at most 4, its load included") {
+  test("AnnIndex load launches no job; append of a local batch launches at most 2 and writes one file per touched cell") {
     val rnd = new scala.util.Random(71)
     val vecs = (0 until 60).map { i =>
       (i.toLong, Seq.tabulate(8)(_ => (i % 3 * 5).toFloat + rnd.nextFloat() * 0.1f))
@@ -953,7 +953,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
       dir
     )
     val (loaded, loadJobs) = jobsOf("load")(AnnIndex.load(spark, dir))
-    assert(loadJobs <= 3, s"load launched $loadJobs jobs, expected at most 3 (meta, centroids, codebooks)")
+    assert(loadJobs == 0, s"load launched $loadJobs jobs, expected none (the fit tables are read on the driver)")
     // the first probe of a loaded handle builds without a fit job
     val batch = df.filter($"vec_id" < 4).localCheckpoint(true)
     val (_, probeJobs) = jobsOf("probe-build") {
@@ -963,8 +963,17 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     // a local batch: its encode is a projection of a local relation
     val local = spark.createDataFrame(df.filter($"vec_id" >= 48).collect().toSeq.asJava, df.schema)
     val (_, appendJobs) = jobsOf("append")(AnnIndex.append(spark, dir, local, "vec_id", "v", batchId = 0L))
-    assert(appendJobs <= 4, s"append launched $appendJobs jobs, expected at most 4 (load's 3 and the write)")
-    assert(AnnIndex.load(spark, dir).codes.count() == 60)
+    assert(appendJobs <= 2, s"append launched $appendJobs jobs, expected at most 2 (the shuffle on __cid and the write)")
+    val reloaded = AnnIndex.load(spark, dir)
+    assert(reloaded.codes.count() == 60)
+    // the append layer holds exactly one parquet file per touched cell
+    val layer = new java.io.File(new java.io.File(AnnIndex.currentCodesPath(spark, dir).toUri.getPath), "__batch=0")
+    val touched = reloaded.codes.filter($"__nid" >= 48).select($"__cid".cast("int")).distinct().as[Int].collect().toSet
+    val filesByCell = layer.listFiles().filter(_.getName.startsWith("__cid=")).map { cell =>
+      cell.getName.stripPrefix("__cid=").toInt -> cell.listFiles().count(_.getName.endsWith(".parquet"))
+    }.toMap
+    assert(filesByCell.keySet == touched, s"append layer cells ${filesByCell.keySet} != touched cells $touched")
+    assert(filesByCell.values.forall(_ == 1), s"append wrote more than one file into a cell: $filesByCell")
   }
 
   test("AnnIndex.fitIvfPq launches a pinned number of jobs at iters = pqIters = 1 and 2") {

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{GraftSession, QueryMetrics}
 import graft.llmops.AnnIndex
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -9,18 +10,25 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-/** Diagnostic main: the executed plans of one IVF-PQ fit —
-  * [[graft.llmops.AnnIndex.fitIvfPq]] on the `llm_ann_ivf_pq` fixture and
-  * knobs (cells 8, iters 2, m 8, ks 32, pqIters 2) — captured with a
-  * `QueryExecutionListener` as each query of the fit runs, after the fit's
-  * total Spark job count from [[graft.QueryMetrics]]. The fit runs while a query is being built and its result is
-  * local, so no registered query's `.explain` can show it. Not part of any
-  * gate or bench; run by hand via
-  * `sbt "Test/runMain graft.queries.FitPlanAudit [sfDir]"`.
+/** Diagnostic main: the executed plans of the IVF-PQ index lifecycle,
+  * captured with a `QueryExecutionListener` as each query runs, after each
+  * phase's total Spark job count from [[graft.QueryMetrics]]. Two audits,
+  * both at the fixture's knobs (cells 8, iters 2, m 8, ks 32, pqIters 2):
+  *   - `fit` (the default): one [[graft.llmops.AnnIndex.fitIvfPq]] on the
+  *     `llm_ann_ivf_pq` fixture;
+  *   - `append`: fit → save → load → append on the `llm_ann_index_append`
+  *     fixture (the corpus is the rows with `vec_id % 5 != 0`, the
+  *     appended batch the rest).
+  * The fit runs while a query is being built and its result is local, so
+  * no registered query's `.explain` can show it. Not part of any gate or
+  * bench; run by hand via
+  * `sbt "Test/runMain graft.queries.FitPlanAudit [sfDir] [fit|append]"`.
   */
 object FitPlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val audit = args.lift(1).getOrElse("fit")
+    require(audit == "fit" || audit == "append", s"unknown audit $audit (fit or append)")
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val fx = LlmQueries.clusteredFixture(spark, sfDir).localCheckpoint(true)
@@ -31,16 +39,30 @@ object FitPlanAudit {
         executed.add((funcName, qe))
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     })
-    GraftSqlShim.drainListenerBus(spark.sparkContext)
-    executed.clear()
 
-    val (_, m) = QueryMetrics.measure(spark, "fitIvfPq") {
-      AnnIndex.fitIvfPq(fx, "vec_id", "v", cells = 8, iters = 2, seed = 42L, pqM = 8, pqKs = 32, pqIters = 2, dim = LlmQueries.EmbDim)
+    /** `body` measured as `phase`, then the plans it executed. */
+    def phase[A](name: String)(body: => A): A = {
+      GraftSqlShim.drainListenerBus(spark.sparkContext)
+      executed.clear()
+      val (out, m) = QueryMetrics.measure(spark, name)(body)
+      println(s"$name: ${m.jobs} Spark jobs, ${executed.size} reported query executions")
+      executed.asScala.zipWithIndex.foreach { case ((funcName, qe), i) =>
+        println(s"\n================ $name execution ${i + 1}: $funcName ================")
+        println(qe.explainString(ExplainMode.fromString("formatted")))
+      }
+      out
     }
-    println(s"fitIvfPq: ${m.jobs} Spark jobs, ${executed.size} reported query executions")
-    executed.asScala.zipWithIndex.foreach { case ((funcName, qe), i) =>
-      println(s"\n================ execution ${i + 1}: $funcName ================")
-      println(qe.explainString(ExplainMode.fromString("formatted")))
+
+    def fit(df: org.apache.spark.sql.DataFrame): AnnIndex.IvfPqIndex =
+      AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 8, iters = 2, seed = 42L, pqM = 8, pqKs = 32, pqIters = 2, dim = LlmQueries.EmbDim)
+
+    if (audit == "fit") phase("fitIvfPq")(fit(fx))
+    else {
+      val dir = java.nio.file.Files.createTempDirectory("graft_fit_plan_audit").toString
+      val idx = phase("fitIvfPq")(fit(fx.filter(col("vec_id") % 5 =!= 0)))
+      phase("save")(AnnIndex.save(idx, dir))
+      phase("load")(AnnIndex.load(spark, dir))
+      phase("append")(AnnIndex.append(spark, dir, fx.filter(col("vec_id") % 5 === 0), "vec_id", "v", batchId = 0L))
     }
     spark.stop()
   }
