@@ -17,15 +17,14 @@ import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
-/** Persisted IVF-PQ index lifecycle — the production shape of
-  * [[Similarity.ivfPqTopK]]: fit ONCE over the corpus, write the index
-  * tables to storage, `load` in any later session (batch or the scoring
-  * side of a stream), and `probe` arbitrary query batches without ever
-  * re-reading corpus vectors. [[Similarity.ivfPqTopK]] is the fused
-  * self-probe special case; fit + probe here share its exact building
-  * blocks ([[Similarity.cellRanks]] / [[Similarity.pqAdcRank]]), so a
-  * save → load → probe round-trip over the same corpus returns
-  * bit-identical (qid, nid, rank) rows — spec- and oracle-gated.
+/** Persisted IVF-PQ index lifecycle — the one IVF-PQ path: fit ONCE
+  * over the corpus, write the index tables to storage, `load` in any
+  * later session (batch or the scoring side of a stream), and `probe`
+  * arbitrary query batches without ever re-reading corpus vectors.
+  * [[Similarity.ivfPqTopK]] is [[fitIvfPq]] followed by [[probeIvfPq]]
+  * with the corpus as the query batch; because parquet round-trips the
+  * fit bit-exact, a save → load → probe round-trip over the same corpus
+  * returns the same (qid, nid, rank) rows — spec- and oracle-gated.
   *
   * On-disk layout under `dir` (format v5):
   *   - `meta/`       one row: (version, dim, cells, pq_m, pq_ks, seed)
@@ -805,13 +804,9 @@ object AnnIndex {
     (r.getLong(0), r.getDecimal(1).toBigInteger.toString)
   }
 
-  /** The sidecar rows a NEW generation absorbing `cur`'s committed layers
-    * must carry: `cur`'s own carried sidecar (batches folded by EARLIER
-    * compactions/refits — their layers are gone, only the record
-    * remains) plus a fingerprint of every committed append layer being
-    * folded now. Collected driver-side: bounded by the absorbed-batch
-    * count, the same cardinality as the `__batch=` directory listing.
-    */
+  /** Entry bound of [[absorbedBatchesCache]]. */
+  private[llmops] val AbsorbedCacheMaxEntries = 64
+
   /** Driver-side cache of parsed sidecars, keyed by file path and
     * validated by (modificationTime, length): a generation's sidecar is
     * immutable once its commit marker lands, but [[append]] consults it
@@ -824,8 +819,8 @@ object AnnIndex {
     * per generation it ever touches. The stamp validation keeps an
     * out-of-band wipe-and-recreate of the same path from serving stale
     * records.
-    */
-  /** LRU, bounded at [[AbsorbedCacheMaxEntries]] (round 19, VERDICT r18
+    *
+    * LRU, bounded at [[AbsorbedCacheMaxEntries]] (round 19, VERDICT r18
     * #8): the former clear-all-at-65 wiped every hot generation's record
     * whenever a 65th distinct generation was touched — correct (the next
     * read re-parses) but O(all-hot-paths re-read) on exactly the
@@ -834,7 +829,6 @@ object AnnIndex {
     * the map's own synchronized wrapper (reads mutate LRU order, so a
     * ConcurrentHashMap would not be safe here anyway).
     */
-  private[llmops] val AbsorbedCacheMaxEntries = 64
   private[llmops] val absorbedBatchesCache: java.util.Map[String, ((Long, Long), Seq[(Long, Long, String)])] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[String, ((Long, Long), Seq[(Long, Long, String)])](16, 0.75f, true) {
@@ -864,6 +858,13 @@ object AnnIndex {
     }
   }
 
+  /** The sidecar rows a NEW generation absorbing `cur`'s committed layers
+    * must carry: `cur`'s own carried sidecar (batches folded by EARLIER
+    * compactions/refits — their layers are gone, only the record
+    * remains) plus a fingerprint of every committed append layer being
+    * folded now. Collected driver-side: bounded by the absorbed-batch
+    * count, the same cardinality as the `__batch=` directory listing.
+    */
   private def absorbedBatchRows(spark: SparkSession, cur: Path): Seq[(Long, Long, String)] = {
     val appendLayers = committedLayerPaths(spark, cur).filter(_.getName != s"__batch=$FitBatchId")
     val fresh: Seq[(Long, Long, String)] =
@@ -940,9 +941,7 @@ object AnnIndex {
       // ids are pure per-row functions of the fit — the pre-r18 shape
       // computed them as two corpus passes equi-joined on vector id (two
       // corpus-sized shuffle sides for zero information)
-      codes = Similarity
-        .assignAndEncode(df, idCol, vecCol, fit, d, pqM)
-        .select("__cid", "__nid", "__codes"),
+      codes = Similarity.assignAndEncode(df, idCol, vecCol, fit, d, pqM),
       fit = fit
     )
   }
@@ -1158,11 +1157,11 @@ object AnnIndex {
 
   /** Encode a NEW batch against the FROZEN fit — nearest frozen centroid
     * (cell id) + per-subspace nearest frozen codeword (m code ids) —
-    * producing index-shaped rows (`__cid`, `__nid`, `__codes`). The same
-    * single map-side pass as [[fitIvfPq]]'s assignment/encode, reading
-    * the handle's driver-side fit ([[Similarity.FitTables]]) as a
-    * broadcast value, with the fit step skipped: building it launches no
-    * job, and at 100 TB an arriving batch costs
+    * producing index-shaped rows (`__cid`, `__nid`, `__codes`). It is
+    * [[Similarity.assignAndEncode]], the one map-side projection that
+    * [[fitIvfPq]] and [[append]] also run, reading the handle's
+    * driver-side fit ([[Similarity.FitTables]]) as a broadcast value:
+    * building it launches no job, and at 100 TB an arriving batch costs
     * O(batch · (cells + m·ks)) comparisons and touches neither the
     * corpus nor the existing index files. A corpus row's code is a pure
     * function of (vector, centroids, codebooks), so encoding the corpus
@@ -1174,16 +1173,7 @@ object AnnIndex {
       batch: DataFrame,
       idCol: String,
       vecCol: String
-  ): DataFrame = encode(index.fit, index.dim, index.pqM, batch, idCol, vecCol)
-
-  /** [[encodeAgainst]] a fit given as its parts. */
-  private def encode(fit: Similarity.FitTables, dim: Int, pqM: Int, batch: DataFrame, idCol: String, vecCol: String): DataFrame =
-    // the same fused map-side pass as [[fitIvfPq]]'s codes (round 18) —
-    // an arriving batch is assigned and encoded in one projection against
-    // the frozen fit, no batch-sized shuffle or join
-    Similarity
-      .assignAndEncode(batch, idCol, vecCol, fit, dim, pqM)
-      .select("__cid", "__nid", "__codes")
+  ): DataFrame = Similarity.assignAndEncode(batch, idCol, vecCol, index.fit, index.dim, index.pqM)
 
   /** Incremental index maintenance: encode `batch` against the persisted
     * index's frozen centroids/codebooks ([[encodeAgainst]]) and write the
@@ -1316,7 +1306,7 @@ object AnnIndex {
       // the encode is materialized here, so the fit's broadcast can go
       val f = loadFit(spark, dir, cur)
       val arrivingDf =
-        try encode(f.fit, f.dim, f.pqM, batch, idCol, vecCol).localCheckpoint(true)
+        try Similarity.assignAndEncode(batch, idCol, vecCol, f.fit, f.dim, f.pqM).localCheckpoint(true)
         finally f.fit.destroy()
       val existingDf = readCodes(spark, layer, Seq(layer), Seq(CellColumn))
       val existing = contentFingerprint(existingDf)
@@ -1415,7 +1405,7 @@ object AnnIndex {
     // leaving it to the ContextCleaner; the overwrite absorbs an
     // uncommitted partial layer of the same id
     val f = loadFit(spark, dir, cur)
-    try writeCodesLayer(encode(f.fit, f.dim, f.pqM, batch, idCol, vecCol), layer.toString, "__cid")
+    try writeCodesLayer(Similarity.assignAndEncode(batch, idCol, vecCol, f.fit, f.dim, f.pqM), layer.toString, "__cid")
     finally f.fit.destroy()
   }
 
@@ -1737,18 +1727,31 @@ object AnnIndex {
     */
   def staleness(spark: SparkSession, dir: String): DataFrame = {
     val gen = currentCodesPath(spark, dir)
-    val fit = readTable(spark, fitRoot(spark, dir, gen), "occupancy", OccupancyContract)
+    occupancyLedger(spark, gen, fitRoot(spark, dir, gen))
+      .select(col("cell"), col("fit_n"), col("now_n"), (col("now_n") - col("fit_n")).as("added"))
+  }
+
+  /** The per-cell occupancy ledger both [[staleness]] and
+    * [[maintenancePolicy]] read: generation `gen`'s fit-time `occupancy/`
+    * snapshot (under the fit root `root`) full-outer-joined with one
+    * codes-only aggregate of its committed layers, as (`cell`, `fit_n`,
+    * `now_n`, `layers`) with an absent side counted as 0. `layers` is the
+    * number of distinct committed `__batch` layers holding the cell's rows;
+    * a caller that does not select it leaves it pruned from the aggregate.
+    */
+  private def occupancyLedger(spark: SparkSession, gen: Path, root: String): DataFrame = {
+    val fit = readTable(spark, root, "occupancy", OccupancyContract)
       .select(col("__cid").as("cell"), col("fit_n"))
     val now = committedCodes(spark, gen)
       .groupBy(col("__cid").cast("int").as("cell"))
-      .agg(count(lit(1)).as("now_n"))
+      .agg(count(lit(1)).as("now_n"), count_distinct(col("__batch")).as("layers"))
     fit
       .join(now, Seq("cell"), "full_outer")
       .select(
         col("cell"),
         coalesce(col("fit_n"), lit(0L)).as("fit_n"),
         coalesce(col("now_n"), lit(0L)).as("now_n"),
-        (coalesce(col("now_n"), lit(0L)) - coalesce(col("fit_n"), lit(0L))).as("added")
+        coalesce(col("layers"), lit(0L)).as("layers")
       )
   }
 
@@ -1823,22 +1826,10 @@ object AnnIndex {
     // the fit that anchors the ledger (one tiny meta read; retried across
     // a concurrent tombstone's transient swap window, like load)
     val cells = readMeta(spark, root).getAs[Int]("cells")
-    val fit = readTable(spark, root, "occupancy", OccupancyContract)
-      .select(col("__cid").as("cell"), col("fit_n"))
-    val now = committedCodes(spark, gen)
-      .groupBy(col("__cid").cast("int").as("cell"))
-      .agg(count(lit(1)).as("now_n"), count_distinct(col("__batch")).as("layers"))
     // the whole-frame total rides a window over the ≤cells-row ledger —
     // one exchange of a tiny frame, never a second codes scan
     val totalNow = sum(col("now_n")).over(org.apache.spark.sql.expressions.Window.partitionBy())
-    fit
-      .join(now, Seq("cell"), "full_outer")
-      .select(
-        col("cell"),
-        coalesce(col("fit_n"), lit(0L)).as("fit_n"),
-        coalesce(col("now_n"), lit(0L)).as("now_n"),
-        coalesce(col("layers"), lit(0L)).as("layers")
-      )
+    occupancyLedger(spark, gen, root)
       .withColumn("added", col("now_n") - col("fit_n"))
       .withColumn(
         "decision",
@@ -1940,9 +1931,9 @@ object AnnIndex {
     * A query whose id is missing from `rerankFrom`, or whose copy there
     * differs, is still reranked against its batch vector.
     * `excludeSelf` drops qid = nid matches when the query batch IS the
-    * indexed corpus (the [[Similarity.ivfPqTopK]] semantics — with it,
-    * fit → save → load → probe over the same corpus is bit-identical to
-    * the fused operator).
+    * indexed corpus (the [[Similarity.ivfPqTopK]] semantics — that
+    * operator is [[fitIvfPq]] + this probe with `excludeSelf`, so fit →
+    * save → load → probe over the same corpus returns its rows).
     *
     * `idFilter` is the FILTERED-search predicate (production vector
     * search is almost always "top-k WHERE lang = 'en' AND source = x"):

@@ -58,26 +58,18 @@ import scala.util.Random
 object Similarity {
 
   /** Dot product of two numeric-array columns, accumulated left-to-right
-    * in double (native expression; [[dotHof]] is the bit-identical HOF
-    * reference).
+    * in double (native expression; the specs pin it bit-identical to a
+    * `zip_with` + `aggregate` HOF reference).
     */
   def dot(a: Column, b: Column): Column = graft.functions.native.arrayDot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity in double precision (native expression; identical
-    * accumulation order to `dotHof`-based cosine — the spec asserts bit
-    * equality).
+    * accumulation order to the HOF reference cosine — the spec asserts
+    * bit equality).
     */
   def cosine(a: Column, b: Column): Column = graft.functions.native.arrayCosine(a, b)
-
-  /** HOF reference formulation of [[dot]]. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
-
-  /** HOF reference formulation of [[cosine]]. */
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 
   /** Brute-force cosine top-k self-join: every pair within `df`, ranked per
     * query vector. Baseline only — see scaladoc for the 100 TB path.
@@ -251,20 +243,6 @@ object Similarity {
     0L +: (singles ++ pairs)
   }
 
-  /** LSH candidate pairs for `base` = (__id, __v): vectors sharing a sign
-    * bucket in any of `tables` independent hash tables, as bare (qid, nid)
-    * id pairs with qid != nid — the shared generator behind [[lshTopK]] and
-    * [[cosineNearDupPairs]].
-    *
-    * The banded (id, table, key) projection is read by both sides of the
-    * candidate self-join, so it is snapshotted with an eager local
-    * checkpoint (ids + keys only — the wide embedding arrays never ride
-    * through the candidate shuffle/dedup); the snapshot is freed by the
-    * ContextCleaner once unreferenced — no session-level cache is left
-    * behind. The candidate pair set itself is consumed exactly once
-    * downstream, so it stays lazy (a snapshot there would be a pure extra
-    * materialization pass).
-    */
   /** Embedding dimensionality probe (one driver job on one row), with a
     * named failure instead of a bare NoSuchElementException on an empty
     * table. Only runs at `dim = AutoDim`; explicit-dim callers skip it.
@@ -315,6 +293,20 @@ object Similarity {
       )
     }
 
+  /** LSH candidate pairs for `base` = (__id, __v): vectors sharing a sign
+    * bucket in any of `tables` independent hash tables, as bare (qid, nid)
+    * id pairs with qid != nid — the shared generator behind [[lshTopK]] and
+    * [[cosineNearDupPairs]].
+    *
+    * The banded (id, table, key) projection is read by both sides of the
+    * candidate self-join, so it is snapshotted with an eager local
+    * checkpoint (ids + keys only — the wide embedding arrays never ride
+    * through the candidate shuffle/dedup); the snapshot is freed by the
+    * ContextCleaner once unreferenced — no session-level cache is left
+    * behind. The candidate pair set itself is consumed exactly once
+    * downstream, so it stays lazy (a snapshot there would be a pure extra
+    * materialization pass).
+    */
   private[graft] def lshCandidates(
       base: DataFrame,
       tables: Int,
@@ -379,23 +371,6 @@ object Similarity {
       .select("qid", "nid", "rank", "cos")
   }
 
-  /** Cross-table LSH top-k: approximate `k` nearest `corpus` vectors for
-    * every `queries` vector — the retrieval shape (query set ⋈ corpus),
-    * where [[lshTopK]] is the self-join shape (near-neighbor graph over
-    * one table). Embedding-based benchmark decontamination, eval-set
-    * retrieval, and hard-negative mining all consume this form: the query
-    * side is typically orders of magnitude smaller than the corpus, so
-    * banding it (plus multi-probe expansion) is cheap while the corpus is
-    * banded once at base keys and joined by bucket — identical scale shape
-    * to [[lshTopK]], no corpus self-join, no BNLJ.
-    *
-    * Both sides must carry `idCol`/`vecCol` with the same embedding
-    * dimensionality (a mismatch nulls the signature dots — ArrayDot
-    * rejects length mismatches — and the query returns nothing rather
-    * than garbage). Ids may overlap across tables: a query matching its
-    * own corpus copy is reported (rank 1, cos 1.0) — callers that index
-    * the query set itself filter `qid =!= nid` downstream.
-    */
   /** Two-sided (retrieval-shaped) LSH candidate pairs: query side banded
     * and multi-probe-expanded, corpus side banded once at base keys,
     * joined by bucket — the shared generator behind [[lshTopKAgainst]] and
@@ -426,6 +401,23 @@ object Similarity {
       .dropDuplicates("qid", "nid")
   }
 
+  /** Cross-table LSH top-k: approximate `k` nearest `corpus` vectors for
+    * every `queries` vector — the retrieval shape (query set ⋈ corpus),
+    * where [[lshTopK]] is the self-join shape (near-neighbor graph over
+    * one table). Embedding-based benchmark decontamination, eval-set
+    * retrieval, and hard-negative mining all consume this form: the query
+    * side is typically orders of magnitude smaller than the corpus, so
+    * banding it (plus multi-probe expansion) is cheap while the corpus is
+    * banded once at base keys and joined by bucket — identical scale shape
+    * to [[lshTopK]], no corpus self-join, no BNLJ.
+    *
+    * Both sides must carry `idCol`/`vecCol` with the same embedding
+    * dimensionality (a mismatch nulls the signature dots — ArrayDot
+    * rejects length mismatches — and the query returns nothing rather
+    * than garbage). Ids may overlap across tables: a query matching its
+    * own corpus copy is reported (rank 1, cos 1.0) — callers that index
+    * the query set itself filter `qid =!= nid` downstream.
+    */
   def lshTopKAgainst(
       queries: DataFrame,
       corpus: DataFrame,
@@ -940,13 +932,16 @@ object Similarity {
     *     no point chose drops out. The round's rows are collected for the
     *     next one.
     *
-    * `points` is snapshotted once: the init and every round read it. Each
-    * of the snapshot, the init and every round is one collect.
+    * `points` is snapshotted once, without its null vectors: a null
+    * vector has no cell and no mean to add, and drawn into the init it
+    * would become a null centroid. The init and every round read the
+    * snapshot. Each of the snapshot, the init and every round is one
+    * collect.
     */
   private def lloyd(points: DataFrame, keys: Seq[String], k: Int, iters: Int, seed: Long)(
       tooFew: Int => String
   )(assign: DataFrame => Column): DataFrame = {
-    val pts = points.localCheckpoint(true)
+    val pts = points.filter(col("__qv").isNotNull).localCheckpoint(true)
     val kcols = keys.map(col)
     val h = conv(
       substring(md5(concat_ws(":", (lit(seed.toString) +: kcols.map(_.cast("string"))) :+ col("__id").cast("string"): _*)), 1, 8),
@@ -999,7 +994,7 @@ object Similarity {
   ): DataFrame = {
     val fit = FitTables.codebooks(codebooks)
     quantizedBase(df, idCol, vecCol)
-      .withColumn("__mc", pqBestPerSubspace(col("__qv"), m, dim / m, fit.cbmCol))
+      .withColumn("__mc", pqBestPerSubspace(col("__qv"), m, dim / m, fit.cbmCol)(identity))
       .select(
         col("__id"),
         transform(col("__mc"), s => s.getField("__cid")).as("__codes"),
@@ -1007,39 +1002,30 @@ object Similarity {
       )
   }
 
-  /** Per-row array of the m winning codewords:
-    * array<struct<__cid, __cv>> in subspace order, each the argmin
-    * codeword by (exact squared L2, cid) of that subspace's slice of
-    * `vec` — exactly the former min_by(struct(cid, cv), struct(d, cid))
-    * per (id, m) group, evaluated without the explode/join/regroup.
-    * `cbm` is a [[FitTables]]' per-subspace entries map (`__cbm`).
-    *
-    * Two-level transform so each subspace SLICE materializes once per
-    * (row, subspace): with the slice inline in the inner lambda it is
-    * re-evaluated (and re-allocated) once per CODEWORD — m·ks slices per
-    * row instead of m, measured at ~1.5× the whole encode pass. The
-    * per-subspace argmin is the native [[graft.functions.CodewordArgmin]]
-    * kernel — one compiled ks×sub loop per (row, subspace) instead of an
-    * interpreted lambda dispatch per codeword.
+  /** Per-row array of the m winning codewords in subspace order: `pick`
+    * of each subspace's argmin codeword struct<__cid, __cv> by (exact
+    * squared L2, cid) against that subspace's slice of `vec` — exactly the
+    * former min_by(struct(cid, cv), struct(d, cid)) per (id, m) group,
+    * evaluated without the explode/join/regroup. `cbm` is a
+    * [[FitTables]]' per-subspace entries map (`__cbm`). One `transform`
+    * over the subspace ids: the native [[graft.functions.CodewordArgmin]]
+    * kernel evaluates its slice argument once per (row, subspace) and runs
+    * one compiled ks×sub loop over that subspace's codewords.
     */
-  private[llmops] def pqBestPerSubspace(vec: Column, m: Int, sub: Int, cbm: Column): Column =
+  private[llmops] def pqBestPerSubspace(vec: Column, m: Int, sub: Int, cbm: Column)(pick: Column => Column): Column =
     transform(
-      transform(
-        sequence(lit(0), lit(m - 1)),
-        mm => struct(mm.as("__m"), slice(vec, mm * sub + 1, lit(sub)).as("__sv"))
-      ),
-      p =>
-        graft.functions.native
-          .codewordArgmin(p.getField("__sv"), element_at(cbm, p.getField("__m")))
+      sequence(lit(0), lit(m - 1)),
+      mm => pick(graft.functions.native.codewordArgmin(slice(vec, mm * sub + 1, lit(sub)), element_at(cbm, mm)))
     )
 
   /** (`__cid`, `__nid`, `__codes`) for every row of `df` in ONE map-side
-    * projection against the fit — the fused assignment+encode pass shared
-    * by [[graft.llmops.AnnIndex.fitIvfPq]] and
-    * [[graft.llmops.AnnIndex.encodeAgainst]]. Nearest cell and the m code
+    * projection against the fit — the one assignment+encode pass, read by
+    * [[graft.llmops.AnnIndex.fitIvfPq]], [[graft.llmops.AnnIndex.encodeAgainst]]
+    * and [[graft.llmops.AnnIndex.append]]. Nearest cell and the m code
     * ids are pure functions of (vector, centroids, codebooks), and the fit
     * is referenced as a broadcast value ([[FitTables]]), not joined: the
-    * pass plans no exchange and launches no job of its own.
+    * pass plans no exchange and launches no job of its own. A null vector
+    * gets a null cell, which no probe's cell-id join matches.
     */
   private[llmops] def assignAndEncode(
       df: DataFrame,
@@ -1048,35 +1034,26 @@ object Similarity {
       fit: FitTables,
       dim: Int,
       m: Int
-  ): DataFrame = {
-    val sub = dim / m
+  ): DataFrame =
     quantizedBase(df, idCol, vecCol)
       .select(
         (-bestCellCol(col("__qv"), fit.centsCol).getField("__ncid")).cast(fit.cidType).as("__cid"),
         col("__id").as("__nid"),
-        transform(pqBestPerSubspace(col("__qv"), m, sub, fit.cbmCol), s => s.getField("__cid")).as("__codes")
+        pqBestPerSubspace(col("__qv"), m, dim / m, fit.cbmCol)(_.getField("__cid")).as("__codes")
       )
-  }
 
-  /** IVF-PQ top-k: the [[ivfTopKKmeans]] probe join with the candidate
-    * side stored as PQ codes — ranking is ASYMMETRIC distance (the
-    * query's full quantized vector vs each candidate's reconstruction),
-    * never candidate-vs-candidate. Identical coarse structure (broadcast
-    * k-means centroids, nprobe cell probing, bucketed equi-join on cell
-    * id); the only change is what the index side carries: `m` code bytes
-    * per vector instead of the vector itself — the difference between a
-    * 100 TB float32 index and a ~3 TB one at m=4/ks=256 over 64 dims.
-    *
-    * The probe join moves the CODES, not reconstructions: the candidate
-    * side of the cell-id equi-join carries only (id, cell, m small ints),
-    * and the codeword reconstruction happens AFTER the join via the
-    * broadcast (m·ks)-entry codeword map of [[FitTables]] — per-pair
-    * cost is the same m map lookups an ADC lookup table would do, and
-    * the shuffle payload is the production index payload, ~6× smaller
-    * than shipping float reconstructions at the registered (m=8, dim=64)
-    * shape. Scores are
-    * bit-identical to reconstruction-before-join (same codewords,
-    * concatenated in the same subspace order, same cosine arithmetic).
+  /** IVF-PQ top-k of every vector of `df` against `df` itself: an
+    * in-memory [[graft.llmops.AnnIndex.fitIvfPq]] (coarse k-means + PQ
+    * codebooks, then the codes-only index) probed with the corpus as the
+    * query batch by [[graft.llmops.AnnIndex.probeIvfPq]], self-matches
+    * excluded and `df` as the rerank source. Ranking is ASYMMETRIC
+    * distance — the query's full quantized vector against each candidate's
+    * PQ reconstruction, never candidate-vs-candidate — over the `nprobe`
+    * cells nearest each query; the index side carries `m` code bytes per
+    * vector instead of the vector itself, the difference between a
+    * 100 TB float32 index and a ~3 TB one at m=4/ks=256 over 64 dims. The
+    * probe join ships those codes and reconstructs after landing
+    * ([[pqAdcRank]]).
     *
     * `rerank > k` enables the production refinement: take the ADC top-
     * `rerank` shortlist, fetch those candidates' ORIGINAL vectors by id
@@ -1099,48 +1076,12 @@ object Similarity {
       rerank: Int = 0,
       dim: Int = AutoDim
   ): DataFrame = {
-    val d = resolveDim(df.select(col(idCol).as("__id"), col(vecCol).as("__v")), dim)
-    val base = quantizedBase(df, idCol, vecCol)
-    // the fit is collected once into driver-side tables; every pass below
-    // reads those, never the centroid or codebook aggregates again
-    val fit = FitTables(
-      kmeansCentroids(df, idCol, vecCol, cells, iters, seed),
-      pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed),
-      pqKs
-    )
-    // ONE nprobe-deep centroid scoring pass serves both roles of the
-    // self-probe: crank = 1 assigns index cells, crank ≤ nprobe probes
-    val probed = cellRanks(base, fit, nprobe).localCheckpoint(true)
-    // the INDEX side of the probe join: (cell, id, m code ids) — nothing
-    // vector-sized rides the shuffle. Codes are computed MAP-SIDE on the
-    // home-cell rows (round 18): the pre-r18 shape pqEncode'd the corpus
-    // separately and equi-joined it back on vector id — a two-sided
-    // corpus shuffle for a per-row pure function of the codebooks.
-    val index = probed
-      .filter(col("__crank") === 1)
-      .select(
-        col("__id").as("__nid"),
-        col("__cid"),
-        transform(pqBestPerSubspace(col("__qv"), pqM, d / pqM, fit.cbmCol), s => s.getField("__cid")).as("__codes")
-      )
-    val vecs = df.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
-    pqAdcRank(
-      probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
-      index,
-      fit,
-      pqM,
-      pqKs,
-      k,
-      rerank,
-      vecs,
-      vecs,
-      excludeSelf = true
-    )
+    val index = AnnIndex.fitIvfPq(df, idCol, vecCol, cells, iters, seed, pqM, pqKs, pqIters, dim)
+    AnnIndex.probeIvfPq(index, df, idCol, vecCol, k, nprobe, rerank, rerankFrom = Some(df), excludeSelf = true)
   }
 
   // -------------------------------------------------------------------
-  // IVF-PQ building blocks, shared between the fused self-probe above and
-  // the persisted-index lifecycle (graft.llmops.AnnIndex)
+  // IVF-PQ building blocks of the index lifecycle (graft.llmops.AnnIndex)
   // -------------------------------------------------------------------
 
   /** (id, int8-quantized-as-double vector) projection — the space every
@@ -1218,16 +1159,18 @@ object Similarity {
       )
       .repartition(probeParallelism(base), col("__cid"))
 
-  /** Rank the fit's centroids per vector by quantized cosine
-    * (deterministic cid tie-break) and keep ranks ≤ `upTo`: `upTo = 1` is
-    * index-side cell assignment, `upTo = nprobe` is query-side probing.
-    * Map-side against the fit's driver-resident centroid entries — no
-    * centroid scan, aggregate or join; the output is (`__id`, `__qv`,
-    * `__cid`, `__crank`).
+  /** The query side of an IVF-PQ probe: each vector of `base` (`__id`,
+    * `__qv`) once per cell among its `upTo` nearest, ranked by quantized
+    * cosine with the deterministic cid tie-break — the rows
+    * [[graft.llmops.AnnIndex.probeIvfPq]] joins to the index on cell id
+    * (index-side assignment is [[assignAndEncode]]'s). Map-side against
+    * the fit's driver-resident centroid entries — no centroid scan,
+    * aggregate or join; the output is (`__id`, `__qv`, `__cid`),
+    * hash-partitioned on `__cid` ([[explodeTopCells]]).
     */
   private[llmops] def cellRanks(base: DataFrame, fit: FitTables, upTo: Int): DataFrame =
     explodeTopCells(base, fit, col("__qv"), upTo, Seq(col("__id"), col("__qv")))
-      .select(col("__id"), col("__qv"), col("__cid"), col("__crank"))
+      .select(col("__id"), col("__qv"), col("__cid"))
 
   /** Small fit tables held on the driver in the forms the per-row kernels
     * read — the one way a fit reaches a kernel. The full IVF-PQ fit

@@ -1067,7 +1067,8 @@ object LlmQueries {
       (Seq(subCte + fitSubCte, init) ++ iterCtes :+ enc).mkString(",\n")
     }
 
-    /** `pqtop` CTE: the [[Similarity.ivfPqTopK]] probe replay — nprobe
+    /** `pqtop` CTE: the IVF-PQ probe replay ([[AnnIndex.probeIvfPq]], which
+      * [[Similarity.ivfPqTopK]] runs after its fit) — nprobe
       * coarse-cell probing on the quantized vectors (same coarse fit
       * `k_iters` as the kmeans chain), candidates joined on cell id, and
       * ASYMMETRIC-distance ranking: the query's full quantized vector
@@ -1075,8 +1076,8 @@ object LlmQueries {
       * `rerank > k` the chain appends `pqrr`: exact-cosine re-rank of the
       * ADC top-`rerank` shortlist against the ORIGINAL `cf` vectors —
       * the fetch-and-rerank replay.
-      */
-    /** `idxFilter` restricts the INDEX side (`kpidx`, rows referenced as
+      *
+      * `idxFilter` restricts the INDEX side (`kpidx`, rows referenced as
       * `kpp.id`) — the delete replay excludes removed ids from the index
       * while every id still queries. `pfx` as in [[kmeansFitCtes]].
       */
@@ -2356,8 +2357,8 @@ object LlmQueries {
     // float32 corpus into a ~3 TB index whose probe prunes to
     // nprobe/cells of the files), LOAD it back (contract-checked tables,
     // the fit collected to the driver, the codes a lazy scan), and PROBE
-    // the query batch against the loaded index. The probe
-    // shares ivfPqTopK's exact building blocks, and parquet round-trips
+    // the query batch against the loaded index. ivfPqTopK is this same
+    // fit + probe without the storage round trip, and parquet round-trips
     // doubles bit-exact, so the oracle is the SAME full-algorithm replay
     // as llm_ann_ivf_pq — the gate proves a saved index answers
     // identically to the in-memory fit across sessions.

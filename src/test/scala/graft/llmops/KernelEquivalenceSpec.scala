@@ -35,13 +35,18 @@ import scala.util.Random
   *   6. [[Similarity.FitTables]] ≡ the Spark aggregates it replaces
   *      (centroid entries, codeword entries by subspace, the ADC codeword
   *      map) on a fit whose Lloyd rounds emptied cells, and the encode
-  *      through it ≡ the former join-form encode.
+  *      through it ≡ the former join-form encode, at d = 8 and at
+  *      d ∈ {64, 384, 768, 1536} with codegen fallback off.
   *   7. The `QuantizeInt8` kernel behind [[Embeddings.quantizeInt8]] ≡
   *      [[KernelEquivalenceSpec.quantizeInt8Hof]] on every edge of the
   *      formula (null vector and elements, empty, zeros, ±0.0, NaN, ±Inf,
   *      subnormals, four element types, the ANSI cast overflow) and on
   *      random vectors at d ∈ {64, 384, 768, 1536}, with codegen fallback
   *      off.
+  *   8. [[Similarity.ivfPqTopK]], now [[AnnIndex.fitIvfPq]] +
+  *      [[AnnIndex.probeIvfPq]], ≡ [[KernelEquivalenceSpec.ivfPqTopKFusedRef]],
+  *      the fused self-probe it replaced, on a null vector, ties, emptied
+  *      cells, `nprobe` ≥ cells and `rerank` on both sides of `k`.
   *
   * All equality assertions go through Spark's null-safe `<=>` (SQL
   * semantics: NaN equals NaN, ±0.0 equal — exactly the ordering-contract
@@ -334,6 +339,18 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("kmeansCentroids and pqCodebooks fit a corpus with null vectors as if they were absent") {
+    val df = randomVecs(120, dim = 8).localCheckpoint(true)
+    // ids interleaved with the corpus', so some would be drawn into the init
+    val withNulls = df.unionByName((0 until 40).map(i => (10000L + i * 7, null: Seq[Double])).toDF("id", "v"))
+    def rows(f: DataFrame => DataFrame): (Seq[String], Seq[String]) =
+      (f(df).collect().map(_.toString).sorted.toSeq, f(withNulls).collect().map(_.toString).sorted.toSeq)
+    val (km, kmNulls) = rows(Similarity.kmeansCentroids(_, "id", "v", cells = 6, iters = 2, seed = 42L))
+    assert(kmNulls == km, "null vectors changed the k-means fit")
+    val (pq, pqNulls) = rows(Similarity.pqCodebooks(_, "id", "v", dim = 8, m = 2, ks = 5, iters = 2, seed = 42L))
+    assert(pqNulls == pq, "null vectors changed the PQ fit")
+  }
+
   // ------------------------------------------------------------------
   // 5. driver-side cell ranking ≡ Similarity.cellRanks
   // ------------------------------------------------------------------
@@ -465,27 +482,55 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
     assert(got.getAs[Seq[Row]]("__cents").map(_.getLong(0)) == cids.reverse.map(-_.toLong), "centroid entries sorted by -cid")
   }
 
-  test("encoding through FitTables equals the former join-form encode (interpreted and codegen)") {
-    val (c, cb) = sparseFit()
-    val fit = Similarity.FitTables(c, cb, pqKs = 6)
-    val batch = sparseFitCorpus
-      .unionByName(randomVecs(60, dim = 8).select(col("id") + 1000 as "id", col("v")))
+  /** A random fit at width `dim`: `cells` centroids and `m` subspaces of
+    * `ks` codewords, every vector in the quantized range. The encode does
+    * not care how a fit was made, so none is run here.
+    */
+  private def randomFit(dim: Int, cells: Int, m: Int, ks: Int): (DataFrame, DataFrame) = {
+    def qvec(n: Int): Seq[Double] = Seq.fill(n)(math.rint(rnd.nextDouble() * 254 - 127))
+    val c = (0 until cells).map(cid => (cid, qvec(dim))).toDF("__cid", "__cv").localCheckpoint(true)
+    val cb = (for (mm <- 0 until m; cid <- 0 until ks) yield (mm, cid, qvec(dim / m)))
+      .toDF("__m", "__cid", "__cv")
       .localCheckpoint(true)
-    val joinForm = Similarity
-      .quantizedBase(batch, "id", "v")
-      .withColumn("__one", oneKey(col("__id")))
-      .join(centroidEntriesRow(c), Seq("__one"))
-      .join(codebookEntriesByM(cb), Seq("__one"))
-      .select(
-        (-Similarity.bestCellCol(col("__qv"), col("__cents")).getField("__ncid")).cast("int").as("__cid"),
-        col("__id").as("__nid"),
-        transform(Similarity.pqBestPerSubspace(col("__qv"), 2, 4, col("__cbm")), s => s.getField("__cid")).as("__codes")
-      )
+    (c, cb)
+  }
+
+  test("encoding through FitTables equals the former join-form encode (interpreted and codegen)") {
+    // at d = 8 and at d ∈ {64, 384, 768, 1536}, with codegen fallback off
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-    underBothCodegenPaths {
-      val viaFit = Similarity.assignAndEncode(batch, "id", "v", fit, dim = 8, m = 2)
-      assert(viaFit.schema == joinForm.schema)
-      assert(rows(viaFit) == rows(joinForm), "FitTables encode != join-form encode")
+    // (fit, batch, dim, m, ks): the sparse-cid fit at d = 8, then random fits
+    // at production widths; each batch carries a null vector and exact
+    // duplicates (ties in every argmin)
+    val (c8, cb8) = sparseFit()
+    val cases = (c8, cb8, sparseFitCorpus.unionByName(randomVecs(60, dim = 8).select(col("id") + 1000 as "id", col("v"))), 8, 2, 6) +:
+      Seq(64, 384, 768, 1536).map { d =>
+        val (c, cb) = randomFit(d, cells = 6, m = 8, ks = 16)
+        val vs = randomVecs(30, d)
+        val batch = vs
+          .unionByName(vs.limit(5).select(col("id") + 1000 as "id", col("v")))
+          .unionByName(Seq((5000L, null: Seq[Double])).toDF("id", "v"))
+        (c, cb, batch, d, 8, 16)
+      }
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      for ((c, cb, rawBatch, d, m, ks) <- cases) {
+        val batch = rawBatch.localCheckpoint(true)
+        val fit = Similarity.FitTables(c, cb, pqKs = ks)
+        val joinForm = Similarity
+          .quantizedBase(batch, "id", "v")
+          .withColumn("__one", oneKey(col("__id")))
+          .join(centroidEntriesRow(c), Seq("__one"))
+          .join(codebookEntriesByM(cb), Seq("__one"))
+          .select(
+            (-Similarity.bestCellCol(col("__qv"), col("__cents")).getField("__ncid")).cast("int").as("__cid"),
+            col("__id").as("__nid"),
+            transform(pqBestPerSubspaceTwoLevel(col("__qv"), m, d / m, col("__cbm")), s => s.getField("__cid")).as("__codes")
+          )
+        underBothCodegenPaths {
+          val viaFit = Similarity.assignAndEncode(batch, "id", "v", fit, dim = d, m = m)
+          assert(viaFit.schema == joinForm.schema, s"d=$d")
+          assert(rows(viaFit) == rows(joinForm), s"FitTables encode != join-form encode at d=$d")
+        }
+      }
     }
   }
 
@@ -620,12 +665,54 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
       }
     }
   }
+
+  // ------------------------------------------------------------------
+  // 8. ivfPqTopK (fit + probe) ≡ the fused self-probe it replaced
+  // ------------------------------------------------------------------
+
+  /** Sixty 8-dim vectors around three directions, only twelve of them
+    * distinct — each repeated five times (ties in every cell and codeword
+    * ranking) — plus one null vector.
+    */
+  private lazy val ivfPqCorpus: DataFrame = {
+    val r = new Random(11)
+    val distinct = (0 until 12).map(i => Seq.tabulate(8)(j => (if (j / 3 == i % 3) 5f else 0f) + r.nextFloat() * 0.1f))
+    ((0 until 60).map(i => (i.toLong, distinct(i % 12))) :+ ((60L, null: Seq[Float]))).toDF("vec_id", "v").localCheckpoint(true)
+  }
+
+  test("ivfPqTopK returns the fused self-probe's rows (null vector, ties, empty cells, nprobe >= cells, rerank <= and > k)") {
+    val c = ivfPqCorpus
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.select("qid", "nid", "rank").as[(Long, Long, Long)].collect().sorted.toSeq
+    // six cells over three directions: Lloyd's rounds empty some (the
+    // null vector's null cell is not one of them)
+    val fitted = Similarity
+      .kmeansCentroids(c, "vec_id", "v", cells = 6, iters = 2, seed = 42L)
+      .select("__cid")
+      .collect()
+      .map(r => Option(r.get(0)))
+      .toSeq
+    assert(fitted.count(_.nonEmpty) < 6, s"fixture must empty a cell at cells=6, kept $fitted")
+    for ((cells, nprobe, rerank) <- Seq((3, 1, 0), (3, 2, 3), (3, 3, 10), (6, 2, 10), (6, 6, 0), (6, 8, 10))) {
+      val at = s"cells=$cells nprobe=$nprobe rerank=$rerank"
+      val got = rows(
+        Similarity.ivfPqTopK(c, "vec_id", "v", k = 3, cells = cells, nprobe = nprobe, pqM = 2, pqKs = 4, rerank = rerank, dim = 8)
+      )
+      val ref = rows(
+        ivfPqTopKFusedRef(c, "vec_id", "v", k = 3, cells = cells, nprobe = nprobe, pqM = 2, pqKs = 4, rerank = rerank, dim = 8)
+      )
+      assert(got.nonEmpty, at)
+      assert(!got.exists(r => r._1 == 60L || r._2 == 60L), s"the null vector neither probes nor is found ($at)")
+      assert(got == ref, s"ivfPqTopK != fused reference ($at)")
+    }
+  }
 }
 
 /** References the native kernels and [[Similarity.FitTables]] are pinned
-  * against: the HOF formulations of the kernels, and the join form that
+  * against: the HOF formulations of the kernels, the join form that
   * attached a fit to every row before the fit moved to the driver (one
-  * aggregate row of the fit tables, joined on a constant key).
+  * aggregate row of the fit tables, joined on a constant key), and the
+  * fused IVF-PQ self-probe with its two-level encode.
   */
 object KernelEquivalenceSpec {
 
@@ -657,6 +744,14 @@ object KernelEquivalenceSpec {
       1,
       upTo
     )
+
+  /** HOF reference of the `array_dot` kernel behind [[Similarity.dot]]. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
+
+  /** HOF reference of the `array_cosine` kernel behind [[Similarity.cosine]]. */
+  def cosineHof(a: Column, b: Column): Column =
+    dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 
   /** HOF reference of the `array_l2sq` kernel. */
   def l2sqHof(a: Column, b: Column): Column =
@@ -702,4 +797,85 @@ object KernelEquivalenceSpec {
           min(lit(0)).as("__one")
         )
     )
+
+  /** The two-level encode `Similarity.pqBestPerSubspace` had before it
+    * became one `transform`: an outer `transform` materializing each
+    * (subspace, slice) pair, an inner one taking the argmin codeword
+    * struct<__cid, __cv> of each slice.
+    */
+  def pqBestPerSubspaceTwoLevel(vec: Column, m: Int, sub: Int, cbm: Column): Column =
+    transform(
+      transform(
+        sequence(lit(0), lit(m - 1)),
+        mm => struct(mm.as("__m"), slice(vec, mm * sub + 1, lit(sub)).as("__sv"))
+      ),
+      p =>
+        graft.functions.native
+          .codewordArgmin(p.getField("__sv"), element_at(cbm, p.getField("__m")))
+    )
+
+  /** The cell-rank pass the fused IVF-PQ top-k read: (`__id`, `__qv`,
+    * `__cid`, `__crank`) for each of a vector's `upTo` nearest cells,
+    * hash-partitioned on `__cid` like `Similarity.cellRanks`.
+    */
+  def cellRanksWithRank(base: DataFrame, fit: Similarity.FitTables, upTo: Int): DataFrame =
+    base
+      .select(col("__id"), col("__qv"), posexplode(graft.functions.native.cellTopK(col("__qv"), fit.centsCol, upTo)).as(Seq("__pos", "__tc")))
+      .select(
+        col("__id"),
+        col("__qv"),
+        (-col("__tc.__ncid")).cast(fit.cidType).as("__cid"),
+        (col("__pos") + 1).as("__crank")
+      )
+      .repartition(Similarity.probeParallelism(base), col("__cid"))
+
+  /** The fused IVF-PQ self-probe `Similarity.ivfPqTopK` ran before it
+    * became `AnnIndex.fitIvfPq` + `AnnIndex.probeIvfPq`: one nprobe-deep
+    * cell-rank pass, snapshotted, serves both sides — rank 1 files each
+    * vector's codes in its home cell, ranks ≤ nprobe probe.
+    */
+  def ivfPqTopKFusedRef(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      cells: Int = 16,
+      nprobe: Int = 2,
+      iters: Int = 2,
+      seed: Long = 42L,
+      pqM: Int = 4,
+      pqKs: Int = 8,
+      pqIters: Int = 2,
+      rerank: Int = 0,
+      dim: Int = Similarity.AutoDim
+  ): DataFrame = {
+    val d = Similarity.resolveDim(df.select(col(idCol).as("__id"), col(vecCol).as("__v")), dim)
+    val base = Similarity.quantizedBase(df, idCol, vecCol)
+    val fit = Similarity.FitTables(
+      Similarity.kmeansCentroids(df, idCol, vecCol, cells, iters, seed),
+      Similarity.pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed),
+      pqKs
+    )
+    val probed = cellRanksWithRank(base, fit, nprobe).localCheckpoint(true)
+    val index = probed
+      .filter(col("__crank") === 1)
+      .select(
+        col("__id").as("__nid"),
+        col("__cid"),
+        transform(pqBestPerSubspaceTwoLevel(col("__qv"), pqM, d / pqM, fit.cbmCol), s => s.getField("__cid")).as("__codes")
+      )
+    val vecs = df.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
+    Similarity.pqAdcRank(
+      probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
+      index,
+      fit,
+      pqM,
+      pqKs,
+      k,
+      rerank,
+      vecs,
+      vecs,
+      excludeSelf = true
+    )
+  }
 }

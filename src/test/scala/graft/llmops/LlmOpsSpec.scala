@@ -97,7 +97,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val rows = vecs
       .select(
         Similarity.cosine(col("va"), col("vb")).as("native"),
-        Similarity.cosineHof(col("va"), col("vb")).as("hof")
+        KernelEquivalenceSpec.cosineHof(col("va"), col("vb")).as("hof")
       )
       .as[(Double, Double)]
       .collect()
@@ -562,7 +562,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val row = vecs
       .select(
         Similarity.cosine(col("va"), col("vb")).as("native"),
-        Similarity.cosineHof(col("va"), col("vb")).as("hof")
+        KernelEquivalenceSpec.cosineHof(col("va"), col("vb")).as("hof")
       )
       .head()
     assert(row.isNullAt(0) && row.isNullAt(1))
@@ -771,8 +771,8 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
       (i.toLong, v.toSeq)
     }
     val df = vecs.toDF("vec_id", "v").localCheckpoint(true)
-    val fused = Similarity
-      .ivfPqTopK(df, "vec_id", "v", k = 3, cells = 3, nprobe = 2, iters = 2, pqM = 2, pqKs = 4, rerank = 10, dim = 8)
+    val fused = KernelEquivalenceSpec
+      .ivfPqTopKFusedRef(df, "vec_id", "v", k = 3, cells = 3, nprobe = 2, iters = 2, pqM = 2, pqKs = 4, rerank = 10, dim = 8)
       .select("qid", "nid", "rank")
       .as[(Long, Long, Long)]
       .collect()

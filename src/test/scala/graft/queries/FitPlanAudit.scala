@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GraftSession, QueryMetrics}
-import graft.llmops.AnnIndex
+import graft.llmops.{AnnIndex, Similarity}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.graftshim.GraftSqlShim
@@ -12,23 +12,26 @@ import scala.jdk.CollectionConverters._
 
 /** Diagnostic main: the executed plans of the IVF-PQ index lifecycle,
   * captured with a `QueryExecutionListener` as each query runs, after each
-  * phase's total Spark job count from [[graft.QueryMetrics]]. Two audits,
-  * both at the fixture's knobs (cells 8, iters 2, m 8, ks 32, pqIters 2):
+  * phase's total Spark job count from [[graft.QueryMetrics]]. Three
+  * audits, all at the fixture's knobs (cells 8, iters 2, m 8, ks 32,
+  * pqIters 2):
   *   - `fit` (the default): one [[graft.llmops.AnnIndex.fitIvfPq]] on the
   *     `llm_ann_ivf_pq` fixture;
   *   - `append`: fit → save → load → append on the `llm_ann_index_append`
   *     fixture (the corpus is the rows with `vec_id % 5 != 0`, the
-  *     appended batch the rest).
+  *     appended batch the rest);
+  *   - `ivfpq`: the `llm_ann_ivf_pq` query — [[graft.llmops.Similarity.ivfPqTopK]]
+  *     (k 5, nprobe 2, rerank 50) on its fixture, collected.
   * The fit runs while a query is being built and its result is local, so
   * no registered query's `.explain` can show it. Not part of any gate or
   * bench; run by hand via
-  * `sbt "Test/runMain graft.queries.FitPlanAudit [sfDir] [fit|append]"`.
+  * `sbt "Test/runMain graft.queries.FitPlanAudit [sfDir] [fit|append|ivfpq]"`.
   */
 object FitPlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val audit = args.lift(1).getOrElse("fit")
-    require(audit == "fit" || audit == "append", s"unknown audit $audit (fit or append)")
+    require(Seq("fit", "append", "ivfpq").contains(audit), s"unknown audit $audit (fit, append or ivfpq)")
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val fx = LlmQueries.clusteredFixture(spark, sfDir).localCheckpoint(true)
@@ -57,6 +60,13 @@ object FitPlanAudit {
       AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 8, iters = 2, seed = 42L, pqM = 8, pqKs = 32, pqIters = 2, dim = LlmQueries.EmbDim)
 
     if (audit == "fit") phase("fitIvfPq")(fit(fx))
+    else if (audit == "ivfpq")
+      phase("ivfPqTopK")(
+        Similarity
+          .ivfPqTopK(fx, "vec_id", "v", k = 5, cells = 8, nprobe = 2, iters = 2, seed = 42L, pqM = 8, pqKs = 32, pqIters = 2, rerank = 50, dim = LlmQueries.EmbDim)
+          .select("qid", "nid", "rank")
+          .collect()
+      )
     else {
       val dir = java.nio.file.Files.createTempDirectory("graft_fit_plan_audit").toString
       val idx = phase("fitIvfPq")(fit(fx.filter(col("vec_id") % 5 =!= 0)))
