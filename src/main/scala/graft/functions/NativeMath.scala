@@ -272,8 +272,8 @@ object NativeMath {
     * cv: array<double>>>; returns array<struct<csim: double, ncid:
     * long>> of length min(upTo, |cents|), ordered. Bit-identical to
     * `slice(sort_array(transform(cents, struct(cosine, ncid)), desc), 1,
-    * upTo)` including the null-cosine edge (length-mismatched cv): null
-    * csim sorts LAST under desc (Spark's nulls-last-in-struct-desc),
+    * upTo)` including the null-cosine edge (length-mismatched or null
+    * cv): null csim sorts LAST under desc (Spark's nulls-last-in-struct-desc),
     * ties by ncid desc. One static call per ROW where the HOF form paid
     * an interpreted lambda dispatch per CENTROID — the difference
     * between O(cells) ~0.4 µs dispatches and one compiled loop, which is
@@ -290,7 +290,7 @@ object NativeMath {
     while (i < n) {
       val e = cents.getStruct(i, 2)
       val ncid = e.getLong(0)
-      val s = cosine(vec, e.getArray(1), vcode, ccode)
+      val s = if (e.isNullAt(1)) null else cosine(vec, e.getArray(1), vcode, ccode)
       if (s == null) {
         if (nullScored == null) nullScored = new java.util.ArrayList[java.lang.Long]()
         nullScored.add(java.lang.Long.valueOf(ncid))
@@ -342,8 +342,9 @@ object NativeMath {
     * entry as a fresh struct (cid, copied cv), or null when `entries` is
     * empty. Bit-identical to
     * `array_min(transform(entries, struct(l2sq, cid, cv)))` including
-    * the null-distance edge: a null l2sq (length-mismatched cv) sorts
-    * FIRST under asc (nulls-first struct ordering), ties by cid asc.
+    * the null-distance edge: a null l2sq (length-mismatched or null cv)
+    * sorts FIRST under asc (nulls-first struct ordering), ties by cid
+    * asc; a null-cv winner comes back with a null cv.
     */
   def codewordArgmin(sv: ArrayData, entries: ArrayData, scode: Int, ccode: Int): Any = {
     val n = entries.numElements()
@@ -356,7 +357,7 @@ object NativeMath {
     while (i < n) {
       val e = entries.getStruct(i, 2)
       val cid = e.getInt(0)
-      val d = l2sq(sv, e.getArray(1), scode, ccode)
+      val d = if (e.isNullAt(1)) null else l2sq(sv, e.getArray(1), scode, ccode)
       val better =
         if (bestIdx < 0) true
         else if (d == null) bestNull && cid < bestCid || !bestNull
@@ -374,13 +375,18 @@ object NativeMath {
       i += 1
     }
     val win = entries.getStruct(bestIdx, 2)
-    val cv = win.getArray(1)
-    val m = cv.numElements()
-    val cvOut = new Array[Any](m)
-    var j = 0
-    while (j < m) { cvOut(j) = if (cv.isNullAt(j)) null else java.lang.Double.valueOf(cv.getDouble(j)); j += 1 }
+    val cvCopy =
+      if (win.isNullAt(1)) null
+      else {
+        val cv = win.getArray(1)
+        val m = cv.numElements()
+        val cvOut = new Array[Any](m)
+        var j = 0
+        while (j < m) { cvOut(j) = if (cv.isNullAt(j)) null else java.lang.Double.valueOf(cv.getDouble(j)); j += 1 }
+        new GenericArrayData(cvOut)
+      }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](java.lang.Integer.valueOf(bestCid), new GenericArrayData(cvOut))
+      Array[Any](java.lang.Integer.valueOf(bestCid), cvCopy)
     )
   }
 }

@@ -2,14 +2,20 @@ package graft.llmops
 
 import graft.contracts.{ContractViolation, SchemaCompare, SchemaPolicy}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
@@ -176,8 +182,9 @@ object AnnIndex {
   // ContractViolation naming it (never deep inside a probe), and no read
   // pays Spark's schema-inference job. Nullability is not part of a
   // contract (Spark reads every file column as nullable anyway). The
-  // bounded-small fit tables are then read on the driver ([[readRows]]);
-  // the codes stay a lazy Spark scan ([[readCodes]]).
+  // bounded-small fit tables are then read and written on the driver
+  // ([[readRows]], [[writeRows]]); the codes stay a lazy Spark scan
+  // ([[readCodes]]) and are written by Spark jobs ([[writeCodesLayer]]).
   // ------------------------------------------------------------------
 
   /** The fit tables' schemas under one format version. */
@@ -208,6 +215,13 @@ object AnnIndex {
 
   private val OccupancyContract = fields("__cid" -> IntegerType, "fit_n" -> LongType)
 
+  /** The schemas [[writeRows]] records for `meta` and `occupancy`: those of
+    * the frames Spark wrote them from before, a row of non-null knobs and a
+    * count per (nullable) cell.
+    */
+  private val MetaWritten = StructType(FitContractsByVersion(FormatVersion).meta.map(_.copy(nullable = false)))
+  private val OccupancyWritten = StructType(Seq(StructField("__cid", IntegerType), StructField("fit_n", LongType, nullable = false)))
+
   /** The codes layers' partition columns; their data columns are the
     * caller-typed `__nid` and `__codes` ([[codesDataContract]]).
     */
@@ -223,28 +237,32 @@ object AnnIndex {
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** The data files under `dir`, depth-first by name, listed lazily. */
-  private def dataFiles(fs: FileSystem, dir: Path): Iterator[Path] =
+  private def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
     fs.listStatus(dir)
       .filterNot(st => isHidden(st.getPath.getName))
       .sortBy(_.getPath.getName)
       .iterator
-      .flatMap(st => if (st.isDirectory) dataFiles(fs, st.getPath) else Iterator.single(st.getPath))
+      .flatMap(st => if (st.isDirectory) dataFiles(fs, st.getPath) else Iterator.single(st))
 
   /** The first data file under `dir` (depth-first, by name), if any. */
-  private def firstDataFile(fs: FileSystem, dir: Path): Option[Path] = dataFiles(fs, dir).nextOption()
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[FileStatus] = dataFiles(fs, dir).nextOption()
+
+  /** The footer of the listed parquet file `file`. Read from its status
+    * with `conf`: no second stat, and no fresh Hadoop `Configuration`
+    * (whose XML defaults cost more than the footer read).
+    */
+  private def footer(conf: Configuration, file: FileStatus): ParquetMetadata =
+    ParquetFileReader.readFooter(conf, file)
 
   /** The Spark schema a parquet file's footer records: the Spark row
-    * metadata when a Spark job wrote it, else the converted parquet
+    * metadata when Spark's writer wrote it, else the converted parquet
     * schema. Driver-side, no Spark job.
     */
-  private def footerSchema(spark: SparkSession, file: Path): StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    try {
-      val meta = reader.getFooter.getFileMetaData
-      Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
-    } finally reader.close()
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val meta = footer(spark.sparkContext.hadoopConfiguration, file).getFileMetaData
+    Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
   }
 
   private def nullable(dt: DataType): DataType = dt match {
@@ -258,13 +276,16 @@ object AnnIndex {
     * footer schema of its data file `file`, matches `contract` exactly (by
     * name, case-insensitively, ignoring nullability).
     */
-  private def checkContract(table: String, file: Path, found: StructType, contract: StructType): Unit = {
+  private def checkContract(table: String, file: Path, found: StructType, contract: StructType): Unit =
+    checkSchema(table, s"file $file", "not written by this index format, or corrupt", found, contract)
+
+  private def checkSchema(table: String, where: String, cause: String, found: StructType, contract: StructType): Unit = {
     val report = SchemaCompare.diff(nullable(found).asInstanceOf[StructType], contract, SchemaPolicy.Exact)
     if (!report.conforms)
       throw new ContractViolation(
         report,
-        s"AnnIndex table $table does not match its contract — not written by this index format, " +
-          s"or corrupt (file $file).\n" + report.render(found.simpleString, contract.simpleString)
+        s"AnnIndex table $table does not match its contract — $cause ($where).\n" +
+          report.render(found.simpleString, contract.simpleString)
       )
   }
 
@@ -291,7 +312,10 @@ object AnnIndex {
     * contract. The first data file's footer is checked
     * ([[checkContract]]); then every data file is decoded by Spark's own
     * parquet row reader (`ParquetReadSupport`, the record path of Spark's
-    * parquet scan) and its rows are copied. No Spark job, no broadcast.
+    * parquet scan) and its rows are copied. Each file is opened from its
+    * listed status under the one read conf, so no read re-parses Hadoop's
+    * XML defaults. No Spark job, no broadcast. [[writeRows]] is the
+    * write twin.
     */
   private def readRows(spark: SparkSession, root: String, table: String, contract: StructType): Seq[InternalRow] = {
     val dir = new Path(root, table)
@@ -300,17 +324,46 @@ object AnnIndex {
     val first = files.headOption.getOrElse(
       throw new java.io.FileNotFoundException(s"AnnIndex table $table at $dir holds no data file")
     )
-    checkContract(table, first, footerSchema(spark, first), contract)
+    checkContract(table, first.getPath, footerSchema(spark, first), contract)
     val toUnsafe = UnsafeProjection.create(contract)
     val corrected = RebaseSpec(LegacyBehaviorPolicy.CORRECTED)
     files.flatMap { file =>
-      val reader = ParquetReader
-        .builder(new ParquetReadSupport(None, false, corrected, corrected), file)
-        .withConf(conf)
-        .build()
+      val reader = new ParquetReader.Builder[InternalRow](HadoopInputFile.fromStatus(file, conf), new HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport(): ReadSupport[InternalRow] =
+          new ParquetReadSupport(None, false, corrected, corrected)
+      }.build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map(toUnsafe(_).copy()).toVector
       finally reader.close()
     }
+  }
+
+  /** Write `rows` (Catalyst rows of `schema`) as the whole fit-layer
+    * table `table` under `root`, on the driver: the write twin of
+    * [[readRows]], for the bounded-small tables (`meta`, `centroids`,
+    * `codebooks`, `occupancy`). The rows go through Spark's own parquet
+    * output writer (`ParquetFileFormat.prepareWrite`), so the file carries
+    * what a Spark write of a frame of `schema` would: the session's codec,
+    * and Spark's row metadata and parquet schema with `schema`'s
+    * nullability — the footer [[checkContract]] reads. The file is
+    * written under a hidden name, then the table's earlier data files
+    * are removed and it is renamed into place; a reader landing in
+    * between sees no data file and fails with FileNotFound, the
+    * transient miss [[retryTransientRead]] absorbs. No Spark job.
+    */
+  private def writeRows(spark: SparkSession, root: String, table: String, schema: StructType, rows: Seq[InternalRow]): Unit = {
+    val dir = new Path(root, table)
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val writers = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${writers.getFileExtension(ctx)}"
+    val tmp = new Path(dir, s".$name.tmp")
+    val out = writers.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(out.write)
+    finally out.close()
+    val fs = dir.getFileSystem(job.getConfiguration)
+    dataFiles(fs, dir).foreach(st => fs.delete(st.getPath, false))
+    if (!fs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"AnnIndex table $table: could not rename $tmp into place")
   }
 
   /** A fit-layer table read through its contract ([[readRows]]), as a
@@ -342,7 +395,7 @@ object AnnIndex {
     val found = footerSchema(spark, first)
     val nid = found.find(_.name.equalsIgnoreCase("__nid")).map(_.dataType).getOrElse(NullType)
     val contract = fields("__nid" -> nid, "__codes" -> ArrayType(IntegerType, containsNull = true))
-    checkContract("codes", first, found, contract)
+    checkContract("codes", first.getPath, found, contract)
     contract
   }
 
@@ -905,13 +958,19 @@ object AnnIndex {
   /** Fit the index: coarse k-means ([[Similarity.kmeansCentroids]]) +
     * per-subspace PQ codebooks ([[Similarity.pqCodebooks]]), then ONE
     * assignment pass producing the codes-only corpus index (nearest cell
-    * + m code ids per vector). Both fits come back as local relations
-    * held on the driver, so [[save]] writes them and the handle's
-    * [[Similarity.FitTables]], which the assignment pass reads, is built
-    * from them without a further job. At 100 TB fit on a sample via the
-    * underlying `fitSamplePercent` knobs' discipline and pass the full
-    * corpus here only for the assignment/encode pass — a map-only pass,
-    * no corpus shuffle.
+    * + m code ids per vector). The two fits are independent and run at
+    * once: the PQ fit on a daemon thread that carries the caller's active
+    * session, job tags and job group (so listeners attribute its jobs to
+    * the caller), the k-means fit on the calling thread. Each fit runs
+    * the same plans as alone; their small jobs overlap instead of
+    * queueing. The call returns only after both fits are done; a failure
+    * of either rethrows its own exception, the k-means one first. Both
+    * fits come back as local relations held on the driver, so [[save]]
+    * writes them and the handle's [[Similarity.FitTables]], which the
+    * assignment pass reads, is built from them without a further job. At
+    * 100 TB fit on a sample via the underlying `fitSamplePercent` knobs'
+    * discipline and pass the full corpus here only for the
+    * assignment/encode pass — a map-only pass, no corpus shuffle.
     */
   def fitIvfPq(
       df: DataFrame,
@@ -926,8 +985,9 @@ object AnnIndex {
       dim: Int = Similarity.AutoDim
   ): IvfPqIndex = {
     val d = Similarity.resolveDim(df.select(col(idCol).as("__id"), col(vecCol).as("__v")), dim)
-    val centroids = Similarity.kmeansCentroids(df, idCol, vecCol, cells, iters, seed)
-    val cb = Similarity.pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed)
+    val (centroids, cb) = concurrently(df.sparkSession)(Similarity.kmeansCentroids(df, idCol, vecCol, cells, iters, seed))(
+      Similarity.pqCodebooks(df, idCol, vecCol, d, pqM, pqKs, pqIters, seed)
+    )
     val fit = Similarity.FitTables(centroids, cb, pqKs)
     IvfPqIndex(
       dim = d,
@@ -944,6 +1004,36 @@ object AnnIndex {
       codes = Similarity.assignAndEncode(df, idCol, vecCol, fit, d, pqM),
       fit = fit
     )
+  }
+
+  /** `(a, b)`, with `b` run on a new daemon thread while `a` runs on the
+    * calling thread. The thread carries the caller's active session and
+    * local properties ([[GraftSqlShim.withThreadLocalCaptured]]). Returns
+    * or throws only after both are done and the thread has ended; a
+    * failure rethrows the original exception, `a`'s first (with `b`'s
+    * added as suppressed).
+    */
+  private def concurrently[A, B](spark: SparkSession)(a: => A)(b: => B): (A, B) = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(r, "graft-fit")
+      t.setDaemon(true)
+      t
+    }
+    try {
+      val fb = GraftSqlShim.withThreadLocalCaptured(spark, pool)(b)
+      val ra = try Right(a) catch { case t: Throwable => Left(t) }
+      val rb = try Right(fb.get()) catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+      (ra, rb) match {
+        case (Right(x), Right(y)) => (x, y)
+        case (Left(ta), _) =>
+          rb.left.foreach(tb => if (tb ne ta) ta.addSuppressed(tb))
+          throw ta
+        case (_, Left(tb)) => throw tb
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
   }
 
   /** Persist the index under `dir`. Two shapes, both committed by the
@@ -987,10 +1077,13 @@ object AnnIndex {
     *
     * Codes land under the fit layer `__batch=-1`, partitioned by cell id
     * — the probe-side pruning layout documented on the object — one file
-    * per cell ([[writeCodesLayer]]). Also
-    * snapshots `occupancy/` (per-cell code counts counted from the
-    * WRITTEN files — the physical truth, one cheap codes-only scan): the
-    * fit-time reference [[staleness]] diffs against after [[append]]s.
+    * per cell ([[writeCodesLayer]]): the save's only Spark jobs, one
+    * shuffle and one write. The fit tables (`meta/`, `centroids/`,
+    * `codebooks/`) and the `occupancy/` snapshot are written on the
+    * driver ([[writeRows]]); occupancy (per-cell code counts, the
+    * fit-time reference [[staleness]] diffs against after [[append]]s)
+    * is counted from the footers of the codes files just written
+    * ([[writeOccupancy]]), the physical truth, without a re-scan.
     * Single-maintainer: takes the maintenance lease.
     */
   def save(
@@ -1032,9 +1125,11 @@ object AnnIndex {
   }
 
   /** Write a complete SELF-CONTAINED generation `codes_v<n>`: codes (one
-    * file per cell, [[writeCodesLayer]]), then the generation's own fit
-    * layers, occupancy snapshot and
-    * absorbed-batch sidecar, then the `_ABSORBED_<hwm>` marker LAST (the
+    * file per cell, [[writeCodesLayer]]; its shuffle and write are the
+    * only Spark jobs), then the generation's own fit layers and occupancy
+    * snapshot (written on the driver, [[writeFitTables]] and
+    * [[writeOccupancy]]) and absorbed-batch sidecar, then the
+    * `_ABSORBED_<hwm>` marker LAST (the
     * commit point — a crash anywhere earlier leaves an uncommitted
     * generation no reader selects). Shared by [[refit]] and the
     * overwrite arm of [[save]] so the two commit paths cannot diverge.
@@ -1085,24 +1180,13 @@ object AnnIndex {
     val fs = hadoopFs(spark, dir)
     if (!fs.exists(new Path(dir, "meta"))) return
     val m = readMeta(spark, dir)
-    if (m.getAs[Int]("version") < FormatVersion) {
-      import spark.implicits._
-      Seq(
-        (
-          FormatVersion,
-          m.getAs[Int]("dim"),
-          m.getAs[Int]("cells"),
-          m.getAs[Int]("pq_m"),
-          m.getAs[Int]("pq_ks"),
-          m.getAs[Long]("seed")
-        )
-      ).toDF("version", "dim", "cells", "pq_m", "pq_ks", "seed")
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .parquet(s"$dir/meta")
-    }
+    if (m.getAs[Int]("version") < FormatVersion)
+      writeMeta(spark, dir, m.getAs[Int]("dim"), m.getAs[Int]("cells"), m.getAs[Int]("pq_m"), m.getAs[Int]("pq_ks"), m.getAs[Long]("seed"))
   }
+
+  /** The one `meta` row under `root`, at [[FormatVersion]] ([[writeRows]]). */
+  private def writeMeta(spark: SparkSession, root: String, dim: Int, cells: Int, pqM: Int, pqKs: Int, seed: Long): Unit =
+    writeRows(spark, root, "meta", MetaWritten, Seq(InternalRow(FormatVersion, dim, cells, pqM, pqKs, seed)))
 
   /** Write index-shaped rows (`__cid`, `__nid`, `__codes`, plus `__batch`
     * when it is a partition column) to `path`, partitioned by
@@ -1126,34 +1210,48 @@ object AnnIndex {
 
   /** The fit tables (`meta/`, `centroids/`, `codebooks/`) under `root` —
     * shared by [[save]] (index root) and [[refit]] (generation-scoped).
-    * All three are tiny (1, `cells`, ≤ m·ks rows) — single-file writes.
+    * All three are tiny (1, `cells`, ≤ m·ks rows), written on the driver
+    * ([[writeRows]]): no job for the local relations a fit or a [[load]]
+    * holds. A centroid or codebook table whose columns do not match the
+    * format's contract fails here, before anything is written.
     */
   private def writeFitTables(index: IvfPqIndex, root: String): Unit = {
     val spark = index.centroids.sparkSession
-    import spark.implicits._
-    Seq((FormatVersion, index.dim, index.cells, index.pqM, index.pqKs, index.seed))
-      .toDF("version", "dim", "cells", "pq_m", "pq_ks", "seed")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$root/meta")
-    index.centroids.coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
-    index.codebooks.coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks")
+    val contracts = FitContractsByVersion(FormatVersion)
+    // the frame's own schema is recorded, as a Spark write of it would
+    def table(name: String, df: DataFrame, contract: StructType): (StructType, Seq[InternalRow]) = {
+      val c = df.select(contract.fieldNames.toIndexedSeq.map(col): _*)
+      checkSchema(name, s"writing $root/$name", "the index handle's fit has the wrong columns", c.schema, contract)
+      (c.schema, Similarity.collectRows(c))
+    }
+    val (centroidSchema, centroids) = table("centroids", index.centroids, contracts.centroids)
+    val (codebookSchema, codebooks) = table("codebooks", index.codebooks, contracts.codebooks)
+    writeMeta(spark, root, index.dim, index.cells, index.pqM, index.pqKs, index.seed)
+    writeRows(spark, root, "centroids", centroidSchema, centroids)
+    writeRows(spark, root, "codebooks", codebookSchema, codebooks)
   }
 
-  /** Snapshot `occupancy/` under `root`: per-cell code counts counted from
-    * the WRITTEN fit-layer files of the fresh generation `gen` (the
-    * physical truth, one cheap codes-only scan) — the fit-time reference
-    * [[staleness]] diffs against after [[append]]s and [[delete]]s.
+  /** Snapshot `occupancy/` under `root`: per-cell code counts of the
+    * fresh generation `gen`, counted from the footers of the codes files
+    * the same save has just written (the physical truth; one file per
+    * touched cell, [[writeCodesLayer]]) — the fit-time reference
+    * [[staleness]] diffs against after [[append]]s and [[delete]]s. The
+    * `__HIVE_DEFAULT_PARTITION__` cell (vectors with no cell) counts under
+    * a null `__cid`. Driver-side: one listing and one footer per cell, no
+    * Spark job.
     */
-  private def writeOccupancy(spark: SparkSession, gen: Path, root: String): Unit =
-    committedCodes(spark, gen)
-      .groupBy(col("__cid").cast("int").as("__cid"))
-      .agg(count(lit(1)).as("fit_n"))
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$root/occupancy")
+  private def writeOccupancy(spark: SparkSession, gen: Path, root: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val layer = new Path(gen, s"__batch=$FitBatchId")
+    val fs = layer.getFileSystem(conf)
+    val counts = fs.listStatus(layer).toSeq.filter(st => st.isDirectory && st.getPath.getName.startsWith("__cid=")).map { cell =>
+      val v = ExternalCatalogUtils.unescapePathName(cell.getPath.getName.stripPrefix("__cid="))
+      val cid = if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else Integer.valueOf(v.toInt)
+      (cid, dataFiles(fs, cell.getPath).map(footer(conf, _).getBlocks.asScala.map(_.getRowCount).sum).sum)
+    }
+    val rows = counts.sortBy { case (cid, _) => Option(cid).map(_.intValue) }.map { case (cid, n) => InternalRow(cid, n) }
+    writeRows(spark, root, "occupancy", OccupancyWritten, rows)
+  }
 
   /** Encode a NEW batch against the FROZEN fit — nearest frozen centroid
     * (cell id) + per-subspace nearest frozen codeword (m code ids) —
@@ -1443,7 +1541,11 @@ object AnnIndex {
     * one (spec- and oracle-gated) — and NOT a refit: centroids,
     * codebooks, meta, and the fit-time `occupancy/` snapshot are
     * untouched, so [[staleness]] reads the same drift before and after
-    * (spec-asserted invariant).
+    * (spec-asserted invariant). A generation that carries its own fit
+    * layers (written by [[refit]]) has them copied into the new one on
+    * the driver ([[readRows]] → [[writeRows]]), so the codes shuffle and
+    * write are compaction's only jobs beyond the absorbed-batch
+    * fingerprint of folded append layers.
     *
     * Crash-safe and reader-safe by construction: the new generation's
     * root `_SUCCESS` marker IS the commit — a crash mid-write leaves an
@@ -1487,7 +1589,7 @@ object AnnIndex {
     )
     // a generation written by refit() owns its fit layers — carry them
     // into the compacted generation so readers keep resolving the refit
-    // quantizer (tiny tables read on the driver, single-file copies);
+    // quantizer (tiny tables read and written on the driver, no job);
     // compaction of an unrefit index keeps falling back to the index
     // root's fit
     val curFitRoot = fitRoot(spark, dir, cur)
@@ -1499,11 +1601,7 @@ object AnnIndex {
         "codebooks" -> fitContracts.codebooks,
         "occupancy" -> OccupancyContract
       ).foreach { case (sub, contract) =>
-        readTable(spark, curFitRoot, sub, contract)
-          .coalesce(1)
-          .write
-          .mode("overwrite")
-          .parquet(s"$dir/codes_v$next/$sub")
+        writeRows(spark, s"$dir/codes_v$next", sub, contract, readRows(spark, curFitRoot, sub, contract))
       }
     writeAbsorbedBatches(spark, s"$dir/codes_v$next", absorbed)
     writeAbsorbedMarker(spark, new Path(s"$dir/codes_v$next"), hwm)

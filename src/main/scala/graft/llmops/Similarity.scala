@@ -1325,7 +1325,7 @@ object Similarity {
     * one job, none when `df` is a local relation. Reported to
     * `QueryExecutionListener`s as a "collect", like `Dataset.collect`.
     */
-  private def collectRows(df: DataFrame): Seq[InternalRow] = {
+  private[llmops] def collectRows(df: DataFrame): Seq[InternalRow] = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect()).toSeq
   }

@@ -46,6 +46,18 @@ object GraftSqlShim {
       )
     )
 
+  /** Run `body` on `exec` with the caller's active session and local
+    * properties (job tags, job group) — Spark's own
+    * `SQLExecution.withThreadLocalCaptured`, so listeners attribute the
+    * jobs `body` launches as if the caller had run them.
+    */
+  def withThreadLocalCaptured[T](
+      spark: org.apache.spark.sql.SparkSession,
+      exec: java.util.concurrent.ExecutorService
+  )(body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution
+      .withThreadLocalCaptured(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(body)
+
   /** Register a function into an existing (classic) session's registry —
     * the post-creation counterpart of SparkSessionExtensions.injectFunction.
     */

@@ -325,6 +325,115 @@ class AnnIndexHardeningSpec extends AnyFunSuite with SparkTestSession {
     assert(AnnIndex.staleness(spark, dir).filter(col("added") =!= 0).count() == 0, "every occupancy row must load")
   }
 
+  /** The fit tables an index root or self-contained generation holds. */
+  private val FitLayerTables = Seq("meta", "centroids", "codebooks", "occupancy")
+
+  /** What the footer of the one data file of the table at `path` records:
+    * Spark's row metadata (the schema JSON a contract check reads), the
+    * parquet schema and the column codecs.
+    */
+  private def footerOf(path: String): (String, String, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val files = new java.io.File(path).listFiles().filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+    assert(files.length == 1, s"$path must hold one data file, holds ${files.map(_.getName).mkString(", ")}")
+    val footer = org.apache.parquet.hadoop.ParquetFileReader
+      .readFooter(spark.sparkContext.hadoopConfiguration, new Path(files.head.getPath))
+    val meta = footer.getFileMetaData
+    (
+      meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+      meta.getSchema.toString,
+      footer.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.toString)).distinct.toSeq
+    )
+  }
+
+  /** A copy of the index directory `dir` whose fit tables under `sub`
+    * (the root, or a generation) are rewritten by Spark jobs the way the
+    * index used to write them: `meta` from `idx`'s knobs, `centroids` and
+    * `codebooks` from `idx`'s fit, `occupancy` as a count per cell of the
+    * codes written under `sub`'s fit layer.
+    */
+  private def sparkWritten(dir: String, sub: String, idx: AnnIndex.IvfPqIndex): String = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val ref = java.nio.file.Files.createTempDirectory("graft_spark_tables").toString + "/index"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    org.apache.hadoop.fs.FileUtil.copy(local, new Path(dir), local, new Path(ref), false, conf)
+    val root = if (sub.isEmpty) ref else s"$ref/$sub"
+    Seq((5, idx.dim, idx.cells, idx.pqM, idx.pqKs, idx.seed))
+      .toDF("version", "dim", "cells", "pq_m", "pq_ks", "seed")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    idx.centroids.coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
+    idx.codebooks.coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks")
+    val gen = if (sub.isEmpty) s"$ref/codes_v1" else root
+    spark.read.parquet(s"$gen/__batch=${AnnIndex.FitBatchId}")
+      .groupBy(col("__cid").cast("int").as("__cid"))
+      .agg(count(lit(1)).as("fit_n"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/occupancy")
+    ref
+  }
+
+  /** Every fit table under `sub` of `dir` equals the one under `sub` of
+    * `ref`: the same rows and the same footer.
+    */
+  private def assertSameTables(dir: String, ref: String, sub: String): Unit =
+    FitLayerTables.foreach { t =>
+      val (a, b) = (Seq(dir, sub, t).filter(_.nonEmpty).mkString("/"), Seq(ref, sub, t).filter(_.nonEmpty).mkString("/"))
+      assert(rows(spark.read.parquet(a)) == rows(spark.read.parquet(b)), s"$sub/$t: rows differ from the Spark-written table")
+      assert(footerOf(a) == footerOf(b), s"$sub/$t: footer differs from the Spark-written table")
+    }
+
+  /** The staleness and maintenance ledgers `dir` and `ref` answer, and their probes. */
+  private def assertSameLedgers(dir: String, ref: String, batch: org.apache.spark.sql.DataFrame): Unit = {
+    assert(rows(AnnIndex.staleness(spark, dir)) == rows(AnnIndex.staleness(spark, ref)), "staleness differs")
+    assert(rows(AnnIndex.maintenancePolicy(spark, dir)) == rows(AnnIndex.maintenancePolicy(spark, ref)), "maintenancePolicy differs")
+    def probe(d: String): Seq[String] =
+      rows(AnnIndex.probeIvfPqPruned(AnnIndex.load(spark, d), batch, "vec_id", "v", k = 3, nprobe = 2))
+    assert(probe(dir) == probe(ref), "probes of the two indexes differ")
+  }
+
+  test("fit tables written on the driver equal Spark's writes of them: save, refit, tombstone and compact, null and emptied cells") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // three clusters of exact duplicates: five k-means cells keep at most
+    // three after a Lloyd round; and one null vector, indexed under a null cell
+    val base = (0 until 36).map(i => (i.toLong, Seq.tabulate(8)(j => ((i % 3) * 5 + j % 2).toFloat)))
+    val df = (base.map { case (i, v) => (i, Option(v)) } :+ ((36L, None: Option[Seq[Float]]))).toDF("vec_id", "v").localCheckpoint(true)
+    def fit(corpus: org.apache.spark.sql.DataFrame, seed: Long): AnnIndex.IvfPqIndex =
+      AnnIndex.fitIvfPq(corpus, "vec_id", "v", cells = 5, iters = 2, seed = seed, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+    val idx = fit(df, 42L)
+    assert(idx.centroids.count() < 5, "fixture: Lloyd's must empty a cell")
+    val dir = java.nio.file.Files.createTempDirectory("graft_driver_tables").toString
+    val (_, saved) = graft.QueryMetrics.measure(spark, "save")(AnnIndex.save(idx, dir))
+    assert(saved.jobs <= 2, s"a fresh save launched ${saved.jobs} jobs, expected at most 2 (the codes shuffle and write)")
+    assert(spark.read.parquet(s"$dir/occupancy").filter(col("__cid").isNull).count() == 1, "fixture: a null cell")
+    val probes = df.filter(col("vec_id") < 4).localCheckpoint(true)
+    val saveRef = sparkWritten(dir, "", idx)
+    assertSameTables(dir, saveRef, "")
+    assertSameLedgers(dir, saveRef, probes)
+
+    // a refit over a v4 root: the generation's own fit tables, and the
+    // root meta's version field tombstoned
+    rewrite(s"$dir/meta")(_.withColumn("version", lit(4)))
+    val survivors = df.filter(col("vec_id") =!= 0L)
+    AnnIndex.refit(spark, dir, survivors, "vec_id", "v", cells = 5, iters = 2, seed = 7L, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+    val refitRef = sparkWritten(dir, "codes_v2", fit(survivors, 7L))
+    assertSameTables(dir, refitRef, "codes_v2")
+    assertSameLedgers(dir, refitRef, probes)
+    assert(rows(spark.read.parquet(s"$dir/meta")) == rows(spark.read.parquet(s"$saveRef/meta")), "the tombstoned root meta")
+    assert(footerOf(s"$dir/meta") == footerOf(s"$saveRef/meta"), "the tombstoned root meta's footer")
+
+    // compact carries the refit generation's fit tables without a job, as
+    // Spark wrote the copies it read through their contracts
+    val (_, compacted) = graft.QueryMetrics.measure(spark, "compact")(AnnIndex.compact(spark, dir))
+    assert(compacted.jobs <= 2, s"compact launched ${compacted.jobs} jobs, expected at most 2 (the codes shuffle and write)")
+    val copies = java.nio.file.Files.createTempDirectory("graft_spark_copies").toString
+    FitLayerTables.foreach { t =>
+      spark.read.parquet(s"$dir/codes_v2/$t").coalesce(1).write.parquet(s"$copies/$t")
+      assert(rows(spark.read.parquet(s"$dir/codes_v3/$t")) == rows(spark.read.parquet(s"$dir/codes_v2/$t")), s"compact's $t rows")
+      assert(footerOf(s"$dir/codes_v3/$t") == footerOf(s"$copies/$t"), s"compact's $t footer")
+    }
+    assert(rows(AnnIndex.staleness(spark, dir)) == rows(AnnIndex.staleness(spark, refitRef)), "staleness after compact")
+  }
+
   test("contract-pinned load accepts a v4 root and string or int __nid ids, and probes like the fitted handle") {
     import org.apache.spark.sql.functions.{col, lit}
     val v4 = savedIndex(fixture(45, seedOffset = 3), "graft_contract_v4")

@@ -14,12 +14,13 @@ import scala.util.Random
   *
   *   1. `CellTopK` kernel ≡ [[KernelEquivalenceSpec.topCellsHof]] (the HOF oracle its
   *      scaladoc claims is pinned) over adversarial generated inputs —
-  *      NaN, ±0.0, zero-norm vectors (null/NaN cosine), exact csim ties,
-  *      empty and shorter-than-upTo centroid arrays — under BOTH the
-  *      interpreted and codegen expression paths.
+  *      NaN, ±0.0, zero-norm and null centroid vectors (null/NaN cosine),
+  *      exact csim ties, empty and shorter-than-upTo centroid arrays —
+  *      under BOTH the interpreted and codegen expression paths, with
+  *      codegen fallback off.
   *   2. `CodewordArgmin` ≡ `array_min(transform(entries, struct(l2sq,
-  *      cid, cv)))`, same regime (incl. the null-distance-first edge and
-  *      the empty-entries → null edge).
+  *      cid, cv)))`, same regime (incl. the null-distance-first edge, a
+  *      null-cv winner and the empty-entries → null edge).
   *   3. [[Similarity.kmeansCentroids]] ≡ an independent window/explode
   *      Lloyd reference (the pre-r18 crossJoin+max_by formulation,
   *      rebuilt from public primitives) on random data — pins the
@@ -98,17 +99,16 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
     val data = (1 to rows).map { i =>
       val nCents = rnd.nextInt(6) // includes 0 (empty) and < upTo counts
       val base = advVec(dim, zeroNorm = i % 7 == 0)
-      // zero-norm centroid vectors → NULL cosine (the kernel's null-
-      // scored tail path); duplicated centroid VECTORS → exact csim ties
-      // the ncid tie-break must resolve identically. Null __cv itself is
-      // outside the contract: centroids are Lloyd means, never null.
+      // zero-norm centroid vectors and null ones → NULL cosine (the
+      // kernel's null-scored tail path); duplicated centroid VECTORS →
+      // exact csim ties the ncid tie-break must resolve identically
       var prev: Seq[Double] = null
       val cents = (0 until nCents).map { c =>
         val cv =
           if (c % 3 == 2 && prev != null) prev // exact tie with previous
           else advVec(dim, zeroNorm = c % 5 == 4 || rnd.nextInt(8) == 0)
         prev = cv
-        (-c.toLong, cv)
+        (-c.toLong, if ((i + c) % 6 == 5) null else cv)
       }
       // production order is ncid ASC (FitTables sorts); shuffle
       // some rows to prove the kernel is input-order independent like the
@@ -129,7 +129,7 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
         ).as("__cents")
       )
       .localCheckpoint(true)
-    underBothCodegenPaths {
+    withConf("spark.sql.codegen.fallback" -> "false")(underBothCodegenPaths {
       for (upTo <- Seq(1, 2, 4, 7)) {
         val both = df.select(
           graft.functions.native.cellTopK(col("__qv"), col("__cents"), upTo).as("ker"),
@@ -138,7 +138,7 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
         val diff = both.filter(!(col("ker") <=> col("hof"))).count()
         assert(diff == 0L, s"cellTopK != topCellsHof on $diff rows at upTo=$upTo")
       }
-    }
+    })
   }
 
   // ------------------------------------------------------------------
@@ -151,12 +151,13 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
       val nE = rnd.nextInt(6) // includes 0 → null result
       val entries = (0 until nE).map { c =>
         // duplicate vectors → exact distance ties; occasional
-        // length-mismatched cv → null l2sq (nulls-first ordering edge)
+        // length-mismatched or null cv → null l2sq (nulls-first ordering
+        // edge; a null-cv winner keeps its null cv)
         val cv =
           if (c % 4 == 3) advVec(sub + 1, zeroNorm = false)
           else if (c % 2 == 1 && c > 0) advVec(sub, zeroNorm = false)
           else advVec(sub, zeroNorm = c % 5 == 4)
-        (c, cv)
+        (c, if ((i + c) % 5 == 2) null else cv)
       }
       (i.toLong, sv, entries)
     }
@@ -177,7 +178,7 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
         )
       ).otherwise(col("__entries"))
     )
-    underBothCodegenPaths {
+    withConf("spark.sql.codegen.fallback" -> "false")(underBothCodegenPaths {
       val hofWin = array_min(
         transform(
           col("__entries"),
@@ -206,7 +207,7 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
       )
       val diff = normalized.filter(!(col("ker") <=> col("hof"))).count()
       assert(diff == 0L, s"codewordArgmin != array_min HOF on $diff rows")
-    }
+    })
   }
 
   // ------------------------------------------------------------------

@@ -993,6 +993,36 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("AnnIndex.fitIvfPq runs its two fits at once: the caller's tag counts every job, rows unchanged, failures rethrown") {
+    val rnd = new scala.util.Random(89)
+    val vecs = (0 until 60).map { i =>
+      (i.toLong, Seq.tabulate(8)(_ => (i % 3 * 5).toFloat + rnd.nextFloat() * 0.1f))
+    }
+    val df = vecs.toDF("vec_id", "v").localCheckpoint(true)
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] = d.collect().map(_.toString).sorted.toSeq
+    val (idx, atOnce) = graft.QueryMetrics.measure(spark, "fit-at-once") {
+      AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+    }
+    val (km, kmJobs) = jobsOf("kmeans")(Similarity.kmeansCentroids(df, "vec_id", "v", cells = 3, iters = 2))
+    val (pq, pqJobs) = jobsOf("pq")(Similarity.pqCodebooks(df, "vec_id", "v", dim = 8, m = 2, ks = 4, iters = 2))
+    assert(atOnce.jobs == kmJobs + pqJobs, s"fitIvfPq counted ${atOnce.jobs} jobs, the two fits alone $kmJobs + $pqJobs")
+    assert(rows(idx.centroids) == rows(km) && rows(idx.codebooks) == rows(pq), "each fit must give its serial rows")
+
+    def fitThreads: Int = Thread.getAllStackTraces.keySet.asScala.count(t => t.getName == "graft-fit" && t.isAlive)
+    val small = df.filter($"vec_id" < 6)
+    val both = intercept[IllegalArgumentException] {
+      AnnIndex.fitIvfPq(small, "vec_id", "v", cells = 7, iters = 1, pqM = 2, pqKs = 7, pqIters = 1, dim = 8)
+    }
+    assert(both.getMessage.contains("kmeansCentroids: fit sample has only 6 rows but cells=7"), both.getMessage)
+    assert(both.getSuppressed.exists(_.getMessage.contains("pqCodebooks: fit sample has only 6 rows but ks=7")))
+    assert(fitThreads == 0, "a failed fit must leave no fit thread running")
+    val pqOnly = intercept[IllegalArgumentException] {
+      AnnIndex.fitIvfPq(small, "vec_id", "v", cells = 2, iters = 1, pqM = 2, pqKs = 7, pqIters = 1, dim = 8)
+    }
+    assert(pqOnly.getMessage.contains("pqCodebooks: fit sample has only 6 rows but ks=7"), pqOnly.getMessage)
+    assert(fitThreads == 0, "a failed fit must leave no fit thread running")
+  }
+
   test("kmeansCentroids and pqCodebooks fail loudly on a fit sample smaller than cells or ks") {
     val vecs = (0L until 6L).map(i => (i, Seq.tabulate(4)(d => (i * 3 + d).toFloat))).toDF("vec_id", "v")
     val km = intercept[IllegalArgumentException](Similarity.kmeansCentroids(vecs, "vec_id", "v", cells = 7, iters = 1))

@@ -12,7 +12,9 @@ import scala.jdk.CollectionConverters._
 
 /** Diagnostic main: the executed plans of the IVF-PQ index lifecycle,
   * captured with a `QueryExecutionListener` as each query runs, after each
-  * phase's total Spark job count from [[graft.QueryMetrics]]. Three
+  * phase's total Spark job count, wall seconds and task seconds from
+  * [[graft.QueryMetrics]]. The two fits of `fitIvfPq` run at once, so
+  * their plans interleave in completion order. Three
   * audits, all at the fixture's knobs (cells 8, iters 2, m 8, ks 32,
   * pqIters 2):
   *   - `fit` (the default): one [[graft.llmops.AnnIndex.fitIvfPq]] on the
@@ -48,7 +50,7 @@ object FitPlanAudit {
       GraftSqlShim.drainListenerBus(spark.sparkContext)
       executed.clear()
       val (out, m) = QueryMetrics.measure(spark, name)(body)
-      println(s"$name: ${m.jobs} Spark jobs, ${executed.size} reported query executions")
+      println(f"$name: ${m.jobs} Spark jobs, wall_s ${m.wallS}%.3f, task_s ${m.taskS}%.3f, ${executed.size} reported query executions")
       executed.asScala.zipWithIndex.foreach { case ((funcName, qe), i) =>
         println(s"\n================ $name execution ${i + 1}: $funcName ================")
         println(qe.explainString(ExplainMode.fromString("formatted")))
