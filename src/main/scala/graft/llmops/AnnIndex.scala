@@ -1,6 +1,7 @@
 package graft.llmops
 
 import graft.contracts.{ContractViolation, SchemaCompare, SchemaPolicy}
+import graft.functions.NativeMath
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
@@ -13,7 +14,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -63,9 +65,12 @@ import scala.jdk.CollectionConverters._
   *         ~30× compression vs float32 that makes a 100 TB corpus a ~3 TB
   *         index, partition-laid-out so a probe of `nprobe` cells prunes
   *         to `nprobe/cells` of the index files. A small online query
-  *         batch is ranked on the driver ([[probeIvfPqPruned]]) and
-  *         filters `__cid IN (...)` for static partition pruning; the registered
-  *         batch query keeps the join form (dynamic pruning / AQE
+  *         batch is served by [[probeIvfPqPruned]]: its cells are ranked
+  *         on the driver, the codes scan filters `__cid IN (...)` for
+  *         static partition pruning and keeps a bounded shortlist per
+  *         query in one job, and the rerank fetches the shortlisted
+  *         vectors by id in a second; the registered batch query keeps
+  *         the join form ([[probeIvfPq]]: dynamic pruning / AQE
   *         territory) because its query side is corpus-sized.
   *
   * Version discipline: readers [[load]] the current generation, read
@@ -2088,20 +2093,32 @@ object AnnIndex {
   }
 
   /** [[probeIvfPq]] for SMALL query batches — the online-serving shape:
-    * rank the batch's probed cells on the DRIVER and filter the codes scan
-    * with a LITERAL cell-id IN list. The batch is collected (batch × dim
-    * values — small by this method's contract), each query is quantized
-    * and ranked against the handle's centroids with the same
-    * [[graft.functions.NativeMath.cellTopK]] kernel [[probeIvfPq]]
-    * evaluates in Spark, and the (query, probed cell) rows ride into the
-    * ADC rank as a local relation; building the probe launches at most the
-    * one job that collects the batch (none for a local batch). The fit —
-    * the centroid entries and the PQ codeword map — comes from the
-    * handle's driver-side [[Similarity.FitTables]], so no probe plans a
-    * `centroids/` or `codebooks/` scan. With `rerank > k`, `rerankFrom`
-    * supplies the CANDIDATE vectors only: the query vectors come from the
-    * collected batch, so the rerank joins `rerankFrom` once, and a query
-    * whose id is missing from `rerankFrom` is still reranked.
+    * one driver pass over the batch and at most two Spark jobs, returning
+    * a local relation of the same rows and schema as [[probeIvfPq]] on
+    * the same batch.
+    *   1. The batch is collected once (no job for a local batch; batch ×
+    *      dim values — small by this method's contract). Each vector is
+    *      quantized and its `nprobe` cells ranked on the driver with the
+    *      same [[graft.functions.NativeMath.quantizeInt8]] and
+    *      [[graft.functions.NativeMath.cellTopK]] kernels [[probeIvfPq]]
+    *      evaluates in Spark, against the handle's driver-side
+    *      [[Similarity.FitTables]] (no `centroids/` or `codebooks/` scan).
+    *      The rows of one qid form one query group, as they share one
+    *      window partition in the join form. The map from probed cell to
+    *      its (group, qid, quantized vector) rows reaches Spark as one
+    *      broadcast value, destroyed when the probe returns.
+    *   2. Shortlist, one job (execution `probeIvfPqPruned.shortlist`): the
+    *      codes scan filtered by a LITERAL cell-id IN list, each index row
+    *      reconstructed once and scored against its cell's queries, and a
+    *      bounded top max(k, rerank) per group kept per partition
+    *      ([[Similarity.adcShortlist]]); the driver merges them.
+    *   3. Rerank, one job and only when `rerank > k` (execution
+    *      `probeIvfPqPruned.fetch`): the shortlisted ids' vectors are
+    *      fetched from `rerankFrom` through a literal id filter and scored
+    *      on the driver by the [[graft.functions.NativeMath.cosine]] kernel
+    *      `array_cosine` calls. It keeps the join form's inner-join
+    *      semantics: an id `rerankFrom` holds twice yields two rows, a
+    *      missing one none, and the query vectors come from the batch.
     * `maxProbedCells` caps the IN-list size: the guard fires after the
     * batch is collected and ranked, so it protects plan
     * quality (a huge literal IN list defeats the pruning win), not driver
@@ -2110,9 +2127,7 @@ object AnnIndex {
     * partition pruning at planning time: the scan touches only the probed
     * cells' files — for a 10-vector batch at nprobe = 2 over 1,024 cells,
     * at most 20/1,024 of a ~3 TB index — where [[probeIvfPq]]'s join form
-    * leaves file pruning to runtime (DPP/AQE). Results are identical to
-    * [[probeIvfPq]] on the same batch (same kernel, same ADC rank; the
-    * filter only removes cells no query probes).
+    * leaves file pruning to runtime (DPP/AQE).
     * `idFilter` is the filtered-search predicate — see [[probeIvfPq]];
     * here it composes with the cell IN list on the same scan, so a
     * filtered online probe still reads only the probed cells' files.
@@ -2135,29 +2150,89 @@ object AnnIndex {
       "rerank > k needs rerankFrom (id, vector) to fetch originals from — " +
         "a small online batch is almost never a valid rerank vector source"
     )
-    // one collect serves the cell ranking and the rerank's query vectors
     val batch = queries.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
-    val local = batch.sparkSession.createDataFrame(batch.collect().toSeq.asJava, batch.schema)
-    val (probed, probedCells) =
-      Similarity.cellRanksLocal(Similarity.quantizedBase(local, "__oid", "__ov"), index.fit, nprobe)
+    val idField = batch.schema("__oid")
+    lazy val vcode = NativeMath.typeCode(batch.schema("__ov").dataType)
+    val keyOf = UnsafeProjection.create(Seq(BoundReference(0, idField.dataType, nullable = true)))
+    val groups = Similarity.collectRows(batch).groupBy(r => keyOf(r).copy()).values.toIndexedSeq
+    def qid(g: Int): Any = { val r = groups(g).head; if (r.isNullAt(0)) null else r.get(0, idField.dataType) }
+    val byCell = scala.collection.mutable.LinkedHashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Any]]
+    for ((members, g) <- groups.zipWithIndex; r <- members if !r.isNullAt(1)) {
+      val qv = Similarity.quantizedLocal(r.getArray(1), vcode)
+      Similarity.cellsLocal(qv, NativeMath.TDouble, index.fit, nprobe).foreach { c =>
+        byCell.getOrElseUpdate(c, scala.collection.mutable.ArrayBuffer.empty) += new GenericInternalRow(Array[Any](g, qid(g), qv))
+      }
+    }
     require(
-      probedCells.length <= maxProbedCells,
-      s"batch probes ${probedCells.length} cells > maxProbedCells=$maxProbedCells — " +
+      byCell.size <= maxProbedCells,
+      s"batch probes ${byCell.size} cells > maxProbedCells=$maxProbedCells — " +
         "use probeIvfPq (join form) for corpus-sized batches"
     )
-    val cellPruned = index.codes.filter(col("__cid").isin(probedCells.map(_.toInt): _*))
-    val prunedCodes = idFilter.map(cellPruned.filter).getOrElse(cellPruned)
-    Similarity.pqAdcRank(
-      probed.select(col("__id").as("__qid"), col("__qv"), col("__cid")),
-      prunedCodes,
-      index.fit,
-      index.pqM,
-      index.pqKs,
-      k,
-      rerank,
-      rerankFrom.getOrElse(queries).select(col(idCol).as("__oid"), col(vecCol).as("__ov")),
-      local,
-      excludeSelf
+    val nidField = index.codes.schema("__nid")
+    val shortlists =
+      if (byCell.isEmpty) Array.fill(groups.size)(Seq.empty[InternalRow])
+      else {
+        val cellPruned = index.codes.filter(col("__cid").isin(byCell.keys.map(_.toInt).toSeq: _*))
+        val prunedCodes = idFilter.map(cellPruned.filter).getOrElse(cellPruned)
+        val probeType = StructType(
+          Seq(StructField("__g", IntegerType, nullable = false), idField.copy(name = "__qid"), StructField("__qv", ArrayType(DoubleType)))
+        )
+        val probesType = MapType(LongType, ArrayType(probeType, containsNull = false), valueContainsNull = false)
+        val probes = Similarity.BroadcastRow(
+          StructField("__probes", probesType, nullable = false) ->
+            new ArrayBasedMapData(
+              new GenericArrayData(byCell.keys.toArray[Any]),
+              new GenericArrayData(byCell.values.map(ps => new GenericArrayData(ps.toArray)).toArray[Any])
+            )
+        )
+        try Similarity.adcShortlist(prunedCodes, probes, groups.size, index.fit, index.pqM, index.pqKs, math.max(k, rerank), excludeSelf)
+        finally probes.destroy()
+      }
+    val ranked =
+      if (rerank <= k) shortlists
+      else {
+        val candidates = rerankFrom.get.select(col(idCol).as("__oid"), col(vecCol).as("__ov"))
+        val nidType = nidField.dataType
+        val nids = shortlists.iterator.flatten.filterNot(_.isNullAt(1)).map(_.get(1, nidType)).toSeq.distinct
+        val fetched =
+          if (nids.isEmpty) Nil
+          else
+            Similarity.collectRows(
+              candidates
+                .filter(col("__oid").isin(nids.map(CatalystTypeConverters.convertToScala(_, nidType)): _*))
+                .select(col("__oid").cast(nidType), col("__ov")),
+              "probeIvfPqPruned.fetch"
+            )
+        def vec(r: InternalRow): ArrayData = if (r.isNullAt(1)) null else r.getArray(1)
+        val vecsOf = fetched.groupBy(_.get(0, nidType)).map { case (nid, rs) => nid -> rs.map(vec) }
+        val ocode = NativeMath.typeCode(candidates.schema("__ov").dataType)
+        val ord = Similarity.rankOrder(nidType)
+        shortlists.zipWithIndex.map { case (shortlist, g) =>
+          // the join form joins the query vectors on qid: a null qid drops
+          if (qid(g) == null) Seq.empty[InternalRow]
+          else {
+            val qvs = groups(g).map(vec)
+            val scored = for {
+              s <- shortlist if !s.isNullAt(1)
+              nid = s.get(1, nidType)
+              ov <- vecsOf.getOrElse(nid, Nil)
+              qv <- qvs
+            } yield {
+              val exact = if (qv == null || ov == null) null else NativeMath.cosine(qv, ov, vcode, ocode)
+              new GenericInternalRow(Array[Any](exact, nid)): InternalRow
+            }
+            scored.sorted(ord).take(k)
+          }
+        }
+      }
+    val rows = for {
+      (rs, g) <- ranked.toSeq.zipWithIndex
+      (r, i) <- rs.take(k).zipWithIndex
+    } yield new GenericInternalRow(Array[Any](qid(g), if (r.isNullAt(1)) null else r.get(1, nidField.dataType), i + 1L)): InternalRow
+    GraftSqlShim.localRelation(
+      queries.sparkSession,
+      StructType(Seq(idField.copy(name = "qid"), nidField.copy(name = "nid"), StructField("rank", LongType, nullable = false))),
+      rows
     )
   }
 }

@@ -5,12 +5,13 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, MapType, ShortType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
@@ -1178,7 +1179,7 @@ object Similarity {
     *   - `__cents` — the centroid entries array<struct<__ncid, __cv>>
     *     (negated cid, so the kernel's (csim desc, cid asc) order is a
     *     plain struct order; sorted), the cell-assignment table of
-    *     [[assignAndEncode]], [[cellRanks]] and [[cellRanksLocal]];
+    *     [[assignAndEncode]], [[cellRanks]] and [[cellsLocal]];
     *   - `__cbm` — a map from subspace to its cid-sorted codeword entries
     *     array<struct<__cid, __cv>>, the encode table (a map, not a
     *     positional array: Lloyd's can drop emptied cells, so (m, cid)
@@ -1191,14 +1192,11 @@ object Similarity {
     * codebooks.
     *
     * The value is built from the collected tables on the driver, so using
-    * it costs no job. Spark passes reach it through one non-foldable
-    * [[graft.functions.BroadcastValue]] leaf: the value is broadcast once
-    * per `FitTables` on first use, never copied into a plan. It is one
-    * `UnsafeRow` of the fields above. `cidType` is the source table's
-    * `__cid` type, which the kernels' long ncid is cast back to.
+    * it costs no job: it is one [[BroadcastRow]] of the fields above,
+    * broadcast once per `FitTables` on first use. `cidType` is the source
+    * table's `__cid` type, which the kernels' long ncid is cast back to.
     */
-  final class FitTables private (private[llmops] val row: UnsafeRow, val schema: StructType, val cidType: DataType)
-      extends Serializable {
+  final class FitTables private (r: UnsafeRow, s: StructType, val cidType: DataType) extends BroadcastRow(r, s) {
 
     private[llmops] def cents: ArrayData = row.getArray(schema.fieldIndex("__cents"))
 
@@ -1207,16 +1205,23 @@ object Similarity {
       schema("__cents").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]("__cv").dataType
     )
 
+    private[llmops] def centsCol: Column = field("__cents")
+    private[llmops] def cbmCol: Column = field("__cbm")
+    private[llmops] def cbCol: Column = field("__cb")
+  }
+
+  /** One row of Catalyst data built on the driver, read by Spark passes
+    * through one non-foldable [[graft.functions.BroadcastValue]] leaf:
+    * broadcast once on first use, never copied into a plan, and no job.
+    */
+  private[llmops] class BroadcastRow(private[llmops] val row: UnsafeRow, val schema: StructType) extends Serializable {
+
     @transient private var bc: Broadcast[UnsafeRow] = _
 
-    private def value: Column = synchronized {
+    private[llmops] def field(name: String): Column = synchronized {
       if (bc == null) bc = SparkContext.getOrCreate().broadcast(row)
-      graft.functions.native.broadcastValue(bc, schema)
+      graft.functions.native.broadcastValue(bc, schema).getField(name)
     }
-
-    private[llmops] def centsCol: Column = value.getField("__cents")
-    private[llmops] def cbmCol: Column = value.getField("__cbm")
-    private[llmops] def cbCol: Column = value.getField("__cb")
 
     /** Drop the broadcast from the executors and the driver now, instead
       * of when the ContextCleaner finds it unreachable. Plans built before
@@ -1227,6 +1232,20 @@ object Similarity {
         bc.destroy()
         bc = null
       }
+    }
+  }
+
+  private[llmops] object BroadcastRow {
+
+    /** The row of `fields`' values, schema'd by their `StructField`s. */
+    def apply(fields: (StructField, Any)*): BroadcastRow = {
+      val (row, schema) = unsafe(fields)
+      new BroadcastRow(row, schema)
+    }
+
+    private[Similarity] def unsafe(fields: Seq[(StructField, Any)]): (UnsafeRow, StructType) = {
+      val schema = StructType(fields.map(_._1))
+      (UnsafeProjection.create(schema).apply(new GenericInternalRow(fields.map(_._2).toArray)).copy(), schema)
     }
   }
 
@@ -1260,9 +1279,8 @@ object Similarity {
     private type Field = (StructField, Any)
 
     private def of(cidType: DataType, fields: Field*): FitTables = {
-      val schema = StructType(fields.map(_._1))
-      val row = new GenericInternalRow(fields.map(_._2).toArray)
-      new FitTables(UnsafeProjection.create(schema).apply(row).copy(), schema, cidType)
+      val (row, schema) = BroadcastRow.unsafe(fields)
+      new FitTables(row, schema, cidType)
     }
 
     // array_sort's element order
@@ -1323,44 +1341,126 @@ object Similarity {
   /** Collect `df` as Catalyst rows, so every vector stays one compact
     * array from the scan to the driver, never boxed element by element:
     * one job, none when `df` is a local relation. Reported to
-    * `QueryExecutionListener`s as a "collect", like `Dataset.collect`.
+    * `QueryExecutionListener`s under `name`, "collect" like
+    * `Dataset.collect` by default.
     */
-  private[llmops] def collectRows(df: DataFrame): Seq[InternalRow] = {
+  private[llmops] def collectRows(df: DataFrame, name: String = "collect"): Seq[InternalRow] = {
     val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect()).toSeq
+    SQLExecution.withNewExecutionId(qe, Some(name))(qe.executedPlan.executeCollect()).toSeq
   }
 
-  /** [[cellRanks]] of a SMALL batch, ranked on the driver: `base`
-    * (`__id`, `__qv`) is collected, each vector is ranked against the
-    * fit's centroid entries with the same
-    * [[graft.functions.NativeMath.cellTopK]] kernel the Spark pass
-    * evaluates, and the (`__id`, `__qv`, `__cid`) rows come
-    * back as a local relation — no job beyond the collect, and none when
-    * `base` is itself local. Rows are identical to [[cellRanks]]'s: a null
-    * vector ranks no cell (the kernel's null-in/null-out, exploded to
-    * nothing), and a null element or a wrong-length vector scores every
-    * cell null and so ranks the first `upTo` cells by cid. Also returns
-    * the distinct probed cell ids.
+  /** [[quantizedVec]] of one vector on the driver (`code` is its
+    * [[NativeMath.typeCode]]): the same kernel, under the session's ANSI
+    * mode, then the exact int → double widening.
     */
-  private[llmops] def cellRanksLocal(base: DataFrame, fit: FitTables, upTo: Int): (DataFrame, Seq[Long]) = {
+  private[llmops] def quantizedLocal(v: ArrayData, code: Int): ArrayData = {
+    val q = NativeMath.quantizeInt8(v, code, SQLConf.get.ansiEnabled)
+    new GenericArrayData(Array.tabulate[Any](q.numElements())(i => if (q.isNullAt(i)) null else q.getInt(i).toDouble))
+  }
+
+  /** The ids of the `upTo` cells [[cellRanks]] gives the quantized vector
+    * `qv` (`vcode` its [[NativeMath.typeCode]]), in rank order, ranked on
+    * the driver by the same [[NativeMath.cellTopK]] kernel against `fit`'s
+    * centroid entries: none for a null vector, and the first `upTo` cells
+    * by cid for a null element or a wrong length (every cell scores null).
+    */
+  private[llmops] def cellsLocal(qv: ArrayData, vcode: Int, fit: FitTables, upTo: Int): Array[Long] = {
     require(upTo > 0, "upTo must be positive")
-    val qvType = base.schema("__qv").dataType
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qvType)
-    val vcode = NativeMath.typeCode(qvType)
-    val ranked = base.collect().toSeq.flatMap { r =>
-      if (r.isNullAt(1)) Nil
-      else {
-        val vec = toCatalyst(r.get(1)).asInstanceOf[ArrayData]
-        val top = NativeMath.cellTopK(vec, fit.cents, vcode, fit.ccode, upTo)
-        (0 until top.numElements()).map(i => Row(r.get(0), r.get(1), top.getStruct(i, 2).getLong(1)))
+    if (qv == null) Array.empty
+    else {
+      val top = NativeMath.cellTopK(qv, fit.cents, vcode, fit.ccode, upTo)
+      Array.tabulate(top.numElements())(i => -top.getStruct(i, 2).getLong(1))
+    }
+  }
+
+  /** An index row's vector reconstructed from its `__codes` through the
+    * fit's ADC codeword map (`__cb`): the m codewords concatenated in
+    * subspace order, so scores against it are bit-identical wherever it
+    * is computed.
+    */
+  private def reconstructed(fit: FitTables, pqM: Int, pqKs: Int): Column =
+    flatten(
+      transform(
+        sequence(lit(0), lit(pqM - 1)),
+        mm => element_at(fit.cbCol, (mm * pqKs + element_at(col("__codes"), mm + 1)).cast("int"))
+      )
+    )
+
+  /** The order every probe ranks candidates in, over rows whose field 0
+    * is the score (double) and field 1 the candidate id (`nidType`):
+    * score descending with nulls last and NaN greatest, then id
+    * ascending with nulls first — the defaults of `orderBy(desc, asc)`,
+    * so a driver-side rank equals [[pqAdcRank]]'s `row_number` window.
+    */
+  private[llmops] def rankOrder(nidType: DataType): Ordering[InternalRow] =
+    new InterpretedOrdering(
+      Seq(
+        SortOrder(BoundReference(0, DoubleType, nullable = true), Descending),
+        SortOrder(BoundReference(1, nidType, nullable = true), Ascending)
+      )
+    )
+
+  /** The ADC shortlist of a small probe batch, as ONE Spark job: the top
+    * `n` candidates of every query group by [[rankOrder]], each group's
+    * rows ranked. `codes` is the (cell-pruned) index, (`__cid`, `__nid`,
+    * `__codes`); `probes` holds `__probes`, a map from cell id (long) to
+    * the (`__g` group, `__qid`, `__qv` quantized vector) of every query
+    * probing that cell. Each index row is reconstructed ONCE, then
+    * exploded over its cell's queries and scored by [[cosine]], so the
+    * per-pair cost is the cosine alone; `excludeSelf` drops qid = nid
+    * pairs with the join form's SQL comparison. Every partition keeps a
+    * bounded top `n` per group (exact: top-n of a union is the top-n of
+    * its parts' top-n), so at most partitions × groups × n rows reach the
+    * driver, which merges them. The job runs under the execution name
+    * `probeIvfPqPruned.shortlist`.
+    */
+  private[llmops] def adcShortlist(
+      codes: DataFrame,
+      probes: BroadcastRow,
+      groups: Int,
+      fit: FitTables,
+      pqM: Int,
+      pqKs: Int,
+      n: Int,
+      excludeSelf: Boolean
+  ): Array[Seq[InternalRow]] = {
+    val exploded = codes
+      .select(
+        col("__nid"),
+        reconstructed(fit, pqM, pqKs).as("__rv"),
+        element_at(probes.field("__probes"), col("__cid").cast(LongType)).as("__qs")
+      )
+      .select(col("__nid"), col("__rv"), explode(col("__qs")).as("__q"))
+    val scored = (if (excludeSelf) exploded.filter(col("__q.__qid") =!= col("__nid")) else exploded)
+      .select(cosine(col("__q.__qv"), col("__rv")).as("__adc"), col("__nid"), col("__q.__g").as("__g"))
+    val nidType = scored.schema("__nid").dataType
+    val qe = scored.queryExecution
+    val kept = SQLExecution.withNewExecutionId(qe, Some("probeIvfPqPruned.shortlist")) {
+      qe.executedPlan.execute().mapPartitions(rows => topPerGroup(rows, groups, n, rankOrder(nidType))).collect()
+    }
+    val ord = rankOrder(nidType)
+    val byGroup = Array.fill(groups)(Seq.newBuilder[InternalRow])
+    kept.foreach(r => byGroup(r.getInt(2)) += r)
+    byGroup.map(_.result().sorted(ord).take(n))
+  }
+
+  /** The `n` best of `rows` (score, id, `__g`) per group by `ord`, copied
+    * out of the reused input rows.
+    */
+  private def topPerGroup(rows: Iterator[InternalRow], groups: Int, n: Int, ord: Ordering[InternalRow]): Iterator[InternalRow] = {
+    // each heap's head is its worst kept row
+    val heaps = new Array[java.util.PriorityQueue[InternalRow]](groups)
+    rows.foreach { r =>
+      val g = r.getInt(2)
+      if (heaps(g) == null) heaps(g) = new java.util.PriorityQueue[InternalRow](math.max(n, 1), ord.reverse)
+      val h = heaps(g)
+      if (h.size < n) h.add(r.copy())
+      else if (n > 0 && ord.lt(r, h.peek())) {
+        h.poll()
+        h.add(r.copy())
       }
     }
-    val schema =
-      StructType(Seq(base.schema("__id"), base.schema("__qv"), StructField("__ncid", LongType, nullable = false)))
-    val probed = base.sparkSession
-      .createDataFrame(ranked.asJava, schema)
-      .select(col("__id"), col("__qv"), (-col("__ncid")).cast(fit.cidType).as("__cid"))
-    (probed, ranked.map(-_.getLong(2)).distinct)
+    heaps.iterator.filter(_ != null).flatMap(_.asScala)
   }
 
   /** ADC-rank probed queries against a codes-only index, with the
@@ -1405,15 +1505,7 @@ object Similarity {
       // AQE-coalesced to one partition at small exchange sizes and
       // serialize the pair expansion (see [[explodeTopCells]])
       .repartition(probeParallelism(index), col("__cid"))
-      .withColumn(
-        "__rv", // reconstruct from codes; same subspace order ⇒ bit-identical scores
-        flatten(
-          transform(
-            sequence(lit(0), lit(pqM - 1)),
-            mm => element_at(fit.cbCol, (mm * pqKs + element_at(col("__codes"), mm + 1)).cast("int"))
-          )
-        )
-      )
+      .withColumn("__rv", reconstructed(fit, pqM, pqKs))
       .select(col("__cid"), col("__nid"), col("__rv"))
     val joined = probedQueries.join(reconIndex, Seq("__cid"))
     val adcTop = (if (excludeSelf) joined.filter(col("__qid") =!= col("__nid")) else joined)
@@ -1425,10 +1517,12 @@ object Similarity {
         .filter(col("rank") <= k)
         .select(col("__qid").as("qid"), col("__nid").as("nid"), col("rank").cast("long").as("rank"))
     else {
-      // exact re-rank of the ADC shortlist: fetch the shortlist's ORIGINAL
+      // exact re-rank of the ADC shortlist: join the shortlist's ORIGINAL
       // vectors back from the corpus by id (the index side stays codes-
-      // only — this is the production fetch-and-rerank, O(shortlist) rows
-      // per query, never a second scan) and rank by exact cosine.
+      // only) and rank by exact cosine. O(shortlist) rows per query are
+      // JOINED, but the join reads all of `candidateVecs` (a broadcast or
+      // a shuffle of it); the small-batch probe fetches by a literal id
+      // filter instead (AnnIndex.probeIvfPqPruned).
       val wr = Window.partitionBy("__qid").orderBy(col("__exact").desc, col("__nid"))
       adcTop
         .select(col("__qid"), col("__nid"))

@@ -2385,11 +2385,14 @@ object LlmQueries {
       }
     ),
     // Small-batch pruned probe of the persisted index — the online-serving
-    // shape: the batch's probed cell ids ride as a LITERAL IN filter, so
-    // the cell-partitioned codes scan statically prunes to the probed
-    // cells' files (spec asserts the PartitionFilters; at production
+    // shape: the batch's cells are ranked on the driver and their ids ride
+    // as a LITERAL IN filter, so the cell-partitioned codes scan statically
+    // prunes to the probed cells' files (LlmOpsSpec asserts the
+    // PartitionFilters of the probe's shortlist execution; at production
     // scale a 10-vector batch at nprobe=2 over 1,024 cells reads
-    // ≤ 20/1,024 of a ~3 TB index). Results identical to the join-form
+    // ≤ 20/1,024 of a ~3 TB index). The shortlist and the rerank fetch are
+    // two Spark jobs run while the query is built; the probe returns a
+    // local relation. Results identical to the join-form
     // probe on the same batch — the oracle is the full-corpus replay
     // restricted to the batch's qids, which IS the per-query-independent
     // semantics being claimed.
@@ -2643,7 +2646,7 @@ object LlmQueries {
     // output silently under-fills k). Online-serving shape: the pruned
     // probe composes the predicate with the probed-cell IN list on the
     // same scan, so a filtered probe still reads only the probed cells'
-    // files (PlanShapeSpec pins the plan). The oracle is the full replay
+    // files (LlmOpsSpec pins the shortlist execution's plan). The oracle is the full replay
     // with the predicate in the index-side CTE — the same shape the
     // delete oracle uses, because "filtered" must be indistinguishable
     // from "an index that only ever contained matching rows".

@@ -522,7 +522,8 @@ object StreamingQueries {
     // probeIvfPqPruned — each batch's probed cell ids become a literal IN
     // filter, so every micro-batch statically prunes the cell-partitioned
     // codes scan to its own probed cells' files (the online-serving shape;
-    // spec-asserted on the streamed plan in StreamingSpec). A qid's result
+    // TypedStreamsSpec asserts it on each micro-batch's
+    // probeIvfPqPruned.shortlist execution). A qid's result
     // rows depend only on its own vector and the frozen index, so
     // micro-batch boundaries cannot change any row and the streamed sink
     // must equal the batch probe of the same qids exactly — the oracle is

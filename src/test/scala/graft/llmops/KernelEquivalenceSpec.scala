@@ -27,8 +27,8 @@ import scala.util.Random
   *      round-19 bounded-top-k init AND the fused single-exchange update.
   *   4. [[Similarity.pqCodebooks]] ≡ the explode/min_by Lloyd reference,
   *      same purpose.
-  *   5. [[Similarity.cellRanksLocal]] (the pruned probe's driver-side cell
-  *      ranking) and [[Similarity.cellRanks]] (the Spark pass over the
+  *   5. [[Similarity.cellsLocal]] (the pruned probe's driver-side cell
+  *      ranking, in rank order) and [[Similarity.cellRanks]] (the Spark pass over the
   *      same fit) ≡ the former join-form ranking against the centroid
   *      aggregate, on adversarial batches — null
   *      vectors and elements, wrong lengths, NaN, ties, three vector
@@ -425,14 +425,22 @@ class KernelEquivalenceSpec extends AnyFunSuite with SparkTestSession {
           .select(col("__id"), col("__qv"), explode(graft.functions.native.cellTopK(col("__qv"), col("__cents"), upTo)).as("__tc"))
           .select(col("__id"), col("__qv"), (-col("__tc.__ncid")).cast(cidType).as("__cid"))
         val viaSpark = Similarity.cellRanks(batch, fit, upTo)
-        val (got, cells) = Similarity.cellRanksLocal(batch, fit, upTo)
+        val vcode = graft.functions.NativeMath.typeCode(batch.schema("__qv").dataType)
+        // (id, rank, cell) of the driver-side ranking and of the join form
+        val got = Similarity.collectRows(batch).flatMap { r =>
+          Similarity.cellsLocal(if (r.isNullAt(1)) null else r.getArray(1), vcode, fit, upTo).zipWithIndex.map { case (c, i) => (r.getLong(0), i, c) }
+        }
+        val refRanked = batch
+          .withColumn("__one", oneKey(col("__id")))
+          .join(centroidEntriesRow(centroids), Seq("__one"))
+          .select(col("__id"), posexplode(graft.functions.native.cellTopK(col("__qv"), col("__cents"), upTo)).as(Seq("__pos", "__tc")))
+          .select(col("__id"), col("__pos"), (-col("__tc.__ncid")).as("__cid"))
+          .as[(Long, Int, Long)]
+          .collect()
         val at = s"elem=$elem cid=$cidType upTo=$upTo"
-        assert(got.schema("__cid").dataType == cidType, s"probe cid must keep the centroid cid type ($at)")
         assert(viaSpark.schema("__cid").dataType == cidType, s"cellRanks cid must keep the centroid cid type ($at)")
         assert(rows(viaSpark) == rows(ref), s"cellRanks over the fit != join-form ranking ($at)")
-        assert(rows(got) == rows(ref), s"driver-side ranking != cellRanks ($at)")
-        val refCells = ref.select(col("__cid").cast("long")).distinct().collect().map(_.getLong(0)).sorted.toSeq
-        assert(cells.sorted == refCells, s"probed cell list != cellRanks' distinct cells ($at)")
+        assert(got.sorted == refRanked.toSeq.sorted, s"driver-side ranking != cellRanks ($at)")
       }
     }
   }

@@ -2,6 +2,7 @@ package graft.llmops
 
 import graft.SparkTestSession
 import graft.contracts.ContractViolation
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -827,12 +828,14 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val viaJoin = AnnIndex
       .probeIvfPq(loaded, smallBatch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true)
       .select("qid", "nid", "rank").as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3))
-    val prunedDf = AnnIndex
-      .probeIvfPqPruned(loaded, smallBatch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true)
+    val (prunedDf, prunedRuns) = graft.SparkTestSession.executionsOf(spark)(
+      AnnIndex
+        .probeIvfPqPruned(loaded, smallBatch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true)
+    )
     val viaPruned = prunedDf
       .select("qid", "nid", "rank").as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3))
     assert(viaPruned.toSeq == viaJoin.toSeq, "pruned probe must equal the join-form probe")
-    val prunedPlan = prunedDf.queryExecution.executedPlan.toString
+    val prunedPlan = graft.SparkTestSession.planNamed(prunedRuns, "probeIvfPqPruned.shortlist")
     assert(
       "PartitionFilters: \\[[^\\]]*__cid[^\\]]*IN".r.findFirstIn(prunedPlan).nonEmpty,
       s"expected a static __cid IN partition filter on the codes scan; plan:\n$prunedPlan"
@@ -855,8 +858,10 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     val pred = col("__nid") % 2 === 0
     def run(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
       d.select("qid", "nid", "rank").as[(Long, Long, Long)].collect().sortBy(identity).toSeq
-    val filteredDf = AnnIndex
-      .probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true, idFilter = Some(pred))
+    val (filteredDf, filteredRuns) = graft.SparkTestSession.executionsOf(spark)(
+      AnnIndex
+        .probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true, idFilter = Some(pred))
+    )
     val filtered = run(filteredDf)
     // semantic contract: filtered probe ≡ probing an index that only ever
     // contained matching rows (k fills from survivors, NOT post-filtered)
@@ -870,7 +875,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     assert(joinForm == filtered, "join-form and pruned filtered probes must agree")
     // plan contract: the predicate composes with the probed-cell IN list
     // on the SAME codes scan — no join added, cell pruning intact
-    val plan = filteredDf.queryExecution.executedPlan.toString
+    val plan = graft.SparkTestSession.planNamed(filteredRuns, "probeIvfPqPruned.shortlist")
     assert(
       "PartitionFilters: \\[[^\\]]*__cid[^\\]]*IN".r.findFirstIn(plan).nonEmpty,
       s"cell pruning must survive the id filter; plan:\n$plan"
@@ -879,6 +884,72 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
       "__nid#\\d+L?\\)? % 2".r.findFirstIn(plan).nonEmpty,
       s"the id predicate must ride the codes scan as a filter; plan:\n$plan"
     )
+  }
+
+  test("AnnIndex pruned probe equals the join-form probe in rows and schema on every fixture") {
+    val rnd = new scala.util.Random(59)
+    val vecs = (0 until 60).map(i => Seq.tabulate(8)(_ => (i % 3 * 5).toFloat + rnd.nextFloat() * 0.1f))
+    val zeros = Seq.fill(8)(0f) // scores NaN against every cell and candidate
+    val schema = (id: org.apache.spark.sql.types.DataType) =>
+      org.apache.spark.sql.types.StructType
+        .fromDDL(s"vec_id ${id.sql}, v ARRAY<FLOAT>")
+    def frame(rows: Seq[(Any, Seq[Float])], id: org.apache.spark.sql.types.DataType) =
+      spark.createDataFrame(rows.map { case (i, v) => org.apache.spark.sql.Row(i, v) }.asJava, schema(id))
+
+    def same(
+        at: String,
+        idx: AnnIndex.IvfPqIndex,
+        batch: org.apache.spark.sql.DataFrame,
+        from: org.apache.spark.sql.DataFrame,
+        k: Int = 3,
+        nprobe: Int = 2,
+        rerank: Int = 0,
+        excludeSelf: Boolean = false,
+        idFilter: Option[Column] = None
+    ): Unit = {
+      val join = AnnIndex.probeIvfPq(idx, batch, "vec_id", "v", k, nprobe, rerank, Some(from), excludeSelf, idFilter)
+      val pruned = AnnIndex.probeIvfPqPruned(idx, batch, "vec_id", "v", k, nprobe, rerank, Some(from), excludeSelf, idFilter = idFilter)
+      assert(pruned.schema == join.schema, s"schema ($at): ${pruned.schema} vs ${join.schema}")
+      val (got, want) = (pruned.collect().map(_.toString).sorted.toSeq, join.collect().map(_.toString).sorted.toSeq)
+      assert(got == want, s"rows ($at)")
+      assert(want.nonEmpty == !batch.isEmpty, s"fixture must answer a non-empty batch ($at)")
+    }
+
+    // long ids, a saved and loaded index; the rerank source misses the
+    // ids ≡ 2 (mod 5) and holds the multiples of 7 twice
+    val longIds = org.apache.spark.sql.types.LongType
+    val df = frame(vecs.indices.map(i => (i.toLong, vecs(i))), longIds).localCheckpoint(true)
+    val dir = java.nio.file.Files.createTempDirectory("graft_annequiv").toString
+    AnnIndex.save(AnnIndex.fitIvfPq(df, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8), dir)
+    val loaded = AnnIndex.load(spark, dir)
+    val from = df.filter($"vec_id" % 5 =!= 2).union(df.filter($"vec_id" % 7 === 0))
+    // duplicate qids (one with equal vectors, one with two vectors), a null
+    // vector, a NaN-scoring vector and an id absent from the rerank source
+    val batch = frame(
+      Seq(1L -> vecs(1), 1L -> vecs(1), 4L -> vecs(4), 4L -> vecs(7), 100L -> null, 101L -> zeros, 7L -> vecs(7), 12L -> vecs(12), 200L -> vecs(10)),
+      longIds
+    )
+    val firstCell = loaded.codes.select(min("__cid")).head().getInt(0)
+    val emptied = loaded.copy(codes = loaded.codes.filter($"__cid" =!= firstCell))
+    val even = Some($"__nid" % 2 === 0)
+    same("rerank 0", loaded, batch, from)
+    same("rerank = k, excludeSelf", loaded, batch, from, rerank = 3, excludeSelf = true)
+    same("rerank > k, excludeSelf, idFilter", loaded, batch, from, rerank = 10, excludeSelf = true, idFilter = even)
+    same("nprobe > cells", loaded, batch, from, nprobe = 5, rerank = 10)
+    same("emptied cell, rerank > k", emptied, batch, from, nprobe = 1, rerank = 10, excludeSelf = true)
+    same("emptied cell, idFilter", emptied, batch, from, idFilter = even)
+    same("empty batch", loaded, batch.limit(0), from, rerank = 10)
+
+    // string ids, an in-memory index; a null qid answers without a rerank
+    // and is dropped by the rerank's join on qid
+    val strIds = org.apache.spark.sql.types.StringType
+    val sdf = frame(vecs.indices.map(i => (s"s$i", vecs(i))), strIds).localCheckpoint(true)
+    val sidx = AnnIndex.fitIvfPq(sdf, "vec_id", "v", cells = 3, iters = 2, pqM = 2, pqKs = 4, pqIters = 2, dim = 8)
+    val sfrom = sdf.filter(!$"vec_id".endsWith("2")).union(sdf.filter($"vec_id".endsWith("7")))
+    val sbatch = frame(Seq((null, vecs(3)), "s5" -> vecs(5), "s5" -> vecs(5), "s9" -> null, "zz" -> zeros, "s17" -> vecs(17)), strIds)
+    same("strings, rerank 0", sidx, sbatch, sfrom)
+    same("strings, rerank > k, excludeSelf", sidx, sbatch, sfrom, rerank = 10, excludeSelf = true)
+    same("strings, rerank > k, idFilter", sidx, sbatch, sfrom, nprobe = 3, rerank = 10, idFilter = Some($"__nid" =!= "s8"))
   }
 
   /** Spark jobs `body` launches, counted by [[graft.QueryMetrics]]. */
@@ -908,25 +979,27 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     // centroid entries and codeword map come from the handle's FitTables
     val pinned = AnnIndex.load(spark, dir)
     val pinnedAnswers = run(pruned(pinned))
-    val second = pruned(pinned)
+    val (second, secondRuns) = graft.SparkTestSession.executionsOf(spark)(pruned(pinned))
     assert(run(second) == pinnedAnswers, "a cached-table probe must answer like the first probe")
-    val scanned = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collectWithSubqueries(second.queryExecution.executedPlan) {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
-      }
-      .flatten
+    val scanned = secondRuns.flatMap { case (_, qe) =>
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(qe.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        }
+        .flatten
+    }
     assert(scanned.exists(_.contains("codes_v")), s"the probe must scan the codes; scanned: ${scanned.mkString(", ")}")
     assert(
       !scanned.exists(p => p.contains("/centroids") || p.contains("/codebooks")),
       s"a second probe must not scan centroids/ or codebooks/; scanned: ${scanned.mkString(", ")}"
     )
 
-    // (b) building a pruned probe of a localCheckpoint batch on a warm
-    // handle launches at most one job (the batch collect) before the
-    // result is collected
-    val (built, buildJobs) = jobsOf("probe-build")(pruned(pinned))
-    assert(buildJobs <= 1, s"building a pruned probe launched $buildJobs jobs, expected at most 1")
-    assert(run(built) == pinnedAnswers)
+    // (b) building and collecting a pruned probe of a localCheckpoint
+    // batch on a warm handle launches at most three jobs: the batch
+    // collect, the shortlist and the rerank fetch
+    val (built, buildJobs) = jobsOf("probe-build")(run(pruned(pinned)))
+    assert(buildJobs <= 3, s"building and collecting a pruned probe launched $buildJobs jobs, expected at most 3")
+    assert(built == pinnedAnswers)
 
     // (c) the cache is scoped to the handle: after a refit, a fresh load
     // probes like a newly fitted handle, and the pinned pre-refit handle
@@ -954,12 +1027,13 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     )
     val (loaded, loadJobs) = jobsOf("load")(AnnIndex.load(spark, dir))
     assert(loadJobs == 0, s"load launched $loadJobs jobs, expected none (the fit tables are read on the driver)")
-    // the first probe of a loaded handle builds without a fit job
+    // the first probe of a loaded handle runs without a fit job: the
+    // batch collect, the shortlist and (with a rerank) the fetch
     val batch = df.filter($"vec_id" < 4).localCheckpoint(true)
     val (_, probeJobs) = jobsOf("probe-build") {
-      AnnIndex.probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 2)
+      AnnIndex.probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 2).collect()
     }
-    assert(probeJobs <= 1, s"building the first probe of a loaded handle launched $probeJobs jobs")
+    assert(probeJobs <= 3, s"building and collecting the first probe of a loaded handle launched $probeJobs jobs")
     // a local batch: its encode is a projection of a local relation
     val local = spark.createDataFrame(df.filter($"vec_id" >= 48).collect().toSeq.asJava, df.schema)
     val (_, appendJobs) = jobsOf("append")(AnnIndex.append(spark, dir, local, "vec_id", "v", batchId = 0L))
@@ -1425,9 +1499,13 @@ class LlmOpsSpec extends AnyFunSuite with SparkTestSession {
     fitLayer.listFiles().filter(_.getName.startsWith("__cid=")).foreach { cell =>
       assert(cell.listFiles().count(_.getName.endsWith(".parquet")) == 1, s"refit must write one file per cell: $cell")
     }
-    val prunedPlan = AnnIndex
-      .probeIvfPqPruned(afterCompact, df.filter($"vec_id" < 5), "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true)
-      .queryExecution.executedPlan.toString
+    val prunedPlan = graft.SparkTestSession.planNamed(
+      graft.SparkTestSession.executionsOf(spark)(
+        AnnIndex
+          .probeIvfPqPruned(afterCompact, df.filter($"vec_id" < 5), "vec_id", "v", k = 3, nprobe = 2, rerank = 10, rerankFrom = Some(df), excludeSelf = true)
+      )._2,
+      "probeIvfPqPruned.shortlist"
+    )
     assert(
       "PartitionFilters: \\[[^\\]]*__cid[^\\]]*IN".r.findFirstIn(prunedPlan).nonEmpty,
       s"static cell pruning must survive the refit generation's layout; plan:\n$prunedPlan"

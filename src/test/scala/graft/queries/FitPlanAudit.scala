@@ -23,17 +23,21 @@ import scala.jdk.CollectionConverters._
   *     fixture (the corpus is the rows with `vec_id % 5 != 0`, the
   *     appended batch the rest);
   *   - `ivfpq`: the `llm_ann_ivf_pq` query — [[graft.llmops.Similarity.ivfPqTopK]]
-  *     (k 5, nprobe 2, rerank 50) on its fixture, collected.
-  * The fit runs while a query is being built and its result is local, so
-  * no registered query's `.explain` can show it. Not part of any gate or
-  * bench; run by hand via
-  * `sbt "Test/runMain graft.queries.FitPlanAudit [sfDir] [fit|append|ivfpq]"`.
+  *     (k 5, nprobe 2, rerank 50) on its fixture, collected;
+  *   - `probe`: the `llm_ann_index_pruned` probe — fit, save and load
+  *     untimed, one warm-up probe, then one
+  *     [[graft.llmops.AnnIndex.probeIvfPqPruned]] of its batch (k 5,
+  *     nprobe 2, rerank 50, excludeSelf), collected.
+  * The fit and the pruned probe run while a query is being built and
+  * their results are local, so no registered query's `.explain` can show
+  * them. Not part of any gate or bench; run by hand via
+  * `sbt "Test/runMain graft.queries.FitPlanAudit [sfDir] [fit|append|ivfpq|probe]"`.
   */
 object FitPlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val audit = args.lift(1).getOrElse("fit")
-    require(Seq("fit", "append", "ivfpq").contains(audit), s"unknown audit $audit (fit, append or ivfpq)")
+    require(Seq("fit", "append", "ivfpq", "probe").contains(audit), s"unknown audit $audit (fit, append, ivfpq or probe)")
     val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val fx = LlmQueries.clusteredFixture(spark, sfDir).localCheckpoint(true)
@@ -69,7 +73,17 @@ object FitPlanAudit {
           .select("qid", "nid", "rank")
           .collect()
       )
-    else {
+    else if (audit == "probe") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_fit_plan_audit").toString
+      AnnIndex.save(fit(fx), dir)
+      val loaded = AnnIndex.load(spark, dir)
+      def probe(): Array[org.apache.spark.sql.Row] = AnnIndex
+        .probeIvfPqPruned(loaded, fx.filter(col("vec_id") % 97 === 0), "vec_id", "v", k = 5, nprobe = 2, rerank = 50, rerankFrom = Some(fx), excludeSelf = true)
+        .select("qid", "nid", "rank")
+        .collect()
+      probe()
+      phase("probeIvfPqPruned")(probe())
+    } else {
       val dir = java.nio.file.Files.createTempDirectory("graft_fit_plan_audit").toString
       val idx = phase("fitIvfPq")(fit(fx.filter(col("vec_id") % 5 =!= 0)))
       phase("save")(AnnIndex.save(idx, dir))

@@ -121,24 +121,29 @@ class TypedStreamsSpec extends AnyFunSuite with SparkTestSession {
     val out = Files.createTempDirectory("graft-t12spec-out").toString
     df.filter(col("vec_id") % 3 === 0).limit(2).write.parquet(s"$in/b0")
     df.filter(col("vec_id") % 3 === 1).limit(2).write.parquet(s"$in/b1")
-    val plans = scala.collection.mutable.ListBuffer.empty[String]
-    spark.readStream
-      .schema("vec_id LONG, v ARRAY<DOUBLE>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$in/*")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val probe = AnnIndex
-          .probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 1)
-          .select("qid", "nid", "rank")
-        probe.write.mode("append").parquet(out)
-        plans.synchronized { plans += probe.queryExecution.executedPlan.toString }
-        ()
-      }
-      .option("checkpointLocation", Files.createTempDirectory("graft-t12spec-ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    // the probe returns a local relation: its codes scan runs as the
+    // execution named probeIvfPqPruned.shortlist
+    val (_, runs) = graft.SparkTestSession.executionsOf(spark) {
+      spark.readStream
+        .schema("vec_id LONG, v ARRAY<DOUBLE>")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$in/*")
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          AnnIndex
+            .probeIvfPqPruned(loaded, batch, "vec_id", "v", k = 3, nprobe = 1)
+            .select("qid", "nid", "rank")
+            .write
+            .mode("append")
+            .parquet(out)
+          ()
+        }
+        .option("checkpointLocation", Files.createTempDirectory("graft-t12spec-ckpt").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    val plans = runs.collect { case ("probeIvfPqPruned.shortlist", qe) => qe.executedPlan.toString }
     assert(plans.size >= 2, s"expected >= 2 micro-batches, got ${plans.size}")
     // every micro-batch's codes scan carries a static __cid IN partition
     // filter — the streamed probe reads only the probed cells' files
